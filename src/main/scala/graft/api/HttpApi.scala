@@ -4,8 +4,6 @@ import java.net.InetSocketAddress
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets
 
-import scala.util.Try
-
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 
@@ -23,6 +21,12 @@ import org.apache.spark.sql.SparkSession
   * Scale posture: the HTTP layer only ever serializes top-k / aggregate
   * sized results ([[QueryService.toJson]]'s bounded-collect contract); the
   * heavy lifting stays distributed in the Spark plans underneath.
+  *
+  * Every request plans over the dataset's serving snapshot (see
+  * [[QueryService]]): the first request to `dir` pays for materializing
+  * it, later ones read it from memory, and a deleted or rewritten dataset
+  * is re-resolved on the next request. Nothing is read at `start`, so a
+  * server on a missing dir starts and answers 404 per request.
   */
 object HttpApi {
 
@@ -71,13 +75,15 @@ object HttpApi {
     if (exchange.getRequestMethod != "GET")
       return (405, """{"error": "Méthode non autorisée"}""")
     val typeName = params.getOrElse("type", "all") // views.py:102
+    val annee = params.get("annee").map(a => a -> a.toIntOption)
     val p = QueryService.Params(
       catId = params.get("catID"),
       fabId = params.get("fabID"),
-      annee = params.get("annee").flatMap(a => Try(a.toInt).toOption),
+      annee = annee.flatMap(_._2),
       debut = params.get("debut"),
       fin = params.get("fin"),
-      asOf = params.get("asOf"))
+      asOf = params.get("asOf"),
+      malformed = annee.collect { case (a, None) => "annee" -> a }.toMap)
     QueryService.runJson(spark, dir, typeName, p) match {
       case Right(body) => (200, body)
       case Left(err)   => (err.status, s"""{"error": ${jsonString(err.message)}}""")

@@ -22,8 +22,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * frames (and the localCheckpoint blocks they pin) don't outlive the
   * application in a long-lived JVM hosting many sequential sessions
   * (ADVICE r8). Fixtures are immutable per session; a mutated-in-place
-  * source dir would need an explicit [[PlanMemo.clearAll]]. */
-private[pipeline] final class PlanMemo[T] {
+  * source dir would need an explicit [[PlanMemo.clearAll]].
+  *
+  * [[at]] keys an entry by (session, any value) instead of a source plan,
+  * for artifacts whose source must not be resolved to be looked up — the
+  * serving snapshot in [[graft.api.QueryService]], keyed by the source
+  * files' statuses, which also retires superseded entries through
+  * [[evict]]. */
+private[graft] final class PlanMemo[T] {
   private final class Cell(f: () => T) {
     // Count the miss AFTER f() completes (ADVICE r10): if the mining body
     // throws on first use (e.g. a transient Spark failure), Scala's
@@ -33,30 +39,31 @@ private[pipeline] final class PlanMemo[T] {
     // (PlanMemoSpec / PipelineSpec eq136) after a recovered failure.
     lazy val value: T = { val r = f(); misses.incrementAndGet(); r }
   }
-  private val m = new scala.collection.concurrent.TrieMap[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Any), Cell]
+  private val m = new scala.collection.concurrent.TrieMap[(SparkSession, Any), Cell]
   /** Count of mining passes actually RUN (Cell bodies forced, not Cells
     * created) — the observable the materialize-once contract is asserted
     * on: PlanMemoSpec hammers first-use from N threads and the eq136
     * pipeline test runs a full curation chain, both expecting exactly +1
     * here per distinct (session, plan, extra) key. */
-  private[pipeline] val misses = new java.util.concurrent.atomic.AtomicLong
-  private[pipeline] def size: Int = m.size
+  private[graft] val misses = new java.util.concurrent.atomic.AtomicLong
+  private[graft] def size: Int = m.size
   PlanMemo.register(this)
-  def apply(docs: DataFrame, extra: Any = ())(f: => T): T = {
-    val session = docs.sparkSession
+  def apply(docs: DataFrame, extra: Any = ())(f: => T): T =
+    at(docs.sparkSession, (docs.queryExecution.analyzed.canonicalized, extra))(f)
+  def at(session: SparkSession, key: Any)(f: => T): T = {
     PlanMemo.hookEviction(session)
-    m.getOrElseUpdate(
-      (session, docs.queryExecution.analyzed.canonicalized, extra),
-      new Cell(() => f)).value
+    m.getOrElseUpdate((session, key), new Cell(() => f)).value
   }
+  /** Drop `session`'s entries whose key satisfies `p`. */
+  def evict(session: SparkSession)(p: Any => Boolean): Unit =
+    m.keysIterator.filter(k => (k._1 eq session) && p(k._2)).foreach(m.remove)
   private[pipeline] def evictContext(sc: org.apache.spark.SparkContext): Unit =
     // TrieMap iteration is snapshot-consistent; remove is safe mid-iteration
     m.keysIterator.filter(_._1.sparkContext eq sc).foreach(m.remove)
   def clear(): Unit = m.clear()
 }
 
-private[pipeline] object PlanMemo {
+private[graft] object PlanMemo {
   private val instances =
     new scala.collection.concurrent.TrieMap[PlanMemo[_], Unit]
   private val hooked =

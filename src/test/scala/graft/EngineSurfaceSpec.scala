@@ -251,18 +251,49 @@ class EngineSurfaceSpec extends SparkSpec {
     assert(q5Plan.contains("Expand"), "multi-distinct should plan via Expand")
   }
 
+  /** The executed plan of every action `body` runs, in order. The
+    * listener bus is asynchronous: a marker action after `body` is awaited,
+    * and events arrive in order, so `body`'s plans are all in by then. */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val marker = spark.range(1)
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe eq marker.queryExecution) seen.countDown()
+        else plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      marker.collect()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener events never arrived")
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[String]).toSeq
+  }
+
   test("q10/q11 composites: phase-1 top-10 is a literal, fact scanned once per phase-2 aggregate") {
-    // phase 1 is collected once (<=10 rows) and re-enters the plan as a
-    // LocalTableScan, so the only parquet scans left are phase 2's: one pdv
-    // reference (lineitem+part = 2 scans), doubled by the scalar-average
-    // self-reference = 4 — not 8 as when phase 1 was a live subplan that
-    // re-scanned pdv per reference
-    for ((q, maxScans) <- Seq(retail.RetailQueries.q10(spark, Sf) -> 4,
-                              retail.RetailQueries.q11(spark, Sf) -> 4)) {
-      val plan = q.queryExecution.executedPlan.toString
-      val scans = "Scan parquet".r.findAllIn(plan).length
-      assert(scans <= maxScans, s"expected <= $maxScans parquet scans, got $scans:\n$plan")
-      assert(plan.contains("LocalTableScan"), s"materialized top-10 missing:\n$plan")
+    // phase 1 is collected once (<=10 rows) and re-enters phase 2 as a
+    // LocalTableScan. Phase 2 runs as the localCheckpoint of its <=10-row
+    // (or per-month) frame plus the final collect over that checkpoint, so
+    // across the plans phase 2 actually runs the only parquet scans are one
+    // pdv reference: lineitem + part = 2 — not 8 as when phase 1 was a live
+    // subplan that re-scanned pdv per reference
+    import retail.RetailQueries._
+    val pdv = Tables.pdv(spark, Sf)
+    val q10Top = collectTop10Cat(pdv, Cat, Debut, Fin)
+    val q11Top = collectTop10Cat(pdv, Cat, Debut, AsOf)
+    for ((q, phase2) <- Seq(
+        "q10" -> (() => avgFabTop10From(pdv, q10Top, Cat, Fab).collect()),
+        "q11" -> (() => scoreSanteMonthsFrom(spark, pdv, q11Top, Cat, Fab,
+          java.time.LocalDate.parse(Debut), java.time.LocalDate.parse(AsOf)).collect()))) {
+      val all = executedPlans(phase2()).mkString("\n---\n")
+      val scans = "Scan parquet".r.findAllIn(all).length
+      assert(scans <= 2, s"$q: expected <= 2 parquet scans, got $scans:\n$all")
+      assert(all.contains("LocalTableScan"), s"$q: materialized top-10 missing:\n$all")
     }
   }
 

@@ -177,6 +177,108 @@ class QueryServiceSpec extends SparkSpec {
     assert(arr.startsWith("[{") && arr.endsWith("}]"))
   }
 
+  /** One request of each plain (single-phase) type. */
+  private val plainRequests: Seq[(String, Params)] = Seq(
+    "cat" -> Params(catId = Some("STANDARD")),
+    "mag-cat" -> Params(catId = Some("STANDARD")),
+    "fab-cat" -> Params(catId = Some("STANDARD")),
+    "avg-prod-per-fab" -> Params(catId = Some("STANDARD"),
+      debut = Some("1995-01-01"), fin = Some("1996-12-31")),
+    "top-magasins" -> Params(debut = Some("1995-01-01"), fin = Some("1996-12-31")),
+    "top-magasins-cat" -> Params(catId = Some("STANDARD"),
+      debut = Some("1995-01-01"), fin = Some("1996-12-31")),
+    "nb-mag-cat-date" -> Params(catId = Some("STANDARD"), annee = Some(1996)),
+    "score-evolution" -> Params(catId = Some("STANDARD"), fabId = Some("Brand#12"),
+      asOf = Some("1998-09-01")))
+
+  test("serving snapshot: repeated requests on one (session, dir) build it once") {
+    val session = spark.newSession() // a session no other test has served
+    val before = QueryService.snapshotBuilds
+    for (_ <- 1 to 3; (t, p) <- plainRequests)
+      assert(QueryService.runJson(session, Sf, t, p).isRight, t)
+    assert(QueryService.snapshotBuilds - before == 1,
+      s"${QueryService.snapshotBuilds - before} snapshot builds for one (session, dir)")
+  }
+
+  test("serving snapshot: a warm plain request plans over memory, no parquet scan") {
+    assert(QueryService.runJson(spark, Sf, "mag-cat", Params(catId = Some("STANDARD"))).isRight)
+    for ((t, p) <- plainRequests) {
+      val plan = QueryService.run(spark, Sf, t, p).toOption.get.queryExecution.executedPlan.toString
+      assert(!plan.contains("Scan parquet"), s"$t re-scans the sources:\n$plan")
+    }
+  }
+
+  test("serving snapshot: no CacheManager entry, so other Tables.pdv plans still scan parquet") {
+    val cm = spark.sharedState.cacheManager
+    val wasEmpty = cm.isEmpty
+    for ((t, p) <- plainRequests) assert(QueryService.runJson(spark, Sf, t, p).isRight, t)
+    assert(cm.isEmpty == wasEmpty, "serving must not register a cached plan")
+    // a cached pdv would be substituted here as an InMemoryTableScan
+    for (q <- Seq(graft.retail.RetailQueries.q2(spark, Sf), Tables.produits(spark, Sf))) {
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("Scan parquet") && !plan.contains("InMemoryTableScan"),
+        s"a pdv plan lost its parquet scan:\n$plan")
+    }
+  }
+
+  test("serving snapshot: a missing dir is a 404 until it holds data, then a 200 " +
+    "(failures are not memoized)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_late").toString
+    val p = Params(catId = Some("STANDARD"))
+    val notFound = Left(ApiError.NotFound("Base de données"))
+    assert(QueryService.runJson(spark, dir, "mag-cat", p) == notFound)
+    // sources that exist but do not resolve (an empty lineitem dir) are a
+    // 404 as well, and each request retries the failed build
+    Tables.load(spark, Sf, "part").write.parquet(s"$dir/part.parquet")
+    new java.io.File(s"$dir/lineitem.parquet").mkdirs()
+    val before = QueryService.snapshotBuilds
+    assert(QueryService.runJson(spark, dir, "mag-cat", p) == notFound)
+    assert(QueryService.runJson(spark, dir, "mag-cat", p) == notFound)
+    assert(QueryService.snapshotBuilds - before == 2, "a failed build must not be memoized")
+    Tables.load(spark, Sf, "lineitem").write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    assert(QueryService.runJson(spark, dir, "mag-cat", p) == QueryService.runJson(spark, Sf, "mag-cat", p))
+  }
+
+  test("serving snapshot: a dataset rewritten in place is re-resolved, never served stale") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft_rewritten").toString
+    for (t <- Seq("lineitem", "part")) Tables.load(spark, Sf, t).write.parquet(s"$dir/$t.parquet")
+    val p = Params(catId = Some("STANDARD"))
+    def served = QueryService.run(spark, dir, "mag-cat", p).toOption.get.head().getLong(0)
+    def direct = graft.retail.RetailQueries.q2(spark, dir).head().getLong(0)
+    val old = served
+    assert(old == direct)
+    // rewrite lineitem in place with half of the stores
+    Tables.load(spark, Sf, "lineitem").filter(col("l_suppkey") % 2 === 0)
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    val now = served
+    assert(now == direct, "the served answer must reflect the rewritten rows")
+    assert(now < old, s"fixture sanity: halving the stores must change the answer ($old -> $now)")
+    // a deleted source is the 404 again
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/part.parquet"))
+    assert(QueryService.run(spark, dir, "mag-cat", p) == Left(ApiError.NotFound("Base de données")))
+  }
+
+  test("HTTP binding: malformed annee -> 400 InvalidParam, not MissingParam") {
+    val server = graft.api.HttpApi.start(spark, Sf, port = 0)
+    try {
+      val port = server.getAddress.getPort
+      val client = java.net.http.HttpClient.newHttpClient()
+      def get(qs: String) = client.send(
+        java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://127.0.0.1:$port/api/produits/?$qs")).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      val bad = get("type=nb-mag-cat-date&catID=STANDARD&annee=19x6")
+      assert(bad.statusCode() == 400, bad.body())
+      assert(bad.body() == s"""{"error": "${ApiError.InvalidParam("annee", "19x6").message}"}""",
+        bad.body())
+      val absent = get("type=nb-mag-cat-date&catID=STANDARD")
+      assert(absent.statusCode() == 400 && absent.body().contains("manquant: annee"), absent.body())
+      // a type that does not read annee ignores it, as it ignores any extra param
+      assert(get("type=fab-cat&catID=STANDARD&annee=19x6").statusCode() == 200)
+    } finally server.stop(0)
+  }
+
   test("HTTP binding end-to-end: 200 array, 200 envelope, 400 unknown type, 404 bad dir (urls.py:5)") {
     val server = graft.api.HttpApi.start(spark, Sf, port = 0)
     try {
@@ -236,11 +338,14 @@ class QueryServiceSpec extends SparkSpec {
   test("HTTP binding under contention: 24 parallel mixed GETs (composites " +
     "included) are byte-equal to the sequential baseline; session-conf flips " +
     "on OTHER sessions never cross-talk (VERDICT r14 task 5)") {
+    // the sequential baseline is served from `spark`; the contended GETs
+    // from a fresh session whose serving snapshot does not exist yet, so
+    // they all race its one build
     val server = graft.api.HttpApi.start(spark, Sf, port = 0)
+    val cold = graft.api.HttpApi.start(spark.newSession(), Sf, port = 0)
     try {
-      val port = server.getAddress.getPort
       val client = java.net.http.HttpClient.newHttpClient()
-      def get(qs: String): (Int, String) = {
+      def getFrom(port: Int, qs: String): (Int, String) = {
         val req = java.net.http.HttpRequest.newBuilder(
           java.net.URI.create(s"http://127.0.0.1:$port/api/produits/?$qs")).GET().build()
         val r = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
@@ -259,7 +364,8 @@ class QueryServiceSpec extends SparkSpec {
         "type=top-magasins-cat&catID=STANDARD&debut=1995-01-01&fin=1996-12-31",
         "type=score-evolution&catID=STANDARD&fabID=Brand%2312&asOf=1998-09-01",
         "catID=STANDARD") // the reference's default "all" -> 400
-      val baseline = shapes.map(s => s -> get(s)).toMap
+      val baseline = shapes.map(s => s -> getFrom(server.getAddress.getPort, s)).toMap
+      val builds = QueryService.snapshotBuilds
 
       import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
       val work = Seq.fill(3)(shapes).flatten // 24 requests
@@ -284,7 +390,7 @@ class QueryServiceSpec extends SparkSpec {
       flipThread.start()
       val futures = work.map { s =>
         pool.submit(new java.util.concurrent.Callable[(String, (Int, String))] {
-          def call(): (String, (Int, String)) = { go.await(); s -> get(s) }
+          def call(): (String, (Int, String)) = { go.await(); s -> getFrom(cold.getAddress.getPort, s) }
         })
       }
       go.countDown()
@@ -297,7 +403,9 @@ class QueryServiceSpec extends SparkSpec {
           s"response under contention diverged for $s:\n got=${got.toString.take(200)}\n " +
             s"want=${baseline(s).toString.take(200)}")
       }
-    } finally server.stop(0)
+      assert(QueryService.snapshotBuilds - builds == 1,
+        "the racing first requests must share one snapshot build")
+    } finally { server.stop(0); cold.stop(0) }
   }
 
   test("HTTP binding: missing database dir -> 404 JSON error (views.py:92-96)") {
