@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -16,28 +14,19 @@ import org.apache.spark.sql.SparkSession
   * result.
   *
   * Optional arg 1: comma-separated query names to bench (default all) —
-  * for iterating on one family without paying for the whole suite. */
+  * for iterating on one family without paying for the whole suite; a name
+  * that is not a query is an error. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val only: Set[String] =
-      if (args.length > 0) args(0).split(",").filter(_.nonEmpty).toSet
-      else Set.empty
+    val names = Harness.select(args.headOption)
     // Spill-rehearsal knob (VERDICT r11 task 7): the 2g-heap run recorded
     // zero spill everywhere because the working sets fit; shrinking the
     // unified-memory pool (e.g. SPARK_GRAFT_MEM_FRACTION=0.05 on a 2g
     // heap) forces the UnsafeExternalSorter spill path so the work-mass
     // meter's spill column is proven against a nonzero observation.
-    val memFrac = sys.env.get("SPARK_GRAFT_MEM_FRACTION")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = memFrac.fold(builder)(f =>
-      builder.config("spark.memory.fraction", f)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(32),
+      sys.env.get("SPARK_GRAFT_MEM_FRACTION").map("spark.memory.fraction" -> _).toSeq: _*)
     // Fail fast on fixture-schema drift (footer reads only)
     Tables.validate(spark, sfDir)
 
@@ -95,9 +84,6 @@ object Bench {
       (sec, if (sec < 0) WorkMass.zero else work)
     }
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
-    require(names.nonEmpty, s"no queries match filter ${args.headOption}")
     names.foreach(run) // warm-up pass, un-timed
     // three timed passes, interleaved BY PASS (pass 1 of all queries, then
     // pass 2, ...) so a contention window hits each query in at most one of
@@ -120,83 +106,28 @@ object Bench {
     // interpolated PATHS are escaped (ADVICE r15): a quote or backslash in
     // sfDir / the results-file path would break the very parse the JSON
     // record exists to guarantee
-    def jsonEsc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+    import Harness.jsonEsc
     val json = s"""{"metric":"total","value":$total,"unit":"sec","setup_sec":$setupSec,"queries":$qs,"work":$wm,"sf":"${jsonEsc(sfDir)}"}"""
     println(json)
-    // Optional explicit file sink (the stdout JSON line has been
-    // truncated by capture before, ADVICE r7). NOTE: no default filename
-    // — BENCH_full.json was a shared clobber target between the builder's
-    // runs and the driver's post-close capture (VERDICT r11 task 2); the
-    // canonical full-map record is the per-round BENCH_rNN_full.json
-    // written below, which the driver's capture never touches.
-    try sys.env.get("SPARK_GRAFT_BENCH_OUT").foreach(p =>
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(p), json.getBytes("UTF-8")))
-    catch { case e: Exception => System.err.println(s"[bench] file sink failed: ${e.getMessage}") }
-    // Dual-write the per-ROUND artifact too (VERDICT r9 task 6, naming
-    // fixed per ADVICE r10 + VERDICT r10 task 1): the driver's stdout
-    // capture has repeatedly truncated BENCH_rNN.json to a tail, and in
-    // r10 the old max+1 auto-increment minted a phantom BENCH_r11.json
-    // from a round-10 re-measurement while the driver's capture clobbered
-    // the committed full map. Rules: (a) only write the canonical
-    // BENCH_rNN.json slot when the driver sets SPARK_GRAFT_ROUND; (b)
-    // otherwise auto-write into the BENCH_r{max+1}_builder_full family —
-    // the CURRENT round's slot, since the driver closes round N by
-    // writing BENCH_rN.json — a distinct name the driver's capture never
-    // touches, and WRITE-ONCE since r14: an occupied slot gets a
-    // pid-suffixed sibling, never an overwrite.
-    // an explicit SPARK_GRAFT_ROUND always writes its canonical slot; an
-    // explicit SPARK_GRAFT_BENCH_OUT silences only the AUTO-GUESS below.
-    // The auto slot carries a `_builder_` infix (VERDICT r12 task 4): the
-    // driver's post-close capture writes BENCH_rNN.json AND
-    // BENCH_rNN_full.json, so in r12 the builder's committed
-    // BENCH_r12_full.json was clobbered by the capture — builder-emitted
-    // records now live at names the driver never writes. The round number
-    // in the auto path is still a GUESS (max recorded + 1 assumes the
-    // driver already closed the prior round — ADVICE r12); recorded runs
-    // should set SPARK_GRAFT_ROUND or SPARK_GRAFT_BENCH_OUT explicitly.
-    var roundFile: Option[String] = None
-    try if (only.isEmpty) {
-      val target = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt) match {
-        case Some(r) => Some(f"BENCH_r$r%02d.json")
-        case None if sys.env.contains("SPARK_GRAFT_BENCH_OUT") => None
-        case None =>
-          val rx = """BENCH_r(\d+)\.json""".r
-          val dir = new java.io.File(".").listFiles()
-          val seen = if (dir == null) Seq.empty[Int]
-            else dir.toSeq.flatMap(f => f.getName match {
-              case rx(n) => Some(n.toInt); case _ => None })
-          if (seen.isEmpty) None else {
-            // WRITE-ONCE (VERDICT r13 task 1): the guessed slot is the
-            // exact name a builder commits, and an env-less post-close
-            // capture has clobbered the committed record three rounds
-            // running. If the slot is taken, append a process-unique
-            // suffix — an auto-guess run may mint new files, never
-            // replace a committed one.
-            val base = f"BENCH_r${seen.max + 1}%02d_builder_full"
-            val guess = (s"$base.json" +:
-              (1 to 99).map(i => s"${base}_${ProcessHandle.current().pid()}" +
-                (if (i == 1) "" else s"_$i") + ".json"))
-              .find(p => !new java.io.File(p).exists())
-            System.err.println(s"[bench] no SPARK_GRAFT_ROUND/SPARK_GRAFT_BENCH_OUT " +
-              s"set — auto-writing ${guess.getOrElse("(no free slot)")} (round " +
-              "number is a guess: max recorded BENCH_rN.json + 1; existing " +
-              "files are never overwritten; set the env var for a recorded run)")
-            guess
-          }
-      }
-      target.foreach { t =>
+    // Optional file sinks (the stdout JSON line has been truncated by
+    // capture before, ADVICE r7): SPARK_GRAFT_BENCH_OUT names the file;
+    // SPARK_GRAFT_ROUND=N writes the canonical BENCH_rNN.json slot, for a
+    // full run only. Nothing is written without one of them.
+    def sink(path: => String): Option[String] =
+      try {
+        val p = path
         java.nio.file.Files.write(
-          java.nio.file.Paths.get(t), json.getBytes("UTF-8"))
-        roundFile = Some(t)
+          java.nio.file.Paths.get(p), json.getBytes("UTF-8"))
+        Some(p)
+      } catch { case e: Exception =>
+        System.err.println(s"[bench] file sink failed: ${e.getMessage}")
+        None
       }
-    } catch { case e: Exception =>
-      System.err.println(s"[bench] round file sink failed: ${e.getMessage}") }
+    val outFile = sys.env.get("SPARK_GRAFT_BENCH_OUT").flatMap(p => sink(p))
+    val roundFile =
+      if (names.size < SparkEntry.queries.size) None
+      else sys.env.get("SPARK_GRAFT_ROUND")
+        .flatMap(r => sink(f"BENCH_r${r.toInt}%02d.json"))
     spark.stop()
     // LAST stdout line, marker-prefixed and COMPACT (VERDICT r15 task 3):
     // the driver tails stdout into a bounded buffer, and the r14/r15
@@ -206,7 +137,7 @@ object Bench {
     // pointer to the full record file (where the per-query map and work
     // maps already live); ~200 bytes fits any sane tail buffer. Printed
     // after spark.stop() so nothing can follow it.
-    val fileRef = (roundFile orElse sys.env.get("SPARK_GRAFT_BENCH_OUT"))
+    val fileRef = (roundFile orElse outFile)
       .map(p => s""","results_file":"${jsonEsc(p)}"""").getOrElse("")
     println(s"""BENCH_JSON: {"metric":"total","value":$total,"unit":"sec","n":${results.size},"setup_sec":$setupSec,"sf":"${jsonEsc(sfDir)}"$fileRef}""")
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Core-scaling rehearsal (r17, VERDICT r16 task 6): the sf0.1 bench is
@@ -32,37 +31,23 @@ import org.apache.spark.sql.functions._
   */
 object CoreScaleBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def median3(f: => Unit): Double = {
-      f // warm-up (also fills memos the timed body then clears)
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      ts.sorted.apply(1)
-    }
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(cpus)
 
     val n = sys.env.getOrElse("GRAFT_CORESCALE_DOCS", "500000").toLong
     val docs = ScaleBench.corpus(spark, n)
-      .repartition(cpus.toInt).localCheckpoint()
+      .repartition(cpus).localCheckpoint()
 
-    val pairMine = median3 {
+    val pairMine = Harness.median3 {
       graft.pipeline.Dedup.clearDerivedCaches()
       graft.pipeline.Dedup.jaccardPairsDf(docs).count(): Unit
     }
-    val containment = median3 {
+    val containment = Harness.median3 {
       graft.pipeline.Dedup.clearDerivedCaches()
       graft.pipeline.Dedup.containmentPairsDf(docs)
         .write.format("noop").mode("overwrite").save()
     }
-    val dupSpans = median3 {
+    val dupSpans = Harness.median3 {
       graft.pipeline.TextAnalysis.maxDupSpansDf(docs)
         .write.format("noop").mode("overwrite").save()
     }

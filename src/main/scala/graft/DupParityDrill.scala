@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * the DuckDB oracle. This main manufactures a hostile `documents` table
   * that hits all of those, a hostile `embeddings` table ([[embFixture]]),
   * and copies the remaining sf0.001 base tables verbatim — so ALL
-  * declared queries run against the dir, exactly like `graft.Verify` —
-  * then emits the full oracle map; `tools/parity.py <fixtureDir> <outDir>`
+  * declared queries run against the dir — then dumps them with
+  * [[Verify.dump]] (fixture preflight metadata and the full oracle map
+  * included); `tools/parity.py <fixtureDir> <outDir>`
   * closes the loop in DuckDB. Run per round; results in TESTRUN_r{N}.md.
   * Round-10 findings fixed: the zero-norm ANSI cosine crash
   * ([[graft.pipeline.Similarity.safeDiv]]) and the eq113 Spearman crash
@@ -221,17 +222,10 @@ object DupParityDrill {
   def main(args: Array[String]): Unit = {
     val fixtureDir = if (args.length > 0) args(0) else "/tmp/paritydrill_sf"
     val outDir = if (args.length > 1) args(1) else "/tmp/paritydrill_out"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT64 micros, not Spark's legacy INT96 default — the loader and
-      // the DuckDB oracle both read the driver fixtures' encoding
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // INT64 micros, not Spark's legacy INT96 default — the loader and
+    // the DuckDB oracle both read the driver fixtures' encoding
+    val spark = Harness.session(Harness.cpus(8),
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     // the harness reads single-FILE tables (testdata layout): stage each
     // Spark part-file, then move it to <fixtureDir>/<table>.parquet
     def writeTable(df: DataFrame, table: String): Unit = {
@@ -268,28 +262,8 @@ object DupParityDrill {
             StandardCopyOption.REPLACE_EXISTING)
         }
     }
-    new java.io.File(outDir).mkdirs()
     graft.pipeline.Dedup.clearDerivedCaches() // fresh memo keys for this corpus
-    val all = SparkEntry.queries.keys.toSeq.sorted
-    all.foreach { name =>
-      try SparkEntry.queries(name)(spark, fixtureDir).coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[drill] $name failed: ${e.getMessage}")
-      }
-    }
-    // the oracle subset, escaped exactly as Verify does
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.keys.toSeq.sorted
-      .map(n => s"${q(n)}: ${q(SparkEntry.oracleSql(n))}")
-      .mkString("{", ", ", "}")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json.getBytes("UTF-8"))
+    Verify.dump(spark, fixtureDir, outDir, Harness.select(None))
     println(s"[drill] dumped ${SparkEntry.queries.size} queries over $fixtureDir")
     spark.stop()
   }

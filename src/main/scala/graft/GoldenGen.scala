@@ -2,22 +2,17 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the golden canonical hashes at sf0.001 (SURVEY.md §5.3).
   * Run ONLY after an intentional semantic change, and only once the DuckDB
   * parity harness (tools/parity.py) is green. */
 object GoldenGen {
-  val GoldenPath = "/root/repo/src/test/resources/golden/hashes.txt"
+  /** Relative to the working directory, which is the project base both
+    * for `sbt runMain` and for the forked test JVM — so a checkout reads
+    * and writes its own goldens. */
+  val GoldenPath = "src/test/resources/golden/hashes.txt"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(8)
     val sf = "/root/testdata/sf0.001"
     val names = (Oracles.retail.keys ++ Oracles.pipeline.keys).toSeq.sorted
     val lines = names.map { n =>
@@ -25,7 +20,8 @@ object GoldenGen {
     }
     Files.createDirectories(Paths.get(GoldenPath).getParent)
     Files.writeString(Paths.get(GoldenPath), lines.mkString("\n") + "\n")
-    println(s"[golden] wrote ${names.length} hashes to $GoldenPath")
+    println(s"[golden] wrote ${names.length} hashes to " +
+      Paths.get(GoldenPath).toAbsolutePath)
     spark.stop()
   }
 }

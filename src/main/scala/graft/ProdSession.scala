@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The cluster-deployment session builder: one audited artifact for the
   * configuration this engine assumes at 100 TB / 1000-executor scale,
   * instead of advice scattered across Scaladoc. Local test sessions
-  * (SparkSpec, Verify, Bench) deliberately do NOT use this — they pin
+  * (SparkSpec, and [[Harness.session]] behind Verify, Bench and the other
+  * driver mains) deliberately do NOT use this — they pin
   * small fixed shuffle partitioning for reproducibility; this is the
   * builder a deployment starts from.
   *

@@ -117,22 +117,8 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def median3(f: => Unit): Double = {
-      f // warm-up
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      ts.sorted.apply(1)
-    }
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(cpus)
 
     // Work-mass meter (VERDICT r10 task 2): shuffle/spill bytes are the
     // deterministic scale observable; seconds at these sizes are
@@ -143,11 +129,11 @@ object ScaleBench {
     val baseN = 5000L // the sf0.1 documents count
     val results = scales.map { s =>
       val n = baseN * s
-      val docs = corpus(spark, n).repartition(cpus.toInt).localCheckpoint()
+      val docs = corpus(spark, n).repartition(cpus).localCheckpoint()
       // cold mining pass: shingle sets + prefix-filtered Jaccard join,
       // memo cleared before every timed pass (it is the once-per-corpus
       // cost being measured)
-      val mineSec = median3 {
+      val mineSec = Harness.median3 {
         Dedup.clearDerivedCaches()
         Dedup.jaccardPairsDf(docs).count()
       }
@@ -161,9 +147,9 @@ object ScaleBench {
         pairs = Dedup.jaccardPairsDf(docs).count() // warms the memo too
       }
       // eq131 with the pair memo warm: its production posture
-      val splitSec = median3(Dedup.clusterSplitDf(docs).count())
+      val splitSec = Harness.median3(Dedup.clusterSplitDf(docs).count())
       // eq127: self-contained chunked-suffix pass
-      val eq127Sec = median3(TextAnalysis.maxDupSpansDf(docs).count())
+      val eq127Sec = Harness.median3(TextAnalysis.maxDupSpansDf(docs).count())
       val spanDocs = TextAnalysis.maxDupSpansDf(docs).count()
       // the COMPOSED eq136 chain over the same corpus: cold = one run
       // paying the full mining lifecycle (pair table + CC + BPE learn),
@@ -177,7 +163,7 @@ object ScaleBench {
       }
       val chainColdSec = (System.nanoTime() - chainT0) / 1e9
       val chainWarmSec =
-        median3(graft.pipeline.Curation.curationPipelineDf(docs).collect())
+        Harness.median3(graft.pipeline.Curation.curationPipelineDf(docs).collect())
       val kept = funnel.sortBy(_.getInt(0)).map(_.getLong(2)).last
 
       // ---- incremental probe (r11): a FIXED 1000-doc delta (identical
@@ -189,7 +175,7 @@ object ScaleBench {
       // terabyte, not the 100 TB index").
       val deltaM = 1000L
       val union = docs.unionByName(deltaCorpus(spark, n, deltaM))
-        .repartition(cpus.toInt).localCheckpoint()
+        .repartition(cpus).localCheckpoint()
       val isNew = col("doc_id") >= n
       def probeFlags(): (Long, Long) = {
         val newDocs = union.filter(isNew)
@@ -204,7 +190,7 @@ object ScaleBench {
       val incT0 = System.nanoTime()
       val incIndexWork = meter(probeFlags()) // cold: pays the index build
       val incIndexSec = (System.nanoTime() - incT0) / 1e9
-      val incProbeSec = median3(probeFlags()) // warm: the per-batch cost
+      val incProbeSec = Harness.median3(probeFlags()) // warm: the per-batch cost
       var incFlags = (0L, 0L)
       val incProbeWork = meter { incFlags = probeFlags() }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{CorpusOps, Dedup, EventOps, Similarity}
@@ -43,23 +43,9 @@ import graft.pipeline.{CorpusOps, Dedup, EventOps, Similarity}
   */
 object SkewBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(cpus)
     import spark.implicits._
-
-    def median3(f: => Unit): Double = {
-      f // warm-up
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      ts.sorted.apply(1)
-    }
 
     // ---- 1. hot shingle in 50% of 20k docs ---------------------------
     val docs = spark.range(20000).select(
@@ -74,8 +60,8 @@ object SkewBench {
     // paths below compare the JOIN strategies, not the shingling
     val plainCands = Dedup.plainCandidateCount(docs)
     val prefixCands = Dedup.prefixCandidatesDf(docs).count()
-    val plainSec = median3(Dedup.jaccardPairsPlainDf(docs).count())
-    val prefixSec = median3(Dedup.jaccardPairsPrefixDf(docs).count())
+    val plainSec = Harness.median3(Dedup.jaccardPairsPlainDf(docs).count())
+    val prefixSec = Harness.median3(Dedup.jaccardPairsPrefixDf(docs).count())
 
     // ---- 2. one user owning 30% of 8M events -------------------------
     val events = spark.range(8000000).select(
@@ -103,8 +89,8 @@ object SkewBench {
     // never materializes. Disable broadcast so both paths run the shuffled
     // join that regime forces, making the reducer skew real.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val unsaltedSec = median3(unsaltedJoinTotals())
-    val saltedSec = median3(EventOps.saltedJoinTotalsDf(events).collect())
+    val unsaltedSec = Harness.median3(unsaltedJoinTotals())
+    val saltedSec = Harness.median3(EventOps.saltedJoinTotalsDf(events).collect())
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 10L * 1024 * 1024)
     val hotRows = events.filter(col("user_id") === 0L).count()
     val maxSaltedGroup = events
@@ -130,8 +116,8 @@ object SkewBench {
     val shardedPairMass = Similarity.shardedGroupsDf(emb, cap = 1000)
       .groupBy("label", "shard").count()
       .agg(expr("sum(count * (count - 1) div 2)")).head().getLong(0)
-    val plainSemSec = median3(Similarity.semanticDedupDf(emb).collect())
-    val shardedSemSec = median3(Similarity.semanticDedupShardedDf(emb, cap = 1000).collect())
+    val plainSemSec = Harness.median3(Similarity.semanticDedupDf(emb).collect())
+    val shardedSemSec = Harness.median3(Similarity.semanticDedupShardedDf(emb, cap = 1000).collect())
     val plainDups = Similarity.semanticDedupDf(emb)
       .agg(sum("n_dup_pairs")).head().getLong(0)
     val shardedDups = Similarity.semanticDedupShardedDf(emb, cap = 1000)
@@ -166,7 +152,7 @@ object SkewBench {
     // across the session's partitions like a real chunk table would be
     val chunkT0 = System.nanoTime()
     val gchunks = CorpusOps.chunkTexts(gdocs, 512)
-      .repartition(cpus.toInt).localCheckpoint()
+      .repartition(cpus).localCheckpoint()
     val chunkIngestSec = (System.nanoTime() - chunkT0) / 1e9
     def tokenProfile(df: DataFrame): Array[org.apache.spark.sql.Row] = df
       .select(col("source"), explode(graft.pipeline.TextAnalysis.tokens(col("text"))).as("tok"))
@@ -178,8 +164,8 @@ object SkewBench {
     val chunkedProfile = tokenProfile(gchunks)
     require(directProfile.map(_.toString).sameElements(chunkedProfile.map(_.toString)),
       "chunked token profile must equal the direct profile")
-    val directSec = median3(tokenProfile(gdocs))
-    val chunkedSec = median3(tokenProfile(gchunks))
+    val directSec = Harness.median3(tokenProfile(gdocs))
+    val chunkedSec = Harness.median3(tokenProfile(gchunks))
     val maxFanoutDirect = gdocs
       .select(size(graft.pipeline.TextAnalysis.tokens(col("text"))).as("n"))
       .agg(max("n")).head().getInt(0)
@@ -215,9 +201,9 @@ object SkewBench {
     val (_, packStats, packThreshold) =
       graft.pipeline.Curation.packBucketed(clustered)
     val refinedMax = packStats.map(_.rows).max
-    val clusteredSec = median3(
+    val clusteredSec = Harness.median3(
       graft.pipeline.Curation.packPrefixCum(clustered).agg(sum("cum")).collect())
-    val uniformSec = median3(
+    val uniformSec = Harness.median3(
       graft.pipeline.Curation.packPrefixCum(uniform).agg(sum("cum")).collect())
 
     // ---- 6. duplicate doc_ids vs the pack re-split (r15) --------------
@@ -245,9 +231,9 @@ object SkewBench {
     val dupMax = dupStats.map(_.rows).max
     val dupOverSingleValue =
       dupStats.filter(_.rows > dupThreshold).forall(s => s.mn == s.mx)
-    val dupSec = median3(
+    val dupSec = Harness.median3(
       graft.pipeline.Curation.packPrefixCum(dupCorpus).agg(sum("cum")).collect())
-    val dedupedSec = median3(
+    val dedupedSec = Harness.median3(
       graft.pipeline.Curation.packPrefixCum(dedupedCorpus).agg(sum("cum")).collect())
 
     val json =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.{SnapshotStateSink, StateLog}
@@ -33,14 +32,8 @@ import graft.sources.{SnapshotStateSink, StateLog}
 object StateLogSoakBench {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(cpus)
     val meter = WorkMass.meter(spark.sparkContext)
 
     val scales = Seq(1, 3, 10)
@@ -48,7 +41,7 @@ object StateLogSoakBench {
     val results = scales.map { s =>
       val n = baseN * s
       val old = ScaleBench.corpus(spark, n)
-        .repartition(cpus.toInt).localCheckpoint()
+        .repartition(cpus).localCheckpoint()
       val st = SnapshotStateSink.write(spark, old, lit(false), lit(true))
       val ref = StateLog.fromSnapshot(spark, st,
         StateLog.writeCorpusStore(spark, old))

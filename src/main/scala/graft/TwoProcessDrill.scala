@@ -34,17 +34,7 @@ import graft.sources.{DedupIndexSink, SnapshotStateSink, StateLog}
   * must keep sound. */
 object TwoProcessDrill {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(): SparkSession = Harness.session(Harness.cpus(8))
 
   /** The base corpus: ScaleBench's deterministic fixture (alphabetic
     * tokens — survives the quality gates). */

@@ -7,35 +7,30 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [comma-separated query names — default: all]
     val (sfDir, outDir) = (args(0), args(1))
-    // blank tokens are dropped so a "" third arg means "all", not the
-    // impossible query named "" (which would silently write nothing)
-    val only: Set[String] =
-      if (args.length > 2) args(2).split(",").filter(_.nonEmpty).toSet
-      else Set.empty
-    require(only.isEmpty || only.subsetOf(SparkEntry.queries.keySet),
-      s"unknown queries requested: ${(only -- SparkEntry.queries.keySet).mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val only = Harness.select(args.lift(2))
     // SPARK_GRAFT_MEM_FRACTION: same spill-rehearsal knob as Bench — a
     // constrained run must also prove results UNCHANGED, which is this
     // dump + the parity compare under the same squeezed memory pool.
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = sys.env.get("SPARK_GRAFT_MEM_FRACTION")
-      .fold(builder)(f => builder.config("spark.memory.fraction", f))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(4),
+      sys.env.get("SPARK_GRAFT_MEM_FRACTION").map("spark.memory.fraction" -> _).toSeq: _*)
+    dump(spark, sfDir, outDir, only)
+    spark.stop()
+  }
+
+  /** Writes the `only` query results over `sfDir` to `outDir/<name>`, the
+    * fixture preflight metadata to `outDir/_fixture_meta.json` and every
+    * oracle to `outDir/oracle_sql.json` — the input of
+    * `tools/parity.py <sfDir> <outDir>`. A failing query is reported on
+    * stderr as `[verify] <name> failed` and the dump goes on. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Seq[String]): Unit = {
     // Fail fast on fixture-schema drift (footer reads only) — one explicit
     // error beats 159 queries against corrupted decodes.
     Tables.validate(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    only.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1)
+        .write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -48,7 +43,7 @@ object Verify {
     // DuckDB read the file correctly — fails one explicit preflight check
     // instead of 27 opaque per-query hash mismatches.
     locally {
-      import org.apache.spark.sql.functions.{count, max, min, unix_micros}
+      import org.apache.spark.sql.functions.{max, min, unix_micros}
       val counts = Tables.base.map { t =>
         s""""$t": ${Tables.load(spark, sfDir, t).count()}"""
       }.mkString("{", ", ", "}")
@@ -59,21 +54,9 @@ object Verify {
       Files.writeString(Paths.get(s"$outDir/_fixture_meta.json"),
         s"""{"counts": $counts, "events_ts_min_us": ${ev.getLong(0)}, "events_ts_max_us": ${ev.getLong(1)}}""")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = "\"" + Harness.jsonEsc(s) + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }
