@@ -75,7 +75,10 @@ object HttpApi {
     if (exchange.getRequestMethod != "GET")
       return (405, """{"error": "Méthode non autorisée"}""")
     val typeName = params.getOrElse("type", "all") // views.py:102
-    val annee = params.get("annee").map(a => a -> a.toIntOption)
+    // integer params: a raw value that does not parse goes to `malformed`
+    def int(name: String) = params.get(name).map(v => v -> v.toIntOption)
+    val annee = int("annee")
+    val limit = int("limit")
     val p = QueryService.Params(
       catId = params.get("catID"),
       fabId = params.get("fabID"),
@@ -83,7 +86,9 @@ object HttpApi {
       debut = params.get("debut"),
       fin = params.get("fin"),
       asOf = params.get("asOf"),
-      malformed = annee.collect { case (a, None) => "annee" -> a }.toMap)
+      limit = limit.flatMap(_._2),
+      malformed = Seq("annee" -> annee, "limit" -> limit)
+        .collect { case (name, Some((v, None))) => name -> v }.toMap)
     QueryService.runJson(spark, dir, typeName, p) match {
       case Right(body) => (200, body)
       case Left(err)   => (err.status, s"""{"error": ${jsonString(err.message)}}""")

@@ -73,6 +73,11 @@ object DedupIndexSink {
     * batch, the rest is the indexed corpus. */
   private[graft] def isNewCol = col("doc_id") % 10 >= 8
 
+  /** The old split, spelled `% 10 < 8` rather than `!isNewCol`: the
+    * snapshot writer's old-corpus plan, which the session chain memos key
+    * on, is this exact expression tree. */
+  private[graft] def isOldCol = col("doc_id") % 10 < 8
+
   def eq139(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val t = write(spark, docs, isNewCol)
@@ -282,6 +287,12 @@ object DedupIndexSink {
       guarded.join(broadcast(spark.table(tb.docs)), Seq("doc_id"), "left_anti")
     }
   }
+
+  /** Band rows minus a stop-key list that may repeat keys (a state log's
+    * stop view is the union of every generation's list) — the probe view
+    * of a raw band layer. */
+  private[sources] def effectiveBandOf(bandRaw: DataFrame, stop: DataFrame): DataFrame =
+    bandRaw.join(broadcast(stop.distinct()), Seq("band", "band_key"), "left_anti")
 
   /** The index's EFFECTIVE exact layer: the stored hashes minus any
     * pending hash tombstones (eq143 — a hash leaves only when its last

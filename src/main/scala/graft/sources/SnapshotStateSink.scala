@@ -2,27 +2,27 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-import graft.pipeline.Curation
+import graft.pipeline.{Curation, Dedup}
 
-/** eq140 — the CURATION SNAPSHOT STATE at rest: eq137 proves the delta
-  * path touches only the batch, but every frozen artifact it consumes —
-  * the dedup index, the test-split vocabulary, the release mix rates,
-  * the shipped BPE encoder, the per-lang pack summary — lives in
+/** The CURATION SNAPSHOT STATE at rest: eq137 proves the delta path
+  * touches only the batch, but every frozen artifact it consumes — the
+  * dedup index, the test-split vocabulary, the release mix rates, the
+  * shipped BPE encoder, the per-lang pack summary — lives in
   * session-lifetime PlanMemos. eq139 persisted the index; this persists
   * THE REST, closing the loop: a full curation ends by writing its
-  * snapshot state ([[write]]), and the next delta ingest — possibly
-  * days later, in a different driver — runs the eq137 funnel reading
-  * every artifact from storage ([[readAndCurate]]), holding nothing in
-  * memory from the last full run.
+  * snapshot state ([[write]]), and the next delta ingest — possibly days
+  * later, in a different driver — runs the eq137 funnel reading every
+  * artifact from storage ([[readAndCurate]]), holding nothing in memory
+  * from the last full run. The oracle drills over this lifecycle (eq140–
+  * eq142, eq145) live in [[StateDrills]].
   *
-  * Restart contract (ADVICE r11): [[StateTables]] carries CATALOG TABLE
-  * NAMES, so "a different driver" requires a PERSISTENT metastore (Hive
-  * or equivalent) in which those names resolve — the deployment shape on
-  * a real cluster. Under the default in-memory catalog the names resolve
+  * Restart contract: [[StateTables]] carries CATALOG TABLE NAMES, so "a
+  * different driver" requires a PERSISTENT metastore (Hive or
+  * equivalent) in which those names resolve — the deployment shape on a
+  * real cluster. Under the default in-memory catalog the names resolve
   * only in sessions of the same SparkContext, which is exactly what the
   * fresh-session PipelineSpec pins exercise; the parquet files themselves
   * are already durable either way.
@@ -33,13 +33,10 @@ import graft.pipeline.Curation
   * the BPE encoder is vocabulary-bounded — plain parquet tables read
   * back whole and broadcast where the funnel needs them.
   *
-  * The query's funnel is BIT-IDENTICAL to eq137's — it shares that
-  * oracle verbatim, so any loss or mangling across the write→read
-  * round-trip of ANY artifact breaks the hash compare. PipelineSpec
-  * pins the restart contract the memos can't give: a FRESH session
-  * running [[readAndCurate]] mines only the delta (+1 pair table, +1
-  * labels, +1 batch signing) and re-learns nothing (BPE vocabulary +0,
-  * index memos +0).
+  * PipelineSpec pins the restart contract the memos can't give: a FRESH
+  * session running [[readAndCurate]] mines only the delta (+1 pair
+  * table, +1 labels, +1 batch signing) and re-learns nothing (BPE
+  * vocabulary +0, index memos +0).
   *
   * Reference basis: the reference persists ETL output to a second store
   * and queries the stored copy (`etl_project/data.py:41-42`); this is
@@ -55,24 +52,16 @@ object SnapshotStateSink {
   final case class StateTables(index: DedupIndexSink.IndexTables,
       testVocab: String, mixRates: String, bpeEnc: String, packSummary: String)
 
-  def eq140(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val t = write(spark, docs)
-    readAndCurate(spark, docs, t)
-  }
-
-  /** Ends a full curation of the OLD snapshot (eq104's split rule) by
-    * writing its state tables — per-invocation names + tmp paths, the
-    * eq138/eq139 convention. */
-  def write(spark: SparkSession, docs: DataFrame): StateTables =
-    write(spark, docs, DedupIndexSink.isNewCol, col("doc_id") % 10 < 8)
-
-  /** Generalized split form ((isNew, isOld) as separate predicates so the
-    * standard entry keeps the exact `% 10 < 8` filter plan the eq136/
-    * eq137 chain memos key on) — the two-advance PipelineSpec test drives
-    * a 3-way snapshot through it. */
+  /** Ends a full curation of the OLD snapshot by writing its state tables
+    * — per-invocation names + tmp paths, the eq138/eq139 convention. The
+    * defaults are eq104's split rule; `(isNew, isOld)` are separate
+    * predicates so the standard entry keeps the exact
+    * [[DedupIndexSink.isOldCol]] filter plan the eq136/eq137 chain memos
+    * key on, and the two-advance PipelineSpec test drives a 3-way
+    * snapshot through them. */
   def write(spark: SparkSession, docs: DataFrame,
-      isNew: org.apache.spark.sql.Column, isOld: org.apache.spark.sql.Column): StateTables = {
+      isNew: Column = DedupIndexSink.isNewCol,
+      isOld: Column = DedupIndexSink.isOldCol): StateTables = {
     val id = s"${ProcessHandle.current().pid()}_${sinkSeq.incrementAndGet()}"
     val tmp = sys.props("java.io.tmpdir")
     def save(df: DataFrame, name: String): String = {
@@ -84,9 +73,9 @@ object SnapshotStateSink {
       tbl
     }
     // the index write and the four artifact writes are independent table
-    // writes off shared memoized frames — overlapped (r16 optimization,
-    // guide §2.6); concurrent first-forcing of a shared memo is safe (the
-    // PlanMemo cell serializes the mining, every thread reads the one
+    // writes off shared memoized frames — overlapped (guide §2.6);
+    // concurrent first-forcing of a shared memo is safe (the PlanMemo
+    // cell serializes the mining, every thread reads the one
     // materialization)
     val (idx, artifacts) = SinkPar.run2(
       DedupIndexSink.write(spark, docs, isNew), {
@@ -118,25 +107,62 @@ object SnapshotStateSink {
       spark.table(t.bpeEnc), spark.table(t.packSummary))
   }
 
-  def eq141(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val t0 = write(spark, docs)
-    auditAdvanced(spark, advance(spark, docs, t0))
+  /** The index-layer facts one delta's survivors add — the math
+    * [[advance]] and [[StateLog]]'s ingest share:
+    *
+    *  - `newHashes`: the survivors' distinct content hashes not in
+    *    `hashIdx` (NULL-text docs carry no hash). The batch hashes
+    *    broadcast INTO the index scan and the matched set broadcasts
+    *    back, so the index side is scan-only — never a state-wide
+    *    shuffle;
+    *  - `survBanded`: the survivors' band rows (`band, band_key, doc_id`)
+    *    out of `batchBands` (the batch's band keys), materialized here —
+    *    the guard recount below and the caller's band write both read it;
+    *  - `newlyHot`: the GUARD update — only the TOUCHED buckets are
+    *    recounted (`bandRaw` rows semi-pruned by a broadcast of the
+    *    touched keys, plus the delta's own counts); buckets pushed past
+    *    [[Dedup.maxBucket]] that `stop` does not already list join the
+    *    stop-key list.
+    *
+    * `bandRaw` is the stored band layer WITHOUT the stop filter: rows of
+    * stop-listed buckets still count toward their bucket's mass, and a
+    * bucket already on the list is never re-added. Callers that append
+    * `newHashes`/`newlyHot` into the very tables they read must
+    * materialize them first. */
+  private[graft] def deltaFacts(survivors: DataFrame, batchBands: DataFrame,
+      hashIdx: DataFrame, bandRaw: DataFrame,
+      stop: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val survHashes = survivors.select(md5(col("text")).as("h"))
+      .filter(col("h").isNotNull).distinct()
+    val matchedHashes = hashIdx.join(broadcast(survHashes), Seq("h"), "left_semi")
+    val newHashes = survHashes.join(broadcast(matchedHashes), Seq("h"), "left_anti")
+    val survBanded = batchBands
+      .join(broadcast(survivors.select("doc_id")), Seq("doc_id"), "left_semi")
+      .select("band", "band_key", "doc_id")
+      .localCheckpoint()
+    val touched = survBanded.groupBy("band", "band_key").agg(count(lit(1)).as("dc"))
+    val storedCnt = bandRaw
+      .join(broadcast(touched.select("band", "band_key")), Seq("band", "band_key"), "left_semi")
+      .groupBy("band", "band_key").agg(count(lit(1)).as("oc"))
+    val newlyHot = touched
+      .join(storedCnt, Seq("band", "band_key"), "left_outer")
+      .filter(coalesce(col("oc"), lit(0L)) + col("dc") > Dedup.maxBucket)
+      .select("band", "band_key")
+      .join(broadcast(stop.distinct()), Seq("band", "band_key"), "left_anti")
+    (newHashes, survBanded, newlyHot)
   }
 
-  /** eq141 — ADVANCE the snapshot state by one curated delta, in
-    * O(batch): after the delta ingest, the NEXT delta must probe the
-    * merged corpus, so the state the last full curation wrote has to be
-    * maintainable — not just readable. The advance appends exactly the
-    * batch-bounded facts the delta's survivors add:
+  /** ADVANCE the snapshot state by one curated delta, in O(batch): after
+    * the delta ingest, the NEXT delta must probe the merged corpus, so
+    * the state the last full curation wrote has to be maintainable — not
+    * just readable. `isNew` marks the batch rows of `docs` (default:
+    * eq104's split). The advance appends exactly the batch-bounded facts
+    * the delta's survivors add ([[deltaFacts]]):
     *
     *  - hash layer: survivor content hashes not yet stored (append into
-    *    the bucketed table; NULL-text docs carry no hash);
-    *  - band layer: the survivors' band keys (append), plus the GUARD
-    *    update they imply — only the TOUCHED buckets are recounted
-    *    (stored rows semi-pruned by a broadcast of the touched keys +
-    *    the delta's own counts), and buckets pushed past the cap join
-    *    the stop-key list. Rows of newly-hot buckets stay physically
+    *    the bucketed table);
+    *  - band layer: the survivors' band keys (append), plus the guard
+    *    update they imply. Rows of newly-hot buckets stay physically
     *    present; probes filter by the stop list (the production append-
     *    only posture — deletion is a compaction concern, not an ingest
     *    one);
@@ -146,18 +172,13 @@ object SnapshotStateSink {
     *    in-place overwrite of a table being read);
     *  - meta: re-derived from the post-advance stop list, new version.
     *
-    * The DuckDB oracle rebuilds the advanced state FROM SCRATCH over the
-    * merged population (retained old rows + survivor rows, the old stop
-    * list restored, the guard recounted globally) — hash-matching it
-    * proves advance(state, delta) ≡ state(merged), which by induction
-    * makes any number of successive delta ingests correct. Every
-    * localCheckpoint below also cuts the append frames' lineage from
-    * their target tables before the append jobs run. */
-  def advance(spark: SparkSession, docs: DataFrame, t: StateTables): StateTables =
-    advance(spark, docs, t, DedupIndexSink.isNewCol)
-
+    * The DuckDB oracle (eq141) rebuilds the advanced state FROM SCRATCH
+    * over the merged population (retained old rows + survivor rows, the
+    * old stop list restored, the guard recounted globally) — hash-matching
+    * it proves advance(state, delta) ≡ state(merged), which by induction
+    * makes any number of successive delta ingests correct. */
   def advance(spark: SparkSession, docs: DataFrame, t: StateTables,
-      isNew: org.apache.spark.sql.Column): StateTables = {
+      isNew: Column = DedupIndexSink.isNewCol): StateTables = {
     // the advance's hash anti-join and appends read the RAW layers; a
     // state with pending retraction tombstones (eq143) must be compacted
     // first so the ghosts are physically gone before new facts land
@@ -165,44 +186,29 @@ object SnapshotStateSink {
       "advance requires a compacted state — apply pending retraction tombstones first")
     // a snapshot a StateLog wraps is a COMMITTED generation — its gen-0
     // manifest row points INTO these very tables (no copy), so an
-    // in-place append here would retroactively mutate committed history
-    // (ADVICE r11). Ingest through the log instead.
+    // in-place append here would retroactively mutate committed history.
+    // Ingest through the log instead.
     require(!StateLog.wrapsSnapshotIndex(spark, t.index.hash),
       "this snapshot is wrapped by a state log (its tables ARE the log's " +
         "generation 0) — ingest through StateLog.ingestBatch instead")
     val (hashIdx, bandIdx, stopIdx, _) = DedupIndexSink.readBack(spark, t.index)
     // the survivors are decided against the EFFECTIVE index view — after
     // a prior advance the raw band table carries rows in stop-listed
-    // buckets that the guard semantics exclude (r11 review finding)
+    // buckets that the guard semantics exclude
     val survivors = Curation.deltaSurvivorsFromState(docs, isNew,
       hashIdx, DedupIndexSink.effectiveBandIndex(spark, t.index),
       spark.table(t.testVocab), spark.table(t.mixRates))
-
-    // hash layer: new distinct survivor hashes only
-    val newHashes = survivors.select(md5(col("text")).as("h"))
-      .filter(col("h").isNotNull).distinct()
-      .join(hashIdx, Seq("h"), "left_anti")
-      .localCheckpoint()
-
-    // band layer: survivor band rows + the incremental guard update
-    val survBanded = graft.pipeline.Dedup.batchBandKeys(docs.filter(isNew))
-      .join(broadcast(survivors.select("doc_id")), Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    val touched = survBanded.groupBy("band", "band_key").agg(count(lit(1)).as("dc"))
-    val storedCnt = bandIdx
-      .join(broadcast(touched.select("band", "band_key")), Seq("band", "band_key"), "left_semi")
-      .groupBy("band", "band_key").agg(count(lit(1)).as("oc"))
-    val newlyHot = touched
-      .join(storedCnt, Seq("band", "band_key"), "left_outer")
-      .filter(coalesce(col("oc"), lit(0L)) + col("dc") > graft.pipeline.Dedup.maxBucket)
-      .select("band", "band_key")
-      .join(stopIdx, Seq("band", "band_key"), "left_anti")
-      .localCheckpoint()
+    val (hashes, survBanded, hot) = deltaFacts(survivors,
+      Dedup.batchBandKeys(docs.filter(isNew)), hashIdx, bandIdx, stopIdx)
+    // the appends below land in the very tables these frames read: cut
+    // their lineage before any append job runs
+    val newHashes = hashes.localCheckpoint()
+    val newlyHot = hot.localCheckpoint()
 
     // pack layer: the advanced summary, versioned; written CONCURRENTLY
-    // with the three index appends (r16 optimization, guide §2.6 — all
-    // four read only pre-materialized checkpoints or frozen tables). The
-    // meta re-derivation is the one ordered pair: it reads the stop table
+    // with the three index appends (guide §2.6 — all four read only
+    // pre-materialized checkpoints or frozen tables). The meta
+    // re-derivation is the one ordered pair: it reads the stop table
     // AFTER the newlyHot append, so the two stay sequential in one thunk.
     val id = s"${ProcessHandle.current().pid()}_${sinkSeq.incrementAndGet()}"
     val tmp = sys.props("java.io.tmpdir")
@@ -215,7 +221,7 @@ object SnapshotStateSink {
         .saveAsTable(ps2),
       () => newHashes.write.mode("append")
         .bucketBy(DedupIndexSink.Buckets, "h").sortBy("h").saveAsTable(t.index.hash),
-      () => survBanded.select("band", "band_key", "doc_id").write.mode("append")
+      () => survBanded.write.mode("append")
         .bucketBy(DedupIndexSink.Buckets, "band_key").sortBy("band_key")
         .saveAsTable(t.index.band),
       () => {
@@ -228,81 +234,23 @@ object SnapshotStateSink {
     t.copy(index = t.index.copy(meta = meta2), packSummary = ps2)
   }
 
-  /** The advanced state's audit, read ONLY from the post-advance tables:
-    * effective band-index size (stop-filtered), hash entries, stop-key
-    * count, and the merged corpus's pack totals from the advanced
-    * summary — the (item, n) shape of eq139's audit. */
-  private[graft] def auditAdvanced(spark: SparkSession, t: StateTables): DataFrame =
-    auditItems(spark, t).orderBy("item")
-
-  private def one(item: String, df: DataFrame): DataFrame =
-    df.select(lit(item).as("item"), col("n"))
-
-  private def auditItems(spark: SparkSession, t: StateTables): DataFrame = {
-    val (hashIdx, bandIdx, stopIdx, _) = DedupIndexSink.readBack(spark, t.index)
-    val eff = bandIdx.join(broadcast(stopIdx), Seq("band", "band_key"), "left_anti")
-    val ps = spark.table(t.packSummary)
-    one("idx_hash_entries", hashIdx.agg(count(lit(1)).as("n")))
-      .unionAll(one("idx_band_entries", eff.agg(count(lit(1)).as("n"))))
-      .unionAll(one("idx_stop_buckets", stopIdx.agg(count(lit(1)).as("n"))))
-      .unionAll(one("pack_docs", ps.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n"))))
-      .unionAll(one("pack_tokens", ps.agg(coalesce(sum(col("t_tokens")), lit(0L)).as("n"))))
-      .unionAll(one("pack_chars", ps.agg(coalesce(sum(col("t_chars")), lit(0L)).as("n"))))
-      .unionAll(one("pack_shards", ps.agg(coalesce(sum(col("n_shards")), lit(0L)).as("n"))))
-  }
-
-  def eq142(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val t1 = advance(spark, docs, write(spark, docs))
-    auditCompacted(spark, t1, compact(spark, t1))
-  }
-
-  /** eq142 — COMPACT the advanced state: the index layers pay down their
-    * append debts ([[DedupIndexSink.compact]] — stop-listed rows
-    * physically dropped, files re-coalesced one-per-bucket, the stop-key
-    * list KEPT as the guard's memory); the frozen artifacts (vocabulary,
-    * mix rates, encoder, pack summary) are immutable or already
+  /** COMPACT the advanced state: the index layers pay down their append
+    * debts ([[DedupIndexSink.compact]] — stop-listed rows physically
+    * dropped, files re-coalesced one-per-bucket, the stop-key list KEPT
+    * as the guard's memory); the frozen artifacts (vocabulary, mix
+    * rates, encoder, pack summary) are immutable or already
     * versioned-whole per advance, so they carry over untouched. The new
     * generation gets new table names — the old state stays readable
     * until the caller drops it. */
   def compact(spark: SparkSession, t: StateTables): StateTables =
     t.copy(index = DedupIndexSink.compact(spark, t.index))
 
-  /** The compacted state's audit: [[auditAdvanced]]'s seven items (they
-    * must not move — compaction is semantics-free) plus the two facts
-    * compaction is FOR: `band_raw_rows`, the physical row count of the
-    * compacted band table (≡ `idx_band_entries` — the raw table IS the
-    * effective view now, the compaction theorem the oracle re-proves
-    * from scratch), and `band_rows_removed`, the dead rows the rewrite
-    * dropped (counted pre-vs-post as one union-agg — no join between
-    * the generations). */
-  private[graft] def auditCompacted(spark: SparkSession,
-      pre: StateTables, t: StateTables): DataFrame = {
-    val raw = spark.table(t.index.band)
-    val removed = spark.table(pre.index.band).select(lit(1L).as("w"))
-      .unionAll(raw.select(lit(-1L).as("w")))
-      .agg(coalesce(sum(col("w")), lit(0L)).as("n"))
-    auditItems(spark, t)
-      .unionAll(one("band_raw_rows", raw.agg(count(lit(1)).as("n"))))
-      .unionAll(one("band_rows_removed", removed))
-      .orderBy("item")
-  }
-
-  def eq145(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val isDel = col("doc_id") % 7 === 3
-    val st0 = write(spark, docs)
-    val t1 = DedupIndexSink.retract(spark, docs, st0.index,
-      DedupIndexSink.isNewCol, isDel)
-    val st2 = repack(spark, docs, st0.copy(index = DedupIndexSink.compact(spark, t1)), isDel)
-    auditRepacked(spark, docs, isDel, col("doc_id") % 10 < 8, st2)
-  }
-
-  /** eq145 — POST-RETRACTION REPACK: eq143 deliberately defers pack
+  /** POST-RETRACTION REPACK: eq143 deliberately defers pack
     * re-accounting after deletions (the summary still counts the dead
     * docs' tokens, and the written shard layout still holds their rows'
     * gaps). The repack closes that loop once the tombstones are applied:
-    * the RETAINED curated corpus is re-sharded from scratch — the same
+    * the RETAINED curated corpus of the old split `isOld` (default:
+    * eq104's `% 10 < 8`) is re-sharded from scratch — the same
     * [[Curation.shardAssign]] prefix-sum rule as the full curation, so
     * deleted docs' token mass no longer pads anyone's shard — and the
     * per-lang pack summary is rebuilt over it and written as a new
@@ -321,17 +269,12 @@ object SnapshotStateSink {
     * (the price of a full curation's packing stage, paid once per repack,
     * not per deletion) + a |langs|-row write; nothing doc×doc. */
   def repack(spark: SparkSession, docs: DataFrame, t: StateTables,
-      isDeleted: org.apache.spark.sql.Column): StateTables =
-    repack(spark, docs, t, isDeleted, col("doc_id") % 10 < 8)
-
-  def repack(spark: SparkSession, docs: DataFrame, t: StateTables,
-      isDeleted: org.apache.spark.sql.Column,
-      isOld: org.apache.spark.sql.Column): StateTables = {
+      isDeleted: Column, isOld: Column = DedupIndexSink.isOldCol): StateTables = {
     require(t.index.tomb.isEmpty,
       "repack follows compaction — apply the pending tombstones first")
-    // membership only (r16 optimization): curatedDocsDf's shard_id was
-    // computed by the eager two-phase prefix sum and dropped on the next
-    // line — the repack re-windows from a zero prefix sum anyway
+    // membership only: curatedDocsDf's shard_id would be computed by the
+    // eager two-phase prefix sum and dropped on the next line — the
+    // repack re-windows from a zero prefix sum anyway
     val retained = Curation.curatedMembership(docs.filter(isOld))
       .filter(!isDeleted)
     val id = s"${ProcessHandle.current().pid()}_${sinkSeq.incrementAndGet()}"
@@ -342,24 +285,5 @@ object SnapshotStateSink {
       .option("path", s"$tmp/graft_snapshot_state_${id}_pack_rpk")
       .saveAsTable(ps2)
     t.copy(packSummary = ps2)
-  }
-
-  /** The repacked state's audit: the per-lang pack summary READ BACK from
-    * the new table, joined with a shard-assignment checksum over the
-    * re-sharded retained corpus (sum of doc_id·(shard_id+1) — sensitive
-    * to any doc landing in the wrong shard, not just to counts). The
-    * DuckDB oracle re-derives both from the raw documents: the curated
-    * old corpus minus the deleted docs, re-windowed from zero. */
-  private[graft] def auditRepacked(spark: SparkSession, docs: DataFrame,
-      isDeleted: org.apache.spark.sql.Column,
-      isOld: org.apache.spark.sql.Column, t: StateTables): DataFrame = {
-    val repacked = Curation.shardAssign(
-      Curation.curatedMembership(docs.filter(isOld))
-        .filter(!isDeleted))
-    val checks = repacked.groupBy("lang")
-      .agg(sum(col("doc_id") * (col("shard_id") + lit(1L))).as("shard_checksum"))
-    spark.table(t.packSummary)
-      .join(checks, Seq("lang"), "left_outer")
-      .orderBy("lang")
   }
 }

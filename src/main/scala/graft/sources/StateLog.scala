@@ -20,11 +20,11 @@ import graft.pipeline.{Curation, Dedup}
   * log fixes both with a write-ahead discipline:
   *
   *  - every operation attempt writes its delta as its OWN GENERATION —
-  *    five tables under ATTEMPT-UNIQUE names (r13: unique per attempt,
-  *    not just per batch id, so a slow concurrent duplicate attempt can
-  *    never overwrite tables a committed manifest row already points at
-  *    — ADVICE r12); the manifest row BINDS the names, so nothing about
-  *    a generation is resolved by naming convention;
+  *    five tables under ATTEMPT-UNIQUE names (unique per attempt, not
+  *    just per batch id, so a slow concurrent duplicate attempt can
+  *    never overwrite tables a committed manifest row already points
+  *    at); the manifest row BINDS the names, so nothing about a
+  *    generation is resolved by naming convention;
   *  - a single-row append to the MANIFEST table is the COMMIT POINT,
   *    guarded by a per-generation COMMIT-CLAIM table (the durable
   *    cross-process CAS, below). Probes and views read only
@@ -51,7 +51,9 @@ import graft.pipeline.{Curation, Dedup}
   * accumulate one per operation — tiny — while the per-probe union
   * width is bounded by the folds.
   *
-  * Layer semantics per generation: `hash` — the batch survivors' content
+  * Layer semantics per generation (the hash, band and stop facts are
+  * [[SnapshotStateSink.deltaFacts]], the advance's own math): `hash` —
+  * the batch survivors' content
   * hashes not present in any committed generation (probed scan-only:
   * batch hashes broadcast INTO the state union, never a state-wide
   * shuffle); `band` — the survivors' band keys (probes filter by the
@@ -66,7 +68,8 @@ import graft.pipeline.{Curation, Dedup}
   * log's only driver-side state — nothing else survives a restart,
   * which is the point: StreamingSpec pins that a fresh "driver"
   * resuming from the manifest skips committed batches and lands on the
-  * same final state.
+  * same final state. The log's oracle drills (eq144, eq146–eq154) live
+  * in [[StateDrills]].
   *
   * Reference basis: the reference persists ETL output and serves queries
   * from the stored copy (`etl_project/data.py:41-42`); this is that
@@ -79,12 +82,12 @@ object StateLog {
   /** Index-hash table names of snapshots a log wraps ([[fromSnapshot]]'s
     * gen 0 POINTS at the snapshot's live tables, no copy) — an in-place
     * [[SnapshotStateSink.advance]] on such a snapshot would retroactively
-    * mutate a committed generation (ADVICE r11), so the sink refuses it.
+    * mutate a committed generation, so the sink refuses it.
     * The marker is DURABLE (a catalog marker table derived from the
     * wrapped hash table's name) plus a fast in-process set: the failure
     * this guard exists for is precisely the OTHER-driver restart — a
     * fresh JVM resolving the same names through a persistent metastore —
-    * where a memory-only set would silently fail open (r12 review). */
+    * where a memory-only set would silently fail open. */
   private val wrappedSnapshots =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def wrapMarker(hashTable: String): String = s"${hashTable}_logwrapped"
@@ -101,14 +104,14 @@ object StateLog {
     * process — [[sweep]]'s protection against reclaiming an attempt that
     * has not reached its commit point yet. Cross-process, sweep has no
     * such registry: the zero-grace form must only run with foreign
-    * writers quiesced; the GRACED overload (r15) is the live-writer-safe
-    * form — it reclaims only candidates whose newest write is older than
-    * the grace window, which a live attempt never is. */
+    * writers quiesced; a GRACED sweep is the live-writer-safe form — it
+    * reclaims only candidates whose newest write is older than the grace
+    * window, which a live attempt never is. */
   private val inFlight =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Per-manifest commit mutex + optimistic re-check (VERDICT r11 task 4)
-    * + the durable per-generation COMMIT CLAIM (VERDICT r12 task 1). The
+  /** Per-manifest commit mutex + optimistic re-check + the durable
+    * per-generation COMMIT CLAIM. The
     * manifest is append-only and every committer mints gen_id = max+1
     * from its own read, so two concurrent committers racing the
     * read→append window would mint duplicate gen_ids and lose an update.
@@ -120,11 +123,11 @@ object StateLog {
     *      the operation's survivor math is stale and the commit ABORTS
     *      into [[withCommitRetry]], which recomputes from fresh history;
     *  (c) CROSS-PROCESS writers — which the mutex cannot see — are
-    *      arbitrated by a durable FILESYSTEM CAS (r14; the r13 version
-    *      was a catalog create, which only arbitrated writers sharing a
-    *      metastore — two driver processes with per-JVM in-memory
-    *      catalogs never saw each other's claims; the shared STORE is
-    *      the one thing every writer of the same log provably shares):
+    *      arbitrated by a durable FILESYSTEM CAS (a catalog create
+    *      would only arbitrate writers sharing a metastore — two driver
+    *      processes with per-JVM in-memory catalogs never see each
+    *      other's claims; the shared STORE is the one thing every writer
+    *      of the same log provably shares):
     *      before appending, the committer must PUBLISH the claim marker
     *      `<manifest>_manifest_claims/g<N>.claim` exclusively. The
     *      marker's content (the ENTIRE manifest row, written to an
@@ -148,7 +151,7 @@ object StateLog {
     * a torn claim (unparseable content — only possible on a non-atomic
     * store) never committed anything and is deleted so the slot can be
     * re-claimed. A committer whose manifest append LANDED deletes its
-    * own marker immediately (VERDICT r13 task 5): the roll-forward and
+    * own marker immediately: the roll-forward and
     * sweep paths re-check the manifest first, so the claim is inert the
     * instant its row is durable, and N clean commits leave zero claim
     * residue. One residual asymmetry, documented: a writer whose own
@@ -173,30 +176,40 @@ object StateLog {
     * of the manifest directory on the SAME shared store, so any process
     * that can read the log can arbitrate commits against it. */
   private def claimsDir(spark: SparkSession, ref: LogRef): org.apache.hadoop.fs.Path = {
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(ref.manifest)).location)
+    val loc = manifestDir(spark, ref)
     new org.apache.hadoop.fs.Path(loc.getParent, loc.getName + "_claims")
   }
+
+  /** The manifest's parquet data files (one per committed row, or a
+    * checkpoint's merged file) under its directory `dir`. */
+  private def manifestFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(dir).toSeq.filter { s =>
+      val n = s.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  /** The manifest table's directory, as the catalog records it. */
+  private def manifestDir(spark: SparkSession, ref: LogRef): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(
+      spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(ref.manifest)).location)
 
   private def hadoopFs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** The log's shared root: the manifest directory's parent — where every
     * generation table, commit stage and claim dir is minted, on the
-    * manifest's OWN store (scheme kept). [[saveGen]] minting HERE (r16,
-    * ADVICE r15) is what makes a log attached under a non-default root
+    * manifest's OWN store (scheme kept). [[saveGen]] minting HERE is
+    * what makes a log attached under a non-default root
     * coherent: peers resolve committed tables from this root
     * ([[registerForeign]]), and the graced [[sweep]]'s age walk finds
     * them where the candidate scan looks. For a default-root log this is
     * exactly the old java.io.tmpdir convention. */
   private def logRoot(spark: SparkSession, ref: LogRef): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(ref.manifest)).location)
-      .getParent
+    manifestDir(spark, ref).getParent
 
-  /** "Now" AS THE STORE SEES IT (VERDICT r15 task 5): the graced
+  /** "Now" AS THE STORE SEES IT: the graced
     * [[sweep]]/[[vacuum]] age candidates by store-reported mtimes, so a
     * sweeper whose WALL clock is skewed from the store's would silently
     * shrink (clock ahead) or stretch (clock behind) the grace window.
@@ -204,7 +217,8 @@ object StateLog {
     * probe file beside the claims, read its mtime back, delete it —
     * makes the age comparison same-clock by construction: skew cancels.
     * One create+stat+delete per sweep; falls back to the wall clock only
-    * if the store refuses the probe (degraded, pre-r16 behavior). */
+    * if the store refuses the probe (degraded: skew then shifts the
+    * window). */
   private def storeNow(fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Long =
     try {
@@ -226,7 +240,7 @@ object StateLog {
   /** The name shapes this log MINTS under its root — the only directories
     * the store-level candidate scan may consider (`<manifest>_<layer>_<tag>`
     * attempt tables from [[saveGen]], `<manifest>_stage_<nonce>` commit
-    * stages from [[commitOneFile]]). ADVICE r15: a bare prefix match would
+    * stages from [[commitOneFile]]). A bare prefix match would
     * let user-named sibling logs (`mylog` / `mylog_v2`) reclaim each
     * other's live directories. */
   private val MintedSuffixes =
@@ -283,7 +297,7 @@ object StateLog {
       try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
 
-  /** HARD PRECONDITION of the claim CAS (ADVICE r14): the claim store
+  /** HARD PRECONDITION of the claim CAS: the claim store
     * must offer an atomic EXCLUSIVE publish primitive — a posix hard
     * link (local) or a no-overwrite rename (HDFS and compatible). On a
     * store whose rename is LAST-WINS (object stores: rename is a copy
@@ -325,7 +339,7 @@ object StateLog {
           "writer (allowNonAtomicStore=true accepted the risk)")
     }
 
-  /** The attach-time (read-entry) form of the precondition (ADVICE r15):
+  /** The attach-time (read-entry) form of the precondition:
     * pure readers proceed with no flag — reads carry no commit risk — but
     * the coming refusal is named ONCE up front so a would-be committer is
     * not surprised at its first commit. */
@@ -375,7 +389,7 @@ object StateLog {
         // only the lost-race shapes are a "false" — HDFS reports an
         // existing destination by RETURNING false, FileContext-style
         // stores by throwing; a genuine IO failure must PROPAGATE, not
-        // masquerade as 16 rounds of phantom contention (r14 review)
+        // masquerade as 16 rounds of phantom contention
         try fs.rename(tmp, marker) catch {
           case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
           case _: java.nio.file.FileAlreadyExistsException => false
@@ -398,13 +412,13 @@ object StateLog {
 
   private def maxGen(spark: SparkSession, ref: LogRef): Long =
     withManifestRetry() {
-      // manifest-sized driver read (r16 optimization): the manifest is the
+      // manifest-sized driver read: the manifest is the
       // log's one deliberate driver-side read, so take the max on the
       // driver instead of paying a two-stage agg exchange per commit check
       val rows = freshManifest(spark, ref).select(col("gen_id")).collect()
       // every log starts at a genesis row, so an EMPTY manifest means the
       // handle points at a location that is not a log — name the problem
-      // instead of NPE-ing in getLong on the null max (ADVICE r14)
+      // instead of NPE-ing in getLong on the null max
       require(rows.nonEmpty,
         s"state log ${ref.manifest}: the manifest is empty — this handle " +
           "does not point at a log (attach with the root the log was " +
@@ -432,7 +446,7 @@ object StateLog {
     * PATH_NOT_FOUND ("Path does not exist") — the concurrent-checkpoint
     * loser's path, which must retry into the no-op, not crash.
     *
-    * NARROW on purpose (ADVICE r13): only a FileNotFoundException
+    * NARROW on purpose: only a FileNotFoundException
     * instance, an AnalysisException whose error CONDITION is
     * PATH_NOT_FOUND, or a task-failure SparkException quoting one (an
     * executor exception that could not be re-serialized crosses the
@@ -451,7 +465,7 @@ object StateLog {
         case _ => false
       }) || missingFile(e.getCause, depth - 1))
 
-  /** The SAME-PROCESS twin of [[missingFile]] (r16, found by the raced
+  /** The SAME-PROCESS twin of [[missingFile]] (found by the raced
     * maintenance walk): a session sharing this JVM's external catalog
     * with a vacuuming one loses the table ENTRY, not just the files, so
     * an as-of read racing the drop fails ANALYSIS with
@@ -491,11 +505,9 @@ object StateLog {
     * shared-namespace operation. */
   private def commitOneFile(spark: SparkSession, ref: LogRef,
       df: DataFrame, destName: String): Unit = {
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(ref.manifest)).location)
-    // the stage lives beside the manifest ON THE MANIFEST'S OWN STORE
-    // (r15): a stage on the session-default filesystem breaks the commit
+    val loc = manifestDir(spark, ref)
+    // the stage lives beside the manifest ON THE MANIFEST'S OWN STORE:
+    // a stage on the session-default filesystem breaks the commit
     // rename whenever the log's root is a DIFFERENT store (defaultFS=file
     // with an hdfs:// manifest, or any attached non-default root) —
     // rename cannot cross filesystems. Crashed stage dirs are log-prefix
@@ -561,7 +573,7 @@ object StateLog {
           fs.delete(marker, false): Unit
         stale(ref, s"manifest advanced ($expectedMaxGen -> $cur2) during the claim")
       }
-      // crash-drill hook (VERDICT r14 task 4, the SIGKILL analogue of
+      // crash-drill hook (the SIGKILL analogue of
       // claimMarkerPathForTest's planted markers): with this env var set,
       // announce the published claim at the named sentinel path and hang
       // INSIDE the claim→append window, so tools/two_process_drill.sh can
@@ -575,8 +587,8 @@ object StateLog {
       appendManifestRow(spark, ref, g)
       // the row is durably in the manifest — the claim is inert from
       // this instant; drop it NOW so clean commits leave no residue
-      // (VERDICT r13 task 5; crash windows stay covered by the
-      // roll-forward, which re-checks the manifest first)
+      // (crash windows stay covered by the roll-forward, which
+      // re-checks the manifest first)
       try { fs.delete(marker, false): Unit } catch { case _: Exception => () }
     }
   }
@@ -638,14 +650,14 @@ object StateLog {
     * state) or a still-pending claim (a peer may roll it forward). */
   private def commitAttempt(spark: SparkSession, ref: LogRef,
       expectedMaxGen: Long, g: Gen): Unit = {
-    val mine = Seq(g.hash, g.band, g.stop, g.pack, g.cur).distinct
+    val mine = g.tables.distinct
     try {
       commitRow(spark, ref, expectedMaxGen, g)
       mine.foreach(inFlight.remove)
     } catch {
       case e: java.util.ConcurrentModificationException =>
         val committed = history(spark, ref)
-          .flatMap(x => Seq(x.hash, x.band, x.stop, x.pack, x.cur)).toSet
+          .flatMap(_.tables).toSet
         val claimed = pendingClaimRefs(spark, ref)
         mine.foreach { t =>
           if (!committed(t) && !claimed(t)) dropTableAndData(spark, t)
@@ -675,7 +687,7 @@ object StateLog {
     listClaims(spark, ref, fs).flatMap { case (gen, p) =>
       if (committedGens.contains(gen)) Seq.empty
       else readMarker(fs, p).flatMap(parseClaim(_, gen))
-        .map(g => Seq(g.hash, g.band, g.stop, g.pack, g.cur))
+        .map(_.tables)
         .getOrElse(Seq.empty)
     }.toSet
   }
@@ -707,18 +719,18 @@ object StateLog {
     * ingest and retraction can resolve the store from the log instead of
     * trusting the caller to reconstruct it — the last caller-maintained
     * piece of the state's life between sessions. */
-  private final case class Gen(genId: Long, batchId: Long, kind: String,
-      hash: String, band: String, stop: String, pack: String, cur: String)
+  private[sources] final case class Gen(genId: Long, batchId: Long, kind: String,
+      hash: String, band: String, stop: String, pack: String, cur: String) {
+    def tables: Seq[String] = Seq(hash, band, stop, pack, cur)
+    /** The tables this generation's corpus layer reads: a delta's `cur`
+      * table, a retract's doc-tombstone table too. */
+    def corpusTables: Seq[String] =
+      if (kind == "retract") Seq(band, cur).distinct else Seq(cur)
+  }
 
   /** The raw-store columns every funnel input needs — what the corpus
     * layer persists per generation. */
   private val StoreCols = Seq("doc_id", "text", "lang", "source", "n_chars")
-
-  /** An at-rest RAW corpus store for [[fromSnapshot]]'s gen-0 corpus
-    * pointer — the production table eq138's product build reads from;
-    * written here as a plain parquet table of the store columns. */
-  def writeCorpusStore(spark: SparkSession, docs: DataFrame): String =
-    writeCorpusStore(spark, docs, withMembership = false)
 
   /** The corpus store's optional CURATED-MEMBERSHIP companion table name —
     * derived from the manifest-bound `cur_tbl` name exactly like
@@ -726,21 +738,25 @@ object StateLog {
     * still flows through the manifest row. */
   private def curMemTable(storeTbl: String): String = s"${storeTbl}_curmem"
 
-  /** `withMembership = true` additionally persists the store's CURATED
+  /** An at-rest RAW corpus store for [[fromSnapshot]]'s gen-0 corpus
+    * pointer — the production table eq138's product build reads from;
+    * written as a plain parquet table of the store columns.
+    *
+    * `withMembership = true` additionally persists the store's CURATED
     * MEMBERSHIP (the stage-7 survivor frame — doc_id, lang, n_tokens,
     * n_chars) as an at-rest companion table, the same artifact class as
     * the snapshot's hash/band/pack layers: the curated corpus is the
     * PRODUCT, persisted at rest, and the post-retraction [[repackLog]]
     * resolves the base generation's membership from this table instead of
-    * re-mining the genesis corpus per repack (VERDICT r16 task 1 — at
-    * 100 TB the re-mine is a full pair-mining pass over the corpus per
-    * repack; the membership table is 4 narrow columns of the survivors).
-    * Derived from the CALLER's frame, so the mining rides the session's
-    * plan-keyed chain memo; [[curatedRetained]] falls back to the honest
-    * re-derivation when the companion is absent (pre-existing logs,
-    * foreign processes whose catalog never saw it). */
+    * re-mining the genesis corpus per repack (at 100 TB the re-mine is a
+    * full pair-mining pass over the corpus per repack; the membership
+    * table is 4 narrow columns of the survivors). Derived from the
+    * CALLER's frame, so the mining rides the session's plan-keyed chain
+    * memo; [[curatedRetained]] falls back to the honest re-derivation when
+    * the companion is absent (pre-existing logs, foreign processes whose
+    * catalog never saw it). */
   def writeCorpusStore(spark: SparkSession, docs: DataFrame,
-      withMembership: Boolean): String = {
+      withMembership: Boolean = false): String = {
     val id = s"${ProcessHandle.current().pid()}_${logSeq.incrementAndGet()}"
     val tbl = s"graft_corpus_store_$id"
     docs.select(StoreCols.map(col): _*).write.mode("overwrite")
@@ -770,7 +786,7 @@ object StateLog {
     // the durable wrap marker goes FIRST: a crash between the two writes
     // then fails CLOSED (a spurious refusal on a log that never
     // materialized) instead of open (a live log whose snapshot a fresh
-    // driver could still advance in place — r12 review)
+    // driver could still advance in place)
     wrappedSnapshots.add(st.index.hash)
     row.write.mode("overwrite")
       .option("path",
@@ -799,11 +815,11 @@ object StateLog {
     * forward appends the same row twice) and collapse here; two DISTINCT
     * rows sharing a gen_id mean a writer bypassed the claim protocol and
     * fail loudly. */
-  private def history(spark: SparkSession, ref: LogRef): Seq[Gen] = {
-    // dedupe + sort on the DRIVER (r16 optimization): the read is
-    // manifest-sized by design, and the DataFrame `distinct().orderBy()`
-    // formulation paid two exchanges per read — on the hottest call in
-    // the log (every ingest, commit, audit and resolution reads history).
+  private[sources] def history(spark: SparkSession, ref: LogRef): Seq[Gen] = {
+    // dedupe + sort on the DRIVER: the read is manifest-sized by
+    // design, and a DataFrame `distinct().orderBy()` would pay two
+    // exchanges per read — on the hottest call in the log (every
+    // ingest, commit, audit and resolution reads history).
     // Gen is a case class over the same 8 fields, so Seq#distinct is the
     // row-identical dedupe and sortBy(genId) the same order (gen_ids are
     // unique after the dedupe — enforced right below).
@@ -836,8 +852,7 @@ object StateLog {
     // sessions, and a later DROP (vacuum/sweep) must NOT re-register —
     // so the check never needs repeating, keeping history() O(new
     // tables) instead of O(5 per generation) catalog lookups per read
-    // (r14 review)
-    val missing = gens.flatMap(g => Seq(g.hash, g.band, g.stop, g.pack, g.cur))
+    val missing = gens.flatMap(_.tables)
       .distinct.filterNot(foreignChecked.contains)
       .filterNot(foreignMissing.contains)
       .filterNot { t =>
@@ -846,10 +861,7 @@ object StateLog {
         known
       }
     if (missing.nonEmpty) {
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(ref.manifest)).location)
-      val root = loc.getParent
+      val root = logRoot(spark, ref)
       val fs = hadoopFs(spark, root)
       missing.foreach { t =>
         val p = new org.apache.hadoop.fs.Path(root, t)
@@ -863,7 +875,7 @@ object StateLog {
 
   private val foreignChecked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  /** Known-MISSING names (ADVICE r14): a manifest-referenced table whose
+  /** Known-MISSING names: a manifest-referenced table whose
     * data is absent from the shared root was vacuumed or swept — and,
     * names being attempt-unique and every table fully written strictly
     * BEFORE its manifest row commits, a missing table can never
@@ -877,8 +889,8 @@ object StateLog {
   private val foreignMissing =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** The one registration snippet (r14 review: it was hand-rolled in
-    * three places). `location` keeps its scheme/authority — stripping it
+  /** The one registration snippet. `location` keeps its
+    * scheme/authority — stripping it
     * to the bare path would silently re-root a log table from the shared
     * store (hdfs://...) onto the session default filesystem. */
   private[graft] def registerExternalParquet(spark: SparkSession,
@@ -888,7 +900,7 @@ object StateLog {
     catch { case _: org.apache.spark.sql.AnalysisException => () }
 
   /** ATTACH to an existing log from a fresh session or a SECOND DRIVER
-    * PROCESS (VERDICT r13 task 6): registers the manifest's external
+    * PROCESS: registers the manifest's external
     * parquet directory in this session's catalog; [[registerForeign]]
     * then resolves every generation table a manifest row references
     * from the same shared root as peers commit them. With the claim CAS
@@ -900,7 +912,7 @@ object StateLog {
       root: String = sys.props("java.io.tmpdir")): LogRef = {
     val ref = LogRef(manifest)
     if (!spark.catalog.tableExists(manifest)) {
-      // fail FAST on a wrong root (ADVICE r14): CREATE TABLE on a
+      // fail FAST on a wrong root: CREATE TABLE on a
       // nonexistent location succeeds silently, registering an EMPTY
       // external manifest whose first real use then dies far away (a
       // null-max in maxGen) instead of naming the actual problem here
@@ -912,10 +924,10 @@ object StateLog {
           "java.io.tmpdir); nothing was registered")
       registerExternalParquet(spark, manifest, dir.toString)
     }
-    // the claim-store precondition is WARNED here, not enforced (ADVICE
-    // r15): attach is also the pure-reader entry point, and a reader on
-    // an object store accepts no commit risk — forcing the
-    // allowNonAtomicStore flag on it misstated the contract. A would-be
+    // the claim-store precondition is WARNED here, not enforced: attach
+    // is also the pure-reader entry point, and a reader on an object
+    // store accepts no commit risk — forcing the allowNonAtomicStore
+    // flag on it would misstate the contract. A would-be
     // committer still learns early (the warning names the refusal), and
     // the hard refusal itself stays at the first commit ([[commitRow]]).
     warnNonAtomicStoreOnAttach(spark, hadoopFs(spark, claimsDir(spark, ref)), ref)
@@ -923,7 +935,7 @@ object StateLog {
     ref
   }
 
-  private def active(hist: Seq[Gen]): Seq[Gen] =
+  private[sources] def active(hist: Seq[Gen]): Seq[Gen] =
     hist.drop(hist.lastIndexWhere(g => g.kind == "base" || g.kind == "fold"))
 
   /** The committed state's layer views over a resolved generation list:
@@ -935,7 +947,7 @@ object StateLog {
     * summary (retraction does not re-account packing — that is
     * [[SnapshotStateSink.repack]]'s job, the eq143 posture).
     *
-    * Tombstone subtraction is ORDER-AWARE (ADVICE r11): a retract row
+    * Tombstone subtraction is ORDER-AWARE: a retract row
     * tombstones only what was committed BEFORE it. Content re-admitted
     * by a LATER ingest legitimately owns its hash again — the ingest
     * probed the post-retraction views, saw the hash gone, and wrote it
@@ -952,7 +964,7 @@ object StateLog {
     * FRAME and `tombLayer` a retract row's tombstones for this layer —
     * frames, not table names, so [[curatedRetained]]'s derived
     * contributions share this exact subtraction instead of re-implementing
-    * it (the r11 re-admission bug class lives in ONE place). */
+    * it (the re-admission bug class lives in ONE place). */
   private def minusLaterTombs(gens: Seq[Gen],
       layer: Gen => DataFrame, tombLayer: Gen => DataFrame, key: String,
       tombCols: DataFrame => DataFrame): DataFrame = {
@@ -972,7 +984,7 @@ object StateLog {
       }.reduce(_ unionAll _)
   }
 
-  private def viewsOf(spark: SparkSession, gens: Seq[Gen]): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  private[sources] def viewsOf(spark: SparkSession, gens: Seq[Gen]): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val deltas = gens.filter(_.kind != "retract")
     val hashV = minusLaterTombs(gens,
       g => spark.table(g.hash), g => spark.table(g.hash), "h", identity)
@@ -993,7 +1005,7 @@ object StateLog {
   def corpus(spark: SparkSession, ref: LogRef): DataFrame =
     corpusOf(spark, active(history(spark, ref)))
 
-  private def corpusOf(spark: SparkSession, gens: Seq[Gen]): DataFrame =
+  private[sources] def corpusOf(spark: SparkSession, gens: Seq[Gen]): DataFrame =
     minusLaterTombs(gens,
       g => spark.table(g.cur), g => spark.table(g.band), "doc_id", _.select("doc_id"))
 
@@ -1010,10 +1022,10 @@ object StateLog {
       layers: Gen => Seq[String]): Seq[Gen] =
     asOfGensOf(spark, ref, history(spark, ref), gen, layers)
 
-  /** [[asOfGens]] over an already-read manifest snapshot (r16
-    * optimization): multi-point audits resolve several as-of frames from
-    * ONE history read instead of re-reading the manifest per point. */
-  private def asOfGensOf(spark: SparkSession, ref: LogRef, hist: Seq[Gen],
+  /** [[asOfGens]] over an already-read manifest snapshot: multi-point
+    * audits resolve several as-of frames from ONE history read instead of
+    * re-reading the manifest per point. */
+  private[sources] def asOfGensOf(spark: SparkSession, ref: LogRef, hist: Seq[Gen],
       gen: Long, layers: Gen => Seq[String]): Seq[Gen] = {
     require(hist.exists(_.genId == gen),
       s"generation $gen was never committed to ${ref.manifest}")
@@ -1034,73 +1046,61 @@ object StateLog {
     * [[vacuum]] bounds it from below. */
   def viewsAsOf(spark: SparkSession, ref: LogRef, gen: Long): (DataFrame, DataFrame, DataFrame, DataFrame) =
     viewsOf(spark, asOfGens(spark, ref, gen,
-      g => Seq(g.hash, g.band, g.stop, g.pack, g.cur)))
+      _.tables))
 
-  /** TIME-TRAVEL read of the CORPUS layer (eq148, VERDICT r12 task 3):
+  /** TIME-TRAVEL read of the CORPUS layer (eq148):
     * the raw document store AS OF generation `gen` — the historical
     * population the as-of index views indexed, which eq146 alone could
     * not reconstruct. Same manifest-prefix resolution, same vacuum
     * bound; only the layers the corpus needs are required to exist (a
     * delta's `cur` table, a retract's doc-tombstone table). */
   def corpusAsOf(spark: SparkSession, ref: LogRef, gen: Long): DataFrame =
-    corpusOf(spark, asOfGens(spark, ref, gen,
-      g => if (g.kind == "retract") Seq(g.band, g.cur).distinct else Seq(g.cur)))
+    corpusOf(spark, asOfGens(spark, ref, gen, _.corpusTables))
 
-  /** Generation GC (VERDICT r11 task 3): drop every generation table
-    * STRICTLY BEFORE the latest fold point — the superseded deltas,
-    * retract tombstones, and earlier folds the active resolution no
-    * longer reads. What stays: the FULL manifest history (one tiny row
-    * per operation — the replay-skip set and the audit trail), and the
-    * latest fold + suffix (the active state). Only log-OWNED tables are
-    * dropped: gen 0 (`base`) points INTO the wrapped snapshot's tables,
-    * which the snapshot owns (and retract rows carry borrowed stop/pack
-    * pointers — the keep-set and ownership-prefix checks cover both).
-    * After a vacuum, [[viewsAsOf]] is bounded below by the latest fold —
-    * the retention trade every versioned table format ships. Returns the
-    * dropped table names.
+  /** Generation GC: drop every generation table STRICTLY BEFORE the
+    * latest fold point — the superseded deltas, retract tombstones, and
+    * earlier folds the active resolution no longer reads. What stays: the
+    * FULL manifest history (one tiny row per operation — the replay-skip
+    * set and the audit trail), and the latest fold + suffix (the active
+    * state). Only log-OWNED tables are dropped: gen 0 (`base`) points INTO
+    * the wrapped snapshot's tables, which the snapshot owns (and retract
+    * rows carry borrowed stop/pack pointers — the keep-set and
+    * ownership-prefix checks cover both). After a vacuum, [[viewsAsOf]]
+    * is bounded below by the latest fold — the retention trade every
+    * versioned table format ships. Returns the dropped table names.
     *
-    * Like [[sweep]], the ZERO-GRACE form assumes no peer is mid-read at a
-    * pre-fold generation: a concurrent [[viewsAsOf]]/[[corpusAsOf]] scan
-    * can race the drop and die with a raw missing-file error instead of
-    * the clean bounded-time-travel one. The GRACED overload below is the
-    * reader-retention form. */
-  def vacuum(spark: SparkSession, ref: LogRef): Seq[String] =
-    vacuum(spark, ref, 0L)
-
-  /** GRACED vacuum (VERDICT r15 task 2) — the reader-retention window:
-    * a generation's tables are dropped only when the fold that SUPERSEDED
-    * it committed more than `graceMs` ago, so a peer reading
-    * [[viewsAsOf]]/[[corpusAsOf]] below the fold has a guaranteed window
-    * (resolve before the fold + grace, finish within it) before the data
-    * vanishes — the retention contract every versioned table format
-    * ships. Readers starting AFTER the window get the clean
-    * bounded-time-travel error from the resolution's existence check
-    * (and a scan unlucky enough to straddle the boundary maps to the
-    * same error through [[guardAsOfRead]]).
-    *
+    * `graceMs` is the reader-retention window: a generation's tables are
+    * dropped only when the fold that SUPERSEDED it committed more than
+    * `graceMs` ago, so a peer reading [[viewsAsOf]]/[[corpusAsOf]] below
+    * the fold has a guaranteed window (resolve before the fold + grace,
+    * finish within it) before the data vanishes. Readers starting AFTER
+    * the window get the clean bounded-time-travel error from the
+    * resolution's existence check (and a scan unlucky enough to straddle
+    * the boundary maps to the same error through [[guardAsOfRead]]).
     * Ages compare STORE mtimes against the store-probed clock
     * ([[storeNow]] — skew-immune). The supersession instant is the fold's
     * manifest ROW FILE mtime (written at the commit, exact; the newest is
     * taken if a crash window left byte-identical duplicates); if a
     * checkpoint merged that file away, the newest checkpoint file's
     * mtime bounds it from above — the window only ever stretches, never
-    * shrinks. `graceMs = 0` is today's quiesced contract bit-for-bit. */
-  def vacuum(spark: SparkSession, ref: LogRef, graceMs: Long): Seq[String] = {
+    * shrinks.
+    *
+    * Like [[sweep]], the ZERO-GRACE default assumes no peer is mid-read at
+    * a pre-fold generation: a concurrent [[viewsAsOf]]/[[corpusAsOf]] scan
+    * can race the drop and die with a raw missing-file error instead of
+    * the clean bounded-time-travel one. */
+  def vacuum(spark: SparkSession, ref: LogRef, graceMs: Long = 0L): Seq[String] = {
     val hist = history(spark, ref)
     val cut = hist.lastIndexWhere(g => g.kind == "base" || g.kind == "fold")
     val keep = hist.drop(cut)
-      .flatMap(g => Seq(g.hash, g.band, g.stop, g.pack, g.cur)).toSet
+      .flatMap(_.tables).toSet
     val supersededLongEnough: Int => Boolean =
       if (graceMs <= 0L) _ => true
       else {
-        val loc = new org.apache.hadoop.fs.Path(
-          spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(ref.manifest)).location)
+        val loc = manifestDir(spark, ref)
         val fs = hadoopFs(spark, loc)
         val now = storeNow(fs, claimsDir(spark, ref))
-        val files = fs.listStatus(loc).toSeq
-          .filter(s => s.getPath.getName.endsWith(".parquet") &&
-            !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+        val files = manifestFiles(fs, loc)
         val ckptNewest = files
           .filter(_.getPath.getName.startsWith("part-ckpt-"))
           .map(_.getModificationTime).maxOption
@@ -1119,7 +1119,7 @@ object StateLog {
       }
     val dropped = hist.take(cut).zipWithIndex
       .filter { case (_, i) => supersededLongEnough(i) }
-      .flatMap { case (g, _) => Seq(g.hash, g.band, g.stop, g.pack, g.cur) }
+      .flatMap { case (g, _) => g.tables }
       .distinct
       .filter(t => t.startsWith(ref.manifest + "_") && !keep(t))
       .filter(spark.catalog.tableExists) // already-vacuumed rows are a no-op
@@ -1128,8 +1128,8 @@ object StateLog {
   }
 
   /** Run a read over as-of views/corpus with the concurrent-GC race
-    * converted to the clean bounded-time-travel error (VERDICT r15
-    * task 2): a reader that resolved its as-of frames just before a peer's
+    * converted to the clean bounded-time-travel error: a reader that
+    * resolved its as-of frames just before a peer's
     * [[vacuum]]/[[releaseWrappedSnapshot]] dropped them would otherwise
     * die mid-scan with a raw missing-file failure. On that shape the
     * generation's tables are re-checked — if a GC took them, the precise
@@ -1141,11 +1141,11 @@ object StateLog {
     * peer PROCESS's vacuum drops the data and its own catalog entry, but
     * this session's in-memory catalog still carries the registration — a
     * catalog-only re-check would read "still exists" and rethrow the raw
-    * failure (found by the r16 live-reader drill). The shared store is
+    * failure (found by the live-reader drill). The shared store is
     * the one truth every attached process provably shares.
     *
     * A vacuum racing from a session in the SAME process is the mirrored
-    * shape (found by the r16 raced maintenance walk): the sessions share
+    * shape (found by the raced maintenance walk): the sessions share
     * one external catalog, so the drop removes the table ENTRY between
     * the resolution's existence check and the frame build, and the read
     * dies in ANALYSIS with TABLE_OR_VIEW_NOT_FOUND before any path is
@@ -1160,19 +1160,13 @@ object StateLog {
         require(hist.exists(_.genId == gen),
           s"generation $gen was never committed to ${ref.manifest}")
         val need = active(hist.filter(_.genId <= gen))
-          .flatMap(g => Seq(g.hash, g.band, g.stop, g.pack, g.cur)).distinct
+          .flatMap(_.tables).distinct
         val root = logRoot(spark, ref)
         val fs = hadoopFs(spark, root)
         val cat = spark.sessionState.catalog
         need.foreach { t =>
-          val ident = org.apache.spark.sql.catalyst.TableIdentifier(t)
-          val gone = !cat.tableExists(ident) || {
-            val p = (try cat.getTableMetadata(ident).storage.locationUri
-                .map(u => new org.apache.hadoop.fs.Path(u))
-              catch { case _: Exception => None })
-              .getOrElse(new org.apache.hadoop.fs.Path(root, t))
-            !fs.exists(p)
-          }
+          val gone = !cat.tableExists(org.apache.spark.sql.catalyst.TableIdentifier(t)) ||
+            !fs.exists(tableLocation(spark, t).getOrElse(new org.apache.hadoop.fs.Path(root, t)))
           if (gone)
             throw new IllegalStateException(s"as-of generation $gen needs " +
               s"$t, which a vacuum or snapshot release dropped — time " +
@@ -1181,38 +1175,33 @@ object StateLog {
         throw e
     }
 
-  /** Orphan sweep (VERDICT r12 task 2): [[vacuum]] walks manifest rows,
-    * so an attempt that CRASHED before its commit point — its generation
-    * tables fully or half written, no manifest row, no claim — leaves
-    * tables nothing can ever reclaim. The sweep closes that leak from
-    * the other side: every catalog table under this log's name prefix
-    * (log-owned by construction — attempt tables and claims are the only
-    * names minted there) is dropped UNLESS something still references
-    * it: a manifest row (any kind, any age — vacuum owns the superseded
-    * ones), a pending claim's content (a peer may roll it forward), a
-    * pending claim itself, or this process's in-flight attempt registry.
-    * Claims whose generation is committed are inert and reclaimed too.
-    * Like every table-format GC, the zero-grace form must only run with
-    * foreign writers quiesced (in-process writers are protected by the
-    * registry); the GRACED overload below is the live-writer-safe form.
-    * Returns the dropped names. */
-  def sweep(spark: SparkSession, ref: LogRef): Seq[String] = sweep(spark, ref, 0L)
-
-  /** GRACE-WINDOW sweep (VERDICT r14 task 2) — the standard table-format
-    * GC trick that makes the sweep safe against LIVE foreign writers: a
-    * candidate is reclaimed only when its newest write is older than
-    * `graceMs`. A live peer's in-flight attempt (tables being written, no
-    * claim yet — the one shape the pending-claim protection cannot see)
-    * is by definition younger than any sane grace window, while a
-    * genuinely crashed attempt only gets older. Pick `graceMs` well above
-    * the longest single attempt's write→commit span (minutes, not
-    * seconds). Sweeper-vs-store clock skew does NOT erode the window
-    * (r16, VERDICT r15 task 5): ages compare store-reported mtimes
-    * against the STORE-PROBED clock origin ([[storeNow]] — one tiny
-    * probe write per sweep), so both sides of the comparison are on the
-    * same clock by construction.
+  /** Orphan sweep: [[vacuum]] walks manifest rows, so an attempt that
+    * CRASHED before its commit point — its generation tables fully or
+    * half written, no manifest row, no claim — leaves tables nothing can
+    * ever reclaim. The sweep closes that leak from the other side: every
+    * catalog table under this log's name prefix (log-owned by
+    * construction — attempt tables and claims are the only names minted
+    * there) is dropped UNLESS something still references it: a manifest
+    * row (any kind, any age — vacuum owns the superseded ones), a pending
+    * claim's content (a peer may roll it forward), a pending claim
+    * itself, or this process's in-flight attempt registry. Claims whose
+    * generation is committed are inert and reclaimed too. Returns the
+    * dropped names.
     *
-    * The graced form also widens the candidate SCAN from this session's
+    * `graceMs` makes the sweep safe against LIVE foreign writers (the
+    * standard table-format GC trick): a candidate is reclaimed only when
+    * its newest write is older than `graceMs`. A live peer's in-flight
+    * attempt (tables being written, no claim yet — the one shape the
+    * pending-claim protection cannot see) is by definition younger than
+    * any sane grace window, while a genuinely crashed attempt only gets
+    * older. Pick `graceMs` well above the longest single attempt's
+    * write→commit span (minutes, not seconds). Sweeper-vs-store clock
+    * skew does NOT erode the window: ages compare store-reported mtimes
+    * against the STORE-PROBED clock origin ([[storeNow]] — one tiny probe
+    * write per sweep), so both sides of the comparison are on the same
+    * clock by construction.
+    *
+    * A graced sweep also widens the candidate SCAN from this session's
     * catalog to the shared STORE: directories under the log's root with
     * this log's name prefix (the only place attempt tables and commit
     * stages are minted — [[saveGen]], [[commitOneFile]]). A foreign
@@ -1222,40 +1211,34 @@ object StateLog {
     * directories are the log's live spine and are never candidates.
     * Publish temp files (`*.tmp`) respect the same grace — a live peer's
     * between-create-and-link temp must not be yanked (it would read as a
-    * lost race and waste a retry). With `graceMs = 0` the behavior is the
-    * legacy quiesced-writers contract: catalog candidates only, all
-    * temps reclaimed. */
-  def sweep(spark: SparkSession, ref: LogRef, graceMs: Long): Seq[String] = {
+    * lost race and waste a retry).
+    *
+    * The zero-grace default is the quiesced-writers contract, like every
+    * table-format GC: catalog candidates only, all temps reclaimed, and
+    * it must only run with foreign writers quiesced (in-process writers
+    * are protected by the registry). */
+  def sweep(spark: SparkSession, ref: LogRef, graceMs: Long = 0L): Seq[String] = {
     val hist = history(spark, ref)
-    val referenced = hist.flatMap(g => Seq(g.hash, g.band, g.stop, g.pack, g.cur)).toSet
+    val referenced = hist.flatMap(_.tables).toSet
     val committedGens = hist.map(_.genId).toSet
     val claimRefs = pendingClaimRefs(spark, ref)
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(ref.manifest)).location)
+    val loc = manifestDir(spark, ref)
     val root = loc.getParent
     val rootFs = hadoopFs(spark, root)
-    // the clock origin is the STORE's, not this JVM's (r16, VERDICT r15
-    // task 5): a skewed sweeper would otherwise silently shrink the window
+    // the clock origin is the STORE's, not this JVM's: a skewed sweeper
+    // would otherwise silently shrink the window
     val now = if (graceMs <= 0L) 0L else storeNow(rootFs, claimsDir(spark, ref))
     // a path that vanishes or mutates mid-walk is a LIVE writer's — young
     def aged(p: org.apache.hadoop.fs.Path): Boolean =
       graceMs <= 0L || agedOnStore(rootFs, p, now, graceMs)
-    // a CATALOG candidate ages at its RECORDED location (ADVICE r15: a
-    // pre-r16 table minted under tmpdir for a non-default-root log would
-    // FNF the Path(root, t) walk and read as never-aged forever); store
+    // a CATALOG candidate ages at its RECORDED location (a table minted
+    // under tmpdir for a non-default-root log would FNF the
+    // Path(root, t) walk and read as never-aged forever); store
     // candidates have no catalog entry — the minting convention is the path
-    def pathOf(t: String): org.apache.hadoop.fs.Path = {
-      val ident = org.apache.spark.sql.catalyst.TableIdentifier(t)
-      val cat = spark.sessionState.catalog
-      (if (cat.tableExists(ident))
-        try cat.getTableMetadata(ident).storage.locationUri
-          .map(u => new org.apache.hadoop.fs.Path(u))
-        catch { case _: Exception => None }
-      else None).getOrElse(new org.apache.hadoop.fs.Path(root, t))
-    }
+    def pathOf(t: String): org.apache.hadoop.fs.Path =
+      tableLocation(spark, t).getOrElse(new org.apache.hadoop.fs.Path(root, t))
     val spine = Set(loc.getName, loc.getName + "_claims")
-    // only the MINTED shapes are store candidates (ADVICE r15): attach()
+    // only the MINTED shapes are store candidates: attach()
     // accepts arbitrary manifest names, so a bare prefix match could let
     // one user-named log (`mylog`) reclaim a sibling's (`mylog_v2`) live
     // directories; attempt tables and commit stages are the only names
@@ -1298,7 +1281,7 @@ object StateLog {
     droppedTables ++ inertClaims.sorted
   }
 
-  /** Release the WRAPPED SNAPSHOT (VERDICT r12 task 7): after a fold,
+  /** Release the WRAPPED SNAPSHOT: after a fold,
     * gen 0's tables — the snapshot's index/pack tables and the at-rest
     * corpus store the log wrapped at [[fromSnapshot]] — are read only by
     * as-of resolutions below the fold, yet [[vacuum]] correctly refuses
@@ -1321,9 +1304,9 @@ object StateLog {
       s"state log ${ref.manifest}: releasing the wrapped snapshot requires " +
         "the active state to be a fold past the genesis generation")
     val keep = hist.drop(cut)
-      .flatMap(g => Seq(g.hash, g.band, g.stop, g.pack, g.cur)).toSet
+      .flatMap(_.tables).toSet
     val preCutOwned = hist.take(cut)
-      .flatMap(g => Seq(g.hash, g.band, g.stop, g.pack, g.cur)).distinct
+      .flatMap(_.tables).distinct
       .filter(t => t.startsWith(ref.manifest + "_") && !keep(t))
     require(preCutOwned.forall(!spark.catalog.tableExists(_)),
       s"state log ${ref.manifest}: vacuum the pre-fold history first — " +
@@ -1332,9 +1315,9 @@ object StateLog {
     val base = hist.head
     require(base.kind == "base",
       s"state log ${ref.manifest}: no wrapped snapshot at generation 0")
-    val targets = (Seq(base.hash, base.band, base.stop, base.pack, base.cur)
+    val targets = (base.tables
       .distinct.filterNot(keep)
-      // the corpus store's membership companion (r17) shares the store's
+      // the corpus store's membership companion shares the store's
       // lifecycle — dropped with it, never alone
       ++ Seq(curMemTable(base.cur)).filterNot(_ => keep(base.cur))
       :+ wrapMarker(base.hash))
@@ -1374,41 +1357,34 @@ object StateLog {
     * manifest is the log's one tiny driver-side read by design), so the
     * write cannot race the deletes of a concurrent checkpoint either.
     *
-    * Driver cost (ADVICE r13): the explicit-path read, the collect and
-    * the deletes are all O(files merged) on the driver, so a manifest
-    * left unchecked-pointed for ~500k operations would make the FIRST
+    * Driver cost: the explicit-path read, the collect and the deletes are
+    * all O(files merged) on the driver, so a manifest left
+    * unchecked-pointed for ~500k operations would make the FIRST
     * checkpoint itself a heavy driver call. Two reliefs: deletes run on
-    * a bounded parallel pool (not serially), and the [[checkpointManifest(
-    * spark,ref,maxFiles*)]] overload caps one call at the OLDEST
-    * `maxFiles` row files — merging a subset is row-preserving by the
-    * same argument (merged + remaining = the same rows; a crash-window
-    * duplicate straddling the cut collapses on read and merges away
-    * later), so a caller facing a badly overgrown manifest checkpoints
-    * incrementally in bounded slices instead of one giant step.
-    * Returns (data files before, data files after). */
-  def checkpointManifest(spark: SparkSession, ref: LogRef): (Long, Long) =
-    checkpointManifest(spark, ref, Int.MaxValue)
-
+    * a bounded parallel pool (not serially), and `maxFiles` caps one call
+    * at the OLDEST `maxFiles` row files (default: all of them) — merging
+    * a subset is row-preserving by the same argument (merged + remaining
+    * = the same rows; a crash-window duplicate straddling the cut
+    * collapses on read and merges away later), so a caller facing a
+    * badly overgrown manifest checkpoints incrementally in bounded slices
+    * instead of one giant step. Returns (data files before, data files
+    * after). */
   def checkpointManifest(spark: SparkSession, ref: LogRef,
-      maxFiles: Int): (Long, Long) =
+      maxFiles: Int = Int.MaxValue): (Long, Long) =
     withManifestRetry() {
-      val loc = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(ref.manifest)).location
-      val dir = new org.apache.hadoop.fs.Path(loc)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val dir = manifestDir(spark, ref)
+      val fs = hadoopFs(spark, dir)
       def dataFiles(): Seq[org.apache.hadoop.fs.Path] =
-        fs.listStatus(dir).toSeq
-          .filter(s => s.getPath.getName.endsWith(".parquet") &&
-            !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+        manifestFiles(fs, dir)
           .sortBy(s => (s.getModificationTime, s.getPath.getName))
           .map(_.getPath)
       val all = dataFiles()
       val parts = all.take(math.max(2, maxFiles))
       if (all.size <= 1 || parts.size <= 1) (all.size.toLong, all.size.toLong)
       else {
-        // dedupe on the DRIVER (r16 optimization): the read is already a
-        // driver-side collect of manifest-sized rows by design, so the
-        // DataFrame distinct() only added an exchange per checkpoint
+        // dedupe on the DRIVER: the read is already a driver-side
+        // collect of manifest-sized rows by design, so a DataFrame
+        // distinct() would only add an exchange per checkpoint
         val src = spark.read.parquet(parts.map(_.toString): _*)
         val rows = src.collect().toSeq.distinct
         // the history() invariant, re-checked BEFORE any file is touched:
@@ -1421,7 +1397,7 @@ object StateLog {
           new java.util.ArrayList(scala.jdk.CollectionConverters
             .SeqHasAsJava(rows).asJava), src.schema),
           s"part-ckpt-$nonce.parquet")
-        // crash-drill hook (r15, the checkpoint sibling of the commit
+        // crash-drill hook (the checkpoint sibling of the commit
         // hook): hang between the merged file's publish and the
         // superseded-file deletes, so the drill can SIGKILL this JVM in
         // the one checkpoint window that leaves residue — duplicate rows
@@ -1433,7 +1409,7 @@ object StateLog {
           Thread.sleep(3600000L)
         }
         // bounded-parallel deletes: serial unlink of N merged files is a
-        // needless O(N·rpc) driver stall on a remote store (ADVICE r13)
+        // needless O(N·rpc) driver stall on a remote store
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(32, math.max(1, parts.size)))
         try parts.map(p => pool.submit(new java.util.concurrent.Callable[Unit] {
@@ -1454,29 +1430,32 @@ object StateLog {
     * tmpdir path convention) keep their files across DROP TABLE, so the
     * location is resolved from the catalog first and deleted after. */
   private def dropTableAndData(spark: SparkSession, t: String): Unit = {
-    val cat = spark.sessionState.catalog
-    val ident = org.apache.spark.sql.catalyst.TableIdentifier(t)
-    val loc = if (cat.tableExists(ident))
-      try cat.getTableMetadata(ident).storage.locationUri
-      catch { case _: Exception => None }
-    else None
+    val loc = tableLocation(spark, t)
     spark.sql(s"DROP TABLE IF EXISTS `$t`")
-    loc.foreach(u => deletePath(spark, u.toString))
+    loc.foreach(p => deletePath(spark, p.toString))
   }
 
-  private def effectiveBandOf(bandRaw: DataFrame, stop: DataFrame): DataFrame =
-    bandRaw.join(broadcast(stop.distinct()), Seq("band", "band_key"), "left_anti")
+  /** `t`'s location as this session's catalog records it; None when the
+    * catalog does not know the table (or cannot say where it lives). */
+  private def tableLocation(spark: SparkSession, t: String): Option[org.apache.hadoop.fs.Path] = {
+    val cat = spark.sessionState.catalog
+    val ident = org.apache.spark.sql.catalyst.TableIdentifier(t)
+    if (!cat.tableExists(ident)) None
+    else try cat.getTableMetadata(ident).storage.locationUri
+      .map(u => new org.apache.hadoop.fs.Path(u))
+    catch { case _: Exception => None }
+  }
 
   /** The committed EFFECTIVE band index: every active generation's band
     * rows, minus the union stop list — the probe view (eq141's
     * stop-filter posture across generations). */
   def effectiveBand(spark: SparkSession, ref: LogRef): DataFrame = {
     val (_, band, stop, _) = views(spark, ref)
-    effectiveBandOf(band, stop)
+    DedupIndexSink.effectiveBandOf(band, stop)
   }
 
-  /** One generation table under an ATTEMPT-UNIQUE name (ADVICE r12: a
-    * slow concurrent duplicate attempt writing deterministic names could
+  /** One generation table under an ATTEMPT-UNIQUE name (a slow
+    * concurrent duplicate attempt writing deterministic names could
     * overwrite tables a committed manifest row already points at, AFTER
     * the winner's commit — mutating committed history. Unique names make
     * every attempt's tables private until the manifest row binds them;
@@ -1487,7 +1466,7 @@ object StateLog {
       layer: String, tag: String, bucketCol: Option[String]): String = {
     val tbl = s"${ref.manifest}_${layer}_$tag"
     inFlight.add(tbl)
-    // minted BESIDE THE MANIFEST on its own store (r16, ADVICE r15) — not
+    // minted BESIDE THE MANIFEST on its own store — not
     // under java.io.tmpdir: for a log attached under a non-default root,
     // tmpdir-minted tables would be invisible to peers' registerForeign
     // walks and unreachable by the graced sweep's age check (both resolve
@@ -1534,49 +1513,31 @@ object StateLog {
     * views, the (self-contained path's) corpus resolution, and the
     * commit's optimistic max-gen check all derive from it, so a commit
     * landing after the snapshot ALWAYS aborts the attempt (no window in
-    * which half the inputs see the newer state — r12 review). */
+    * which half the inputs see the newer state). */
   private def ingestOnce(spark: SparkSession, ref: LogRef, st: SnapshotStateSink.StateTables,
       hist: Seq[Gen], batch: DataFrame, oldDocs: DataFrame, batchId: Long): Boolean = {
     if (hist.exists(g => g.batchId == batchId && g.kind == "delta")) return false
     val (hashV, bandRawV, stopV, packV) = viewsOf(spark, active(hist))
-    // (batch, oldDocs) arrive as SEPARATE frames (r16 optimization): the
-    // self-contained path used to pass `(corpus ∪ batch).filter(is_new)`,
-    // whose plan embeds this log's generation table names — so the batch
-    // signing/labeling memos missed on every log instance even though the
-    // batch frame itself is stable. The frames are row-identical.
-    // deltaSurvivorsSplit's d8 is already a localCheckpoint — a second
-    // checkpoint here only re-copied the survivor rows (r17 optimization)
+    // (batch, oldDocs) arrive as SEPARATE frames: a
+    // `(corpus ∪ batch).filter(is_new)` plan would embed this log's
+    // generation table names, so the batch signing/labeling memos would
+    // miss on every log instance even though the batch frame itself is
+    // stable. deltaSurvivorsSplit's d8 is already a localCheckpoint — a
+    // second checkpoint here would only re-copy the survivor rows
     val survivors = Curation.deltaSurvivorsSplit(batch, oldDocs,
-      hashV, effectiveBandOf(bandRawV, stopV),
+      hashV, DedupIndexSink.effectiveBandOf(bandRawV, stopV),
       spark.table(st.testVocab), spark.table(st.mixRates))
 
     // generation content — all batch-bounded, all derived from COMMITTED
-    // views + the batch, so a replay recomputes identical frames. The
-    // hash dedup is the storedMatchedHashes shape: batch hashes
-    // broadcast INTO the state-union scan (scan-only on the state side),
-    // the matched set broadcast back — never a state-wide shuffle.
-    val survHashes = survivors.select(md5(col("text")).as("h"))
-      .filter(col("h").isNotNull).distinct()
-    val matchedHashes = hashV.join(broadcast(survHashes), Seq("h"), "left_semi")
-    val newHashes = survHashes.join(broadcast(matchedHashes), Seq("h"), "left_anti")
-    val survBanded = Dedup.batchBandKeys(batch)
-      .join(broadcast(survivors.select("doc_id")), Seq("doc_id"), "left_semi")
-      .select("band", "band_key", "doc_id")
-      .localCheckpoint()
-    val touched = survBanded.groupBy("band", "band_key").agg(count(lit(1)).as("dc"))
-    val storedCnt = bandRawV
-      .join(broadcast(touched.select("band", "band_key")), Seq("band", "band_key"), "left_semi")
-      .groupBy("band", "band_key").agg(count(lit(1)).as("oc"))
-    val newlyHot = touched
-      .join(storedCnt, Seq("band", "band_key"), "left_outer")
-      .filter(coalesce(col("oc"), lit(0L)) + col("dc") > Dedup.maxBucket)
-      .select("band", "band_key")
-      .join(broadcast(stopV.distinct()), Seq("band", "band_key"), "left_anti")
+    // views + the batch, so a replay recomputes identical frames; the
+    // tables are fresh, so the frames need no materialization of their own
+    val (newHashes, survBanded, newlyHot) = SnapshotStateSink.deltaFacts(
+      survivors, Dedup.batchBandKeys(batch), hashV, bandRawV, stopV)
     val pack = Curation.appendPackSummary(packV, survivors)
 
     // this attempt's private generation tables (unique names — bound to
     // the log only if the manifest row below commits), written as
-    // CONCURRENT independent jobs (r16 optimization, guide §2.6): the
+    // CONCURRENT independent jobs (guide §2.6): the
     // five layer tables share no data dependency, so the scheduler
     // back-fills one write's task tail with the next write's tasks
     val tag = attemptTag(s"b$batchId")
@@ -1606,10 +1567,10 @@ object StateLog {
   def ingestBatch(spark: SparkSession, ref: LogRef, st: SnapshotStateSink.StateTables,
       batch: DataFrame, batchId: Long): Boolean = withCommitRetry() {
     val hist = history(spark, ref)
-    // the sides stay separate frames all the way down (r16 optimization):
-    // the old `corpus ∪ batch` + `filter(is_new)` construction re-split
-    // what this call site already had split, and its union plan keyed the
-    // batch's signing/labeling memos on this log's table names
+    // the sides stay separate frames all the way down: a
+    // `corpus ∪ batch` + `filter(is_new)` construction would re-split
+    // what this call site already has split, and its union plan would
+    // key the batch's signing/labeling memos on this log's table names
     ingestOnce(spark, ref, st, hist,
       batch.select(StoreCols.map(col): _*), corpusOf(spark, active(hist)), batchId)
   }
@@ -1639,7 +1600,7 @@ object StateLog {
     * already subtracts prior tombstones ORDER-AWARE (a doc_id re-admitted
     * by a later delta stays live) — re-subtracting them here would be
     * order-BLIND and could exclude a legitimately live re-admitted doc
-    * from the orphan recount, wrongly tombstoning its hash (r12 review).
+    * from the orphan recount, wrongly tombstoning its hash.
     * The caller-supplied path keeps the subtraction (its contract: a raw
     * store with prior deletions possibly still present, fresh doc_ids on
     * re-admission). */
@@ -1708,7 +1669,7 @@ object StateLog {
     * repack exactly like time travel: a [[vacuum]] or snapshot release
     * that dropped a needed table fails loudly here. Repack BEFORE
     * vacuuming the generations it must re-account. */
-  private def curatedRetained(spark: SparkSession, hist: Seq[Gen]): DataFrame = {
+  private[sources] def curatedRetained(spark: SparkSession, hist: Seq[Gen]): DataFrame = {
     val contribs = hist.filter(g => g.kind == "base" || g.kind == "delta")
     val retracts = hist.filter(_.kind == "retract")
     (contribs.map(_.cur) ++ retracts.map(_.band)).distinct.foreach { t =>
@@ -1719,8 +1680,8 @@ object StateLog {
     }
     def contrib(g: Gen): DataFrame =
       if (g.kind == "base")
-        // the at-rest membership companion first (r17 optimization,
-        // VERDICT r16 task 1): when [[writeCorpusStore]] persisted the
+        // the at-rest membership companion first: when
+        // [[writeCorpusStore]] persisted the
         // base store's curated membership, the repack reads that table —
         // the same rows the re-derivation below produces (the chain
         // depends only on the store columns; n_tokens is the funnel's own
@@ -1730,7 +1691,7 @@ object StateLog {
           spark.table(curMemTable(g.cur))
             .select(col("doc_id"), col("lang"), col("n_tokens"), col("n_chars"))
         else
-        // membership only (r16 optimization): curatedDocsDf would attach
+        // membership only: curatedDocsDf would attach
         // shard_id via the eager two-phase prefix sum and this select
         // would immediately discard it — the repack re-windows from
         // scratch anyway. Row-identical (shardAssign is row-preserving).
@@ -1826,7 +1787,7 @@ object StateLog {
     val tag = attemptTag(s"c$base")
     val Seq(hashT, bandT, stopT, packT, curT) = SinkPar.run(Seq(
       () => saveGen(spark, ref, hashV, "hash", tag, Some("h")),
-      () => saveGen(spark, ref, effectiveBandOf(bandLiveV, stopV), "band", tag, Some("band_key")),
+      () => saveGen(spark, ref, DedupIndexSink.effectiveBandOf(bandLiveV, stopV), "band", tag, Some("band_key")),
       () => saveGen(spark, ref, stopV.distinct(), "stop", tag, None),
       () => saveGen(spark, ref, packV, "pack", tag, None),
       () => saveGen(spark, ref, corpusOf(spark, gens), "cur", tag, None)))
@@ -1838,437 +1799,4 @@ object StateLog {
     * probes pay for; test-visible. */
   private[graft] def activeGenerations(spark: SparkSession, ref: LogRef): Int =
     active(history(spark, ref)).size
-
-  def eq144(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val (st, store) = SinkPar.run2(SnapshotStateSink.write(spark, docs),
-      writeCorpusStore(spark, docs.filter(!DedupIndexSink.isNewCol)))
-    val ref = fromSnapshot(spark, st, store)
-    ingestBatch(spark, ref, st, docs, DedupIndexSink.isNewCol, 0L)
-    compactLog(spark, ref)
-    auditFolded(spark, ref)
-  }
-
-  /** eq144 — the log under the ORACLE: one micro-batch ingested through
-    * [[ingestBatch]] and folded must land on EXACTLY the state
-    * [[SnapshotStateSink.advance]] reaches — same survivor gates against
-    * the same committed views, same monotone guard update, same O(batch)
-    * pack append — so the audit shares eq141's DuckDB oracle VERBATIM
-    * (the eq140/eq137 pattern): the scratch rebuild over the merged
-    * population hash-checks the whole
-    * ingest→generation→commit→fold path, not just the test fixtures. */
-  private[graft] def auditFolded(spark: SparkSession, ref: LogRef): DataFrame =
-    auditItems(views(spark, ref), "").orderBy("item")
-
-  private def auditItems(vs: (DataFrame, DataFrame, DataFrame, DataFrame),
-      prefix: String): DataFrame = {
-    val (hashV, bandLive, stopV, packV) = vs
-    val eff = effectiveBandOf(bandLive, stopV)
-    def one(item: String, df: DataFrame): DataFrame =
-      df.select(lit(prefix + item).as("item"), col("n"))
-    // the four pack totals come from ONE aggregate over the summary,
-    // pivoted to rows by a bounded explode (r16 optimization): the
-    // four-branch formulation scanned the pack table four times — same
-    // rows, same values, one pass (the eq74 profiler pattern)
-    val packItems = packV.agg(
-        coalesce(sum(col("n_docs")), lit(0L)).as("pd"),
-        coalesce(sum(col("t_tokens")), lit(0L)).as("pt"),
-        coalesce(sum(col("t_chars")), lit(0L)).as("pc"),
-        coalesce(sum(col("n_shards")), lit(0L)).as("ps"))
-      .select(explode(array(
-        struct(lit(prefix + "pack_docs").as("item"), col("pd").as("n")),
-        struct(lit(prefix + "pack_tokens").as("item"), col("pt").as("n")),
-        struct(lit(prefix + "pack_chars").as("item"), col("pc").as("n")),
-        struct(lit(prefix + "pack_shards").as("item"), col("ps").as("n")))).as("p"))
-      .select(col("p.item").as("item"), col("p.n").as("n"))
-    one("idx_hash_entries", hashV.agg(count(lit(1)).as("n")))
-      .unionAll(one("idx_band_entries", eff.agg(count(lit(1)).as("n"))))
-      .unionAll(one("idx_stop_buckets", stopV.distinct().agg(count(lit(1)).as("n"))))
-      .unionAll(packItems)
-  }
-
-  def eq146(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val (st, store) = SinkPar.run2(SnapshotStateSink.write(spark, docs),
-      writeCorpusStore(spark, docs.filter(!DedupIndexSink.isNewCol)))
-    val ref = fromSnapshot(spark, st, store)
-    ingestBatch(spark, ref, st, docs, DedupIndexSink.isNewCol, 0L)
-    compactLog(spark, ref)
-    auditTimeTravel(spark, ref)
-  }
-
-  /** eq146 — TIME TRAVEL under the oracle: after one ingest + fold, the
-    * same audit read twice — as-of generation 0 (`g0_` items: the base
-    * snapshot exactly as it stood before the batch, though the live
-    * tables have long since been superseded by the fold) and at the
-    * head (`live_` items, eq144's advanced state). The DuckDB oracle
-    * rebuilds BOTH states from scratch over the raw population — the
-    * historical read must equal the scratch OLD-corpus state (eq139's
-    * numbers) while the head equals the scratch MERGED state (eq141's),
-    * proving manifest-prefix resolution reconstructs committed history,
-    * not just the head. */
-  private[graft] def auditTimeTravel(spark: SparkSession, ref: LogRef): DataFrame = {
-    // one manifest read for both points (r16 optimization)
-    val hist = history(spark, ref)
-    auditItems(viewsOf(spark, asOfGensOf(spark, ref, hist, 0L,
-        g => Seq(g.hash, g.band, g.stop, g.pack, g.cur))), "g0_")
-      .unionAll(auditItems(viewsOf(spark, active(hist)), "live_"))
-      .orderBy("item")
-  }
-
-  def eq147(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val (st, store) = SinkPar.run2(SnapshotStateSink.write(spark, docs),
-      writeCorpusStore(spark, docs.filter(!DedupIndexSink.isNewCol)))
-    val ref = fromSnapshot(spark, st, store)
-    // the caller hands over ONLY the batch — the store comes from the log
-    ingestBatch(spark, ref, st, docs.filter(DedupIndexSink.isNewCol), 0L)
-    compactLog(spark, ref)
-    auditSelfContained(spark, ref)
-  }
-
-  /** eq147 — the SELF-CONTAINED log under the oracle: the same single
-    * batch as eq144, but the ingest resolves the corpus store from the
-    * log's own corpus layer instead of receiving it from the caller. The
-    * final state must therefore be EXACTLY eq144's (the seven audit items
-    * share eq141's scratch-rebuild oracle verbatim — any divergence in
-    * the self-resolved store breaks the hash), plus three corpus items
-    * proving the store itself: the resolved corpus's row count, char
-    * mass, and doc_id checksum must equal the scratch population (old
-    * corpus ∪ the funnel's delta survivors) rebuilt in DuckDB. */
-  private[graft] def auditSelfContained(spark: SparkSession, ref: LogRef): DataFrame =
-    auditWithCorpus(spark, ref).orderBy("item")
-
-  /** The seven index/pack items + three corpus items off ONE manifest
-    * read (r16 optimization): `views` and `corpus` each re-read history,
-    * and the audits composed both. */
-  private def auditWithCorpus(spark: SparkSession, ref: LogRef): DataFrame = {
-    val gens = active(history(spark, ref))
-    auditItems(viewsOf(spark, gens), "")
-      .unionAll(corpusItems(corpusOf(spark, gens), ""))
-  }
-
-  /** The three corpus accounting items from ONE aggregate over the
-    * corpus resolution (r16 optimization): the three-branch union scanned
-    * the resolved corpus — a union + anti-join over the generation
-    * tables, the audit's most expensive input — three times. Same rows,
-    * same values, one pass (the eq74 profiler pattern). */
-  private def corpusItems(c: DataFrame, prefix: String): DataFrame =
-    c.agg(
-        count(lit(1)).as("cd"),
-        coalesce(sum(col("n_chars")), lit(0L)).as("cc"),
-        coalesce(sum(col("doc_id")), lit(0L)).as("ck"))
-      .select(explode(array(
-        struct(lit(prefix + "corpus_docs").as("item"), col("cd").as("n")),
-        struct(lit(prefix + "corpus_chars").as("item"), col("cc").as("n")),
-        struct(lit(prefix + "corpus_id_checksum").as("item"), col("ck").as("n")))).as("p"))
-      .select(col("p.item").as("item"), col("p.n").as("n"))
-
-  def eq148(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val (st, store) = SinkPar.run2(SnapshotStateSink.write(spark, docs),
-      writeCorpusStore(spark, docs.filter(!DedupIndexSink.isNewCol)))
-    val ref = fromSnapshot(spark, st, store)
-    ingestBatch(spark, ref, st, docs.filter(DedupIndexSink.isNewCol), 0L) // gen 1
-    retractBatch(spark, ref, col("doc_id") % 7 === 3, 1L)                 // gen 2
-    compactLog(spark, ref)                                                // gen 3
-    auditCorpusTravel(spark, ref)
-  }
-
-  def eq149(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val (st, store) = SinkPar.run2(SnapshotStateSink.write(spark, docs),
-      writeCorpusStore(spark, docs.filter(!DedupIndexSink.isNewCol)))
-    val ref = fromSnapshot(spark, st, store)
-    ingestBatch(spark, ref, st, docs.filter(DedupIndexSink.isNewCol), 0L) // gen 1
-    compactLog(spark, ref)                                                // gen 2
-    val vacuumed = vacuum(spark, ref)
-    val released = releaseWrappedSnapshot(spark, ref)
-    auditReleased(spark, ref, vacuumed, released)
-  }
-
-  /** eq149 — the FULL RETENTION LIFECYCLE under the oracle (VERDICT r12
-    * tasks 3+7 as a driver-gated query): ingest → fold → vacuum →
-    * releaseWrappedSnapshot, then the head state re-proven from scratch.
-    * The seven index/pack items and three corpus items must STILL equal
-    * eq147's (the fold's own tables carry the whole state — dropping the
-    * genesis snapshot, the corpus store, the wrap marker, and the
-    * superseded generation changed nothing a reader can see), plus three
-    * deterministic accounting items: `vacuumed_tables` = 5 (the one
-    * superseded delta generation's five attempt tables), `released_tables`
-    * = 6 (the snapshot's hash/band/stop/pack tables, the corpus store,
-    * and the wrap marker), and `asof0_bounded` = 1 (the historical read
-    * below the fold now fails with the clear bounded-time-travel error,
-    * not a missing-table resolve). */
-  private[graft] def auditReleased(spark: SparkSession, ref: LogRef,
-      vacuumed: Seq[String], released: Seq[String]): DataFrame = {
-    val bounded =
-      try { viewsAsOf(spark, ref, 0L); false }
-      catch { case e: IllegalStateException => e.getMessage.contains("bounded") }
-    def flag(item: String, n: Long): DataFrame = {
-      import spark.implicits._
-      Seq((item, n)).toDF("item", "n")
-    }
-    auditWithCorpus(spark, ref)
-      .unionAll(flag("vacuumed_tables", vacuumed.size.toLong))
-      .unionAll(flag("released_tables", released.size.toLong))
-      .unionAll(flag("asof0_bounded", if (bounded) 1L else 0L))
-      .orderBy("item")
-  }
-
-  def eq150(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val (st, store) = SinkPar.run2(SnapshotStateSink.write(spark, docs),
-      writeCorpusStore(spark, docs.filter(!DedupIndexSink.isNewCol)))
-    val ref = fromSnapshot(spark, st, store)
-    ingestBatch(spark, ref, st, docs.filter(DedupIndexSink.isNewCol), 0L) // gen 1
-    checkpointManifest(spark, ref)        // 2 row files -> 1
-    compactLog(spark, ref)                // gen 2, appended AFTER the checkpoint
-    val (_, filesAfter) = checkpointManifest(spark, ref)
-    // the replay-skip set must survive the file swap: the same batch id
-    // probed against the CHECKPOINTED manifest is still skipped outright
-    val skipped = !ingestBatch(spark, ref, st,
-      docs.filter(DedupIndexSink.isNewCol), 0L)
-    auditCheckpointed(spark, ref, filesAfter, skipped)
-  }
-
-  /** eq150 — the MANIFEST CHECKPOINT under the oracle: the log's state
-    * after ingest → checkpoint → fold → checkpoint → replay-probe must be
-    * EXACTLY eq147's (the checkpoint rewrites manifest FILES, never a
-    * row — seven index/pack items plus three corpus items share the
-    * scratch-rebuild oracle verbatim), with three deterministic
-    * accounting items: `manifest_files` = 1 (the second checkpoint
-    * merged the post-fold append back into one file), `manifest_rows` =
-    * 3 (base + delta + fold — no row lost across two file swaps), and
-    * `replay_skipped` = 1 (the committed batch id still collides against
-    * the checkpointed manifest). */
-  private[graft] def auditCheckpointed(spark: SparkSession, ref: LogRef,
-      filesAfter: Long, skipped: Boolean): DataFrame = {
-    def flag(item: String, n: Long): DataFrame = {
-      import spark.implicits._
-      Seq((item, n)).toDF("item", "n")
-    }
-    auditWithCorpus(spark, ref)
-      .unionAll(flag("manifest_files", filesAfter))
-      .unionAll(flag("manifest_rows", history(spark, ref).size.toLong))
-      .unionAll(flag("replay_skipped", if (skipped) 1L else 0L))
-      .orderBy("item")
-  }
-
-  def eq152(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val (st, store) = SinkPar.run2(SnapshotStateSink.write(spark, docs),
-      writeCorpusStore(spark, docs.filter(!DedupIndexSink.isNewCol)))
-    val ref = fromSnapshot(spark, st, store)
-    ingestBatch(spark, ref, st, docs.filter(DedupIndexSink.isNewCol), 0L) // gen 1
-    compactLog(spark, ref)                                                // gen 2
-    // INCREMENTAL drain (r14): the three one-row manifest files merged
-    // in bounded slices of 2 — each call takes the OLDEST maxFiles row
-    // files and is row-preserving on its own (merged + remaining = the
-    // same rows), the relief valve for a manifest left to grow unbounded
-    val d1 = checkpointManifest(spark, ref, maxFiles = 2) // 3 -> 2 files
-    val d2 = checkpointManifest(spark, ref, maxFiles = 2) // 2 -> 1 file
-    val skipped = !ingestBatch(spark, ref, st,
-      docs.filter(DedupIndexSink.isNewCol), 0L)
-    def flag(item: String, n: Long): DataFrame = {
-      import spark.implicits._
-      Seq((item, n)).toDF("item", "n")
-    }
-    auditCheckpointed(spark, ref, d2._2, skipped)
-      .unionAll(flag("drain_calls", 2L))
-      .unionAll(flag("drain1_after", d1._2))
-      .unionAll(flag("drain2_after", d2._2))
-      .orderBy("item")
-  }
-
-  /* eq152 — the INCREMENTAL manifest checkpoint under the oracle (r14):
-   * same committed state as eq150 (ingest → fold), but the manifest's
-   * three one-row files are drained in maxFiles=2 slices instead of one
-   * full merge — two calls, deterministically 3→2→1 files — and the
-   * replay-skip is probed against the sliced-and-merged manifest. The
-   * state items share eq150's scratch-rebuild oracle verbatim (no row
-   * may change across PARTIAL merges either); the accounting items pin
-   * the drain trajectory (drain_calls=2, drain1_after=2,
-   * drain2_after=1, manifest_files=1, manifest_rows=3,
-   * replay_skipped=1). */
-
-  def eq153(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val (st, store) = SinkPar.run2(SnapshotStateSink.write(spark, docs),
-      writeCorpusStore(spark, docs.filter(!DedupIndexSink.isNewCol)))
-    val ref = fromSnapshot(spark, st, store)
-    ingestBatch(spark, ref, st, docs.filter(DedupIndexSink.isNewCol), 0L) // gen 1
-    compactLog(spark, ref)                                                // gen 2
-    // plant what a MULTI-PROCESS deployment's crashes leave on the store:
-    // a foreign attempt's table dir (store-only — no catalog here or
-    // anywhere ever saw it) and a dead commit stage, both aged a day; plus
-    // a YOUNG orphan standing in for a live foreign writer's in-flight
-    // attempt, which the grace window must protect
-    val root = new java.io.File(sys.props("java.io.tmpdir"))
-    def plant(name: String, ageMs: Long): java.io.File = {
-      val d = new java.io.File(root, name)
-      docs.limit(1).select(col("doc_id")).write.mode("overwrite").parquet(d.getPath)
-      if (ageMs > 0) {
-        val t = System.currentTimeMillis() - ageMs
-        def walk(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(walk)); f.setLastModified(t): Unit
-        }
-        walk(d)
-      }
-      d
-    }
-    val agedOrphan = plant(s"${ref.manifest}_hash_b9_aeq153dead_1", 86400000L)
-    val agedStage = plant(s"${ref.manifest}_stage_eq153_1", 86400000L)
-    val young = plant(s"${ref.manifest}_band_b9_aeq153live_1", 0L)
-    val dropped = sweep(spark, ref, graceMs = 600000L)
-    val keptYoung = young.exists() && !dropped.contains(young.getName)
-    val skipped = !ingestBatch(spark, ref, st,
-      docs.filter(DedupIndexSink.isNewCol), 0L)
-    // the young stand-in is litter once audited — reclaim it eagerly (the
-    // returned frame never reads it)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(young)
-    def flag(item: String, n: Long): DataFrame = {
-      import spark.implicits._
-      Seq((item, n)).toDF("item", "n")
-    }
-    auditWithCorpus(spark, ref)
-      .unionAll(flag("swept_aged", dropped.count(n =>
-        n == agedOrphan.getName || n == agedStage.getName).toLong))
-      .unionAll(flag("swept_total", dropped.size.toLong))
-      .unionAll(flag("kept_young", if (keptYoung) 1L else 0L))
-      .unionAll(flag("replay_skipped", if (skipped) 1L else 0L))
-      .orderBy("item")
-  }
-
-  /* eq153 — the GRACED SWEEP under the oracle (r15, VERDICT r14 task 2):
-   * eq147's committed state verbatim (ingest → fold — a store-level GC
-   * must not change a row any reader sees), with the live-writer-safe
-   * sweep's contract pinned: the aged foreign orphan and the dead commit
-   * stage — shapes only the STORE-level candidate scan can see, no
-   * catalog ever knew them — are reclaimed (swept_aged=2, and nothing
-   * else: swept_total=2), the young in-flight stand-in survives the
-   * grace window (kept_young=1), and the replay-skip set holds across
-   * the sweep (replay_skipped=1). */
-
-  def eq154(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    val (st, store) = SinkPar.run2(SnapshotStateSink.write(spark, docs),
-      writeCorpusStore(spark, docs.filter(!DedupIndexSink.isNewCol)))
-    val ref = fromSnapshot(spark, st, store)
-    ingestBatch(spark, ref, st, docs.filter(DedupIndexSink.isNewCol), 0L) // gen 1
-    compactLog(spark, ref)                                                // gen 2
-    // a live as-of reader's frames, resolved BEFORE any GC (the existence
-    // checks pass) — the handle a concurrent scan would be holding
-    val asof1Hash = viewsAsOf(spark, ref, 1L)._1
-    val asof1Live = asof1Hash.count() >= 0
-    // graced vacuum against the YOUNG fold: the supersession is seconds
-    // old, well inside the 10-minute window — nothing may drop
-    val youngDrop = vacuum(spark, ref, graceMs = 600000L)
-    // age the fold's commit past the window: its manifest row file is the
-    // supersession instant (the one the graced basis reads)
-    val mdir = new java.io.File(sys.props("java.io.tmpdir"), s"${ref.manifest}_manifest")
-    Option(mdir.listFiles()).foreach(_.filter(_.getName.startsWith("part-row-g2-"))
-      .foreach(f => f.setLastModified(System.currentTimeMillis() - 86400000L): Unit))
-    val agedDrop = vacuum(spark, ref, graceMs = 600000L)
-    // the reader's pre-resolved frames now point at dropped files: the
-    // guarded read must surface the clean bounded-time-travel error, not
-    // a raw missing-file failure
-    val guardedBounded =
-      try { guardAsOfRead(spark, ref, 1L)(asof1Hash.count()); false }
-      catch { case e: IllegalStateException => e.getMessage.contains("bounded") }
-    val skipped = !ingestBatch(spark, ref, st,
-      docs.filter(DedupIndexSink.isNewCol), 0L)
-    def flag(item: String, n: Long): DataFrame = {
-      import spark.implicits._
-      Seq((item, n)).toDF("item", "n")
-    }
-    auditWithCorpus(spark, ref)
-      .unionAll(flag("vacuumed_young", youngDrop.size.toLong))
-      .unionAll(flag("vacuumed_aged", agedDrop.size.toLong))
-      .unionAll(flag("asof1_live", if (asof1Live) 1L else 0L))
-      .unionAll(flag("asof1_guarded_bounded", if (guardedBounded) 1L else 0L))
-      .unionAll(flag("replay_skipped", if (skipped) 1L else 0L))
-      .orderBy("item")
-  }
-
-  /* eq154 — the GRACED VACUUM under the oracle (r16, VERDICT r15 task 2):
-   * eq147's committed state verbatim (ingest → fold — a retention GC must
-   * not change a row any reader sees), with the reader-retention contract
-   * pinned end to end: a graced vacuum against the YOUNG fold drops
-   * nothing (vacuumed_young=0) while a live as-of reader resolves below
-   * it (asof1_live=1); once the fold's supersession instant is aged past
-   * the window the superseded delta generation's five tables are
-   * reclaimed (vacuumed_aged=5); the reader's PRE-RESOLVED frames — the
-   * exact handle a scan racing the drop would hold — surface the clean
-   * bounded-time-travel error through guardAsOfRead, never a raw
-   * missing-file failure (asof1_guarded_bounded=1); and the replay-skip
-   * set holds across the GC (replay_skipped=1). */
-
-  def eq151(spark: SparkSession, dir: String): DataFrame = {
-    val docs = graft.Tables.load(spark, dir, "documents")
-    // the repacking log persists the store's curated membership at
-    // creation (r17, VERDICT r16 task 1): the production posture — the
-    // curated corpus is the at-rest PRODUCT — so the self-contained
-    // repack reads it instead of re-mining the genesis corpus. The old
-    // split is spelled `% 10 < 8` (row-identical to `!isNewCol`) so the
-    // membership derivation keys the session chain memo on EXACTLY the
-    // snapshot writer's old-corpus plan — one chain, zero extra mining.
-    val (st, store) = SinkPar.run2(SnapshotStateSink.write(spark, docs),
-      writeCorpusStore(spark, docs.filter(col("doc_id") % 10 < 8),
-        withMembership = true))
-    val ref = fromSnapshot(spark, st, store)
-    ingestBatch(spark, ref, st, docs.filter(DedupIndexSink.isNewCol), 0L) // gen 1
-    retractBatch(spark, ref, col("doc_id") % 7 === 3, 1L)                 // gen 2
-    repackLog(spark, ref, 2L)                                             // gen 3
-    compactLog(spark, ref)                                                // gen 4
-    auditLogRepacked(spark, ref)
-  }
-
-  /** eq151 — POST-RETRACTION REPACK THROUGH THE LOG under the oracle
-    * (eq145's claim carried into the log family): ingest → retract →
-    * [[repackLog]] → fold, then the pack summary read back FROM THE
-    * LOG'S VIEWS (the fold must carry the repacked table forward) joined
-    * with a shard-assignment checksum over the re-sharded retained
-    * corpus — [[SnapshotStateSink.auditRepacked]]'s shape. The DuckDB
-    * oracle re-derives everything from raw documents: the retained
-    * membership is the curated OLD corpus UNION the delta funnel's
-    * survivors, both minus the deleted docs (the log ingested the batch
-    * BEFORE the deletion, so the retraction spans both sides — the
-    * difference from eq145's snapshot-only retained set), re-windowed
-    * from a zero prefix sum. */
-  private[graft] def auditLogRepacked(spark: SparkSession, ref: LogRef): DataFrame = {
-    // one manifest read for the retained resolution AND the views
-    // (r16 optimization)
-    val hist = history(spark, ref)
-    val retained = curatedRetained(spark, hist)
-    val checks = Curation.shardAssign(retained).groupBy("lang")
-      .agg(sum(col("doc_id") * (col("shard_id") + lit(1L))).as("shard_checksum"))
-    val (_, _, _, packV) = viewsOf(spark, active(hist))
-    packV.join(checks, Seq("lang"), "left_outer").orderBy("lang")
-  }
-
-  /** eq148 — CORPUS TIME TRAVEL under the oracle (VERDICT r12 task 3):
-    * eq147 made the corpus a log layer and eq146 made the index views
-    * time-travelable, but the historical CORPUS — the population the
-    * as-of index indexed — needs [[corpusAsOf]]. One ingest, one
-    * retraction, one fold; then the store read at three points, each
-    * re-derived from raw documents by the DuckDB oracle: as-of gen 0
-    * (the base corpus alone), as-of gen 1 (base ∪ the funnel's
-    * survivors — BEFORE the deletion, proving the retraction's
-    * tombstones apply order-aware in as-of resolutions too), and the
-    * live head (the fold's merged store, deletion applied). Count, char
-    * mass, and doc_id checksum per point. */
-  private[graft] def auditCorpusTravel(spark: SparkSession, ref: LogRef): DataFrame = {
-    // one manifest read for all three points (r16 optimization)
-    val hist = history(spark, ref)
-    def corpusLayers(g: Gen): Seq[String] =
-      if (g.kind == "retract") Seq(g.band, g.cur).distinct else Seq(g.cur)
-    corpusItems(corpusOf(spark, asOfGensOf(spark, ref, hist, 0L, corpusLayers)), "g0_")
-      .unionAll(corpusItems(corpusOf(spark, asOfGensOf(spark, ref, hist, 1L, corpusLayers)), "g1_"))
-      .unionAll(corpusItems(corpusOf(spark, active(hist)), "live_"))
-      .orderBy("item")
-  }
 }

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 
 /** The driver mains' shared toolkit: query selection, the JSON escaper,
   * and the guard that keeps [[Harness]] (plus [[ProdSession]]) the only
-  * place a SparkSession is built. No Spark session is needed. */
+  * place a SparkSession is built; plus the source guard that keeps the
+  * state libraries free of oracle drills. No Spark session is needed. */
 class HarnessSpec extends AnyFunSuite {
 
   private val all = SparkEntry.queries.keys.toSeq.sorted
@@ -104,5 +105,14 @@ class HarnessSpec extends AnyFunSuite {
         .map(_.getFileName.toString).toSet
       finally walk.close()
     assert(builders == Set("Harness.scala", "ProdSession.scala"))
+  }
+
+  test("the state libraries define no drill: every eq<N> of the family is in StateDrills") {
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/sources")
+    Seq("StateLog.scala", "SnapshotStateSink.scala").foreach { f =>
+      val drills = """\bdef\s+eq\d+\b""".r
+        .findAllIn(code(java.nio.file.Files.readString(dir.resolve(f)))).toSeq
+      assert(drills.isEmpty, s"$f defines ${drills.mkString(", ")}")
+    }
   }
 }

@@ -279,6 +279,29 @@ class QueryServiceSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("HTTP binding: limit pages the cat slice; limit=0, limit=x and a limit above the cap are a typed 400") {
+    val server = graft.api.HttpApi.start(spark, Sf, port = 0)
+    try {
+      val port = server.getAddress.getPort
+      val client = java.net.http.HttpClient.newHttpClient()
+      def get(qs: String) = client.send(
+        java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"http://127.0.0.1:$port/api/produits/?$qs")).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      val paged = get("type=cat&catID=STANDARD&limit=1")
+      assert(paged.statusCode() == 200, paged.body())
+      val rows = new com.fasterxml.jackson.databind.ObjectMapper().readTree(paged.body())
+      assert(rows.isArray && rows.size() == 1, paged.body())
+      // above DefaultRowCap: outside input never lifts the cap
+      Seq("0", "x", (QueryService.DefaultRowCap + 1).toString).foreach { v =>
+        val bad = get(s"type=cat&catID=STANDARD&limit=$v")
+        assert(bad.statusCode() == 400, bad.body())
+        assert(bad.body() == s"""{"error": "${ApiError.InvalidParam("limit", v).message}"}""",
+          bad.body())
+      }
+    } finally server.stop(0)
+  }
+
   test("HTTP binding end-to-end: 200 array, 200 envelope, 400 unknown type, 404 bad dir (urls.py:5)") {
     val server = graft.api.HttpApi.start(spark, Sf, port = 0)
     try {

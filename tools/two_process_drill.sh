@@ -34,6 +34,28 @@ WORK=$(mktemp -d /tmp/graft_2proc.XXXXXX)
 echo "[drill] workdir: $WORK"
 
 run() { java "${JVM_OPTS[@]}" -cp "$CP" graft.TwoProcessDrill "$@"; }
+# Background drill JVMs start through `spawn`, which runs in this shell
+# and backgrounds java itself, so `$!` is the JVM's pid: a `run ... &`
+# would background a subshell, and a kill -9 on its pid would leave the
+# java process alive. Every spawned pid is recorded for the final check.
+STARTED=()
+spawn() { java "${JVM_OPTS[@]}" -cp "$CP" graft.TwoProcessDrill "$@" & STARTED+=("$!"); }
+# ALIVE := the spawned pids that are still drill JVMs.
+alive() {
+  ALIVE=()
+  local p
+  for p in "${STARTED[@]}"; do
+    if ps -o args= -p "$p" 2>/dev/null | grep -q graft.TwoProcessDrill; then
+      ALIVE+=("$p")
+    fi
+  done
+}
+# Every exit path, a failed check or a `set -e` abort included, reaps the
+# drill JVMs still running, so no failed drill leaves one behind.
+trap 'alive; if [ "${#ALIVE[@]}" -ne 0 ]; then
+  echo "[drill] killing drill JVMs left alive at exit: ${ALIVE[*]}"
+  kill -9 "${ALIVE[@]}" 2>/dev/null || true
+fi' EXIT
 
 run prep "$WORK"
 
@@ -43,13 +65,13 @@ run prep "$WORK"
 # a FOURTH process running GRACED sweeps against the live writers
 # (VERDICT r14 task 2): the aged foreign orphan prep planted must be
 # reclaimed while no live generation is lost.
-run ingest "$WORK" 100 4 > "$WORK/ingest_a.log" 2>&1 &
+spawn ingest "$WORK" 100 4 > "$WORK/ingest_a.log" 2>&1
 PA=$!
-run ingest "$WORK" 200 4 > "$WORK/ingest_b.log" 2>&1 &
+spawn ingest "$WORK" 200 4 > "$WORK/ingest_b.log" 2>&1
 PB=$!
-run checkpoint "$WORK" 12 > "$WORK/checkpoint.log" 2>&1 &
+spawn checkpoint "$WORK" 12 > "$WORK/checkpoint.log" 2>&1
 PC=$!
-run sweeploop "$WORK" 10 150000 > "$WORK/sweep.log" 2>&1 &
+spawn sweeploop "$WORK" 10 150000 > "$WORK/sweep.log" 2>&1
 PS=$!
 FAIL=0
 wait "$PA" || FAIL=1
@@ -68,8 +90,8 @@ fi
 # sentinel path and hangs); the next committer must roll the dead
 # claimant's batch forward AND land its own.
 SENTINEL="$WORK/claim_hang.sentinel"
-GRAFT_TEST_HANG_AFTER_CLAIM="$SENTINEL" run ingest "$WORK" 300 1 \
-  > "$WORK/ingest_c.log" 2>&1 &
+GRAFT_TEST_HANG_AFTER_CLAIM="$SENTINEL" spawn ingest "$WORK" 300 1 \
+  > "$WORK/ingest_c.log" 2>&1
 PCRASH=$!
 for i in $(seq 1 240); do
   [ -f "$SENTINEL" ] && break
@@ -101,8 +123,8 @@ run check "$WORK" "100,101,102,103,200,201,202,203,300,400"
 # log must stay readable (history() collapses byte-identical rows) and
 # the NEXT checkpoint must merge the residue down to one file.
 CKPT_SENTINEL="$WORK/ckpt_hang.sentinel"
-GRAFT_TEST_HANG_AFTER_CKPT_MERGE="$CKPT_SENTINEL" run checkpoint "$WORK" 1 \
-  > "$WORK/ckpt_crash.log" 2>&1 &
+GRAFT_TEST_HANG_AFTER_CKPT_MERGE="$CKPT_SENTINEL" spawn checkpoint "$WORK" 1 \
+  > "$WORK/ckpt_crash.log" 2>&1
 PCKPT=$!
 for i in $(seq 1 240); do
   [ -f "$CKPT_SENTINEL" ] && break
@@ -143,7 +165,7 @@ run fold "$WORK" > "$WORK/fold.log" 2>&1
 grep '\[drill\]' "$WORK/fold.log" || true
 FOLDGEN=$(grep -oE 'head gen=[0-9]+' "$WORK/fold.log" | grep -oE '[0-9]+$')
 if [ -z "$FOLDGEN" ]; then echo "[drill] FAIL: fold did not report its gen"; exit 1; fi
-run asofreader "$WORK" 1 40 > "$WORK/asof_reader.log" 2>&1 &
+spawn asofreader "$WORK" 1 40 > "$WORK/asof_reader.log" 2>&1
 PR=$!
 for i in $(seq 1 180); do
   grep -q 'resolved' "$WORK/asof_reader.log" && break
@@ -185,9 +207,9 @@ fi
 WORK2=$(mktemp -d /tmp/graft_2proc_rand.XXXXXX)
 echo "[drill] randwalk workdir: $WORK2"
 run prep "$WORK2" > "$WORK2/prep.log" 2>&1
-run randwalk "$WORK2" 0 20260816 6 > "$WORK2/walk_a.log" 2>&1 &
+spawn randwalk "$WORK2" 0 20260816 6 > "$WORK2/walk_a.log" 2>&1
 WA=$!
-run randwalk "$WORK2" 1 20260816 6 > "$WORK2/walk_b.log" 2>&1 &
+spawn randwalk "$WORK2" 1 20260816 6 > "$WORK2/walk_b.log" 2>&1
 WB=$!
 RFAIL=0
 wait "$WA" || RFAIL=1
@@ -202,6 +224,15 @@ run checkrand "$WORK2" > "$WORK2/checkrand.log" 2>&1 || {
   exit 1
 }
 grep '\[drill\]' "$WORK2/checkrand.log" || true
+
+# no drill JVM may outlive the drill: a survivor means a kill hit the
+# wrong process and a "SIGKILL" case tested a hung peer, not a dead one
+# (the EXIT trap then kills them)
+alive
+if [ "${#ALIVE[@]}" -ne 0 ]; then
+  echo "[drill] FAIL: drill JVMs still alive after the drill: ${ALIVE[*]}"
+  exit 1
+fi
 
 echo "[drill] PASS: two-process rehearsal green — race + live-writer graced" \
   "sweep + SIGKILL roll-forward + checkpoint-crash recovery + graced-vacuum" \
