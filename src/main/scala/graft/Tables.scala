@@ -24,8 +24,8 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** The events fixture stores ts as parquet INT64 with a TIMESTAMP logical
-    * annotation whose unit has DRIFTED across driver regenerations (NANOS in
-    * rounds ≤6, MICROS in round 7 — a silent 1000× corruption when the
+    * annotation whose unit has DRIFTED across fixture regenerations (NANOS
+    * in older ones, MICROS in newer — a silent 1000× corruption when the
     * loader hard-codes one unit). Declaring ts as LongType reads the raw
     * INT64 regardless of annotation — no inference failure on NANOS, no
     * session-global `spark.sql.legacy.parquet.nanosAsLong` flag (which would
@@ -55,7 +55,7 @@ object Tables {
     * reads are metadata-only. Fails loudly on anything other than an INT64
     * TIMESTAMP(NANOS|MICROS|MILLIS): a fixture-schema drift the engine
     * cannot interpret must stop the run, not corrupt every downstream
-    * timestamp (VERDICT r7 — 27 queries lost to a silent unit flip). A bare
+    * timestamp (a silent unit flip once cost 27 queries). A bare
     * INT64 with no annotation is disambiguated by magnitude: epoch-nanos
     * for 2024 ≈ 1.7e18, micros ≈ 1.7e15, millis ≈ 1.7e12 — three decades
     * apart, unambiguous for any date 1973–5138. */
@@ -83,7 +83,7 @@ object Tables {
   /** One footer's verdict for [[tsUnit]]. Every unexpected shape — a
     * zero-row-group file, absent column statistics, a non-INT64 physical
     * type, a non-TIMESTAMP annotation — throws the explicit 'fixture drift'
-    * message rather than an opaque NPE/IOOBE (ADVICE r8). */
+    * message rather than an opaque NPE/IOOBE. */
   private def tsUnitOfFile(conf: org.apache.hadoop.conf.Configuration,
                            file: org.apache.hadoop.fs.Path,
                            column: String): TsUnit = {
@@ -145,7 +145,7 @@ object Tables {
       spark.read.parquet(s"$sfDir/$name.parquet")
     }
 
-  /** Fixture-schema drift guard (VERDICT r7 task 2). Metadata-only: asserts
+  /** Fixture-schema drift guard. Metadata-only: asserts
     * every base table is readable with the expected column set and that
     * events.ts has an interpretable epoch unit. Call at session start (a
     * few footer reads) to fail fast with an explicit message instead of
@@ -202,5 +202,9 @@ object Tables {
         li("l_suppkey").as("magid"))
 
   def produits(spark: SparkSession, sfDir: String): DataFrame =
-    pdv(spark, sfDir).select("dateid", "prodid", "catid", "fabid")
+    produitsOf(pdv(spark, sfDir))
+
+  /** The produits projection of a pdv frame. */
+  def produitsOf(pdv: DataFrame): DataFrame =
+    pdv.select("dateid", "prodid", "catid", "fabid")
 }

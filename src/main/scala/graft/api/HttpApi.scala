@@ -36,7 +36,7 @@ object HttpApi {
     * caller decision. Returns the running server; stop with
     * `server.stop(0)`.
     *
-    * Requests are served on a bounded thread pool (`threads`, r15):
+    * Requests are served on a bounded thread pool (`threads`):
     * without an executor the JDK server dispatches every exchange on ONE
     * thread, so a single slow query head-of-line-blocks the whole API.
     * Spark is made for this — concurrent driver-side actions schedule

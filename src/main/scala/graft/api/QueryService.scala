@@ -4,9 +4,9 @@ import scala.util.Try
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.retail.RetailQueries
 
 /** The reference's HTTP query surface
   * (`GET /api/produits/?type=...&catID=...`), re-expressed as a typed
@@ -17,11 +17,11 @@ import graft.Tables
   * (views.py:143-145), missing database → 404 (views.py:92-96), empty
   * top-10 → 404 (views.py:122-123, 133-134).
   *
-  * Queries are parameterized HERE (typed, injected as Column literals — no
-  * string interpolation into SQL, fixing the reference's injection-by-
-  * construction B3, views.py:143). The frozen-parameter t2 variants in
-  * [[graft.retail.RetailQueries]] remain the oracle-checked contract; this
-  * layer drives the same plan shapes with caller-supplied parameters.
+  * This layer checks the parameters and calls the type's builder in
+  * [[graft.retail.RetailQueries]] — the same code the oracle-checked
+  * frozen-parameter t2 variants (q1–q11) run. Values reach the plan typed,
+  * as Column literals — no string interpolation into SQL, fixing the
+  * reference's injection-by-construction B3, views.py:143.
   *
   * Serving snapshot: every query type plans over one served copy of the
   * data per (session, dir) — the `Tables.pdv` join, materialized with
@@ -136,7 +136,7 @@ object QueryService {
       // a failure while planning over the snapshot is a defect (planner
       // bug, codegen error, NPE): a typed 500, never masked as a missing
       // database
-      df <- Try(build(spark, pdv, qt, p)).toEither.left
+      df <- Try(build(pdv, qt, p)).toEither.left
         .map(mapBuildFailure)
         .flatMap(identity)
     } yield df
@@ -209,13 +209,24 @@ object QueryService {
     * deterministic. */
   private def defaultAsOf: String = java.time.LocalDate.now().toString
 
+  /** Fixed start of `score-evolution`'s window and of
+    * `score-sante-touts-les-mois`'s top-10 window and month spine
+    * (views.py:85, 131). */
+  private val WindowStart = java.time.LocalDate.of(1995, 1, 1)
+
   private def parseDate(v: String, name: String): Either[ApiError, java.time.LocalDate] =
     Try(java.time.LocalDate.parse(v)).toEither.left.map(_ => InvalidParam(name, v))
 
-  private def build(spark: SparkSession, pdv: DataFrame, qt: QueryType, p: Params): Either[ApiError, DataFrame] = {
-    val produits = pdv.select("dateid", "prodid", "catid", "fabid")
+  /** Checks the request's parameters and calls the type's
+    * [[RetailQueries]] builder over the serving snapshot `pdv`. Dates
+    * (`debut`, `fin`, `asOf`) must be ISO `yyyy-MM-dd`; they reach the plan
+    * as their parsed value's ISO string. */
+  private def build(pdv: DataFrame, qt: QueryType, p: Params): Either[ApiError, DataFrame] = {
     def need[A](v: Option[A], name: String): Either[ApiError, A] =
       v.toRight(p.malformed.get(name).fold[ApiError](MissingParam(name))(InvalidParam(name, _)))
+    def date(v: Option[String], name: String): Either[ApiError, String] =
+      need(v, name).flatMap(parseDate(_, name)).map(_.toString)
+    def asOf = parseDate(p.asOf.getOrElse(defaultAsOf), "asOf")
     qt match {
       case Cat => for {
         c <- need(p.catId, "catID")
@@ -225,88 +236,51 @@ object QueryService {
           case None => p.malformed.get("limit")
             .fold[Either[ApiError, Int]](Right(DefaultRowCap))(v => Left(InvalidParam("limit", v)))
         }
-      } yield produits.filter(col("catid") === c).limit(cap)
+      } yield RetailQueries.catRows(pdv, c).limit(cap)
 
-      case MagCat => need(p.catId, "catID").map(c =>
-        pdv.filter(col("catid") === c)
-          .agg(countDistinct(col("magid")).as("total_magasins")))
+      case MagCat => need(p.catId, "catID").map(RetailQueries.magCat(pdv, _))
 
-      case FabCat => need(p.catId, "catID").map(c =>
-        produits.filter(col("catid") === c)
-          .agg(countDistinct(col("fabid")).as("total_fabricants")))
+      case FabCat => need(p.catId, "catID").map(RetailQueries.fabCat(pdv, _))
 
       case AvgProdPerFab => for {
-        c <- need(p.catId, "catID"); d <- need(p.debut, "debut"); f <- need(p.fin, "fin")
-      } yield produits
-        .filter(col("catid") === c && col("dateid").between(d, f))
-        .groupBy("fabid").agg(countDistinct(col("prodid")).as("product_count"))
-        .agg(avg(col("product_count")).as("avg_products_per_fab"))
+        c <- need(p.catId, "catID"); d <- date(p.debut, "debut"); f <- date(p.fin, "fin")
+      } yield RetailQueries.avgProdPerFab(pdv, c, d, f)
 
       case TopMagasins => for {
-        d <- need(p.debut, "debut"); f <- need(p.fin, "fin")
-      } yield topMagasins(pdv, d, f)
+        d <- date(p.debut, "debut"); f <- date(p.fin, "fin")
+      } yield RetailQueries.topMagasins(pdv, d, f)
 
       case TopMagasinsCat => for {
-        c <- need(p.catId, "catID"); d <- need(p.debut, "debut"); f <- need(p.fin, "fin")
-      } yield topMagasinsCat(pdv, c, d, f)
+        c <- need(p.catId, "catID"); d <- date(p.debut, "debut"); f <- date(p.fin, "fin")
+      } yield RetailQueries.topMagasinsCat(pdv, c, d, f)
 
       case NbMagCatDate => for {
         c <- need(p.catId, "catID"); a <- need(p.annee, "annee")
-      } yield pdv
-        .filter(col("catid") === c && year(col("dateid")) === a)
-        .groupBy(date_format(col("dateid"), "yyyy-MM").as("mois"))
-        .agg(countDistinct(col("magid")).as("nbmag"))
-        .orderBy("mois")
+      } yield RetailQueries.nbMagCatDate(pdv, c, a)
 
       case ScoreEvolution => for {
-        c <- need(p.catId, "catID"); fab <- need(p.fabId, "fabID")
-        asOf <- parseDate(p.asOf.getOrElse(defaultAsOf), "asOf")
-      } yield pdv
-        .filter(col("catid") === c && col("dateid").between("1995-01-01", asOf.toString))
-        .groupBy(date_format(col("dateid"), "yyyy-MM").as("mois"))
-        .agg(count(lit(1)).as("total_ventes"),
-          sum(when(col("fabid") === fab, 1).otherwise(0)).as("ventes_fab"))
-        .withColumn("score_sante", coalesce(
-          col("ventes_fab") * lit(100.0) /
-            when(col("total_ventes") === 0, lit(null)).otherwise(col("total_ventes")),
-          lit(0.0)))
-        .orderBy("mois")
+        c <- need(p.catId, "catID"); fab <- need(p.fabId, "fabID"); a <- asOf
+      } yield RetailQueries.scoreEvolution(pdv, c, fab, WindowStart.toString, a.toString)
 
       case Top1 => for {
-        c <- need(p.catId, "catID"); d <- need(p.debut, "debut"); f <- need(p.fin, "fin")
-        // phase 1 materialized ONCE (≤10 ids): the guard reads the collected
-        // seq (no second Spark action) and phase 2 joins the literal frame
-        tops = graft.retail.RetailQueries.collectTop10Magids(pdv, d, f)
+        c <- need(p.catId, "catID"); d <- date(p.debut, "debut"); f <- date(p.fin, "fin")
+        tops = RetailQueries.collectTop10Magids(pdv, d, f)
         _ <- nonEmpty(tops, "Aucun magasin trouvé pour cette catégorie")
-      } yield {
-        import spark.implicits._
-        pdv
-          .filter(col("catid") === c)
-          .join(broadcast(tops.toDF("magid")), Seq("magid"), "left_semi")
-          .groupBy("magid")
-          .agg(countDistinct(col("fabid")).as("total_fabricants"),
-            countDistinct(col("prodid")).as("total_produits"),
-            count(lit(1)).as("total_ventes"))
-          .withColumn("score",
-            col("total_produits") * 0.3 + col("total_ventes") * 0.6 + col("total_fabricants") * 0.1)
-          .orderBy(col("score").desc, col("magid").asc)
-          .limit(1)
-      }
+        // the served score is not rounded before the ranking (q9's is)
+      } yield RetailQueries.ranked(RetailQueries.top1Stats(pdv, c, tops), RetailQueries.top1Score, 1)
 
       case AvgCatFab10Mag => for {
         c <- need(p.catId, "catID"); fab <- need(p.fabId, "fabID")
-        d <- need(p.debut, "debut"); f <- need(p.fin, "fin")
-        top = graft.retail.RetailQueries.collectTop10Cat(pdv, c, d, f)
+        d <- date(p.debut, "debut"); f <- date(p.fin, "fin")
+        top = RetailQueries.collectTop10Cat(pdv, c, d, f)
         _ <- nonEmpty(top, "Aucun magasin trouvé pour cette catégorie")
-      } yield graft.retail.RetailQueries.avgFabTop10From(pdv, top, c, fab)
+      } yield RetailQueries.avgFabTop10From(pdv, top, c, fab)
 
       case ScoreSanteTousLesMois => for {
-        c <- need(p.catId, "catID"); fab <- need(p.fabId, "fabID")
-        asOf <- parseDate(p.asOf.getOrElse(defaultAsOf), "asOf")
-        top = graft.retail.RetailQueries.collectTop10Cat(pdv, c, "1995-01-01", asOf.toString)
+        c <- need(p.catId, "catID"); fab <- need(p.fabId, "fabID"); a <- asOf
+        top = RetailQueries.collectTop10Cat(pdv, c, WindowStart.toString, a.toString)
         _ <- nonEmpty(top, "Aucun magasin trouvé pour cette catégorie")
-      } yield graft.retail.RetailQueries.scoreSanteMonthsFrom(
-        spark, pdv, top, c, fab, java.time.LocalDate.parse("1995-01-01"), asOf)
+      } yield RetailQueries.scoreSanteMonthsFrom(pdv, top, c, fab, WindowStart, a)
     }
   }
 
@@ -314,14 +288,6 @@ object QueryService {
     * the already-collected ≤10-row phase-1 result — zero extra Spark jobs. */
   private def nonEmpty(rows: Seq[_], detail: String): Either[ApiError, Unit] =
     if (rows.isEmpty) Left(EmptyResult(detail)) else Right(())
-
-  // one implementation of the weighted top-10s, shared with the frozen t2
-  // variants (graft.retail.RetailQueries) — no drift
-  private def topMagasins(pdv: DataFrame, debut: String, fin: String): DataFrame =
-    graft.retail.RetailQueries.topMagasins(pdv, debut, fin)
-
-  private def topMagasinsCat(pdv: DataFrame, cat: String, debut: String, fin: String): DataFrame =
-    graft.retail.RetailQueries.topMagasinsCat(pdv, cat, debut, fin)
 
   /** S7 — JSON result envelope (views.py:152-154): records-style JSON
     * strings. Driver-side collect is bounded: every QueryType's result is

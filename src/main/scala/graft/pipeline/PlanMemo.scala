@@ -15,13 +15,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * expensive mining+checkpoint under its own monitor — two concurrent
   * first callers can race to create Cells (cheap, side-effect-free) but
   * only the stored winner's body ever runs, so no checkpoint blocks are
-  * orphaned (ADVICE r8).
+  * orphaned.
   *
   * Lifecycle: every instance self-registers; when a SparkContext stops,
   * each memo drops the entries keyed by that context's sessions so the
   * frames (and the localCheckpoint blocks they pin) don't outlive the
-  * application in a long-lived JVM hosting many sequential sessions
-  * (ADVICE r8). Fixtures are immutable per session; a mutated-in-place
+  * application in a long-lived JVM hosting many sequential sessions.
+  * Fixtures are immutable per session; a mutated-in-place
   * source dir would need an explicit [[PlanMemo.clearAll]].
   *
   * [[at]] keys an entry by (session, any value) instead of a source plan,
@@ -31,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[evict]]. */
 private[graft] final class PlanMemo[T] {
   private final class Cell(f: () => T) {
-    // Count the miss AFTER f() completes (ADVICE r10): if the mining body
+    // Count the miss AFTER f() completes: if the mining body
     // throws on first use (e.g. a transient Spark failure), Scala's
     // lazy-val semantics re-run the body on the next access — counting
     // before f() would then record 2+ misses for one successfully

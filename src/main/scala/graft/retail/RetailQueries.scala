@@ -1,21 +1,27 @@
 package graft.retail
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 
 /** The reference's 11 analytics query types (SURVEY.md §2.9, Q1–Q11),
-  * re-expressed as single declarative DataFrame programs. Each maps to one
+  * re-expressed as declarative DataFrame programs. Each maps to one
   * QUERY_MAP template or Python-orchestrated composite in
   * `/root/reference/etl_project/api_etl/views.py`; the Python post-loops
-  * (views.py:226-254, 300-339) become joins + conditional aggregates so the
-  * whole query is one Catalyst DAG — no driver-side iteration, no collect()
-  * of fact-sized data (100 TB posture, SURVEY.md §7 risk 6).
+  * (views.py:226-254, 300-339) become joins + conditional aggregates, and
+  * the only driver-side collect is a composite's ≤10-row phase 1 — never
+  * fact-sized data (100 TB posture, SURVEY.md §7 risk 6).
   *
-  * Determinism rules (SURVEY.md §2.9 canon): fixed parameters, `round(_, 6)`
-  * on every double *before* any order-sensitive step, `magid ASC` tie-breaks
-  * on all top-k, explicit full ORDER BY on output.
+  * One builder per API type, over a pdv frame and typed arguments: the
+  * served snapshot in [[graft.api.QueryService]], `Tables.pdv` in q1–q11.
+  * q1–q11 call the builders at the frozen t2 parameters and add only the
+  * oracle's output canonicalization, so what the API serves is what the
+  * DuckDB oracle checks.
+  *
+  * Determinism rules of q1–q11 (SURVEY.md §2.9 canon): fixed parameters,
+  * `round(_, 6)` on every double *before* any order-sensitive step,
+  * `magid ASC` tie-breaks on all top-k, explicit full ORDER BY on output.
   */
 object RetailQueries {
   // Frozen t2 parameters, verified non-degenerate at sf0.01 (SURVEY.md §2.9).
@@ -23,148 +29,133 @@ object RetailQueries {
   val Fab   = "Brand#12"
   val Debut = "1995-01-01"
   val Fin   = "1996-12-31"
+  val Annee = 1995
   val AsOf  = "1998-09-01"
 
-  /** Q1 — `cat` (views.py:10): full projection, equality predicate.
-    * dateid rendered ISO for oracle parity. */
+  /** `cat` (views.py:10): the category's produits rows. */
+  private[graft] def catRows(pdv: DataFrame, cat: String): DataFrame =
+    Tables.produitsOf(pdv).filter(col("catid") === cat)
+
+  /** Q1 — `cat`, dateid rendered ISO and fully ordered for oracle parity. */
   def q1(spark: SparkSession, dir: String): DataFrame =
-    Tables.produits(spark, dir)
-      .filter(col("catid") === Cat)
+    catRows(Tables.pdv(spark, dir), Cat)
       .select(
         date_format(col("dateid"), "yyyy-MM-dd").as("dateid"),
         col("prodid"), col("catid"), col("fabid"))
       .orderBy("dateid", "prodid", "catid", "fabid")
 
-  /** Q2 — `mag-cat` (views.py:12): scalar COUNT(DISTINCT) — exact, planned
-    * as partial+final HashAggregate by Catalyst. */
-  def q2(spark: SparkSession, dir: String): DataFrame =
-    Tables.pdv(spark, dir)
-      .filter(col("catid") === Cat)
+  /** `mag-cat` (views.py:12): scalar COUNT(DISTINCT) — exact, planned as
+    * partial+final HashAggregate by Catalyst. */
+  private[graft] def magCat(pdv: DataFrame, cat: String): DataFrame =
+    pdv.filter(col("catid") === cat)
       .agg(countDistinct(col("magid")).as("total_magasins"))
 
-  /** Q3 — `fab-cat` (views.py:14). */
-  def q3(spark: SparkSession, dir: String): DataFrame =
-    Tables.produits(spark, dir)
-      .filter(col("catid") === Cat)
+  def q2(spark: SparkSession, dir: String): DataFrame = magCat(Tables.pdv(spark, dir), Cat)
+
+  /** `fab-cat` (views.py:14). */
+  private[graft] def fabCat(pdv: DataFrame, cat: String): DataFrame =
+    Tables.produitsOf(pdv).filter(col("catid") === cat)
       .agg(countDistinct(col("fabid")).as("total_fabricants"))
 
-  /** Q4 — `avg-prod-per-fab` (views.py:16-25): AVG over a grouped subquery.
-    * Integer counts sum exactly in double, so the average is
-    * order-insensitive and safe to hash at 6 dp. */
-  def q4(spark: SparkSession, dir: String): DataFrame =
-    Tables.produits(spark, dir)
-      .filter(col("catid") === Cat && col("dateid").between(Debut, Fin))
+  def q3(spark: SparkSession, dir: String): DataFrame = fabCat(Tables.pdv(spark, dir), Cat)
+
+  /** `avg-prod-per-fab` (views.py:16-25): AVG over a grouped subquery. */
+  private[graft] def avgProdPerFab(pdv: DataFrame, cat: String,
+                                   debut: String, fin: String): DataFrame =
+    Tables.produitsOf(pdv)
+      .filter(col("catid") === cat && col("dateid").between(debut, fin))
       .groupBy("fabid")
       .agg(countDistinct(col("prodid")).as("product_count"))
-      .agg(round(avg(col("product_count")), 6).as("avg_products_per_fab"))
+      .agg(avg(col("product_count")).as("avg_products_per_fab"))
 
-  /** Shared body of Q5 (`top-magasins`, views.py:27-43): per-store
-    * multi-COUNT(DISTINCT) (planned via Expand, exact) + weighted score.
-    * Score is rounded to 6 dp *before* the sort so the top-k cut is decided
-    * on identical values in both engines; `magid ASC` breaks ties
-    * (SURVEY.md §7 risk 3). `TakeOrderedAndProject` — no full sort. */
-  private[graft] def top10AllCats(spark: SparkSession, dir: String): DataFrame =
-    topMagasins(Tables.pdv(spark, dir), Debut, Fin)
+  /** Q4 — integer counts sum exactly in double, so the average is
+    * order-insensitive and safe to hash at 6 dp. */
+  def q4(spark: SparkSession, dir: String): DataFrame =
+    round6(avgProdPerFab(Tables.pdv(spark, dir), Cat, Debut, Fin), "avg_products_per_fab")
 
-  /** Parameterized Q5 body — the ONE implementation of the all-category
-    * weighted top-10, shared by the frozen t2 variant above and the typed
-    * API layer ([[graft.api.QueryService]]). */
-  private[graft] def topMagasins(pdv: DataFrame, debut: String, fin: String): DataFrame =
-    pdv
-      .filter(col("dateid").between(debut, fin))
-      .groupBy("magid")
-      .agg(
-        countDistinct(col("fabid")).as("total_fabricants"),
-        countDistinct(col("catid")).as("total_categories"),
-        countDistinct(col("prodid")).as("total_produits"),
-        count(lit(1)).as("total_ventes"))
-      .withColumn("score", round(
-        col("total_fabricants") * 0.1 + col("total_categories") * 0.2 +
-          col("total_produits") * 0.3 + col("total_ventes") * 0.4, 6))
+  /** The `n` best stores by `score`, ties broken by `magid ASC`
+    * (SURVEY.md §7 risk 3). Planned as `TakeOrderedAndProject` — no full
+    * sort. */
+  private[graft] def ranked(stats: DataFrame, score: Column, n: Int): DataFrame =
+    stats.withColumn("score", score)
       .orderBy(col("score").desc, col("magid").asc)
-      .limit(10)
+      .limit(n)
 
-  def q5(spark: SparkSession, dir: String): DataFrame = top10AllCats(spark, dir)
+  /** `top-magasins` (views.py:27-43): per-store multi-COUNT(DISTINCT)
+    * (planned via Expand, exact) + weighted score. The score is rounded to
+    * 6 dp *before* the sort so the top-k cut is decided on identical values
+    * in both engines. */
+  private[graft] def topMagasins(pdv: DataFrame, debut: String, fin: String): DataFrame =
+    ranked(
+      pdv
+        .filter(col("dateid").between(debut, fin))
+        .groupBy("magid")
+        .agg(
+          countDistinct(col("fabid")).as("total_fabricants"),
+          countDistinct(col("catid")).as("total_categories"),
+          countDistinct(col("prodid")).as("total_produits"),
+          count(lit(1)).as("total_ventes")),
+      round(
+        col("total_fabricants") * 0.1 + col("total_categories") * 0.2 +
+          col("total_produits") * 0.3 + col("total_ventes") * 0.4, 6),
+      10)
 
-  /** Shared body of Q6 (`top-magasins-cat`, views.py:45-60): same shape,
-    * category-filtered, weights 0.1/0.3/0.6, no catid distinct. */
-  private[graft] def top10Cat(spark: SparkSession, dir: String): DataFrame =
+  def q5(spark: SparkSession, dir: String): DataFrame = topMagasins(Tables.pdv(spark, dir), Debut, Fin)
+
+  /** `top-magasins-cat` (views.py:45-60): same shape, category-filtered,
+    * weights 0.1/0.3/0.6, no catid distinct. */
+  private[graft] def topMagasinsCat(pdv: DataFrame, cat: String, debut: String, fin: String): DataFrame =
+    ranked(
+      pdv
+        .filter(col("catid") === cat && col("dateid").between(debut, fin))
+        .groupBy("magid")
+        .agg(
+          countDistinct(col("fabid")).as("total_fabricants"),
+          countDistinct(col("prodid")).as("total_produits"),
+          count(lit(1)).as("total_ventes")),
+      round(
+        col("total_fabricants") * 0.1 + col("total_produits") * 0.3 +
+          col("total_ventes") * 0.6, 6),
+      10)
+
+  def q6(spark: SparkSession, dir: String): DataFrame =
     topMagasinsCat(Tables.pdv(spark, dir), Cat, Debut, Fin)
 
-  /** Parameterized Q6 body (weights 0.1/0.3/0.6), shared with the API layer. */
-  private[graft] def topMagasinsCat(pdv: DataFrame, cat: String, debut: String, fin: String): DataFrame =
+  /** `nb-mag-cat-date` (views.py:62-71): month-bucketed COUNT(DISTINCT),
+    * year predicate. */
+  private[graft] def nbMagCatDate(pdv: DataFrame, cat: String, annee: Int): DataFrame =
     pdv
-      .filter(col("catid") === cat && col("dateid").between(debut, fin))
-      .groupBy("magid")
-      .agg(
-        countDistinct(col("fabid")).as("total_fabricants"),
-        countDistinct(col("prodid")).as("total_produits"),
-        count(lit(1)).as("total_ventes"))
-      .withColumn("score", round(
-        col("total_fabricants") * 0.1 + col("total_produits") * 0.3 +
-          col("total_ventes") * 0.6, 6))
-      .orderBy(col("score").desc, col("magid").asc)
-      .limit(10)
-
-  def q6(spark: SparkSession, dir: String): DataFrame = top10Cat(spark, dir)
-
-  /** Q7 — `nb-mag-cat-date` (views.py:62-71): month-bucketed
-    * COUNT(DISTINCT), year predicate. */
-  def q7(spark: SparkSession, dir: String): DataFrame =
-    Tables.pdv(spark, dir)
-      .filter(col("catid") === Cat && year(col("dateid")) === 1995)
+      .filter(col("catid") === cat && year(col("dateid")) === annee)
       .groupBy(date_format(col("dateid"), "yyyy-MM").as("mois"))
       .agg(countDistinct(col("magid")).as("nbmag"))
       .orderBy("mois")
 
-  /** Q8 — `score-evolution` (views.py:73-88): conditional SUM + safe ratio.
-    * `DATE('now')` (views.py:85, bug B4) replaced by the :asof parameter.
-    * Arithmetic order mirrors SQLite: (sum * 100.0) / count, in double. */
-  def q8(spark: SparkSession, dir: String): DataFrame =
-    Tables.pdv(spark, dir)
-      .filter(col("catid") === Cat && col("dateid").between(Debut, AsOf))
+  def q7(spark: SparkSession, dir: String): DataFrame =
+    nbMagCatDate(Tables.pdv(spark, dir), Cat, Annee)
+
+  /** `score-evolution` (views.py:73-88): conditional SUM + safe ratio.
+    * `DATE('now')` (views.py:85, bug B4) is the `asOf` argument. Arithmetic
+    * order mirrors SQLite: (sum * 100.0) / count, in double. */
+  private[graft] def scoreEvolution(pdv: DataFrame, cat: String, fab: String,
+                                    debut: String, asOf: String): DataFrame =
+    pdv
+      .filter(col("catid") === cat && col("dateid").between(debut, asOf))
       .groupBy(date_format(col("dateid"), "yyyy-MM").as("mois"))
       .agg(
         count(lit(1)).as("total_ventes"),
-        sum(when(col("fabid") === Fab, 1).otherwise(0)).as("ventes_fab"))
-      .withColumn("score_sante", round(
-        coalesce(
-          col("ventes_fab") * lit(100.0) /
-            when(col("total_ventes") === 0, lit(null)).otherwise(col("total_ventes")),
-          lit(0.0)), 6))
+        sum(when(col("fabid") === fab, 1).otherwise(0)).as("ventes_fab"))
+      .withColumn("score_sante", coalesce(
+        col("ventes_fab") * lit(100.0) /
+          when(col("total_ventes") === 0, lit(null)).otherwise(col("total_ventes")),
+        lit(0.0)))
       .orderBy("mois")
 
-  /** Q9 — `top-1` as intended (views.py:157-190; bug B1 makes the reference
-    * endpoint 500 — SURVEY.md §2.10): two-phase top-k semi-join. Phase 1 is
-    * Q5's top-10 ids; phase 2 rescores (weights 0.3/0.6/0.1, views.py:175-177,
-    * category-filtered, no date filter — faithful to views.py:179) restricted
-    * to those ids via a broadcast left-semi join (≤10 rows on the build side). */
-  def q9(spark: SparkSession, dir: String): DataFrame = {
-    val top10 = top10AllCats(spark, dir).select("magid")
-    Tables.pdv(spark, dir)
-      .filter(col("catid") === Cat)
-      .join(broadcast(top10), Seq("magid"), "left_semi")
-      .groupBy("magid")
-      .agg(
-        countDistinct(col("fabid")).as("total_fabricants"),
-        countDistinct(col("prodid")).as("total_produits"),
-        count(lit(1)).as("total_ventes"))
-      .withColumn("score", round(
-        col("total_produits") * 0.3 + col("total_ventes") * 0.6 +
-          col("total_fabricants") * 0.1, 6))
-      .orderBy(col("score").desc, col("magid").asc)
-      .limit(1)
-  }
+  def q8(spark: SparkSession, dir: String): DataFrame =
+    round6(scoreEvolution(Tables.pdv(spark, dir), Cat, Fab, Debut, AsOf), "score_sante")
 
-  /** Q10 — `avg-cat-fab-10-mag` (views.py:118-126, 206-254): Q6's top-10,
-    * left-joined with the per-store fabricant distinct-product count
-    * (0-filled — the `dict.get(magid, 0)` at views.py:232), percentage per
-    * store, and the scalar mean over stores with a nonzero denominator
-    * (views.py:234-249). Python's `(best/top)*100` float order is preserved.
-    * The scalar is attached via a 1-row crossJoin (broadcast), not a global
-    * window — no single-partition shuffle of the row set. */
-  def q10(spark: SparkSession, dir: String): DataFrame =
-    avgFabTop10(Tables.pdv(spark, dir), Cat, Fab, Debut, Fin)
+  /** The oracle's 6-dp rounding of a double output column. */
+  private[graft] def round6(df: DataFrame, c: String): DataFrame =
+    df.withColumn(c, round(col(c), 6))
 
   /** Collect the ≤10-row phase-1 top-10 ONCE — the composite analogue of
     * the reference materializing `df_top_mag` in pandas (views.py:119/130).
@@ -177,12 +168,47 @@ object RetailQueries {
     topMagasinsCat(pdv, cat, debut, fin).select("magid", "total_produits")
       .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
 
-  /** Parameterized Q10 body — shared with the typed API layer. */
-  private[graft] def avgFabTop10(pdv: DataFrame, cat: String, fab: String,
-                                 debut: String, fin: String): DataFrame =
-    avgFabTop10From(pdv, collectTop10Cat(pdv, cat, debut, fin), cat, fab)
+  /** All-category top-10 magids, collected once (`top-1`'s phase 1). */
+  private[graft] def collectTop10Magids(pdv: DataFrame, debut: String, fin: String): Seq[Long] =
+    topMagasins(pdv, debut, fin).select("magid").collect().toSeq.map(_.getLong(0))
 
-  /** Q10 phase 2 over an already-materialized top-10 (magid, total_produits). */
+  /** `top-1` as intended (views.py:157-190; bug B1 makes the reference
+    * endpoint 500 — SURVEY.md §2.10), phase 2: the per-store counts of
+    * category `cat` (no date filter — faithful to views.py:179), restricted
+    * to the phase-1 ids by a broadcast left-semi join (≤10 rows on the
+    * build side). Rank with [[top1Score]]. */
+  private[graft] def top1Stats(pdv: DataFrame, cat: String, top10: Seq[Long]): DataFrame = {
+    val spark = pdv.sparkSession
+    import spark.implicits._
+    pdv
+      .filter(col("catid") === cat)
+      .join(broadcast(top10.toDF("magid")), Seq("magid"), "left_semi")
+      .groupBy("magid")
+      .agg(
+        countDistinct(col("fabid")).as("total_fabricants"),
+        countDistinct(col("prodid")).as("total_produits"),
+        count(lit(1)).as("total_ventes"))
+  }
+
+  /** `top-1`'s weights 0.3/0.6/0.1 (views.py:175-177). */
+  private[graft] def top1Score: Column =
+    col("total_produits") * 0.3 + col("total_ventes") * 0.6 + col("total_fabricants") * 0.1
+
+  /** Q9 — `top-1` over Q5's top-10, the score rounded to 6 dp before the
+    * ranking, like Q5's. */
+  def q9(spark: SparkSession, dir: String): DataFrame = {
+    val pdv = Tables.pdv(spark, dir)
+    ranked(top1Stats(pdv, Cat, collectTop10Magids(pdv, Debut, Fin)), round(top1Score, 6), 1)
+  }
+
+  /** `avg-cat-fab-10-mag` (views.py:118-126, 206-254), phase 2 over the
+    * collected `top-magasins-cat` top-10 (magid, total_produits):
+    * left-joined with the per-store fabricant distinct-product count
+    * (0-filled — the `dict.get(magid, 0)` at views.py:232), percentage per
+    * store, and the scalar mean over stores with a nonzero denominator
+    * (views.py:234-249). Python's `(best/top)*100` float order is preserved.
+    * The scalar is attached via a 1-row crossJoin (broadcast), not a global
+    * window — no single-partition shuffle of the row set. */
   private[graft] def avgFabTop10From(pdv: DataFrame, top10Rows: Seq[(Long, Long)],
                                      cat: String, fab: String): DataFrame = {
     val spark = pdv.sparkSession
@@ -195,7 +221,7 @@ object RetailQueries {
       .agg(countDistinct(col("prodid")).as("nb_produits_fab"))
     // ≤10 rows, read twice (emitted rows + the scalar mean) — materialized
     // so the phase-2 fact aggregate runs once, not once per plan reference
-    // (r17; the same two-consumer rule as the funnel's d4/d8 checkpoints)
+    // (the same two-consumer rule as the funnel's d4/d8 checkpoints)
     val rows = top10
       .join(best, Seq("magid"), "left_outer")
       .withColumn("nb_produits_fab", coalesce(col("nb_produits_fab"), lit(0L)))
@@ -211,30 +237,25 @@ object RetailQueries {
       .orderBy("magid")
   }
 
-  /** Q11 — `score-sante-touts-les-mois` (views.py:127-137, 256-339): the
-    * three-SQL-queries-plus-Python-loops composite as ONE DataFrame DAG:
-    * month spine (sequence/explode) × Q6's top-10 stores, left-joined with
-    * the per-(store, month) distinct-product counts (no date filter —
-    * faithful to views.py:294), then the dual semantics of views.py:317-335:
-    * emitted rows zero-fill empty months, but both means skip them
-    * (avg(when(...)) ignores nulls). */
-  def q11(spark: SparkSession, dir: String): DataFrame =
-    scoreSanteMonths(spark, Tables.pdv(spark, dir), Cat, Fab,
-      java.time.LocalDate.parse(Debut), java.time.LocalDate.parse(AsOf))
+  def q10(spark: SparkSession, dir: String): DataFrame = {
+    val pdv = Tables.pdv(spark, dir)
+    avgFabTop10From(pdv, collectTop10Cat(pdv, Cat, Debut, Fin), Cat, Fab)
+  }
 
-  /** Parameterized Q11 body — shared with the typed API layer. The spine
+  /** `score-sante-touts-les-mois` (views.py:127-137, 256-339), over the
+    * collected `top-magasins-cat` top-10 of the window debut..asOf
+    * (views.py:131): the three-SQL-queries-plus-Python-loops composite as
+    * ONE DataFrame DAG — month spine (sequence/explode) × the top-10
+    * stores, left-joined with the per-(store, month) distinct-product
+    * counts (no date filter — faithful to views.py:294), then the dual
+    * semantics of views.py:317-335: emitted rows zero-fill empty months,
+    * but both means skip them (avg(when(...)) ignores nulls). The spine
     * bounds are typed dates injected as literals (never interpolated into
-    * SQL text — reference bug B3 stays fixed at this layer too). */
-  private[graft] def scoreSanteMonths(spark: SparkSession, pdv: DataFrame,
-      cat: String, fab: String, debut: java.time.LocalDate,
-      asOf: java.time.LocalDate): DataFrame =
-    scoreSanteMonthsFrom(spark, pdv,
-      collectTop10Cat(pdv, cat, debut.toString, asOf.toString), cat, fab, debut, asOf)
-
-  /** Q11 body over an already-materialized top-10 (magid, total_produits). */
-  private[graft] def scoreSanteMonthsFrom(spark: SparkSession, pdv: DataFrame,
+    * SQL text — reference bug B3 stays fixed). */
+  private[graft] def scoreSanteMonthsFrom(pdv: DataFrame,
       top10Rows: Seq[(Long, Long)], cat: String, fab: String,
       debut: java.time.LocalDate, asOf: java.time.LocalDate): DataFrame = {
+    val spark = pdv.sparkSession
     import spark.implicits._
     val top10 = top10Rows.toDF("magid", "total_produits")
     val perMonth = pdv
@@ -250,7 +271,7 @@ object RetailQueries {
       .select(date_format(col("m"), "yyyy-MM").as("mois_annee"))
     // |months| rows, read twice (emitted rows + the scalar mean) —
     // materialized so the per-(store, month) fact aggregate runs once,
-    // not once per plan reference (r17; the d4/d8 two-consumer rule)
+    // not once per plan reference (the d4/d8 two-consumer rule)
     val monthly = spine
       .crossJoin(broadcast(top10))
       .join(perMonth, Seq("magid", "mois_annee"), "left_outer")
@@ -266,11 +287,9 @@ object RetailQueries {
       .orderBy("mois_annee")
   }
 
-  /** All-category top-10 magids, materialized once (Top1's phase 1). */
-  private[graft] def collectTop10Magids(pdv: DataFrame, debut: String, fin: String): Seq[Long] =
-    topMagasins(pdv, debut, fin).select("magid").collect().toSeq.map(_.getLong(0))
-
-  /** Q11's top-10 uses the wider window debut..asof (views.py:131). */
-  private[graft] def top10CatAsOf(spark: SparkSession, dir: String): DataFrame =
-    topMagasinsCat(Tables.pdv(spark, dir), Cat, Debut, AsOf)
+  def q11(spark: SparkSession, dir: String): DataFrame = {
+    val pdv = Tables.pdv(spark, dir)
+    scoreSanteMonthsFrom(pdv, collectTop10Cat(pdv, Cat, Debut, AsOf), Cat, Fab,
+      java.time.LocalDate.parse(Debut), java.time.LocalDate.parse(AsOf))
+  }
 }

@@ -288,7 +288,7 @@ class EngineSurfaceSpec extends SparkSpec {
     val q11Top = collectTop10Cat(pdv, Cat, Debut, AsOf)
     for ((q, phase2) <- Seq(
         "q10" -> (() => avgFabTop10From(pdv, q10Top, Cat, Fab).collect()),
-        "q11" -> (() => scoreSanteMonthsFrom(spark, pdv, q11Top, Cat, Fab,
+        "q11" -> (() => scoreSanteMonthsFrom(pdv, q11Top, Cat, Fab,
           java.time.LocalDate.parse(Debut), java.time.LocalDate.parse(AsOf)).collect()))) {
       val all = executedPlans(phase2()).mkString("\n---\n")
       val scans = "Scan parquet".r.findAllIn(all).length

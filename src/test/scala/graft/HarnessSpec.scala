@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 
 /** The driver mains' shared toolkit: query selection, the JSON escaper,
   * and the guard that keeps [[Harness]] (plus [[ProdSession]]) the only
-  * place a SparkSession is built; plus the source guard that keeps the
-  * state libraries free of oracle drills. No Spark session is needed. */
+  * place a SparkSession is built; plus the source guards that keep the
+  * state libraries free of oracle drills and the served API free of its
+  * own retail plans. No Spark session is needed. */
 class HarnessSpec extends AnyFunSuite {
 
   private val all = SparkEntry.queries.keys.toSeq.sorted
@@ -114,5 +115,12 @@ class HarnessSpec extends AnyFunSuite {
         .findAllIn(code(java.nio.file.Files.readString(dir.resolve(f)))).toSeq
       assert(drills.isEmpty, s"$f defines ${drills.mkString(", ")}")
     }
+  }
+
+  test("the served API plans no aggregate: every retail plan is a RetailQueries builder") {
+    val src = code(java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/api/QueryService.scala")))
+    val plans = """\bgroupBy\b|\bcountDistinct\b|\.agg\(""".r.findAllIn(src).toSeq
+    assert(plans.isEmpty, s"QueryService.scala plans ${plans.mkString(", ")}")
   }
 }

@@ -30,17 +30,32 @@ class QueryServiceSpec extends SparkSpec {
   }
 
   test("parameterized queries agree with the frozen t2 variants") {
-    val viaApi = QueryService.run(spark, Sf, "mag-cat", Params(catId = Some("STANDARD")))
-      .toOption.get.head().getLong(0)
-    val frozen = graft.retail.RetailQueries.q2(spark, Sf).head().getLong(0)
-    assert(viaApi == frozen)
-
-    val top = QueryService.run(spark, Sf, "top-magasins-cat", Params(
-      catId = Some("STANDARD"), debut = Some("1995-01-01"), fin = Some("1996-12-31")))
-      .toOption.get.select("magid").collect().map(_.getLong(0))
-    val frozenTop = graft.retail.RetailQueries.q6(spark, Sf)
-      .select("magid").collect().map(_.getLong(0))
-    assert(top.sameElements(frozenTop))
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.functions.{col, date_format}
+    import graft.retail.RetailQueries
+    import graft.retail.RetailQueries.{Annee, AsOf, Cat, Debut, Fab, Fin, round6}
+    val cat = Params(catId = Some(Cat))
+    val window = cat.copy(debut = Some(Debut), fin = Some(Fin))
+    val scored = cat.copy(fabId = Some(Fab), asOf = Some(AsOf))
+    // (type, its params at the frozen values, the q's output
+    // canonicalization applied to the served frame, the q)
+    val cases: Seq[(String, Params, DataFrame => DataFrame, (SparkSession, String) => DataFrame)] = Seq(
+      ("cat", cat, _.withColumn("dateid", date_format(col("dateid"), "yyyy-MM-dd")), RetailQueries.q1),
+      ("mag-cat", cat, identity, RetailQueries.q2),
+      ("fab-cat", cat, identity, RetailQueries.q3),
+      ("avg-prod-per-fab", window, round6(_, "avg_products_per_fab"), RetailQueries.q4),
+      ("top-magasins", Params(debut = Some(Debut), fin = Some(Fin)), identity, RetailQueries.q5),
+      ("top-magasins-cat", window, identity, RetailQueries.q6),
+      ("nb-mag-cat-date", cat.copy(annee = Some(Annee)), identity, RetailQueries.q7),
+      ("score-evolution", scored, round6(_, "score_sante"), RetailQueries.q8),
+      ("top-1", window, round6(_, "score"), RetailQueries.q9),
+      ("avg-cat-fab-10-mag", window.copy(fabId = Some(Fab)), identity, RetailQueries.q10),
+      ("score-sante-touts-les-mois", scored, identity, RetailQueries.q11))
+    assert(cases.map(_._1).toSet == QueryService.QueryType.byName.keySet)
+    for ((t, p, canon, q) <- cases) {
+      val served = QueryService.run(spark, Sf, t, p).fold(e => fail(s"$t: $e"), canon)
+      assert(Canonical.hash(served) == Canonical.hash(q(spark, Sf)), t)
+    }
   }
 
   test("cat slice is row-capped: default cap bounds the driver collect, an " +
@@ -71,6 +86,16 @@ class QueryServiceSpec extends SparkSpec {
       catId = Some("STANDARD"), fabId = Some("Brand#12"),
       asOf = Some("1998-09-01'), interval 1 month))--")))
     assert(r == Left(ApiError.InvalidParam("asOf", "1998-09-01'), interval 1 month))--")))
+    // debut and fin parse the same way, in every type that reads them
+    val window = Params(catId = Some("STANDARD"), fabId = Some("Brand#12"),
+      debut = Some("1995-01-01"), fin = Some("1996-12-31"))
+    for (t <- Seq("avg-prod-per-fab", "top-magasins", "top-magasins-cat", "top-1", "avg-cat-fab-10-mag");
+         bad <- Seq("abc", "1995-13-45")) {
+      assert(QueryService.run(spark, Sf, t, window.copy(debut = Some(bad))) ==
+        Left(ApiError.InvalidParam("debut", bad)), s"$t debut=$bad")
+      assert(QueryService.run(spark, Sf, t, window.copy(fin = Some(bad))) ==
+        Left(ApiError.InvalidParam("fin", bad)), s"$t fin=$bad")
+    }
   }
 
   test("data dir with lineitem but missing part -> typed 404, not a raw AnalysisException") {
