@@ -1,10 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.Tables
 
 /** Temporal join operators Spark lacks as primitives — as-of join and
   * range join — built by composition (preference order (a), SURVEY.md:
@@ -32,9 +30,6 @@ object TemporalJoins {
     * two sides with a tag, then `last(view_ts, ignoreNulls)` over
     * (user, ts, tag) rows-unbounded-preceding — views at the same
     * timestamp order before purchases, so ties attribute. */
-  def asOfAttribution(spark: SparkSession, dir: String): DataFrame =
-    asOfAttributionDf(Tables.load(spark, dir, "events"))
-
   def asOfAttributionDf(ev: DataFrame): DataFrame = {
     val views = ev.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts"), lit(0).as("tag"),
@@ -62,9 +57,6 @@ object TemporalJoins {
     * minutes of each other, counted per user. Bucket trick: one side
     * explodes to buckets {b-1, b, b+1}; each qualifying pair meets in
     * exactly one bucket (the right row's own), so no distinct needed. */
-  def rangePairsPerUser(spark: SparkSession, dir: String): DataFrame =
-    rangePairsPerUserDf(Tables.load(spark, dir, "events"))
-
   def rangePairsPerUserDf(evIn: DataFrame): DataFrame = {
     val ev = evIn
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))

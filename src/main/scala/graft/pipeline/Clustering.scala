@@ -1,10 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.Tables
 
 /** Iterative clustering over the `embeddings` table: Lloyd's k-means with
   * exact scaled-integer arithmetic, and the product-quantization codebooks
@@ -83,9 +81,6 @@ object Clustering {
     * corpus size. The per-iteration driver work is nil: centroids stay in
     * a k×d-row DataFrame (localCheckpoint'd, like eq72), never collected.
     */
-  def kmeans(spark: SparkSession, dir: String): DataFrame =
-    kmeansDf(Tables.load(spark, dir, "embeddings"))
-
   def kmeansDf(e: DataFrame, k: Int = 8, iters: Int = 5): DataFrame = {
     val (cents, assign) = lloydCache(e, ("kmeans", k, iters)) {
       // materialized once: seeding, every assign pass and every update
@@ -149,6 +144,11 @@ object Clustering {
     (cents, assign)
   }
 
+  private val PqSubspaces = 8
+  private val PqSubDim    = 8 // d=64 / m=8
+  private val PqCodes     = 32
+  private val PqIters     = 3
+
   /** x21 — product-quantization ANN with recall evaluation: the third
     * scale path beside IVF (x3) and SRP-LSH (x5), for corpora where even
     * the quantized vectors don't fit memory. PQ splits the d=64 space
@@ -169,14 +169,6 @@ object Clustering {
     * (corpus-linear, k×dsub centroid frames); encoding is one broadcast
     * join per subspace; the query path is a 64-row lookup-table build
     * plus one broadcast join over the codes — never a vector scan. */
-  def pqRecall(spark: SparkSession, dir: String): DataFrame =
-    pqRecallDf(Tables.load(spark, dir, "embeddings"))
-
-  private val PqSubspaces = 8
-  private val PqSubDim    = 8 // d=64 / m=8
-  private val PqCodes     = 32
-  private val PqIters     = 3
-
   def pqRecallDf(e: DataFrame): DataFrame = {
     // materialized once: the codebook build, the encoder, the query
     // lookup tables and the exact ground truth all consume this frame

@@ -1,9 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.functions.Md5Expressions.md5_key28
 import graft.functions.ShingleExpressions
 import graft.functions.TextCountExpressions.ws_token_count
@@ -42,7 +41,7 @@ object CorpusOps {
     * aggregate carry both snapshots' counts (conditional sums, not two
     * scans).
     *
-    * Scale bound (ADVICE r9): unlike the PER-DOCUMENT integer sums of
+    * Scale bound: unlike the PER-DOCUMENT integer sums of
     * eq47/eq132 (bounded by doc length × |lnratio| ≲ 2·10⁶ tokens ×
     * 15·10⁶ micros ≈ 3·10¹³ ≪ 2⁶³), this sum runs over a WHOLE
     * language's token mass — at 100 TB that is ~10¹³ tokens × up to
@@ -54,9 +53,6 @@ object CorpusOps {
     * DuckDB's checked BIGINT (test scale is ~10⁹ micro-units); only the
     * final double divide ever leaves integer arithmetic, so parity is
     * unchanged. */
-  def snapshotDrift(spark: SparkSession, dir: String): DataFrame =
-    snapshotDriftDf(Tables.load(spark, dir, "documents"))
-
   def snapshotDriftDf(docs: DataFrame): DataFrame = {
     val mid = docs.agg(
       expr("(min(doc_id) + max(doc_id)) div 2").as("mid"))
@@ -107,9 +103,6 @@ object CorpusOps {
     * un-aggregated. */
   private[graft] val SampleRatePerMille: Seq[(String, Int)] =
     Seq("de" -> 800, "en" -> 300, "es" -> 600, "fr" -> 1000, "zh" -> 500)
-
-  def stratifiedSample(spark: SparkSession, dir: String): DataFrame =
-    stratifiedSampleDf(Tables.load(spark, dir, "documents"))
 
   /** The per-document keep predicate of [[stratifiedSampleDf]] — a pure
     * function of (text, lang), shared with the streaming ingest gate
@@ -164,9 +157,6 @@ object CorpusOps {
         concat_ws(" ",
           slice(col("t"), col("chunk_id") * chunkTokens + 1, lit(chunkTokens))).as("text"))
 
-  def docChunks(spark: SparkSession, dir: String): DataFrame =
-    docChunksDf(Tables.load(spark, dir, "documents"))
-
   def docChunksDf(docs: DataFrame): DataFrame =
     chunksDf(docs).orderBy("doc_id", "chunk_id")
 
@@ -201,9 +191,6 @@ object CorpusOps {
     * and skew-free — the same shape as eq11's doc-level keep-first, one
     * level down. A doc's own internal repeats dedup too (global keep-first,
     * not per-doc). */
-  def chunkDedup(spark: SparkSession, dir: String): DataFrame =
-    chunkDedupDf(Tables.load(spark, dir, "documents"))
-
   def chunkDedupDf(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("chunk_md5").orderBy("doc_id", "chunk_id")
@@ -227,9 +214,6 @@ object CorpusOps {
     * corpus-side pass is map-side only; token counting is a map-side
     * partial aggregate bounded by vocabulary size. */
   private[graft] val VocabSize = 20
-
-  def vocabCoverage(spark: SparkSession, dir: String): DataFrame =
-    vocabCoverageDf(Tables.load(spark, dir, "documents"))
 
   def vocabCoverageDf(docs: DataFrame): DataFrame = {
     // materialized once: the vocabulary build and the coverage join both
@@ -261,9 +245,6 @@ object CorpusOps {
     * content and can be down-weighted. Both sides of the first-occurrence
     * join hash-partition on the shingle key, so the join is co-located;
     * nothing is ever doc×doc. */
-  def noveltyRate(spark: SparkSession, dir: String): DataFrame =
-    noveltyRateDf(Tables.load(spark, dir, "documents"))
-
   def noveltyRateDf(docs: DataFrame): DataFrame = {
     // materialized once: consumed by the first-occurrence aggregate and as
     // the probe side of the join
@@ -307,9 +288,6 @@ object CorpusOps {
   private[graft] val KAnonymity = 3
   private[graft] val LenBucket = 250
 
-  def kAnonymity(spark: SparkSession, dir: String): DataFrame =
-    kAnonymityDf(Tables.load(spark, dir, "documents"))
-
   def kAnonymityDf(docs: DataFrame): DataFrame =
     docs
       .groupBy(col("lang"), col("source"),
@@ -322,9 +300,6 @@ object CorpusOps {
         sum(when(col("n") < KAnonymity, 1L).otherwise(0L)).as("groups_suppressed"),
         sum(when(col("n") < KAnonymity, col("n")).otherwise(0L)).as("docs_suppressed"))
       .orderBy("lang", "source")
-
-  def weightedSample(spark: SparkSession, dir: String): DataFrame =
-    weightedSampleDf(Tables.load(spark, dir, "documents"))
 
   def weightedSampleDf(docs: DataFrame): DataFrame =
     docs
@@ -350,9 +325,6 @@ object CorpusOps {
     * the length bounds are a 5-row aggregate broadcast back; one bounded
     * groupBy ends the plan. */
   private[graft] val RepMaxDupRatio = 0.005
-
-  def curationFunnel(spark: SparkSession, dir: String): DataFrame =
-    curationFunnelDf(Tables.load(spark, dir, "documents"))
 
   def curationFunnelDf(docs: DataFrame): DataFrame = {
     val bounds = docs.groupBy("lang").agg(
@@ -388,9 +360,6 @@ object CorpusOps {
     * higher-order-function fallback. */
   private[graft] val PmiMinCount = 5
   private[graft] val PmiTopK = 20
-
-  def pmiBigrams(spark: SparkSession, dir: String): DataFrame =
-    pmiBigramsDf(Tables.load(spark, dir, "documents"))
 
   def pmiBigramsDf(docs: DataFrame): DataFrame = {
     // vocabulary-sized, consumed by the total and both join probes —
@@ -437,9 +406,6 @@ object CorpusOps {
     * The rank window runs on the 1000-row frame, not the corpus. */
   private[graft] val ZipfTopN = 1000
 
-  def zipfSlope(spark: SparkSession, dir: String): DataFrame =
-    zipfSlopeDf(Tables.load(spark, dir, "documents"))
-
   def zipfSlopeDf(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("cnt").desc, col("token").asc)
@@ -466,7 +432,7 @@ object CorpusOps {
       col("n_ranks"),
       // denX = 0 iff one rank; denY = 0 additionally when every top-N
       // count is identical (uniform corpus) — slope/r² undefined, NULL in
-      // both engines (r10 degenerate audit)
+      // both engines (pinned by the degenerate-corpus drill)
       round(Similarity.safeDiv(num.cast("double"), denX.cast("double")), 6)
         .as("slope"),
       round(Similarity.safeDiv(num.cast("double") * num.cast("double"),
@@ -480,9 +446,6 @@ object CorpusOps {
     * TakeOrderedAndProject with a deterministic (count DESC, shingle ASC)
     * tie-break. The boilerplate-detection primitive: at 100 TB these top
     * shingles are the site templates/navigation chrome you strip. */
-  def trigramTopK(spark: SparkSession, dir: String): DataFrame =
-    trigramTopKDf(Tables.load(spark, dir, "documents"))
-
   def trigramTopKDf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
@@ -494,7 +457,7 @@ object CorpusOps {
       .orderBy(col("n_occurrences").desc, col("shingle").asc)
       .limit(20)
 
-  /** x10 — Count-Min-sketched heavy hitters: the [[trigramTopK]] top-20
+  /** x10 — Count-Min-sketched heavy hitters: the [[trigramTopKDf]] top-20
     * with each shingle's frequency re-estimated from a mergeable Count-Min
     * sketch built in one distributed aggregate — the fixed-memory
     * frequency oracle a 100 TB pipeline keeps where exact per-key counts
@@ -505,9 +468,6 @@ object CorpusOps {
     * probabilistic one (estimate ≤ true + 5·ε·N, ε = 1e-4 — 5× the
     * per-probe bound, astronomically safe at depth 5). Sketch hashing is
     * seeded Murmur3, so the estimates are deterministic across runs. */
-  def cmsTopK(spark: SparkSession, dir: String): DataFrame =
-    cmsTopKDf(Tables.load(spark, dir, "documents"))
-
   def cmsTopKDf(docs: DataFrame): DataFrame = {
     // materialized once: the sketch build and the exact aggregate both
     // consume this frame — without it each job re-runs the shingling pass
@@ -542,11 +502,8 @@ object CorpusOps {
     * order-stable. */
   private val ShardBudget = 2000
 
-  def packShards(spark: SparkSession, dir: String): DataFrame =
-    packShardsDf(Tables.load(spark, dir, "documents"))
-
   def packShardsDf(docs: DataFrame): DataFrame = {
-    // the two-phase distributed prefix sum (Curation.packPrefixCum, r13):
+    // the two-phase distributed prefix sum (Curation.packPrefixCum):
     // same exact cum as the plain per-lang window, but the dominant
     // language no longer flows through ONE window task
     Curation.packPrefixCum(docs
@@ -575,9 +532,6 @@ object CorpusOps {
     * numbering but not the waste arithmetic). All integer math — counts,
     * sums, and the ppm ratio are exact, so the frame hash-checks. */
   private val PadBatch = 32
-
-  def paddingWaste(spark: SparkSession, dir: String): DataFrame =
-    paddingWasteDf(Tables.load(spark, dir, "documents"))
 
   def paddingWasteDf(docs: DataFrame): DataFrame = {
     val toks = docs.select(col("lang"), col("doc_id"),
@@ -615,9 +569,6 @@ object CorpusOps {
     * mergeable approx sketch; the exact form IS the oracle here).
     * Classification compares against the UNROUNDED bounds in both engines;
     * rounding is display-only. */
-  def lengthTrim(spark: SparkSession, dir: String): DataFrame =
-    lengthTrimDf(Tables.load(spark, dir, "documents"))
-
   def lengthTrimDf(docs: DataFrame): DataFrame = {
     val bounds = docs.groupBy("lang").agg(
       expr("percentile(n_chars, 0.05D)").as("p05"),
@@ -644,9 +595,6 @@ object CorpusOps {
     * SAME mixture; no RNG state, no driver-side shuffle of ids. One
     * shuffle (partition by source) and a rank window inside it; quotas
     * are O(1) per source, so the plan is flat at any corpus size. */
-  def corpusMix(spark: SparkSession, dir: String): DataFrame =
-    corpusMixDf(Tables.load(spark, dir, "documents"))
-
   def corpusMixDf(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source").orderBy("mix_key", "doc_id")
@@ -655,7 +603,8 @@ object CorpusOps {
       // try_cast: a source OUTSIDE the digit-suffix naming contract gets a
       // NULL weight and contributes no rows — the oracle's TRY_CAST
       // semantics; the plain cast ANSI-crashed on the first such source
-      // (r10 degenerate sweep, same class as the zero-norm cosine)
+      // (found by the degenerate-corpus drill, same class as the zero-norm
+      // cosine)
       .withColumn("weight",
         lit(1) + expr("try_cast(regexp_extract(source, '(\\\\d+)$', 1) AS int)") % 3)
       .withColumn("mix_rank", row_number().over(w))
@@ -663,6 +612,8 @@ object CorpusOps {
       .select(col("source"), col("doc_id"), col("weight"), col("mix_rank"))
       .orderBy("source", "mix_rank")
   }
+
+  private[graft] val BudgetTokens = 1000000L
 
   /** eq101 — largest-remainder apportionment of a fixed token budget
     * across sources: every pretraining mix ultimately rounds fractional
@@ -673,11 +624,6 @@ object CorpusOps {
     * no floating point anywhere, Σ alloc ≡ B by construction (asserted
     * by test). Tie-break on (remainder DESC, source ASC). One token
     * count per source, one |sources|-row window — corpus-linear. */
-  def tokenBudget(spark: SparkSession, dir: String): DataFrame =
-    tokenBudgetDf(Tables.load(spark, dir, "documents"))
-
-  private[graft] val BudgetTokens = 1000000L
-
   def tokenBudgetDf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counts = docs
@@ -719,9 +665,6 @@ object CorpusOps {
     * with eq12), the ring is one window over (lang, key), and the
     * false-negative check is an anti-join on the unordered pair key —
     * all equi-joins, no corpus² anywhere. */
-  def contrastiveTriplets(spark: SparkSession, dir: String): DataFrame =
-    contrastiveTripletsDf(Tables.load(spark, dir, "documents"))
-
   def contrastiveTripletsDf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // one pair-mining pass feeds both the positive set and the
@@ -767,9 +710,6 @@ object CorpusOps {
     * map-side filter over the corpus — linear, no wide shuffle. */
   private[graft] val TemperatureAlpha = 0.3
 
-  def temperatureMix(spark: SparkSession, dir: String): DataFrame =
-    temperatureMixDf(Tables.load(spark, dir, "documents"))
-
   def temperatureMixDf(docs: DataFrame): DataFrame = {
     val counts = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
     val total = counts.agg(sum(col("n_docs")).as("n_total"))
@@ -779,7 +719,7 @@ object CorpusOps {
           TemperatureAlpha) * 1000000.0).cast("long"))
     val wsum = w.agg(sum(col("w_micro")).as("w_sum"))
     val rates = w.crossJoin(broadcast(wsum))
-      // DECIMAL(38,0) widening (ADVICE r10): pure-LONG products here
+      // DECIMAL(38,0) widening: pure-LONG products here
       // overflow past ~1.8e7 docs (numerator) / ~1e11 (denominator);
       // IntegralDivide over decimal still returns BIGINT so rate_ppm's
       // type and the recorded hashes are unchanged (eq120/eq135 pattern).

@@ -1,14 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.functions.Md5Expressions.md5_key28
 import graft.functions.ShingleExpressions
 
-/** eq136 — the composed END-TO-END curation pipeline (VERDICT r9 task 2):
+/** eq136 — the composed END-TO-END curation pipeline:
   * the engine's operators exist as ~176 independent audits; a real
   * pretraining run chains them. This operator runs the chain in
   * production ORDER over one corpus and publishes the per-stage funnel a
@@ -73,9 +72,6 @@ object Curation {
   private[graft] val DecontamMaxRatio = 0.2
   private[graft] val ShardBudget = 2000
 
-  def curationPipeline(spark: SparkSession, dir: String): DataFrame =
-    curationPipelineDf(Tables.load(spark, dir, "documents"))
-
   /** The chain's PRODUCT, not just its accounting: the stage-7 survivor
     * corpus with each document's eq34 shard assignment attached —
     * (doc_id, lang, source, text, n_chars, n_tokens, quality, cluster,
@@ -83,14 +79,11 @@ object Curation {
     * Built by the SAME stage builder as the funnel, so the two can never
     * disagree on membership (pinned by test against the funnel's stage-7
     * and stage-8 rows). */
-  def curatedDocs(spark: SparkSession, dir: String): DataFrame =
-    curatedDocsDf(Tables.load(spark, dir, "documents"))
-
   def curatedDocsDf(docs: DataFrame): DataFrame =
     shardAssign(chainOf(docs).s7)
 
   /** The curated MEMBERSHIP (the stage-7 survivor frame) WITHOUT the
-    * shard assignment (r16 optimization): consumers that re-window from
+    * shard assignment: consumers that re-window from
     * scratch anyway — the post-retraction repack family, the log's
     * curated-retained resolution — used to call [[curatedDocsDf]] and
     * immediately drop `shard_id`, paying [[packPrefixCum]]'s eager
@@ -104,7 +97,7 @@ object Curation {
 
   /** Exclusive per-lang prefix sum of `n_tokens` in `doc_id` order — the
     * pack family's one primitive — computed as a TWO-PHASE distributed
-    * scan instead of a single per-lang window (r13). A plain
+    * scan instead of a single per-lang window. A plain
     * `Window.partitionBy("lang")` puts a language's ENTIRE corpus
     * through one task (an external sort + scan), which at production
     * scale makes the dominant language a single-task sort of most of
@@ -119,7 +112,7 @@ object Curation {
     *     — map-side combined down to a TINY frame (≤ K·|langs| rows)
     *     and collected (the one deliberate driver read, same class as
     *     the state log's manifest);
-    *  4. RE-SPLIT of oversized buckets (VERDICT r13 task 2): the bucket
+    *  4. RE-SPLIT of oversized buckets: the bucket
     *     boundaries are id-RANGE-derived, so ids clustered into one
     *     narrow band put ~everything in one bucket — the degraded shape
     *     is the very single-task window this rewrite removes. Any
@@ -147,7 +140,7 @@ object Curation {
     * whenever ids are splittable (only duplicate-id single-value
     * buckets can exceed it — and unique doc_ids make those count ≤ 1).
     * A corpus that VIOLATES the unique-doc_id contract degrades with a
-    * measured bound (r15, SkewSpec fixture 8): an over-threshold bucket
+    * measured bound (SkewSpec fixture 8): an over-threshold bucket
     * is always a single-VALUE bucket, so the max partition is the max
     * per-id multiplicity — the same floor the plain window has on that
     * input, since an id's tied rows are one indivisible partition under
@@ -156,7 +149,7 @@ object Curation {
     * The BATCH-side windows ([[appendPackCount]]/[[appendPackSummary]])
     * keep the plain shape — batch-bounded by contract. The lang key is
     * null-safe via a PAIR (`lang IS NULL`, `coalesce(lang, '')`) — no
-    * reserved sentinel value (ADVICE r13: a corpus whose lang is
+    * reserved sentinel value (a corpus whose lang is
     * literally the old NUL sentinel must stay a separate partition from
     * NULL), and a plain single-column join would silently DROP
     * null-lang rows the old window kept as their own partition. */
@@ -273,7 +266,7 @@ object Curation {
       spine: DataFrame, s2: DataFrame, s3: DataFrame, s4: DataFrame,
       s5: DataFrame, s6: DataFrame, s7: DataFrame)
 
-  /** Chain memo (ADVICE r10): a consumer that wants both the funnel
+  /** Chain memo: a consumer that wants both the funnel
     * (curationPipelineDf) and the product corpus (curatedDocsDf) must not
     * execute the 7-stage chain — three localCheckpoint materializations
     * and the memoized-artifact reads — twice. Memoized per (session,
@@ -338,8 +331,8 @@ object Curation {
 
   /** The snapshot's per-lang pack summary, memoized ON DEMAND (its own
     * PlanMemo, not a Chain field — chain consumers that never pack, like
-    * curatedDocs' write path, must not pay the summary's window pass;
-    * r11-late review finding). eq136's stage-8 count is its n_shards sum;
+    * curatedDocsDf's write path, must not pay the summary's window
+    * pass). eq136's stage-8 count is its n_shards sum;
     * eq137's append packing starts each lang at (t_tokens, last_shard) —
     * O(batch) per delta ingest instead of re-windowing the merged corpus. */
   private val packMemo = new PlanMemo[DataFrame]
@@ -348,7 +341,7 @@ object Curation {
 
   /** The per-lang pack summary of a corpus frame — (lang, n_docs,
     * t_tokens, t_chars, n_shards, last_shard). Derived from the SAME eq34
-    * prefix-sum window as curatedDocs' shard ids, so the summary can
+    * prefix-sum window as curatedDocsDf's shard ids, so the summary can
     * never disagree with the written layout. */
   private[graft] def packSummaryOf(corpus: DataFrame): DataFrame = {
     packPrefixCum(corpus
@@ -460,7 +453,7 @@ object Curation {
     * rates and apply them to an incoming delta (mixture weights are fixed
     * per release; re-derivation happens at the next full curation).
     *
-    * DECIMAL(38,0) widening (ADVICE r10, the eq120/eq135 pattern): in
+    * DECIMAL(38,0) widening (the eq120/eq135 pattern): in
     * pure LONG the numerator w_micro·(n_total/2)·10⁶ overflows past
     * ~1.8e7 docs and the denominator w_sum·ln_docs past ~1e11 — ANSI
     * ARITHMETIC_OVERFLOW at exactly the corpus sizes the pipeline
@@ -532,7 +525,7 @@ object Curation {
       .orderBy("stage_id")
   }
 
-  /** eq137 — INCREMENTAL snapshot curation (VERDICT r10 task 3):
+  /** eq137 — INCREMENTAL snapshot curation:
     * production pipelines curate *deltas*, not full corpora. The corpus
     * splits by eq104's deterministic snapshot rule — `doc_id % 10 < 8` is
     * the OLD snapshot (already curated by the eq136 chain, its derived
@@ -590,9 +583,6 @@ object Curation {
     * deployment materializes once per snapshot. This is the difference
     * between re-running eq136 on 100 TB per arriving crawl and touching
     * only the new terabyte. */
-  def incrementalCuration(spark: SparkSession, dir: String): DataFrame =
-    incrementalCurationDf(Tables.load(spark, dir, "documents"))
-
   def incrementalCurationDf(docs: DataFrame): DataFrame = {
     val isNew = col("doc_id") % 10 >= 8
     val oldDocs = docs.filter(col("doc_id") % 10 < 8)
@@ -664,7 +654,7 @@ object Curation {
       hashIdx, bandIdx, testVocab, mixRates)
 
   /** [[deltaSurvivorsFromState]] with the batch and the indexed corpus as
-    * SEPARATE frames (r16 optimization, the [[Dedup.storedNearIdsSplit]]
+    * SEPARATE frames (the [[Dedup.storedNearIdsSplit]]
     * seam): lets the state log hand the batch's own stable plan so the
     * per-batch signing/labeling memos key on the batch, not on a union
     * plan that embeds per-log table names. Row-identical to the filter
@@ -682,7 +672,7 @@ object Curation {
     * stage itself + its stat aggregate), so d1 is materialized; the
     * survivors-only path (the state drills' ingest) reads d1 exactly once
     * — through d2 — so its checkpoint there was a pure extra pass over
-    * the batch (r17 optimization, VERDICT r16 task 7). */
+    * the batch. */
   private def deltaStages(deltaDocs: DataFrame, st: FrozenState,
       needStageStats: Boolean): DeltaStages = {
     // ---- delta spine: quality + within-batch clusters + split ----------

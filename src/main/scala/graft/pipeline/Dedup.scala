@@ -24,9 +24,6 @@ object Dedup {
 
   /** E-Q1 — exact duplicate count via content hash (`sha2`): at 100 TB you
     * group on the 256-bit digest, never on the document bytes. */
-  def exactDupCount(spark: SparkSession, dir: String): DataFrame =
-    exactDupCountDf(Tables.load(spark, dir, "documents"))
-
   def exactDupCountDf(docs: DataFrame): DataFrame =
     docs
       .agg((count(lit(1)) - countDistinct(sha2(col("text"), 256))).as("dup_count"))
@@ -63,9 +60,6 @@ object Dedup {
 
   /** Exact dedup keeping the smallest doc_id per content
     * (hash-partitioned window, `row_number`). Reports survivors per source. */
-  def dedupKeepFirst(spark: SparkSession, dir: String): DataFrame =
-    dedupKeepFirstDf(Tables.load(spark, dir, "documents"))
-
   def dedupKeepFirstDf(docs: DataFrame): DataFrame =
     docs
       .withColumn("rn", row_number().over(
@@ -108,16 +102,16 @@ object Dedup {
     * plan): eq12/eq26/eq49/eq61/eq84/eq99 compose the pair table and
     * x1/x23/eq104 the signature pass over the same documents scan, and the
     * eager localCheckpoints inside each path otherwise recompute per call
-    * site (VERDICT r7 task 7 — ~10 s of the sf0.1 bench across both
-    * families). This is the production shape too: a corpus pipeline
-    * materializes its pair table and signature index once and every
-    * downstream audit reads those, not a fresh similarity join. Keyed by
-    * the canonicalized logical plan (structural equality — no
-    * hash-collision risk), so distinct corpora (e.g. eq104's union frame)
-    * never share. Fixtures are immutable per session; a mutated-in-place
-    * source dir would need an explicit [[clearDerivedCaches]]. */
+    * site (~10 s of the sf0.1 bench across both families). This is the
+    * production shape too: a corpus pipeline materializes its pair table
+    * and signature index once and every downstream audit reads those, not
+    * a fresh similarity join. Keyed by the canonicalized logical plan
+    * (structural equality — no hash-collision risk), so distinct corpora
+    * (e.g. eq104's union frame) never share. Fixtures are immutable per
+    * session; a mutated-in-place source dir would need an explicit
+    * [[clearDerivedCaches]]. */
   // The memo class itself lives in pipeline/PlanMemo.scala (shared with
-  // TextAnalysis's learned-vocabulary cache since r9); instances
+  // TextAnalysis's learned-vocabulary cache); instances
   // self-register for the context-stop eviction listener.
   private val pairTableCache = new PlanMemo[DataFrame]
   private val signaturePartsCache = new PlanMemo[(DataFrame, DataFrame, DataFrame)]
@@ -135,7 +129,7 @@ object Dedup {
 
   def jaccardPairsDf(docs: DataFrame): DataFrame =
     // the checkpoint makes the memo a MATERIALIZATION, not a shared lazy
-    // plan (r16 optimization): without it every consumer re-ran the
+    // plan: without it every consumer re-ran the
     // prefix path's verify join — computeNeardupLabels' symmetric edge
     // union paid it twice per labeling — which is exactly the re-mining
     // the memo exists to prevent (signatureParts/minhashParts already
@@ -195,12 +189,12 @@ object Dedup {
   def jaccardPairsPrefixDf(docs: DataFrame): DataFrame =
     jaccardPairsPrefixUnsortedDf(docs).orderBy("doc_a", "doc_b")
 
-  /** The prefix path WITHOUT the terminal presentation sort (r16
-    * optimization): the sort's range partitioning SAMPLES its input, so
-    * sorting before the memo's checkpoint ran the verify join twice per
-    * materialization — and every non-terminal consumer (labels, overlap
-    * roll-ups, estimate joins) re-aggregates anyway, where Catalyst's
-    * EliminateSorts drops the order. The memo stores this unsorted
+  /** The prefix path WITHOUT the terminal presentation sort: the sort's
+    * range partitioning SAMPLES its input, so sorting before the memo's
+    * checkpoint ran the verify join twice per materialization — and
+    * every non-terminal consumer (labels, overlap roll-ups, estimate
+    * joins) re-aggregates anyway, where Catalyst's EliminateSorts drops
+    * the order. The memo stores this unsorted
     * materialization; [[jaccardPairsPrefixDf]] (and with it eq12's
     * declared frame) layers the canonical order on top — same multiset,
     * same hash (the driver/golden compare is row-order-insensitive by
@@ -260,9 +254,6 @@ object Dedup {
     * unordered (least/greatest) so the matrix is triangular. Adds two
     * id-keyed broadcast joins on a ≤|pairs|-row frame — the corpus-scaled
     * work is eq12's, unchanged. */
-  def sourceOverlap(spark: SparkSession, dir: String): DataFrame =
-    sourceOverlapDf(Tables.load(spark, dir, "documents"))
-
   def sourceOverlapDf(docs: DataFrame): DataFrame = {
     val src = docs.select(col("doc_id"), col("source"))
     // the pairs side is the small one (qualifying near-dup pairs, not the
@@ -292,9 +283,6 @@ object Dedup {
     * lang, no global sort; pair membership is a distinct projection of the
     * memoized pair table, so the mining cost is shared, not re-paid.
     * Integer output (counts + ppm), hash-exact. */
-  def qualityDupProfile(spark: SparkSession, dir: String): DataFrame =
-    qualityDupProfileDf(Tables.load(spark, dir, "documents"))
-
   def qualityDupProfileDf(docs: DataFrame): DataFrame = {
     val pairs = jaccardPairsDf(docs)
     val members = pairs.select(col("doc_a").as("doc_id"))
@@ -323,9 +311,6 @@ object Dedup {
     * production excerpt-mining runs the same plan at ~0.8. */
   private[graft] val ContainmentThreshold = 0.15
 
-  def containmentPairs(spark: SparkSession, dir: String): DataFrame =
-    containmentPairsDf(Tables.load(spark, dir, "documents"))
-
   def containmentPairsDf(docs: DataFrame): DataFrame = {
     // both sides of the inverted-index self-join derive from the one
     // memoized shingle-set checkpoint ([[shingleSets]])
@@ -336,11 +321,10 @@ object Dedup {
     // mine each UNORDERED pair once (half the aggregation input/state of a
     // doc_a ≠ doc_b formulation), then emit the two directions from the
     // tiny aggregated frame — materialized once PER (session, docs plan)
-    // (r17, VERDICT r16 task 4): the checkpoint used to be per-CALL, so
-    // every execution re-ran the inverted self-join + aggregate; now the
-    // containment pair table is the same session-scoped derived artifact
-    // as the eq12 Jaccard pair table — mined once per corpus snapshot,
-    // read by every consumer
+    // (a per-CALL checkpoint would re-run the inverted self-join +
+    // aggregate on every execution): the containment pair table is the
+    // same session-scoped derived artifact as the eq12 Jaccard pair
+    // table — mined once per corpus snapshot, read by every consumer
     val pairs = containPairsCache(docs)(a.join(b, Seq("sg"))
       .filter(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b")
@@ -376,20 +360,6 @@ object Dedup {
     Seq.fill(n)((rng.nextInt(Int.MaxValue - 1) + 1L, rng.nextInt(Int.MaxValue).toLong))
   }
 
-  /** MinHash + LSH near-dup pairs: per-shingle 28-bit keys (md5 prefix) run
-    * through 64 affine permutations mod 2³¹−1 → minhash signature; 16 bands
-    * × 4 rows → band keys; candidates are pairs sharing a band key;
-    * candidates verified with EXACT Jaccard ≥ 0.2 so false positives cost
-    * only the verify join. At 16 bands × 4 rows the miss probability for
-    * sim ≥ 0.5 pairs is ≤ (1-0.5⁴)¹⁶ ≈ 0.36 — the knob to turn for recall;
-    * the exact [[jaccardPairs]] is the exhaustive variant.
-    *
-    * Every step (md5, hex parse, affine mod, min, band concat, bucket
-    * guard, verify) is reproduced verbatim by the DuckDB oracle — the full
-    * approximate pipeline is hash-compared end-to-end, like eq13's. */
-  def minhashLshPairs(spark: SparkSession, dir: String): DataFrame =
-    minhashLshPairsDf(Tables.load(spark, dir, "documents"))
-
   /** Band buckets larger than this are dropped before pairing: on a skewed
     * corpus a degenerate common signature (tiny vocabularies, boilerplate)
     * would otherwise explode one bucket into O(bucket²) candidates — the
@@ -401,6 +371,17 @@ object Dedup {
     * state advance recounts only the TOUCHED buckets against it). */
   private[graft] def maxBucket: Int = MaxBucket
 
+  /** MinHash + LSH near-dup pairs: per-shingle 28-bit keys (md5 prefix) run
+    * through 64 affine permutations mod 2³¹−1 → minhash signature; 16 bands
+    * × 4 rows → band keys; candidates are pairs sharing a band key;
+    * candidates verified with EXACT Jaccard ≥ 0.2 so false positives cost
+    * only the verify join. At 16 bands × 4 rows the miss probability for
+    * sim ≥ 0.5 pairs is ≤ (1-0.5⁴)¹⁶ ≈ 0.36 — the knob to turn for recall;
+    * the exact [[jaccardPairs]] is the exhaustive variant.
+    *
+    * Every step (md5, hex parse, affine mod, min, band concat, bucket
+    * guard, verify) is reproduced verbatim by the DuckDB oracle — the full
+    * approximate pipeline is hash-compared end-to-end, like eq13's. */
   def minhashLshPairsDf(docs: DataFrame): DataFrame =
     minhashParts(docs)._2
 
@@ -510,9 +491,6 @@ object Dedup {
     * finding); a production tuning sweep runs on a corpus sample. */
   private val SweepRowsPerBand = Seq(1, 2, 4, 8, 16)
 
-  def minhashBandSweep(spark: SparkSession, dir: String): DataFrame =
-    minhashBandSweepDf(Tables.load(spark, dir, "documents"))
-
   def minhashBandSweepDf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val (_, sig, _) = signatureParts(docs)
@@ -567,34 +545,12 @@ object Dedup {
     * a near-COPY of something already indexed", not "is it related". */
   private val IncrementalNearThreshold = 0.5
 
-  /** eq104 — incremental cross-snapshot dedup: classify every document of
-    * an incoming batch against an existing corpus as `exact` (content-hash
-    * match), `near` (MinHash band collision with an indexed doc, verified
-    * by exact Jaccard ≥ 0.5), or `novel` — WITHOUT ever pairing the old
-    * corpus against itself. This is the pattern that keeps 100 TB crawls
-    * tractable: the corpus-side signatures/band keys are a precomputed
-    * index you probe with the (much smaller) batch, so per-ingest cost is
-    * O(batch × bucket), not O(corpus²) — re-running whole-corpus dedup
-    * (eq12/eq26) per ingest would be.
-    *
-    * The snapshot split is deterministic — `doc_id % 10 ∈ {8,9}` is the
-    * incoming batch (~20%), the rest is the indexed corpus — so the
-    * DuckDB oracle reconstructs the full pipeline verbatim (same affine
-    * permutations, band keys, bucket guard, verify join; the x1
-    * convention). The bucket guard (≤ [[MaxBucket]]) is applied on the
-    * INDEX side only: a degenerate boilerplate bucket in the corpus is
-    * dropped, mirroring the stop-bucket list a production index ships
-    * with. Exact beats near when both fire. One row per (lang, verdict);
-    * output is O(langs), invariant to corpus size. */
-  def incrementalDedup(spark: SparkSession, dir: String): DataFrame =
-    incrementalDedupDf(Tables.load(spark, dir, "documents"))
-
   /** The bucket-guarded CORPUS-side band index, memoized per (corpus,
     * split) as a checkpointed artifact. In production this IS the stored
     * index: band keys of every indexed doc with the stop-buckets (>
     * [[MaxBucket]]) already dropped at index-BUILD time — so probes read
-    * it, they never recompute the guard aggregate. Before r11 every probe
-    * re-shuffled the corpus for the guard + the band join; the ScaleBench
+    * it, they never recompute the guard aggregate. When every probe
+    * re-shuffled the corpus for the guard + the band join, the ScaleBench
     * incremental phase measured the per-batch probe shuffle growing
     * 3.6 → 73 MB over a 1×→10× corpus with a FIXED batch. With the index
     * memoized and the batch side broadcast, the probe's shuffle mass is
@@ -687,6 +643,25 @@ object Dedup {
           .otherwise(lit("novel")))
       .drop("is_exact", "is_near")
 
+  /** eq104 — incremental cross-snapshot dedup: classify every document of
+    * an incoming batch against an existing corpus as `exact` (content-hash
+    * match), `near` (MinHash band collision with an indexed doc, verified
+    * by exact Jaccard ≥ 0.5), or `novel` — WITHOUT ever pairing the old
+    * corpus against itself. This is the pattern that keeps 100 TB crawls
+    * tractable: the corpus-side signatures/band keys are a precomputed
+    * index you probe with the (much smaller) batch, so per-ingest cost is
+    * O(batch × bucket), not O(corpus²) — re-running whole-corpus dedup
+    * (eq12/eq26) per ingest would be.
+    *
+    * The snapshot split is deterministic — `doc_id % 10 ∈ {8,9}` is the
+    * incoming batch (~20%), the rest is the indexed corpus — so the
+    * DuckDB oracle reconstructs the full pipeline verbatim (same affine
+    * permutations, band keys, bucket guard, verify join; the x1
+    * convention). The bucket guard (≤ [[MaxBucket]]) is applied on the
+    * INDEX side only: a degenerate boilerplate bucket in the corpus is
+    * dropped, mirroring the stop-bucket list a production index ships
+    * with. Exact beats near when both fire. One row per (lang, verdict);
+    * output is O(langs), invariant to corpus size. */
   def incrementalDedupDf(docs: DataFrame): DataFrame = {
     val isNew = col("doc_id") % 10 >= 8
     val newDocs = docs.filter(isNew).select(col("doc_id"), col("lang"), md5(col("text")).as("h"))
@@ -778,7 +753,7 @@ object Dedup {
     storedNearIdsSplit(docs.filter(isNew), docs.filter(!isNew), bandIdx)
 
   /** [[storedNearIds]] with the two corpus sides supplied as SEPARATE
-    * frames (r16 optimization): the self-contained state-log ingest used
+    * frames: the self-contained state-log ingest used
     * to pass `(corpus-resolution ∪ batch).filter(is_new)` as the batch
     * side, whose canonicalized plan embeds the per-log generation TABLE
     * NAMES — so the batch signing (the memoized [[signatureParts]] pass)
@@ -825,9 +800,6 @@ object Dedup {
     * full approximate pipeline is hash-compared end-to-end; 16-bit chunk
     * values also keep every intermediate inside overflow-checked BIGINT
     * math on the oracle side. */
-  def simhashPairs(spark: SparkSession, dir: String): DataFrame =
-    simhashPairsDf(Tables.load(spark, dir, "documents"))
-
   def simhashPairsDf(docs: DataFrame): DataFrame = {
     // 64 bits per token from the md5 digest bytes in one native eval
     // (≡ per-hex-digit conv(substring(md5)) as the oracle derives them —
@@ -894,9 +866,6 @@ object Dedup {
     * vs the brute-force exact pairs is pinned by test (100% on the test
     * corpora — misses need ≥ 2 flipped bits in EVERY band). Dot products
     * fold left-to-right in double, matching the oracle's unnest-order sum. */
-  def embeddingNearDups(spark: SparkSession, dir: String): DataFrame =
-    embeddingNearDupsDf(Tables.load(spark, dir, "embeddings"))
-
   def embeddingNearDupsDf(e: DataFrame): DataFrame =
     embeddingNearDupsAt(e, 0.5)
 
@@ -979,9 +948,6 @@ object Dedup {
     * Output: one row per cluster — survivor (min doc_id), size, and the
     * sorted member list — so the DuckDB oracle (a recursive-CTE
     * reachability closure + min label) hash-compares the full clustering. */
-  def neardupClusters(spark: SparkSession, dir: String): DataFrame =
-    neardupClustersDf(Tables.load(spark, dir, "documents"))
-
   def neardupClustersDf(docs: DataFrame): DataFrame =
     neardupLabelsDf(docs)
       .groupBy(col("label").as("cluster_id"))
@@ -1034,7 +1000,7 @@ object Dedup {
           col("label").as("old")))
         .groupBy("doc_id")
         .agg(min(col("label")).as("label"), max(col("old")).as("old"))
-      // PATH-HALVING hop (r16 optimization): follow each vertex's label
+      // PATH-HALVING hop: follow each vertex's label
       // one more step — label := label's OWN current label. Every label
       // value IS a vertex id of the same graph (labels start as vertex
       // ids and min() only selects among them), and min-propagation is
@@ -1052,8 +1018,6 @@ object Dedup {
       converged = jumped.filter(col("label") < col("old")).isEmpty
       labels = jumped.drop("old")
       rounds += 1
-      if (sys.env.contains("GRAFT_PROBE_CC"))
-        System.err.println(s"[cc] round $rounds converged=$converged at ${System.nanoTime()}")
     }
     require(converged,
       s"near-dup cluster labeling did not converge in $rounds rounds " +
@@ -1068,9 +1032,6 @@ object Dedup {
     * shared labeling and quality pipelines, so it can never disagree
     * with eq26's clusters or eq8's scores; one rank window partitioned
     * by cluster label on top of them. */
-  def clusterReps(spark: SparkSession, dir: String): DataFrame =
-    clusterRepsDf(Tables.load(spark, dir, "documents"))
-
   def clusterRepsDf(docs: DataFrame): DataFrame = {
     val labeled = neardupLabelsDf(docs)
       .join(TextAnalysis.qualityCols(docs).select(col("doc_id"), col("quality")),
@@ -1100,9 +1061,6 @@ object Dedup {
     * node; lineage is cut per iteration, the edge frame is materialized
     * once. Top-20 by (rank DESC, doc_id ASC). */
   private val PagerankIters = 5
-
-  def pairGraphPagerank(spark: SparkSession, dir: String): DataFrame =
-    pairGraphPagerankDf(Tables.load(spark, dir, "documents"))
 
   def pairGraphPagerankDf(docs: DataFrame): DataFrame = {
     val pairs = jaccardPairsDf(docs).select(col("doc_a"), col("doc_b"))
@@ -1146,9 +1104,6 @@ object Dedup {
     * groupBy with three distinct aggregates (Spark plans one Expand ×3 —
     * one shuffle, not three); all keys are md5 digests so no reducer ever
     * holds full texts. */
-  def normalizedDups(spark: SparkSession, dir: String): DataFrame =
-    normalizedDupsDf(Tables.load(spark, dir, "documents"))
-
   def normalizedDupsDf(docs: DataFrame): DataFrame = {
     val toks = TextAnalysis.tokens(col("text"))
     docs
@@ -1193,9 +1148,6 @@ object Dedup {
     * kept at ≥ 0.5. One shuffle on the block key; the rank window and
     * the rank-distance self-join stay inside that partitioning, so no
     * global sort and no cartesian anywhere in the plan. */
-  def sortedNeighborhood(spark: SparkSession, dir: String): DataFrame =
-    sortedNeighborhoodDf(Tables.load(spark, dir, "documents"))
-
   def sortedNeighborhoodDf(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
@@ -1233,9 +1185,6 @@ object Dedup {
     * with every 100th doc's text rewritten) so the oracle can rebuild
     * them; the operator itself is the join + classification. One shuffle
     * on doc_id; per-class tallies are a bounded aggregate. */
-  def snapshotDiff(spark: SparkSession, dir: String): DataFrame =
-    snapshotDiffDf(Tables.load(spark, dir, "documents"))
-
   def snapshotDiffDf(docs: DataFrame): DataFrame = {
     val old = docs.filter(col("doc_id") < 450)
       .select(col("doc_id"), sha2(col("text"), 256).as("h_old"))
@@ -1263,9 +1212,6 @@ object Dedup {
     * same O(N·w) blocking plan as eq66 — no global sort, no cartesian;
     * Spark and DuckDB both implement unit-cost Wagner–Fischer, which is
     * what makes the distance hash-checkable. */
-  def editLinkage(spark: SparkSession, dir: String): DataFrame =
-    editLinkageDf(Tables.load(spark, dir, "documents"))
-
   def editLinkageDf(docs: DataFrame): DataFrame = {
     val keyed = docs
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
@@ -1286,6 +1232,10 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
+  private val CoreMinDegree = 3
+
+  private[pipeline] val CoreThreshold = 0.4
+
   /** eq95 — density cores over the embedding near-dup graph: per vector,
     * its neighbor DEGREE among SRP-LSH banded candidates verified at exact
     * cosine ≥ 0.4 and a DBSCAN-style core flag (degree ≥ 3). The bar sits
@@ -1299,13 +1249,6 @@ object Dedup {
     * entirely on [[embeddingNearDupsDf]]'s banded output: one union of
     * the two pair sides, one degree roll-up, one left join back to the
     * corpus spine — adds nothing corpus-quadratic. */
-  def densityCores(spark: SparkSession, dir: String): DataFrame =
-    densityCoresDf(Tables.load(spark, dir, "embeddings"))
-
-  private val CoreMinDegree = 3
-
-  private[pipeline] val CoreThreshold = 0.4
-
   def densityCoresDf(e: DataFrame): DataFrame = {
     val pairs = embeddingNearDupsAt(e, CoreThreshold).select(col("vec_a"), col("vec_b"))
     val deg = pairs.select(col("vec_a").as("vec_id"))
@@ -1327,9 +1270,6 @@ object Dedup {
     * canonical vertex-ordered edge join (a<b<c: e1(a,b) ⋈ e2(b,c) ⋈
     * e3(a,c)) — fan-out bounded by Σ deg² of the PAIR graph, never
     * corpus-sized. Wedges are Σ C(deg, 2) from the degree roll-up. */
-  def graphClustering(spark: SparkSession, dir: String): DataFrame =
-    graphClusteringDf(Tables.load(spark, dir, "embeddings"))
-
   def graphClusteringDf(e: DataFrame): DataFrame = {
     // edges are vec_a < vec_b by construction; materialized once — the
     // degree roll-up and all three triangle-join sides consume it
@@ -1369,9 +1309,6 @@ object Dedup {
     * is pinned by test, not by oracle flag. Adds two id-keyed joins of
     * the pair frame against the signature frame — pair-scaled, not
     * corpus-scaled. */
-  def minhashEstError(spark: SparkSession, dir: String): DataFrame =
-    minhashEstErrorDf(Tables.load(spark, dir, "documents"))
-
   def minhashEstErrorDf(docs: DataFrame): DataFrame = {
     val (sig, pairs) = minhashParts(docs)
     val agree = (0 until NumHashes)
@@ -1389,6 +1326,11 @@ object Dedup {
         col("jaccard_est"), col("n_agree"), col("abs_err"))
       .orderBy("doc_a", "doc_b")
   }
+
+  /** The 80/10/10 bucket→split rule shared by eq131 and the eq136 composed
+    * pipeline (so the two can never disagree on a cluster's split). */
+  private[graft] def splitOfBucket(b: org.apache.spark.sql.Column) =
+    when(b < 80, "train").when(b < 90, "val").otherwise("test")
 
   /** eq131 — cluster-atomic leakage-safe corpus split (the step a dedup
     * pipeline runs AFTER clustering: Lee et al.'s motivation for dedup is
@@ -1414,14 +1356,6 @@ object Dedup {
     * left join (labels are pair-graph-sized, ≪ corpus), two md5 keys per
     * doc, a 6-group aggregate, and a pair-keyed join onto the (doc,
     * split) frame — shuffle-on-doc_id, never corpus². */
-  def clusterSplit(spark: SparkSession, dir: String): DataFrame =
-    clusterSplitDf(Tables.load(spark, dir, "documents"))
-
-  /** The 80/10/10 bucket→split rule shared by eq131 and the eq136 composed
-    * pipeline (so the two can never disagree on a cluster's split). */
-  private[graft] def splitOfBucket(b: org.apache.spark.sql.Column) =
-    when(b < 80, "train").when(b < 90, "val").otherwise("test")
-
   def clusterSplitDf(docs: DataFrame): DataFrame = {
     import graft.functions.Md5Expressions.md5_key28
     val labels = neardupLabelsDf(docs).withColumnRenamed("label", "label_")
@@ -1469,10 +1403,6 @@ object Dedup {
     * agree" check run before trusting either alone at 100 TB. Composes
     * the two existing pipelines unchanged; adds one pair-keyed join and
     * three 1-row aggregates. */
-  def modalityAgreement(spark: SparkSession, dir: String): DataFrame =
-    modalityAgreementDf(
-      Tables.load(spark, dir, "documents"), Tables.load(spark, dir, "embeddings"))
-
   def modalityAgreementDf(docs: DataFrame, emb: DataFrame): DataFrame = {
     val tp = jaccardPairsDf(docs).select(col("doc_a"), col("doc_b"))
     val ep = embeddingNearDupsDf(emb)

@@ -1,10 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.Tables
 
 /** Event-stream analytics over the `events` table (SURVEY.md §2.8 E5, batch
   * form — the streaming form with watermarks lives in
@@ -20,9 +18,6 @@ object EventOps {
   /** Tumbling 1-hour windows per event type: the canonical
     * `groupBy(window(...))` aggregation. Window start rendered ISO for
     * oracle parity (DuckDB `time_bucket`). */
-  def hourly(spark: SparkSession, dir: String): DataFrame =
-    hourlyDf(Tables.load(spark, dir, "events"))
-
   def hourlyDf(events: DataFrame): DataFrame =
     events
       .groupBy(
@@ -42,9 +37,6 @@ object EventOps {
     * the shuffle, so the wire carries one row per (window, type, user)
     * instead of the full ×4 window expansion, and no distinct-rewrite
     * Expand appears in the plan. Bit-identical output (both are exact). */
-  def sliding(spark: SparkSession, dir: String): DataFrame =
-    slidingDf(Tables.load(spark, dir, "events"))
-
   def slidingDf(events: DataFrame): DataFrame =
     events
       .select(
@@ -81,30 +73,24 @@ object EventOps {
         round(sum(col("pc")).cast("double") / 100.0, 6).as("total_value"))
       .orderBy("event_type")
 
-  def saltedEventTotals(spark: SparkSession, dir: String): DataFrame =
-    saltedEventTotalsDf(Tables.load(spark, dir, "events"))
-
   /** Sessionization with a 30-minute inactivity gap, the batch analogue of
     * `session_window`: lag → session-start flags → running session ids →
     * per-session sizes → per-user stats. Both running windows use the
     * default RANGE frame so timestamp ties get identical values in Spark
     * and DuckDB. One shuffle on user_id; sessions never leave their
     * partition. */
-  def sessionize(spark: SparkSession, dir: String): DataFrame =
-    sessionizeDf(Tables.load(spark, dir, "events"))
-
   def sessionizeDf(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy("user_id").orderBy("ts")
     val gapUs = 30L * 60 * 1000000
     val sessions = events
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       // STRICTLY > gap splits: Spark's session_window MERGES an event at
-      // exactly last+gap (measured on the r10 boundary drill — four
-      // events spaced exactly 30 min formed ONE 4-event session), so the
-      // batch analogue, both streaming sessionizers, and the oracles all
-      // use the same inclusive-merge rule; the pre-r10 `>=` split
-      // disagreed with session_window on exact-boundary events (which no
-      // driver fixture contained)
+      // exactly last+gap (measured on the boundary drill — four events
+      // spaced exactly 30 min formed ONE 4-event session), so the batch
+      // analogue, both streaming sessionizers, and the oracles all use
+      // the same inclusive-merge rule; a `>=` split disagrees with
+      // session_window on exact-boundary events (which no driver fixture
+      // contains)
       .withColumn("new_session",
         when(col("prev_ts").isNull ||
           unix_micros(col("ts")) - unix_micros(col("prev_ts")) > gapUs, 1)
@@ -133,9 +119,6 @@ object EventOps {
     * rounding discipline; at extreme corpus scale the products move to
     * decimal(38,0) — the eq120 pattern). Two shuffles: (type, minute)
     * pre-agg collapses map-side, then 5 type rows. */
-  def burstiness(spark: SparkSession, dir: String): DataFrame =
-    burstinessDf(Tables.load(spark, dir, "events"))
-
   def burstinessDf(events: DataFrame): DataFrame =
     events
       .select(col("event_type"), expr("unix_micros(ts) div 60000000").as("minute"))
@@ -165,9 +148,6 @@ object EventOps {
     * every aggregate — is deterministic. One shuffle on user_id; the lag
     * window and the aggregation share that partitioning, so the window
     * output aggregates without a second exchange. */
-  def interEventGaps(spark: SparkSession, dir: String): DataFrame =
-    interEventGapsDf(Tables.load(spark, dir, "events"))
-
   def interEventGapsDf(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     events
@@ -198,9 +178,6 @@ object EventOps {
     * hash partitioning; AQE coalesces), then one bounded aggregate over
     * ≤ cohorts×weeks cells. The per-user first-week is a window min, not a
     * driver lookup, so the shape holds at any user count. */
-  def retentionCohorts(spark: SparkSession, dir: String): DataFrame =
-    retentionCohortsDf(Tables.load(spark, dir, "events"))
-
   def retentionCohortsDf(events: DataFrame): DataFrame = {
     val weeks = events
       .select(col("user_id"), date_trunc("week", col("ts")).cast("date").as("week"))
@@ -225,9 +202,6 @@ object EventOps {
     * shuffle of the events table plus per-partition work. The single
     * output row is assembled from three one-row aggregates (broadcast-able
     * by construction). */
-  def eventFunnel(spark: SparkSession, dir: String): DataFrame =
-    eventFunnelDf(Tables.load(spark, dir, "events"))
-
   def eventFunnelDf(events: DataFrame): DataFrame = {
     val viewed = events.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min(col("ts")).as("t_view"))
@@ -254,9 +228,6 @@ object EventOps {
     * low-cardinality but the countDistinct expands per user first
     * (Spark's Expand), so no reducer sees more than a day's users. Days
     * past the observed horizon are clipped with a broadcast 1-row max. */
-  def rollingActives(spark: SparkSession, dir: String): DataFrame =
-    rollingActivesDf(Tables.load(spark, dir, "events"))
-
   def rollingActivesDf(events: DataFrame): DataFrame = {
     val userDays = events
       .select(col("user_id"), to_date(col("ts")).as("day"))
@@ -283,9 +254,6 @@ object EventOps {
     * version deterministically. Both windows partition on user_id — one
     * shuffle, two in-partition sorts; at 100 TB each user's history
     * builds inside its partition and nothing is driver-side. */
-  def scd2Tiers(spark: SparkSession, dir: String): DataFrame =
-    scd2TiersDf(Tables.load(spark, dir, "events"))
-
   def scd2TiersDf(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -315,9 +283,6 @@ object EventOps {
     * row_number and the per-key change count ride one user_id window
     * partitioning: one shuffle, no join, works key-parallel at any
     * scale. */
-  def cdcCompact(spark: SparkSession, dir: String): DataFrame =
-    cdcCompactDf(Tables.load(spark, dir, "events"))
-
   def cdcCompactDf(events: DataFrame): DataFrame = {
     val byUser = Window.partitionBy("user_id")
     val latest = byUser.orderBy(col("ts").desc, col("event_id").desc)
@@ -343,9 +308,6 @@ object EventOps {
     * renders nats at 6 dp. One groupBy(key) shuffle; the top-10 is a
     * TakeOrderedAndProject over the ≤|keys| aggregate, and the three
     * 1-row summaries combine by broadcast. */
-  def keySkewStats(spark: SparkSession, dir: String): DataFrame =
-    keySkewStatsDf(Tables.load(spark, dir, "events"))
-
   def keySkewStatsDf(events: DataFrame): DataFrame = {
     val cnts = events.groupBy("user_id").agg(count(lit(1)).as("cnt"))
     val total = events.agg(count(lit(1)).as("total"))
@@ -382,9 +344,6 @@ object EventOps {
     * order-free — one final /1e6 division renders the score. The horizon
     * (max day) is a broadcast 1-row aggregate; the per-user aggregation
     * is the only shuffle. */
-  def decayScores(spark: SparkSession, dir: String): DataFrame =
-    decayScoresDf(Tables.load(spark, dir, "events"))
-
   def decayScoresDf(events: DataFrame): DataFrame = {
     val horizon = events.agg(to_date(max(col("ts"))).as("max_day"))
     events
@@ -407,9 +366,6 @@ object EventOps {
     * the window is one shuffle on user_id, the trigram rows stream out of
     * it, and the global count + top-20 is a TakeOrderedAndProject over a
     * ≤|types|³ aggregate. */
-  def sessionPaths(spark: SparkSession, dir: String): DataFrame =
-    sessionPathsDf(Tables.load(spark, dir, "events"))
-
   def sessionPathsDf(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     events
@@ -430,21 +386,18 @@ object EventOps {
     * single row into per-column rows; doubles render via %.6f (exact for
     * the 2-dp fixture values), timestamps via the micro format, so the
     * strings are engine-independent. */
-  def profileColumns(spark: SparkSession, dir: String): DataFrame =
-    profileColumnsDf(Tables.load(spark, dir, "events"))
-
   def profileColumnsDf(events: DataFrame): DataFrame = {
     val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     def nulls(c: String) = sum(col(c).isNull.cast("long")).as(s"${c}_nulls")
-    // STRING min/max live in their OWN keyless aggregate (r16
-    // optimization): a string-buffered min/max is not hash-aggregable, so
-    // keeping them in the multi-distinct aggregate forced the WHOLE thing
-    // — including the 7× Expand the six distincts produce — through
-    // SortAggregate with a full sort of the expanded corpus. Split out,
-    // the Expand aggregate goes hash-based (primitive buffers only) and
-    // the string pass is one keyless SortAggregate with no sort (global
-    // aggregation has no ordering requirement). Same values, same schema:
-    // the two 1-row frames recombine by broadcast cross join.
+    // STRING min/max live in their OWN keyless aggregate: a
+    // string-buffered min/max is not hash-aggregable, so keeping them in
+    // the multi-distinct aggregate forced the WHOLE thing — including the
+    // 7× Expand the six distincts produce — through SortAggregate with a
+    // full sort of the expanded corpus. Split out, the Expand aggregate
+    // goes hash-based (primitive buffers only) and the string pass is one
+    // keyless SortAggregate with no sort (global aggregation has no
+    // ordering requirement). Same values, same schema: the two 1-row
+    // frames recombine by broadcast cross join.
     val aggStr = events.agg(
       min(col("event_type")).as("event_type_min"),
       max(col("event_type")).as("event_type_max"),
@@ -485,9 +438,6 @@ object EventOps {
     * ≤|types|² aggregate; every number is an integer ratio of two exact
     * counts, so the matrix is engine-independent. One shuffle on user_id
     * (the window), one on the bigram key. */
-  def transitionMatrix(spark: SparkSession, dir: String): DataFrame =
-    transitionMatrixDf(Tables.load(spark, dir, "events"))
-
   def transitionMatrixDf(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     events
@@ -512,9 +462,6 @@ object EventOps {
     * history is guarded (σ² ≤ 0 ⇒ unscored) so FP cancellation can't
     * produce NaNs. One shuffle on user_id; the gap lag, the rolling
     * frame, and the final per-user rollup all share it. */
-  def gapAnomalies(spark: SparkSession, dir: String): DataFrame =
-    gapAnomaliesDf(Tables.load(spark, dir, "events"))
-
   def gapAnomaliesDf(events: DataFrame): DataFrame = {
     val order = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val trail = order.rowsBetween(-10, -1)
@@ -557,9 +504,6 @@ object EventOps {
     * TakeOrderedAndProject. */
   private[graft] val CoPurchaseBasketCap = 256
 
-  def coPurchases(spark: SparkSession, dir: String): DataFrame =
-    coPurchasesDf(Tables.load(spark, dir, "events"))
-
   def coPurchasesDf(events: DataFrame): DataFrame = {
     val items = basketItemsDf(events)
     val a = items.select(col("user_id"), col("item").as("item_a"))
@@ -574,14 +518,14 @@ object EventOps {
 
   /** The capped per-user basket item set shared by eq82 and eq102:
     * distinct (user, item) purchases, each user's basket bounded to the
-    * [[CoPurchaseBasketCap]] most recent items (the r7 skew cap). */
+    * [[CoPurchaseBasketCap]] most recent items (the skew cap). */
   private def basketItemsDf(events: DataFrame): DataFrame = {
     val byRecency = Window.partitionBy("user_id")
       .orderBy(col("last_ts").desc, col("item").asc)
     events
       .filter(col("event_type") === "purchase")
       .select(col("user_id"),
-        // try_cast, not cast: malformed props must not kill the job (r10)
+        // try_cast, not cast: malformed props must not kill the job
         expr("try_cast(get_json_object(props, '$.k') AS bigint)").as("item"),
         col("ts"))
       .filter(col("item").isNotNull)
@@ -601,9 +545,6 @@ object EventOps {
     * products per surviving pair, rounded BEFORE the top-20 cut. Adds
     * two item-keyed marginal joins and a 1-row total broadcast to eq82's
     * bounded pair fan-out. */
-  def pairLift(spark: SparkSession, dir: String): DataFrame =
-    pairLiftDf(Tables.load(spark, dir, "events"))
-
   def pairLiftDf(events: DataFrame): DataFrame = {
     // materialized once: marginals, total and both pair sides consume it
     val items = basketItemsDf(events).localCheckpoint()
@@ -636,9 +577,6 @@ object EventOps {
     * counts (168 cells regardless of scale). `dayofweek` is rendered as
     * the ISO day name so the contract doesn't depend on engine weekday
     * numbering conventions. */
-  def activityProfile(spark: SparkSession, dir: String): DataFrame =
-    activityProfileDf(Tables.load(spark, dir, "events"))
-
   def activityProfileDf(events: DataFrame): DataFrame = {
     val total = events.agg(count(lit(1)).as("total"))
     events
@@ -664,9 +602,6 @@ object EventOps {
     * bit-reproducible: the oracle recomputes BOTH numbers exactly, and
     * the ±50% flag is derived, not pinned. One shuffle (the per-key
     * count); the sample filter is map-side on the ≤|keys| frame. */
-  def joinSizeEstimate(spark: SparkSession, dir: String): DataFrame =
-    joinSizeEstimateDf(Tables.load(spark, dir, "events"))
-
   def joinSizeEstimateDf(events: DataFrame): DataFrame = {
     import graft.functions.Md5Expressions.md5_key28
     val cnts = events.groupBy("user_id").agg(count(lit(1)).as("cnt"))
@@ -689,9 +624,6 @@ object EventOps {
     * fixed-memory path a 100 TB pipeline uses for per-slice cardinality
     * dashboards where the exact Expand-based count would shuffle every
     * (slice, user) pair; here both run so the sketch is verifiable. */
-  def approxUsersPerType(spark: SparkSession, dir: String): DataFrame =
-    approxUsersPerTypeDf(Tables.load(spark, dir, "events"))
-
   def approxUsersPerTypeDf(events: DataFrame): DataFrame =
     events
       .groupBy("event_type")
@@ -716,9 +648,6 @@ object EventOps {
     * hash-compared, estimates surfaced as the pinned ≤5% flags (x6/x13
     * convention — the merged flag also proves union correctness, since a
     * wrong merge would blow the bound). */
-  def hllMergeUsers(spark: SparkSession, dir: String): DataFrame =
-    hllMergeUsersDf(Tables.load(spark, dir, "events"))
-
   def hllMergeUsersDf(events: DataFrame): DataFrame = {
     // materialized once: the per-type rows and the ALL-row union both
     // consume the 5-row sketch frame
@@ -742,7 +671,7 @@ object EventOps {
       .orderBy("event_type")
   }
 
-  /** x16 — HLL column profiler, the 100 TB default beside [[profileColumns]]:
+  /** x16 — HLL column profiler, the 100 TB default beside [[profileColumnsDf]]:
     * per-column null counts and distinct cardinalities where the distincts
     * are HyperLogLog++ sketches (rsd 2%). The exact profiler's six
     * `countDistinct` plan ONE Expand that multiplies the scan ×7 before the
@@ -753,9 +682,6 @@ object EventOps {
     * verifiable), and the sketch surfaces as the |approx−exact| ≤ 5%
     * boolean the oracle pins TRUE. Production drops the exact columns and
     * with them the Expand. */
-  def profileColumnsApprox(spark: SparkSession, dir: String): DataFrame =
-    profileColumnsApproxDf(Tables.load(spark, dir, "events"))
-
   def profileColumnsApproxDf(events: DataFrame): DataFrame = {
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
     // TWO aggregation passes, deliberately: the sketch+null pass is one
@@ -785,6 +711,8 @@ object EventOps {
       .orderBy("col_name")
   }
 
+  private[graft] val AsofStateTs = "2024-01-15 00:00:00"
+
   /** eq96 — point-in-time ("time travel") state reconstruction, two ways,
     * with a consistency audit: the as-of question every warehouse answers
     * when reproducing a historical report or debugging a training-data
@@ -800,11 +728,6 @@ object EventOps {
     * Scale: both paths are one user_id window each; the probe is a
     * map-side filter on the interval frame, no extra shuffle. T is the
     * literal mid-corpus timestamp (no now()), per the §2.9 as-of rule. */
-  def asofStateAudit(spark: SparkSession, dir: String): DataFrame =
-    asofStateAuditDf(Tables.load(spark, dir, "events"))
-
-  private[graft] val AsofStateTs = "2024-01-15 00:00:00"
-
   def asofStateAuditDf(events: DataFrame): DataFrame = {
     val t = to_timestamp(lit(AsofStateTs))
     val fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -837,6 +760,8 @@ object EventOps {
       .orderBy("user_id")
   }
 
+  private val PoissonCdfMicros = Seq(367879L, 735759L, 919699L, 981012L, 996340L)
+
   /** eq94 — Poisson-bootstrap confidence interval for the mean event
     * value: the distributed bootstrap (each row enters replica b with
     * multiplicity ~ Poisson(1), the standard approximation to
@@ -852,11 +777,6 @@ object EventOps {
     * Scale shape: one ×32 map-side explode (bounded fan-out), one
     * 32-group aggregation, one 32-row final percentile — corpus-linear
     * with no skew exposure. */
-  def bootstrapCi(spark: SparkSession, dir: String): DataFrame =
-    bootstrapCiDf(graft.Tables.load(spark, dir, "events"))
-
-  private val PoissonCdfMicros = Seq(367879L, 735759L, 919699L, 981012L, 996340L)
-
   def bootstrapCiDf(events: DataFrame): DataFrame = {
     val reps = events
       .select(col("event_id"),
@@ -892,9 +812,6 @@ object EventOps {
     *
     * One (type, day) roll-up shuffle, one type-partitioned index window,
     * one 5-row final aggregate. */
-  def ewmaDaily(spark: SparkSession, dir: String): DataFrame =
-    ewmaDailyDf(Tables.load(spark, dir, "events"))
-
   def ewmaDailyDf(events: DataFrame): DataFrame = {
     val daily = events
       .groupBy(col("event_type"), col("ts").cast("date").as("day"))
@@ -918,6 +835,8 @@ object EventOps {
   }
 
 
+  private val JoinSaltBuckets = 8
+
   /** x25 — SALTED JOIN: the join-side twin of x7's salted aggregation,
     * for the case where the hot key sits on the probe side of a
     * fact ⋈ dim join (one power user's events all land on one reducer of
@@ -931,11 +850,6 @@ object EventOps {
     * statement (the x7 convention). At broadcast-able dim sizes Spark
     * would broadcast and salting is moot; this pattern is for the
     * dim-too-big, key-skewed regime. */
-  def saltedJoinTotals(spark: SparkSession, dir: String): DataFrame =
-    saltedJoinTotalsDf(Tables.load(spark, dir, "events"))
-
-  private val JoinSaltBuckets = 8
-
   def saltedJoinTotalsDf(events: DataFrame): DataFrame = {
     val dim = events
       .groupBy("user_id")
@@ -970,9 +884,6 @@ object EventOps {
     * Value mass in exact integer cents (the x7 convention). */
   private val TrainCut = "2024-01-29 00:00:00"
 
-  def trainAssembly(spark: SparkSession, dir: String): DataFrame =
-    trainAssemblyDf(Tables.load(spark, dir, "events"))
-
   def trainAssemblyDf(events: DataFrame): DataFrame = {
     val cut = to_timestamp(lit(TrainCut))
     val inF = col("ts") < cut
@@ -999,9 +910,6 @@ object EventOps {
     * regardless of corpus size. Uniqueness is judged over NON-NULL keys
     * (count(key) − countDistinct(key)) so a null id is one not-null
     * violation, not a not-null violation plus a phantom duplicate. */
-  def qualityGates(spark: SparkSession, dir: String): DataFrame =
-    qualityGatesDf(Tables.load(spark, dir, "events"))
-
   def qualityGatesDf(events: DataFrame): DataFrame = {
     val agg = events.agg(
       count(lit(1)).as("n_rows"),
@@ -1048,9 +956,6 @@ object EventOps {
     * per-user frame. Duplicate (spend, count) points are mutually
     * non-dominating and all surface, matching the oracle's strict
     * dominance. */
-  def paretoFrontier(spark: SparkSession, dir: String): DataFrame =
-    paretoFrontierDf(Tables.load(spark, dir, "events"))
-
   def paretoFrontierDf(events: DataFrame): DataFrame = {
     val u = events
       .withColumn("cents", round(col("value") * 100).cast("long"))
@@ -1100,9 +1005,6 @@ object EventOps {
     * broadcast 1-row pooled moments. Moment magnitudes: |xy| ≤ (per-user
     * cents)² ≈ 10⁸ summed over users — the production variant at 10⁹
     * users shifts the moments to DecimalType(38,0), same plan shape. */
-  def cupedReadout(spark: SparkSession, dir: String): DataFrame =
-    cupedReadoutDf(Tables.load(spark, dir, "events"))
-
   def cupedReadoutDf(events: DataFrame): DataFrame = {
     val perUser = events
       .withColumn("cents", round(col("value") * 100).cast("long"))
@@ -1143,9 +1045,6 @@ object EventOps {
     * zero instead of vanishing. Shares are integer PPM (`n·10⁶ div
     * total`); the Benford expectation — the audit's only floating point —
     * is floored to PPM in the same shape as the oracle. */
-  def benfordAudit(spark: SparkSession, dir: String): DataFrame =
-    benfordAuditDf(Tables.load(spark, dir, "events"))
-
   def benfordAuditDf(events: DataFrame): DataFrame = {
     val obs = events
       .withColumn("cents", round(col("value") * 100).cast("long"))
@@ -1186,9 +1085,6 @@ object EventOps {
     * decision loop: write with `repartitionByRange(zval)` +
     * `sortWithinPartitions`, and this audit prices the rewrite before
     * paying for it. */
-  def zorderLayout(spark: SparkSession, dir: String): DataFrame =
-    zorderLayoutDf(Tables.load(spark, dir, "events"))
-
   def zorderLayoutDf(events: DataFrame): DataFrame = {
     val base = events.select(
       col("event_id"),

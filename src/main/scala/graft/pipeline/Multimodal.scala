@@ -108,9 +108,6 @@ object Multimodal {
     * decode→md5 sees the same bytes). */
   private[graft] val PayloadWindow = 64
 
-  def payloadChunks(spark: SparkSession, dir: String): DataFrame =
-    payloadChunksDf(Tables.load(spark, dir, "documents"))
-
   def payloadChunksDf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("p"))
@@ -176,7 +173,7 @@ object Multimodal {
       .orderBy("doc_id")
   }
 
-  /** Frame geometry for [[frameSamples]]: 64-byte "frames", up to 4
+  /** Frame geometry for [[frameSamplesDf]]: 64-byte "frames", up to 4
     * samples per payload. */
   private[graft] val FrameBytes = 64
   private[graft] val SampleFrames = 4
@@ -190,9 +187,6 @@ object Multimodal {
     * codegen'd md5 — the decode of the sampled frame is where
     * [[FakeDecoder]]'s mapPartitions boundary would sit in production.
     * Map-side explode ×≤4; no shuffle before the presentation sort. */
-  def frameSamples(spark: SparkSession, dir: String): DataFrame =
-    frameSamplesDf(Tables.load(spark, dir, "documents"))
-
   def frameSamplesDf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("p"))
@@ -209,7 +203,7 @@ object Multimodal {
           .as("frame_md5"))
       .orderBy("doc_id", "frame_idx")
 
-  /** Scene-cut threshold for [[sceneChanges]]: a transition counts as a
+  /** Scene-cut threshold for [[sceneChangesDf]]: a transition counts as a
     * cut when consecutive frames' byte sums differ by more than 16 per
     * byte (16 × [[FrameBytes]] total). */
   private[graft] val CutDelta = 16L * FrameBytes
@@ -224,9 +218,6 @@ object Multimodal {
     * it. Per-payload work is linear in payload bytes; the window never
     * crosses payloads, so there is no global sort — the same posture as
     * eq83/eq50. All-integer output, hash-exact. */
-  def sceneChanges(spark: SparkSession, dir: String): DataFrame =
-    sceneChangesDf(Tables.load(spark, dir, "documents"))
-
   def sceneChangesDf(docs: DataFrame): DataFrame = {
     val framed = docs
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("p"))

@@ -128,15 +128,12 @@ object Similarity {
     * One shuffle on (label, pos), partial-aggregated map-side; output is
     * labels × dims rows regardless of corpus size. The means divide as
     * `sum::DOUBLE / (n · 10⁶)` — a single deterministic rounding. */
-  def labelCentroids(spark: SparkSession, dir: String): DataFrame =
-    labelCentroidsDf(Tables.load(spark, dir, "embeddings"))
-
   def labelCentroidsDf(embeddings: DataFrame): DataFrame =
     centroidOf(embeddings, "label", countName = "n_vecs")
 
   /** The shared scaled-integer centroid aggregation behind eq36 and eq46:
     * element-wise mean of `embedding` per `key`, with components scaled to
-    * exact integers before summing (see [[labelCentroids]]'s Scaladoc for
+    * exact integers before summing (see [[labelCentroidsDf]]'s Scaladoc for
     * why). One copy so a scale/overflow change cannot miss a consumer. */
   private def centroidOf(df: DataFrame, key: String, countName: String): DataFrame =
     df
@@ -161,9 +158,6 @@ object Similarity {
     * double expressions per output row, so the result is
     * bit-deterministic. One shuffle on (label, pos) with map-side
     * partials; output is labels × dims rows regardless of corpus size. */
-  def labelVariance(spark: SparkSession, dir: String): DataFrame =
-    labelVarianceDf(Tables.load(spark, dir, "embeddings"))
-
   def labelVarianceDf(embeddings: DataFrame): DataFrame =
     embeddings
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
@@ -194,9 +188,6 @@ object Similarity {
     * aggregate (labels × dims rows, materialized once), then all joins are
     * over that bounded frame — labels²·dims intermediate rows, independent
     * of corpus size. */
-  def centroidAffinity(spark: SparkSession, dir: String): DataFrame =
-    centroidAffinityDf(Tables.load(spark, dir, "embeddings"))
-
   def centroidAffinityDf(embeddings: DataFrame): DataFrame = {
     // labels × dims rows, consumed three times (two pair sides + norms) —
     // materialized once so the full embeddings aggregate runs once
@@ -236,9 +227,6 @@ object Similarity {
     * Scale shape: centroid frame is labels × dims rows (broadcast); the
     * score join explodes each vector ×labels — corpus × k·dims work,
     * linear in the corpus, one shuffle on vec_id. */
-  def centroidConfusion(spark: SparkSession, dir: String): DataFrame =
-    centroidConfusionDf(Tables.load(spark, dir, "embeddings"))
-
   def centroidConfusionDf(embeddings: DataFrame): DataFrame =
     centroidScoresTop2(embeddings)
       .filter(col("rn") === 1)
@@ -276,7 +264,7 @@ object Similarity {
   /** The top-2 rows per vector of [[centroidScores]], materialized ONCE
     * per (session, embeddings plan) — the coarse-quantizer assignment
     * both consumers read: eq105 keeps rn = 1 (the confusion matrix),
-    * eq107 probes rn ≤ 2 cells (r17 optimization, VERDICT r16 task 3).
+    * eq107 probes rn ≤ 2 cells.
     * Before this memo, eq107's src and tgt branches each embedded the
     * FULL scoring subtree (scan → explode → centroid agg → score agg →
     * window: the plan's two mirrored 28-operator chains), relying on
@@ -311,14 +299,10 @@ object Similarity {
     * candidates only; ranking and margin use the 6-dp-ROUNDED cosine
     * with tgt_id tie-break — deterministic in both engines. Output:
     * top-20 mined pairs by (margin DESC, src_id). */
-  def bitextMine(spark: SparkSession, dir: String): DataFrame =
-    bitextMineDf(Tables.load(spark, dir, "documents"), Tables.load(spark, dir, "embeddings"))
-
   def bitextMineDf(docs: DataFrame, embeddings: DataFrame): DataFrame = {
     val langOf = docs.select(col("doc_id").as("vec_id"), col("lang"))
-    // both branches read the ONE materialized coarse-quantizer assignment
-    // (r17 optimization): src and tgt used to re-embed the whole scoring
-    // subtree each
+    // both branches read the ONE materialized coarse-quantizer assignment,
+    // so src and tgt do not each re-embed the whole scoring subtree
     val scored = centroidScoresTop2(embeddings).join(langOf, Seq("vec_id"))
     val src = scored.filter(col("rn") <= 2 && col("lang") =!= "en")
       .select(col("vec_id").as("src_id"), col("lang").as("src_lang"), col("cl"))
@@ -358,9 +342,6 @@ object Similarity {
     * bounded by the largest cluster, never corpus², and each cluster's
     * pairs compute in parallel after one co-partitioned shuffle. */
   private[graft] val SemanticThreshold = 0.3
-
-  def semanticDedup(spark: SparkSession, dir: String): DataFrame =
-    semanticDedupDf(Tables.load(spark, dir, "embeddings"))
 
   def semanticDedupDf(embeddings: DataFrame): DataFrame = {
     val a = embeddings.select(col("label"), col("vec_id").as("vec_a"), col("embedding").as("ea"))
@@ -402,9 +383,6 @@ object Similarity {
     * some clusters sub-shard, some keep shard 0 and must stay bit-equal
     * to eq41's pairing for those labels). */
   private[graft] val SemanticShardCap = 50
-
-  def semanticDedupSharded(spark: SparkSession, dir: String): DataFrame =
-    semanticDedupShardedDf(Tables.load(spark, dir, "embeddings"), SemanticShardCap)
 
   def semanticDedupShardedDf(embeddings: DataFrame, cap: Int = 1000): DataFrame = {
     val sharded = shardedGroupsDf(embeddings, cap)
@@ -453,18 +431,13 @@ object Similarity {
     * query: documents surviving eq8's quality threshold (≥ 0.5 on the
     * 6-dp score, the eq38 keep rule) select their embeddings via the
     * doc_id = vec_id equi-join, and each language gets the exact mean
-    * embedding of its surviving docs — [[labelCentroids]]' scaled-integer
+    * embedding of its surviving docs — [[labelCentroidsDf]]' scaled-integer
     * arithmetic, so the means are order-insensitive and bit-reproducible.
     * The corpus-prep use: after text-side filtering, the centroid of what
     * SURVIVED is the reference point for embedding-space drift checks and
-    * for seeding the [[semanticDedup]] clustering. Join is id-keyed
+    * for seeding the [[semanticDedupDf]] clustering. Join is id-keyed
     * (co-partitioned shuffle at scale); output rows = langs × dims,
     * independent of corpus size. */
-  def qualityCentroids(spark: SparkSession, dir: String): DataFrame =
-    qualityCentroidsDf(
-      Tables.load(spark, dir, "documents"),
-      Tables.load(spark, dir, "embeddings"))
-
   def qualityCentroidsDf(docs: DataFrame, embeddings: DataFrame): DataFrame =
     centroidOf(
       TextAnalysis.qualityCols(docs)
@@ -486,9 +459,6 @@ object Similarity {
     * boolean the oracle pins TRUE. All arithmetic is the same-order double
     * math in both engines; a constant dimension (max = min) degenerates to
     * code 0 by definition in both. */
-  def quantizeEmbeddings(spark: SparkSession, dir: String): DataFrame =
-    quantizeEmbeddingsDf(Tables.load(spark, dir, "embeddings"))
-
   def quantizeEmbeddingsDf(embeddings: DataFrame): DataFrame = {
     val ex = embeddings
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "xf")))

@@ -24,9 +24,6 @@ object TextAnalysis {
 
   /** E-Q2 — per-language corpus stats. Integer sums are exact in double, so
     * the average is order-insensitive. */
-  def textStats(spark: SparkSession, dir: String): DataFrame =
-    textStatsDf(Tables.load(spark, dir, "documents"))
-
   def textStatsDf(docs: DataFrame): DataFrame =
     docs
       .groupBy("lang")
@@ -39,9 +36,6 @@ object TextAnalysis {
   /** Token counting, two tokenizers: whitespace words and a BPE-ish regex
     * (letter runs | single digits | single punctuation) of the kind used to
     * pre-estimate LLM token budgets. */
-  def tokenStats(spark: SparkSession, dir: String): DataFrame =
-    tokenStatsDf(Tables.load(spark, dir, "documents"))
-
   def tokenStatsDf(docs: DataFrame): DataFrame =
     docs
       .select(
@@ -59,12 +53,6 @@ object TextAnalysis {
       .orderBy("lang")
 
   private val Stopwords = Seq("the", "a", "data", "value")
-
-  /** Per-document quality score: length saturation, alphabetic ratio,
-    * stopword ratio — the heuristic trio of C4-style corpus filters.
-    * Single-pass, no shuffle (final sort only). */
-  def qualityScore(spark: SparkSession, dir: String): DataFrame =
-    qualityScoreDf(Tables.load(spark, dir, "documents"))
 
   /** Per-document quality columns (n_tokens, ratios, the rounded 6-dp
     * `quality`) with every input column retained — the single source of
@@ -90,6 +78,9 @@ object TextAnalysis {
         round(lit(0.4) * col("len_score") + lit(0.4) * col("alpha_ratio")
           + lit(0.2) * (lit(1.0) - col("stop_ratio")), 6))
 
+  /** Per-document quality score: length saturation, alphabetic ratio,
+    * stopword ratio — the heuristic trio of C4-style corpus filters.
+    * Single-pass, no shuffle (final sort only). */
   def qualityScoreDf(docsIn: DataFrame): DataFrame =
     graft.Canonical.presentationOrder(
       qualityCols(docsIn).select(
@@ -108,9 +99,6 @@ object TextAnalysis {
     * a plain double sum of scores would be partition-order-dependent).
     * Map-side classification + one bounded aggregation; the per-doc score
     * is eq8's formula via the shared [[qualityCols]]. */
-  def qualityFilter(spark: SparkSession, dir: String): DataFrame =
-    qualityFilterDf(Tables.load(spark, dir, "documents"))
-
   def qualityFilterDf(docs: DataFrame): DataFrame =
     qualityCols(docs)
       .groupBy("lang")
@@ -129,9 +117,6 @@ object TextAnalysis {
     * BEFORE the shuffle, so the exchanged data is ≤ k·partitions rows per
     * language — a top-k, never a global sort of the corpus. */
   private[graft] val QualityTopK = 3
-
-  def qualityTopK(spark: SparkSession, dir: String): DataFrame =
-    qualityTopKDf(Tables.load(spark, dir, "documents"))
 
   def qualityTopKDf(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -155,9 +140,6 @@ object TextAnalysis {
   /** n-gram-heuristic language ID: count marker-token hits per language,
     * argmax with fixed priority. Output is the (true lang × predicted lang)
     * confusion matrix. */
-  def langId(spark: SparkSession, dir: String): DataFrame =
-    langIdDf(Tables.load(spark, dir, "documents"))
-
   def langIdDf(docs: DataFrame): DataFrame = {
     val withCounts = Markers.foldLeft(docs) {
       case (df, (l, words)) =>
@@ -188,9 +170,6 @@ object TextAnalysis {
   /** Document fingerprinting: min-of-md5 over 3-token shingles (the
     * winnowing/min-hash primitive, one hash). Rows with <3 tokens
     * fingerprint as NULL in both engines. */
-  def fingerprint(spark: SparkSession, dir: String): DataFrame =
-    fingerprintDf(Tables.load(spark, dir, "documents"))
-
   def fingerprintDf(docs: DataFrame): DataFrame =
     docs
       .withColumn("sh", graft.functions.ShingleExpressions.shingles(col("text"), 3))
@@ -219,9 +198,6 @@ object TextAnalysis {
     * the partition end in both engines). */
   private[graft] val WinnowWindow = 4
 
-  def winnowFingerprints(spark: SparkSession, dir: String): DataFrame =
-    winnowFingerprintsDf(Tables.load(spark, dir, "documents"))
-
   def winnowFingerprintsDf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sh = docs
@@ -243,17 +219,6 @@ object TextAnalysis {
       .orderBy("doc_id", "fp")
   }
 
-  /** eq27 — deterministic content-hash train/val/test split (80/10/10):
-    * the reproducible held-out-split primitive of a training-data pipeline.
-    * Assignment is a pure function of the document TEXT (28-bit md5 key mod
-    * 100), not of doc_id or row order — so re-ingestion, re-partitioning,
-    * and replication all land a document in the same split, and exact
-    * duplicates can never straddle train/test. Summarized per (split, lang)
-    * for the oracle hash-compare; the per-doc assignment is the same
-    * expression un-aggregated. */
-  def hashSplit(spark: SparkSession, dir: String): DataFrame =
-    hashSplitDf(Tables.load(spark, dir, "documents"))
-
   /** The 80/10/10 split assignment of a text column: a pure function of
     * the content (28-bit md5 key mod 100). Shared by [[hashSplitDf]] and
     * [[contaminationDf]] so the two can never disagree on membership. */
@@ -262,6 +227,14 @@ object TextAnalysis {
     when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
   }
 
+  /** eq27 — deterministic content-hash train/val/test split (80/10/10):
+    * the reproducible held-out-split primitive of a training-data pipeline.
+    * Assignment is a pure function of the document TEXT (28-bit md5 key mod
+    * 100), not of doc_id or row order — so re-ingestion, re-partitioning,
+    * and replication all land a document in the same split, and exact
+    * duplicates can never straddle train/test. Summarized per (split, lang)
+    * for the oracle hash-compare; the per-doc assignment is the same
+    * expression un-aggregated. */
   def hashSplitDf(docs: DataFrame): DataFrame =
     docs
       .withColumn("split", splitOf(col("text")))
@@ -276,9 +249,6 @@ object TextAnalysis {
     * per document and the duplicated fraction. Pure per-row arithmetic on
     * the native shingle arrays — single pass, no shuffle except the
     * presentation sort. Docs with <3 tokens (no shingles) are excluded. */
-  def repetitionStats(spark: SparkSession, dir: String): DataFrame =
-    repetitionStatsDf(Tables.load(spark, dir, "documents"))
-
   def repetitionStatsDf(docs: DataFrame): DataFrame =
     repetitionCols(docs)
       .filter(col("n_shingles") > 0)
@@ -302,18 +272,6 @@ object TextAnalysis {
             / col("n_shingles"), 6)))
       .drop("sh_")
 
-  /** eq29 — train→test DECONTAMINATION check: for every test-split
-    * document (split per [[hashSplit]]'s content-hash assignment), the
-    * fraction of its distinct 3-token shingles that also occur anywhere in
-    * the train split — the standard leakage audit run before training on a
-    * corpus. Scale shape: the train shingle vocabulary is a distinct-on-key
-    * aggregate and the probe is a shuffle-on-shingle left join — no
-    * doc×doc comparison anywhere, so cost is bounded by corpus token
-    * volume, not corpus size squared. Docs with no shingles (<3 tokens)
-    * are excluded (no ratio exists). */
-  def contamination(spark: SparkSession, dir: String): DataFrame =
-    contaminationDf(Tables.load(spark, dir, "documents"))
-
   /** Materialized (doc_id, lang, split, distinct-shingle set, size) index —
     * the shared substrate of the decontamination family ([[contaminationDf]]
     * eq29 and [[bloomContaminationDf]] x9, whose oracles assume identical
@@ -330,6 +288,15 @@ object TextAnalysis {
       .withColumn("sz", size(col("shd")))
       .localCheckpoint()
 
+  /** eq29 — train→test DECONTAMINATION check: for every test-split
+    * document (split per [[hashSplitDf]]'s content-hash assignment), the
+    * fraction of its distinct 3-token shingles that also occur anywhere in
+    * the train split — the standard leakage audit run before training on a
+    * corpus. Scale shape: the train shingle vocabulary is a distinct-on-key
+    * aggregate and the probe is a shuffle-on-shingle left join — no
+    * doc×doc comparison anywhere, so cost is bounded by corpus token
+    * volume, not corpus size squared. Docs with no shingles (<3 tokens)
+    * are excluded (no ratio exists). */
   def contaminationDf(docs: DataFrame): DataFrame = {
     val sets = splitShingleSets(docs)
     val trainVocab = sets.filter(col("split") === "train")
@@ -357,9 +324,6 @@ object TextAnalysis {
     * inverted-index join — a production run caps ultra-hot shingles first
     * (the eq12 PPJoin lesson), which only SHRINKS this audit's inputs.
     * All-integer output, deterministic top-20 tie-broken by doc_id. */
-  def decontamBlast(spark: SparkSession, dir: String): DataFrame =
-    decontamBlastDf(Tables.load(spark, dir, "documents"))
-
   def decontamBlastDf(docs: DataFrame): DataFrame = {
     val sets = splitShingleSets(docs)
     val train = sets.filter(col("split") === "train")
@@ -379,7 +343,7 @@ object TextAnalysis {
   }
 
   /** x9 — Bloom-prefiltered decontamination: per-language totals of the
-    * same train→test shingle-leakage audit as [[contamination]], computed
+    * same train→test shingle-leakage audit as [[contaminationDf]], computed
     * through the 100 TB plan shape — a Bloom filter over the train
     * vocabulary is built with one distributed aggregate, broadcast inside
     * a native probe expression, and the test-side shingles are prefiltered
@@ -390,9 +354,6 @@ object TextAnalysis {
     * against the vocabulary, so the output is EXACT — the DuckDB oracle
     * recomputes it with a plain join and the hash must match; a
     * false-negative bug anywhere would fail parity. */
-  def bloomContamination(spark: SparkSession, dir: String): DataFrame =
-    bloomContaminationDf(Tables.load(spark, dir, "documents"))
-
   def bloomContaminationDf(docs: DataFrame): DataFrame = {
     val sets = splitShingleSets(docs)
     // materialized: the sizing count, the bloom build and the verify
@@ -420,17 +381,6 @@ object TextAnalysis {
       .orderBy("lang")
   }
 
-  /** eq28 — TF-IDF top terms: the 3 highest-scoring tokens per document.
-    * tf = in-doc occurrences, idf = (N+1)/(df+1) as a RATIO rather than its
-    * log — log is monotone, so the ranking is identical, and ×/÷ are
-    * IEEE-exact in both engines while libm `log` is not guaranteed
-    * correctly-rounded (a last-ulp divergence could flip a rank at the
-    * hash-compare). Score rounded to 6 dp before the rank cut; ties break
-    * on the token string. One shuffle per aggregation; the df side is a
-    * token-level aggregate, naturally bounded by vocabulary size. */
-  def tfidfTopTerms(spark: SparkSession, dir: String): DataFrame =
-    tfidfTopTermsDf(Tables.load(spark, dir, "documents"))
-
   /** eq47 — corpus-unigram language-model scoring, the perplexity-proxy
     * quality signal: the corpus's own unigram distribution scores every
     * document's log-likelihood. Per-token `ln(count/N)` is scaled to
@@ -444,9 +394,6 @@ object TextAnalysis {
     * Low (more negative) averages flag documents the corpus distribution
     * finds surprising — the filter axis perplexity scoring gives a real
     * pipeline. */
-  def unigramLogprob(spark: SparkSession, dir: String): DataFrame =
-    unigramLogprobDf(Tables.load(spark, dir, "documents"))
-
   def unigramLogprobDf(docs: DataFrame): DataFrame = {
     // materialized once: vocabulary build + scoring join both consume it
     val tok = docs
@@ -481,9 +428,6 @@ object TextAnalysis {
     * join back on the shingle key, one per-doc aggregate — all
     * vocabulary/instance-bounded, never doc×doc. Docs with <3 tokens
     * have no shingles and are absent, as in eq30. */
-  def shingleNovelty(spark: SparkSession, dir: String): DataFrame =
-    shingleNoveltyDf(Tables.load(spark, dir, "documents"))
-
   def shingleNoveltyDf(docs: DataFrame): DataFrame = {
     val ex = Dedup.shingleSets(docs)
       .select(col("doc_id"), explode(col("sh")).as("sg"))
@@ -511,9 +455,6 @@ object TextAnalysis {
     * n_sources²-bounded. This is the same inverted-index shape as eq12
     * but at feed cardinality, where the quadratic term is harmless by
     * construction. */
-  def sourceOverlap(spark: SparkSession, dir: String): DataFrame =
-    sourceOverlapDf(Tables.load(spark, dir, "documents"))
-
   def sourceOverlapDf(docs: DataFrame): DataFrame = {
     val sx = Dedup.shingleSets(docs)
       .select(col("doc_id"), explode(col("sh")).as("sg"))
@@ -551,7 +492,7 @@ object TextAnalysis {
     * Engine-parity discipline (the eq47/eq90 convention): the only libm
     * calls — the two `ln`s — are quantized to one integer-micro log-ratio
     * per vocabulary entry, so per-doc sums are exact integer arithmetic,
-    * order-free under any partitioning. Scale bound (ADVICE r9): these
+    * order-free under any partitioning. Scale bound: these
     * sums are PER-DOCUMENT — worst case is doc length × max |logratio|
     * ≈ 2·10⁶ tokens (the eq-giant-doc cap) × ~ln(10¹³)·10⁶ ≈ 3·10⁷
     * micros ≈ 6·10¹³ ≪ 2⁶³, so BIGINT never wraps at any corpus scale;
@@ -566,9 +507,6 @@ object TextAnalysis {
     * (conditional sum — not two scans), ≤|V| ln calls on a broadcast
     * frame, one broadcast join back over the token stream, one per-doc
     * aggregate. */
-  def dsirWeights(spark: SparkSession, dir: String): DataFrame =
-    dsirWeightsDf(Tables.load(spark, dir, "documents"))
-
   def dsirWeightsDf(docs: DataFrame): DataFrame = {
     // materialized once: vocabulary build + scoring join both consume it
     val tok = docs
@@ -598,6 +536,9 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
+  private val Bm25K1 = 1.2
+  private val Bm25B = 0.75
+
   /** eq88 — BM25 top-10 retrieval over the inverted index: the query-based
     * corpus-filtering primitive (find the training docs most relevant to a
     * benchmark/query panel — the retrieval sibling of eq29's
@@ -614,12 +555,6 @@ object TextAnalysis {
     * expression tree. Scale shape: posting-list join fans out Σ_{t∈Q}
     * df(t) — the classic term-at-a-time retrieval plan, never corpus×Q;
     * stats and idf are vocabulary-bounded; the query panel broadcasts. */
-  def bm25TopK(spark: SparkSession, dir: String): DataFrame =
-    bm25TopKDf(Tables.load(spark, dir, "documents"))
-
-  private val Bm25K1 = 1.2
-  private val Bm25B = 0.75
-
   def bm25TopKDf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // materialized once: postings, doc lengths and the query panel all
@@ -674,9 +609,6 @@ object TextAnalysis {
     * roll-up for document frequency, then one instance⋈type join on the
     * shingle key — fan-out Σ df (linear in corpus tokens), never df².
     * Docs under 8 tokens have no spans and are excluded. */
-  def dupSpans(spark: SparkSession, dir: String): DataFrame =
-    dupSpansDf(Tables.load(spark, dir, "documents"))
-
   def dupSpansDf(docs: DataFrame): DataFrame = {
     // materialized once: the df roll-up and the per-doc probe both
     // consume the exploded instances
@@ -715,9 +647,6 @@ object TextAnalysis {
     * inside a per-document window — partition key doc_id, frame bounded by
     * document length, no global sort but the presentation orderBy. Docs
     * with no duplicated window emit no row. */
-  def maxDupSpans(spark: SparkSession, dir: String): DataFrame =
-    maxDupSpansDf(Tables.load(spark, dir, "documents"))
-
   def maxDupSpansDf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sh = docs.select(col("doc_id"),
@@ -750,9 +679,6 @@ object TextAnalysis {
     * runs hot" bias when mixing crawls. Deterministic: rank order is
     * (quality, doc_id), no ties possible; the rank ratio is the same
     * integer division in both engines. One window shuffle on source. */
-  def qualityQuantileNorm(spark: SparkSession, dir: String): DataFrame =
-    qualityQuantileNormDf(Tables.load(spark, dir, "documents"))
-
   def qualityQuantileNormDf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("source")
@@ -782,9 +708,6 @@ object TextAnalysis {
     * bigram-key join back to instances, TakeOrderedAndProject for the
     * cut. Single-token documents have no bigrams and drop out — a length
     * filter's job (eq35), not the LM's. */
-  def bigramSurprise(spark: SparkSession, dir: String): DataFrame =
-    bigramSurpriseDf(Tables.load(spark, dir, "documents"))
-
   def bigramSurpriseDf(docs: DataFrame): DataFrame = {
     // bigram instances — materialized once: type counts and the scoring
     // join both consume it (two corpus shingling passes otherwise)
@@ -817,6 +740,14 @@ object TextAnalysis {
       .limit(20)
   }
 
+  /** eq28 — TF-IDF top terms: the 3 highest-scoring tokens per document.
+    * tf = in-doc occurrences, idf = (N+1)/(df+1) as a RATIO rather than its
+    * log — log is monotone, so the ranking is identical, and ×/÷ are
+    * IEEE-exact in both engines while libm `log` is not guaranteed
+    * correctly-rounded (a last-ulp divergence could flip a rank at the
+    * hash-compare). Score rounded to 6 dp before the rank cut; ties break
+    * on the token string. One shuffle per aggregation; the df side is a
+    * token-level aggregate, naturally bounded by vocabulary size. */
   def tfidfTopTermsDf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val n = docs.count()
@@ -844,9 +775,6 @@ object TextAnalysis {
     * expression at widths 1–3; the distinct count shuffles on the n-gram
     * key — vocabulary-bounded, the same scale class as eq33's heavy
     * hitters. Output is |langs| × 3 rows regardless of corpus size. */
-  def ngramDiversity(spark: SparkSession, dir: String): DataFrame =
-    ngramDiversityDf(Tables.load(spark, dir, "documents"))
-
   def ngramDiversityDf(docs: DataFrame): DataFrame =
     (1 to 3).map { n =>
       docs.select(col("lang"), lit(n).as("n"),
@@ -897,9 +825,6 @@ object TextAnalysis {
     * shape at 100 TB: full scan, tiny shuffle, 30-row result
     * (`TakeOrderedAndProject`). Ties at the cut break on the pair string,
     * so the result is deterministic and hash-checkable. */
-  def bpePairs(spark: SparkSession, dir: String): DataFrame =
-    bpePairsDf(Tables.load(spark, dir, "documents"))
-
   def bpePairsDf(docs: DataFrame): DataFrame =
     docs
       .select(explode(tokens(col("text"))).as("tok"))
@@ -1024,6 +949,15 @@ object TextAnalysis {
     (chosen.result().reduce(_ union _).orderBy("merge_rank"), vocab)
   }
 
+  /** `(tok, sy_after)` — encoded symbol count per DISTINCT vocabulary
+    * token under the memoized corpus-wide merge table; the shared encode
+    * substrate of eq129 and the eq136 composed pipeline. */
+  private[pipeline] def bpeEncTable(docs: DataFrame, merges: Int): DataFrame =
+    bpeLearn(docs, merges)._2
+      .select(col("tok"),
+        size(filter(split(col("s"), BpeSep), x => x =!= lit("")))
+          .cast("long").as("sy_after"))
+
   /** eq129 — BPE ENCODE: the other half of the tokenizer lifecycle. eq126
     * learns the merge table; this applies it to every token occurrence in
     * the corpus and reports, per source, the encoded footprint — token
@@ -1037,18 +971,6 @@ object TextAnalysis {
     * Tokens shorter than 2 chars never enter the vocabulary (the trainer's
     * own rule) and encode as their own length via the join fallback. The
     * ratio divides two exact longs — one IEEE divide, hash-safe. */
-  def bpeEncode(spark: SparkSession, dir: String): DataFrame =
-    bpeEncodeDf(Tables.load(spark, dir, "documents"), BpeTrainMerges)
-
-  /** `(tok, sy_after)` — encoded symbol count per DISTINCT vocabulary
-    * token under the memoized corpus-wide merge table; the shared encode
-    * substrate of eq129 and the eq136 composed pipeline. */
-  private[pipeline] def bpeEncTable(docs: DataFrame, merges: Int): DataFrame =
-    bpeLearn(docs, merges)._2
-      .select(col("tok"),
-        size(filter(split(col("s"), BpeSep), x => x =!= lit("")))
-          .cast("long").as("sy_after"))
-
   def bpeEncodeDf(docs: DataFrame, merges: Int): DataFrame = {
     val enc = bpeEncTable(docs, merges)
     val stream = docs
@@ -1083,9 +1005,6 @@ object TextAnalysis {
     * in both engines. Two window sorts per language partition + a 5-row
     * aggregate; at 100 TB ranks of genuinely corpus-sized partitions
     * would move to approximate ranks off x26-style quantile sketches. */
-  def rankCorr(spark: SparkSession, dir: String): DataFrame =
-    rankCorrDf(Tables.load(spark, dir, "documents"))
-
   def rankCorrDf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sig = docs.select(
@@ -1109,7 +1028,7 @@ object TextAnalysis {
         // rank variance is zero ONLY for a 1-row language slice
         // (row_number ranks are distinct otherwise) — Spearman is
         // undefined there, and the unguarded divide is an ANSI crash on
-        // the first single-doc slice (found by the r10 degenerate drill);
+        // the first single-doc slice (found by the degenerate-corpus drill);
         // NULL in both engines (oracle: NULLIF on the same denominator)
         round(
           graft.pipeline.Similarity.safeDiv(
@@ -1132,9 +1051,6 @@ object TextAnalysis {
     * exact integer division — so the only floating point is one `ln` per
     * cell inside the floor and the three final renders, every double op
     * written in the same shape as the oracle SQL. */
-  def assocAudit(spark: SparkSession, dir: String): DataFrame =
-    assocAuditDf(Tables.load(spark, dir, "documents"))
-
   def assocAuditDf(docs: DataFrame): DataFrame = {
     val joint = docs.groupBy("lang", "source").agg(count(lit(1)).as("c"))
     val rx = docs.groupBy("lang").agg(count(lit(1)).as("r"))
@@ -1161,7 +1077,8 @@ object TextAnalysis {
         round((col("n") * col("chi_sum")).cast("double") / lit(1000000) - col("n"), 6)
           .as("chi2"),
         // a 1×1 contingency (one lang or one source) has min(r−1,c−1)=0:
-        // Cramér's V undefined, NULL in both engines (r10 degenerate audit)
+        // Cramér's V undefined, NULL in both engines (pinned by the
+        // degenerate-corpus drill)
         round(sqrt(Similarity.safeDiv(
           (col("n") * col("chi_sum")).cast("double") / lit(1000000) - col("n"),
           (col("n") * least(col("kx") - 1, col("ky") - 1)).cast("double"))), 6)
@@ -1178,9 +1095,6 @@ object TextAnalysis {
     * bounded by doc length). Ratios are integer PPM (`x·10⁶ div n_words`),
     * so the flags are bit-deterministic and the oracle reproduces them
     * without any floating point. */
-  def gopherGate(spark: SparkSession, dir: String): DataFrame =
-    gopherGateDf(Tables.load(spark, dir, "documents"))
-
   def gopherGateDf(docs: DataFrame): DataFrame = {
     val cnt = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))

@@ -5,10 +5,11 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.pipeline.Curation
 
-/** eq138 — the at-rest layout for the curated product (VERDICT r10 task
-  * 4): [[Curation.curatedDocs]] ends at a DataFrame; the 100 TB story
+/** eq138 — the at-rest layout for the curated product:
+  * [[Curation.curatedDocsDf]] ends at a DataFrame; the 100 TB story
   * ends at storage. The trainer-consumable corpus is written
   * `partitionBy(lang)` (per-language partition pruning: a lang-filtered
   * scan touches one directory — the eq55/PartitionedLayout posture) and
@@ -49,7 +50,7 @@ object CuratedSink {
   def writeAndRead(spark: SparkSession, dir: String): DataFrame = {
     val id = s"${ProcessHandle.current().pid()}_${sinkSeq.incrementAndGet()}"
     val tbl = s"graft_curated_$id"
-    Curation.curatedDocs(spark, dir)
+    Curation.curatedDocsDf(Tables.load(spark, dir, "documents"))
       .write.mode("overwrite")
       .option("path", s"${sys.props("java.io.tmpdir")}/graft_curated_sink_$id")
       .partitionBy("lang")

@@ -223,9 +223,6 @@ object AggSurface {
     * eq62 convention), so the index is engine-exact. Bins empty on
     * either side are skipped (reported, not interpolated). One shuffle
     * on (type, bin); everything after is a ≤ types×10-row frame. */
-  def psiDrift(spark: SparkSession, dir: String): DataFrame =
-    psiDriftDf(Tables.load(spark, dir, "events"))
-
   def psiDriftDf(events: DataFrame): DataFrame = {
     val bounds = events.agg(
       expr("percentile(value, array(0.1D,0.2D,0.3D,0.4D,0.5D,0.6D,0.7D,0.8D,0.9D))")
@@ -293,9 +290,6 @@ object AggSurface {
     * integer — order-free — with ONE final division per type. Two passes
     * over events (bounds, then clip+sum), one broadcast of the per-type
     * bounds frame. */
-  def winsorizedMeans(spark: SparkSession, dir: String): DataFrame =
-    winsorizedMeansDf(graft.Tables.load(spark, dir, "events"))
-
   def winsorizedMeansDf(events: DataFrame): DataFrame = {
     val bounds = events.groupBy("event_type")
       .agg(

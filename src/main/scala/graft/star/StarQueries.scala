@@ -26,7 +26,7 @@ object StarQueries {
     Tables.load(spark, dir, "events")
       .select(col("event_type"),
         // try_cast: a non-numeric $.k (one malformed log line in 100 TB)
-        // must null out, not ANSI-crash the job (r10 degenerate drill)
+        // must null out, not ANSI-crash the job (degenerate-corpus drill)
         expr("try_cast(get_json_object(props, '$.k') AS bigint)").as("k"))
       .groupBy("event_type")
       .agg(
@@ -51,12 +51,12 @@ object StarQueries {
     Tables.load(spark, dir, "events")
       // try_parse_json / try_variant_get on the data paths: a malformed
       // payload or an uncastable value nulls out instead of ANSI-crashing
-      // (r10 degenerate drill); the missing-path probe semantics are
+      // (degenerate-corpus drill); the missing-path probe semantics are
       // unchanged (NULL variant -> NULL path -> counted missing)
       .select(col("event_type"), try_parse_json(col("props")).as("v"))
       .select(col("event_type"),
         try_variant_get(col("v"), "$.k", "long").as("k"),
-        // try_ on the $.m probe too (ADVICE r10): a PRESENT but
+        // try_ on the $.m probe too: a PRESENT but
         // non-numeric $.m (valid JSON like {"m":"xyz"}) would make plain
         // variant_get ANSI-throw on the long cast; try_variant_get nulls
         // it, which the counter then classifies as missing — the same
@@ -138,11 +138,6 @@ object StarQueries {
     * moment magnitudes stay far inside BIGINT and the 2^53 double-exact
     * window even at 1000× this corpus (n·Σxy ~ 1e16 needs ~10⁹ months·
     * cents·months — revenue cents would hit BIGINT limits first). */
-  def trendSlopes(spark: SparkSession, dir: String): DataFrame =
-    trendSlopesDf(
-      Tables.load(spark, dir, "lineitem"), Tables.load(spark, dir, "orders"),
-      Tables.load(spark, dir, "customer"), Tables.load(spark, dir, "nation"))
-
   def trendSlopesDf(li: DataFrame, o: DataFrame, c: DataFrame, n: DataFrame): DataFrame = {
     val monthly = li.join(o, li("l_orderkey") === o("o_orderkey"))
       .join(c, o("o_custkey") === c("c_custkey"))
@@ -160,8 +155,8 @@ object StarQueries {
         sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"))
       .select(col("n_name"), col("n_months"),
         // OLS denominator n·Σx²−(Σx)² is 0 iff a nation has ONE distinct
-        // month — slope undefined, NULL in both engines (r10 degenerate
-        // audit; the unguarded divide is an ANSI crash)
+        // month — slope undefined, NULL in both engines (the unguarded
+        // divide is an ANSI crash)
         round(graft.pipeline.Similarity.safeDiv(
           (col("n_months") * col("sxy") - col("sx") * col("sy")).cast("double"),
           (col("n_months") * col("sxx") - col("sx") * col("sx")).cast("double")), 6)
@@ -186,11 +181,6 @@ object StarQueries {
     * carried as decimal(38,0) — `Σi·x · 10⁶` clears 2⁶³ already at a few
     * hundred customers per group — and `div` (integral divide) brings the
     * ≤10⁶ PPM result back to BIGINT exactly; no floating point anywhere. */
-  def giniConcentration(spark: SparkSession, dir: String): DataFrame =
-    giniConcentrationDf(
-      Tables.load(spark, dir, "orders"),
-      Tables.load(spark, dir, "customer"), Tables.load(spark, dir, "nation"))
-
   def giniConcentrationDf(orders: DataFrame, customer: DataFrame,
       nation: DataFrame): DataFrame = {
     val rev = orders
@@ -217,7 +207,7 @@ object StarQueries {
           .as("top_cents"))
       .select(col("n_name"), col("n_customers"), col("total_cents"),
         // a zero-revenue nation has no defined concentration: NULL, not a
-        // division-by-zero crash (r10 degenerate audit)
+        // division-by-zero crash
         expr("CASE WHEN total_cents > 0 THEN " +
           "(2*ix - (n_customers+1) * cast(total_cents as decimal(38,0)))" +
           " * 1000000 div (n_customers * cast(total_cents as decimal(38,0))) END")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * user_id long, value double)` and returns the transformed frame — the
   * same declarative plan serves `readStream` (incremental, stateful,
   * watermark-bounded state eviction) and batch (oracle parity: the batch
-  * twin of `hourly` is hash-checked as eq3). Tests drive these with
+  * twin of `EventOps.hourlyDf` is hash-checked as eq3). Tests drive these with
   * `MemoryStream` and hold them to batch parity.
   */
 object StreamingOps extends Serializable {
@@ -254,7 +254,7 @@ object StreamingOps extends Serializable {
                         tombstoned: Boolean)
 
   /** Streaming CDC materialization — the streaming twin of
-    * [[graft.pipeline.EventOps.cdcCompact]] (parity pinned by test): per
+    * [[graft.pipeline.EventOps.cdcCompactDf]] (parity pinned by test): per
     * key, `mapGroupsWithState` keeps the latest change by the total
     * (ts, event_id) order plus the change count, and every micro-batch
     * emits the key's updated profile row; `error` rows mark the key
@@ -340,7 +340,7 @@ object StreamingOps extends Serializable {
   }
 
   /** Session windows with a 30-minute inactivity gap — the streaming twin
-    * of [[graft.pipeline.EventOps.sessionize]]'s lag-based batch program
+    * of [[graft.pipeline.EventOps.sessionizeDf]]'s lag-based batch program
     * (per-user session event counts must agree; pinned by test). */
   def sessionCounts(events: DataFrame): DataFrame =
     events

@@ -68,7 +68,7 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("pq recall: plan is broadcast/hash joins only, no cartesian (sf0.001)") {
-    val p = plan(Clustering.pqRecall(spark, Sf))
+    val p = plan(SparkEntry.queries("x21_pq_recall")(spark, Sf))
     assert(!p.contains("CartesianProduct"), s"unexpected cartesian:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast lut join:\n$p")
   }
@@ -79,7 +79,7 @@ class ClusteringSpec extends SparkSpec {
     // let a training-join regression ship (r11-late review finding). So
     // pin BOTH plans: the readout, and the TRAINING-TIME assignment join
     // inspected directly at the assignTo seam the Lloyd loop calls.
-    val df = Clustering.kmeans(spark, Sf)
+    val df = SparkEntry.queries("eq89_kmeans")(spark, Sf)
     val p = plan(df)
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast readout join:\n$p")
     assert(!p.contains("CartesianProduct"), s"unexpected cartesian:\n$p")
@@ -100,12 +100,12 @@ class ClusteringSpec extends SparkSpec {
     // re-run reads the materialized result — counted, not argued.
     graft.pipeline.Dedup.clearDerivedCaches()
     val l0 = Clustering.lloydMisses
-    Clustering.kmeans(spark, Sf).collect()
-    Clustering.pqRecall(spark, Sf).collect()
+    SparkEntry.queries("eq89_kmeans")(spark, Sf).collect()
+    SparkEntry.queries("x21_pq_recall")(spark, Sf).collect()
     assert(Clustering.lloydMisses == l0 + 2,
       s"expected one kmeans + one PQ training pass, got ${Clustering.lloydMisses - l0}")
-    Clustering.kmeans(spark, Sf).collect()
-    Clustering.pqRecall(spark, Sf).collect()
+    SparkEntry.queries("eq89_kmeans")(spark, Sf).collect()
+    SparkEntry.queries("x21_pq_recall")(spark, Sf).collect()
     assert(Clustering.lloydMisses == l0 + 2,
       "re-runs must read the memoized Lloyd artifacts, not re-train")
   }

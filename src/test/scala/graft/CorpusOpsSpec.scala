@@ -439,7 +439,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("pmi bigrams: k-bounded, min-count respected, scores finite (sf0.001)") {
-    val rows = CorpusOps.pmiBigrams(spark, Sf).collect()
+    val rows = SparkEntry.queries("eq56_pmi_bigrams")(spark, Sf).collect()
     assert(rows.length <= CorpusOps.PmiTopK && rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(2) >= CorpusOps.PmiMinCount)
@@ -480,7 +480,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("zipf slope on sf0.001: negative slope, r2 in [0,1], rank cap respected") {
-    val r = CorpusOps.zipfSlope(spark, Sf).head()
+    val r = SparkEntry.queries("eq62_zipf_slope")(spark, Sf).head()
     assert(r.getLong(0) <= 1000L)
     assert(r.getDouble(1) < 0.0, "token frequencies must decay with rank")
     assert(r.getDouble(2) >= 0.0 && r.getDouble(2) <= 1.0)

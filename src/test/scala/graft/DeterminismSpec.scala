@@ -16,33 +16,35 @@ class DeterminismSpec extends SparkSpec {
 
   private def hashOf(df: DataFrame): String = Canonical.hash(df)
 
-  private def invariant(name: String)(build: String => DataFrame): Unit =
+  /** Pins the catalogue entry `query` exactly as `SparkEntry` runs it. */
+  private def invariant(query: String, name: String): Unit =
     test(s"partitioning-invariant: $name") {
-      val base = hashOf(build(Sf))
+      def build() = SparkEntry.queries(query)(spark, Sf)
+      val base = hashOf(build())
       // second evaluation of the same program must RE-MINE — the derived
       // artifact memos (pair table, labels, Lloyd artifacts, chain) would
       // otherwise hand back the first run's checkpointed blocks and the
-      // comparison would be a frame against itself (r11-late review
-      // finding). Clearing forces fresh shuffles and checkpoints.
+      // comparison would be a frame against itself. Clearing forces fresh
+      // shuffles and checkpoints.
       Dedup.clearDerivedCaches()
-      assert(hashOf(build(Sf)) == base, s"$name is run-order sensitive")
+      assert(hashOf(build()) == base, s"$name is run-order sensitive")
     }
 
-  invariant("eq89 kmeans")(dir => Clustering.kmeans(spark, dir))
-  invariant("x21 pq recall")(dir => Clustering.pqRecall(spark, dir))
-  invariant("eq90 bigram surprise")(dir => TextAnalysis.bigramSurprise(spark, dir))
-  invariant("eq94 bootstrap CI")(dir => EventOps.bootstrapCi(spark, dir))
-  invariant("eq100 ewma")(dir => EventOps.ewmaDaily(spark, dir))
-  invariant("eq97 graph clustering")(dir => Dedup.graphClustering(spark, dir))
-  invariant("eq131 cluster split")(dir => Dedup.clusterSplit(spark, dir))
-  invariant("eq132 dsir weights")(dir => TextAnalysis.dsirWeights(spark, dir))
-  invariant("eq133 shingle novelty")(dir => TextAnalysis.shingleNovelty(spark, dir))
-  invariant("eq134 source overlap")(dir => TextAnalysis.sourceOverlap(spark, dir))
-  // ADVICE r9: eq135's integer-micro JS sums are exactly the aggregation
+  invariant("eq89_kmeans", "eq89 kmeans")
+  invariant("x21_pq_recall", "x21 pq recall")
+  invariant("eq90_bigram_surprise", "eq90 bigram surprise")
+  invariant("eq94_bootstrap_ci", "eq94 bootstrap CI")
+  invariant("eq100_ewma_daily", "eq100 ewma")
+  invariant("eq97_graph_clustering", "eq97 graph clustering")
+  invariant("eq131_cluster_split", "eq131 cluster split")
+  invariant("eq132_dsir_weights", "eq132 dsir weights")
+  invariant("eq133_shingle_novelty", "eq133 shingle novelty")
+  invariant("eq134_source_overlap", "eq134 source overlap")
+  // eq135's integer-micro JS sums are exactly the aggregation
   // shape this invariant exists to pin; x29's banding sweep shares the
   // memoized signature frame, so the pin also covers cross-call reuse.
-  invariant("eq135 snapshot drift")(dir => graft.pipeline.CorpusOps.snapshotDrift(spark, dir))
-  invariant("x29 minhash band sweep")(dir => Dedup.minhashBandSweep(spark, dir))
+  invariant("eq135_snapshot_drift", "eq135 snapshot drift")
+  invariant("x29_minhash_band_sweep", "x29 minhash band sweep")
 
   test("partitioning-invariant: repartitioned input hashes equal (eq89, eq90, eq100)") {
     val docs = Tables.load(spark, Sf, "documents")

@@ -83,8 +83,8 @@ class EngineSurfaceSpec extends SparkSpec {
       // product's audit (same summarize, so they can only differ if the
       // write or the catalog read lost/mangled rows)
       val back = CuratedSink.summarize(curated).collect().map(_.toString)
-      val mem = CuratedSink.summarize(
-        pipeline.Curation.curatedDocs(spark, Sf)).collect().map(_.toString)
+      val mem = CuratedSink.summarize(pipeline.Curation.curatedDocsDf(
+        Tables.load(spark, Sf, "documents"))).collect().map(_.toString)
       assert(back.sameElements(mem), "write→read-back audit drifted from the in-memory product")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 10L * 1024 * 1024)
@@ -299,8 +299,8 @@ class EngineSurfaceSpec extends SparkSpec {
 
   test("round-6 operators: plan shapes hold (no cartesian, pruned scans, top-k, one Expand)") {
     // eq66/eq75 blocking self-joins must stay equi-joins on the block key
-    for (q <- Seq(pipeline.Dedup.sortedNeighborhood(spark, Sf),
-                  pipeline.Dedup.editLinkage(spark, Sf))) {
+    for (q <- Seq(SparkEntry.queries("eq66_sorted_neighborhood")(spark, Sf),
+                  SparkEntry.queries("eq75_edit_linkage")(spark, Sf))) {
       val plan = q.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), s"cartesian in:\n$plan")
       // the rank-distance predicate must ride a hash join, not a
@@ -316,7 +316,7 @@ class EngineSurfaceSpec extends SparkSpec {
     assert(!g.contains("vec_id"), "gram scan must not read vec_id")
     // eq73: trigram mining is a window + TakeOrderedAndProject, never a
     // per-user collect
-    val p = pipeline.EventOps.sessionPaths(spark, Sf)
+    val p = SparkEntry.queries("eq73_session_paths")(spark, Sf)
       .queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject") && p.contains("Window"))
     assert(!p.contains("collect_list"), "paths must not materialize per-user arrays")
@@ -326,7 +326,7 @@ class EngineSurfaceSpec extends SparkSpec {
     assert("Expand".r.findAllIn(gs).length == 1, s"expected one Expand:\n$gs")
     // eq64: both SCD windows share one user_id partitioning — exactly one
     // exchange hashpartitioning(user_id)
-    val scd = pipeline.EventOps.scd2Tiers(spark, Sf)
+    val scd = SparkEntry.queries("eq64_scd2_intervals")(spark, Sf)
       .queryExecution.executedPlan.toString
     val userExchanges = "hashpartitioning\\(user_id".r.findAllIn(scd).length
     assert(userExchanges == 1, s"expected one user_id exchange, got $userExchanges:\n$scd")
@@ -336,39 +336,39 @@ class EngineSurfaceSpec extends SparkSpec {
     // eq90/eq92: token/shingle-key hash joins only (eq90's one
     // BroadcastNestedLoopJoin is the deliberate 1-row vocab-scalar cross
     // join — the eq47 pattern — so only cartesians are banned here)
-    for (q <- Seq(pipeline.TextAnalysis.bigramSurprise(spark, Sf),
-                  pipeline.TextAnalysis.dupSpans(spark, Sf))) {
+    for (q <- Seq(SparkEntry.queries("eq90_bigram_surprise")(spark, Sf),
+                  SparkEntry.queries("eq92_dup_spans")(spark, Sf))) {
       val plan = q.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), s"cartesian in:\n$plan")
     }
     // eq92 carries no scalar join at all — full strictness there
-    val ds = pipeline.TextAnalysis.dupSpans(spark, Sf)
+    val ds = SparkEntry.queries("eq92_dup_spans")(spark, Sf)
       .queryExecution.executedPlan.toString
     assert(!ds.contains("BroadcastNestedLoopJoin"), s"nested loop in:\n$ds")
     // eq90's cut is a top-k, never a global sort
-    val bs = pipeline.TextAnalysis.bigramSurprise(spark, Sf)
+    val bs = SparkEntry.queries("eq90_bigram_surprise")(spark, Sf)
       .queryExecution.executedPlan.toString
     assert(bs.contains("TakeOrderedAndProject"), s"top-k missing:\n$bs")
     // eq94: the ×32 replica fan-out is a generator (explode), and the
     // replica roll-up is ONE b-keyed exchange before the 32-row final
-    val bc = pipeline.EventOps.bootstrapCi(spark, Sf)
+    val bc = SparkEntry.queries("eq94_bootstrap_ci")(spark, Sf)
       .queryExecution.executedPlan.toString
     assert(bc.contains("Generate"), s"replica explode missing:\n$bc")
     assert(!bc.contains("CartesianProduct"), s"cartesian in:\n$bc")
     // eq98: the per-type bounds frame joins back by broadcast — never a
     // shuffle of the fact for a 5-row bounds side
-    val wm = star.AggSurface.winsorizedMeans(spark, Sf)
+    val wm = SparkEntry.queries("eq98_winsorized_means")(spark, Sf)
       .queryExecution.executedPlan.toString
     assert(wm.contains("BroadcastHashJoin"), s"bounds join not broadcast:\n$wm")
     // eq97: triangle joins stay equi-joins on the checkpointed edge list
     // (the three 1-row stat frames meet in bounded scalar cross joins, so
     // only unbounded cartesians are banned)
-    val gc = pipeline.Dedup.graphClustering(spark, Sf)
+    val gc = SparkEntry.queries("eq97_graph_clustering")(spark, Sf)
       .queryExecution.executedPlan.toString
     assert(!gc.contains("CartesianProduct"), s"cartesian triangle join:\n$gc")
     // eq91: the five regression moments are ONE aggregate pass over the
     // monthly roll-up — no window, no second fact scan
-    val ts = star.StarQueries.trendSlopes(spark, Sf)
+    val ts = SparkEntry.queries("eq91_trend_slopes")(spark, Sf)
       .queryExecution.executedPlan.toString
     assert(!ts.contains("Window"), s"unexpected window in OLS plan:\n$ts")
   }
@@ -384,20 +384,20 @@ class EngineSurfaceSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(scoring.contains("BroadcastHashJoin"),
       s"prototype join not broadcast:\n$scoring")
-    for (q <- Seq(pipeline.Similarity.centroidConfusion(spark, Sf),
-                  pipeline.Similarity.bitextMine(spark, Sf))) {
+    for (q <- Seq(SparkEntry.queries("eq105_centroid_confusion")(spark, Sf),
+                  SparkEntry.queries("eq107_bitext_mining")(spark, Sf))) {
       val plan = q.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), s"cartesian in:\n$plan")
       assert(!plan.contains("BroadcastNestedLoopJoin"), s"nested loop in:\n$plan")
     }
     // eq106: the 5-row rate frame joins the corpus by broadcast and the
     // membership test is a map-side filter — no sort-merge join anywhere
-    val tm = pipeline.CorpusOps.temperatureMix(spark, Sf)
+    val tm = SparkEntry.queries("eq106_temperature_mix")(spark, Sf)
       .queryExecution.executedPlan.toString
     assert(tm.contains("BroadcastHashJoin"), s"rate join not broadcast:\n$tm")
     assert(!tm.contains("SortMergeJoin"), s"sort-merge of a 5-row side:\n$tm")
     // eq103/eq108: single-pass shapes — no join at all in either plan
-    for (q <- Seq(pipeline.EventOps.qualityGates(spark, Sf),
+    for (q <- Seq(SparkEntry.queries("eq103_quality_gates")(spark, Sf),
                   pipeline.TextAnalysis.piiScrub(spark, Sf))) {
       val plan = q.queryExecution.executedPlan.toString
       assert(!plan.contains("Join"), s"unexpected join in single-pass op:\n$plan")

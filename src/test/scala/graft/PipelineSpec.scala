@@ -330,7 +330,7 @@ class PipelineSpec extends SparkSpec {
   test("minhash-LSH pairs are a subset of exact pairs and recall all high-sim pairs (sf0.001)") {
     val exact = Dedup.jaccardPairs(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Double]("jaccard")).toMap
-    val lsh = Dedup.minhashLshPairs(spark, Sf).collect()
+    val lsh = SparkEntry.queries("x1_minhash_lsh_pairs")(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Double]("jaccard")).toMap
     // verified candidates can never contain a non-pair (exact verify step)
     lsh.foreach { case (k, j) => assert(exact.contains(k) && exact(k) == j) }
@@ -474,7 +474,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("bigram surprise: ranking ascends, cut is 20, single-token docs drop (sf0.001)") {
-    val rows = TextAnalysis.bigramSurprise(spark, Sf).collect()
+    val rows = SparkEntry.queries("eq90_bigram_surprise")(spark, Sf).collect()
     assert(rows.length == 20)
     val avgs = rows.map(_.getAs[Double]("avg_logprob"))
     assert(avgs.zip(avgs.tail).forall { case (a, b) => a <= b },
@@ -496,7 +496,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("quality quantile norm: per-source ranks span [0,1]; keep is the top half per source") {
-    val rows = TextAnalysis.qualityQuantileNorm(spark, Sf).collect()
+    val rows = SparkEntry.queries("eq93_quality_quantile_norm")(spark, Sf).collect()
     val bySource = rows.groupBy(_.getString(1))
     bySource.foreach { case (_, rs) =>
       val norms = rs.map(_.getAs[Double]("q_norm"))
@@ -571,7 +571,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("token budget: Hamilton apportionment is exact and exhausts the budget") {
-    val out = graft.pipeline.CorpusOps.tokenBudget(spark, Sf).collect()
+    val out = SparkEntry.queries("eq101_token_budget")(spark, Sf).collect()
     assert(out.map(_.getAs[Long]("alloc_tokens")).sum ==
       graft.pipeline.CorpusOps.BudgetTokens, "allocation must exhaust the budget exactly")
     // literal two-source corpus: counts 1 and 2, B=10^6, C=3 -> bases
@@ -621,7 +621,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("minhash estimate error: identical docs estimate 1.0; errors inside the sampling bound (sf0.001)") {
-    val rows = Dedup.minhashEstError(spark, Sf).collect()
+    val rows = SparkEntry.queries("x23_minhash_est_error")(spark, Sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (jac, est, nAgree, err) = (r.getDouble(2), r.getDouble(3), r.getLong(4), r.getDouble(5))
@@ -771,7 +771,7 @@ class PipelineSpec extends SparkSpec {
 
   test("hash split: partitions the corpus; assignment is a pure function of text") {
     val total = graft.Tables.load(spark, Sf, "documents").count()
-    val splits = TextAnalysis.hashSplit(spark, Sf).collect()
+    val splits = SparkEntry.queries("eq27_hash_split")(spark, Sf).collect()
     assert(splits.map(_.getAs[Long]("n_docs")).sum == total)
     // duplicate texts always co-locate (same split) regardless of doc_id
     val docs = docsDf(Seq(
@@ -782,7 +782,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("contamination: ratios in [0,1], bounded by shingle counts, covers every shingled test doc") {
-    val r = TextAnalysis.contamination(spark, Sf).collect()
+    val r = SparkEntry.queries("eq29_contamination")(spark, Sf).collect()
     assert(r.nonEmpty)
     r.foreach { row =>
       val n = row.getAs[Long]("n_contaminated")
@@ -802,14 +802,14 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("decontam blast agrees with eq29 leak counts; touch counts bounded by the train split") {
-    val blast = TextAnalysis.decontamBlast(spark, Sf).collect()
+    val blast = SparkEntry.queries("eq122_decontam_blast")(spark, Sf).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_leaked_shingles"), r.getAs[Long]("n_train_docs_hit"),
           r.getAs[Long]("max_train_df"))).toMap
     assert(blast.nonEmpty)
     // same leaked-shingle definition as eq29: distinct test-doc shingles
     // found in the train vocabulary
-    val eq29 = TextAnalysis.contamination(spark, Sf).collect()
+    val eq29 = SparkEntry.queries("eq29_contamination")(spark, Sf).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_contaminated")).toMap
     val nTrain = graft.Tables.load(spark, Sf, "documents")
       .withColumn("bucket", graft.functions.Md5Expressions.md5_key28(col("text")) % 100)
@@ -3001,7 +3001,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("centroid affinity: all unordered label pairs, cosines in [-1, 1] (sf0.001)") {
-    val out = Similarity.centroidAffinity(spark, Sf).collect()
+    val out = SparkEntry.queries("eq52_centroid_affinity")(spark, Sf).collect()
     val labels = Tables.load(spark, Sf, "embeddings")
       .select("label").distinct().count().toInt
     assert(out.length == labels * (labels - 1) / 2)
@@ -3494,7 +3494,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("pagerank on sf0.001: ranks bounded below by the damping floor, top-20 cut") {
-    val r = Dedup.pairGraphPagerank(spark, Sf).collect()
+    val r = SparkEntry.queries("eq61_pair_pagerank")(spark, Sf).collect()
     assert(r.nonEmpty && r.length <= 20)
     r.foreach { row =>
       assert(row.getLong(1) >= 1L, "graph nodes have at least one neighbor")
@@ -3552,7 +3552,7 @@ class PipelineSpec extends SparkSpec {
     }
     // real data: the z-order layout must open no more files per point
     // probe than arrival order, with tighter user-dimension zone maps
-    val real = EventOps.zorderLayout(spark, Sf).collect()
+    val real = SparkEntry.queries("eq114_zorder_layout")(spark, Sf).collect()
       .map(r => r.getString(0) -> r).toMap
     val (zo, lin) = (real("zorder"), real("linear"))
     assert(zo.getLong(2) == lin.getLong(2), "layouts must conserve rows")
@@ -3855,14 +3855,14 @@ class PipelineSpec extends SparkSpec {
     Dedup.clearDerivedCaches()
     val p0 = Dedup.pairTableMisses
     val b0 = TextAnalysis.bpeLearnMisses
-    val funnel = Curation.curationPipeline(spark, Sf).collect()
+    val funnel = SparkEntry.queries("eq136_curation_pipeline")(spark, Sf).collect()
     assert(Dedup.pairTableMisses == p0 + 1,
       s"pair table mined ${Dedup.pairTableMisses - p0} times across the chain")
     assert(TextAnalysis.bpeLearnMisses == b0 + 1,
       s"BPE vocabulary mined ${TextAnalysis.bpeLearnMisses - b0} times across the chain")
-    Curation.curationPipeline(spark, Sf).collect() // full re-run: zero re-mining
+    SparkEntry.queries("eq136_curation_pipeline")(spark, Sf).collect() // full re-run: zero re-mining
     Dedup.jaccardPairs(spark, Sf).count() // standalone eq12 reads the same artifact
-    TextAnalysis.bpeEncode(spark, Sf).count() // standalone eq129 likewise
+    SparkEntry.queries("eq129_bpe_encode")(spark, Sf).count() // standalone eq129 likewise
     assert(Dedup.pairTableMisses == p0 + 1 && TextAnalysis.bpeLearnMisses == b0 + 1,
       "re-runs and standalone queries must reuse the chain's artifacts")
 
@@ -3899,12 +3899,12 @@ class PipelineSpec extends SparkSpec {
     Dedup.clearDerivedCaches()
     val p0 = Dedup.pairTableMisses
     val b0 = TextAnalysis.bpeLearnMisses
-    val funnel = Curation.incrementalCuration(spark, Sf).collect()
+    val funnel = SparkEntry.queries("eq137_incremental_curation")(spark, Sf).collect()
     assert(Dedup.pairTableMisses == p0 + 2,
       s"expected old-chain + delta mining passes, got ${Dedup.pairTableMisses - p0}")
     assert(TextAnalysis.bpeLearnMisses == b0 + 1,
       s"expected one old-snapshot vocabulary, got ${TextAnalysis.bpeLearnMisses - b0}")
-    Curation.incrementalCuration(spark, Sf).collect() // re-run: zero re-mining
+    SparkEntry.queries("eq137_incremental_curation")(spark, Sf).collect() // re-run: zero re-mining
     assert(Dedup.pairTableMisses == p0 + 2 && TextAnalysis.bpeLearnMisses == b0 + 1,
       "a re-run of the incremental pipeline must re-mine nothing")
 
@@ -3942,11 +3942,11 @@ class PipelineSpec extends SparkSpec {
     // chains: stage 2 (exact dedup) equals eq11's total survivors; stage 1
     // equals the corpus row count; stage 3 equals the distinct-cluster
     // count over stage-2 survivors per eq26's labels (plus singletons)
-    val funnel = Curation.curationPipeline(spark, Sf).collect()
+    val funnel = SparkEntry.queries("eq136_curation_pipeline")(spark, Sf).collect()
       .map(r => r.getString(1) -> r.getLong(2)).toMap
     val docs = Tables.load(spark, Sf, "documents")
     assert(funnel("ingest") == docs.count())
-    val eq11Total = Dedup.dedupKeepFirst(spark, Sf)
+    val eq11Total = SparkEntry.queries("eq11_dedup_keep_first")(spark, Sf)
       .agg(sum(col("n_kept"))).head().getLong(0)
     assert(funnel("exact_dedup") == eq11Total,
       s"chain stage 2 ${funnel("exact_dedup")} != eq11 total $eq11Total")
@@ -4084,10 +4084,10 @@ class PipelineSpec extends SparkSpec {
     // the materialized labels.
     Dedup.clearDerivedCaches()
     val l0 = Dedup.labelsMisses
-    Dedup.neardupClusters(spark, Sf).collect()
-    Dedup.clusterReps(spark, Sf).collect()
-    Dedup.clusterSplit(spark, Sf).collect()
-    Curation.curationPipeline(spark, Sf).collect()
+    SparkEntry.queries("eq26_neardup_clusters")(spark, Sf).collect()
+    SparkEntry.queries("eq84_cluster_reps")(spark, Sf).collect()
+    SparkEntry.queries("eq131_cluster_split")(spark, Sf).collect()
+    SparkEntry.queries("eq136_curation_pipeline")(spark, Sf).collect()
     assert(Dedup.labelsMisses == l0 + 1,
       s"labels mined ${Dedup.labelsMisses - l0} times across four consumers")
   }

@@ -89,7 +89,7 @@ class StarQueriesSpec extends SparkSpec {
   }
 
   test("eq87: PSI is exactly 0 on identical halves, non-negative on the fixture") {
-    val rows = graft.star.AggSurface.psiDrift(spark, Sf).collect()
+    val rows = SparkEntry.queries("eq87_psi_drift")(spark, Sf).collect()
     rows.foreach { r =>
       assert(r.getDouble(2) >= 0.0, s"PSI must be non-negative: $r")
       assert(r.getLong(1) >= 1 && r.getLong(1) <= 10)

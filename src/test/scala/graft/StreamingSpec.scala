@@ -214,7 +214,7 @@ class StreamingSpec extends SparkSpec {
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val batch = EventOps.sessionize(spark, Sf).collect()
+    val batch = SparkEntry.queries("eq5_sessionize")(spark, Sf).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(sw == batch)
   }

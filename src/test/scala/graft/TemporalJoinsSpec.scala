@@ -30,7 +30,7 @@ class TemporalJoinsSpec extends SparkSpec {
   }
 
   test("range pairs: bucket-trick equi-join finds each qualifying pair exactly once") {
-    val got = TemporalJoins.rangePairsPerUser(spark, Sf).collect()
+    val got = SparkEntry.queries("eq19_range_pairs")(spark, Sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // cross-check against the direct (quadratic) formulation on sf0.001
     import org.apache.spark.sql.functions._
