@@ -8,7 +8,7 @@ package graft
   * cache, parquet footers), then THREE timed passes per query; the reported
   * per-query number is the MEDIAN of the three, so one OS/VM contention
   * window mid-run cannot put a block of queries past their recorded
-  * baseline (the round-6 failure mode). Each query is forced with a
+  * baseline. Each query is forced with a
   * noop-sink write — unlike `count()`, that cannot let Catalyst prune the
   * projected columns away, so the timing covers the full materialized
   * result.
@@ -20,8 +20,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = Harness.select(args.headOption)
-    // Spill-rehearsal knob (VERDICT r11 task 7): the 2g-heap run recorded
-    // zero spill everywhere because the working sets fit; shrinking the
+    // Spill-rehearsal knob: a 2g-heap run records zero spill everywhere
+    // because the working sets fit; shrinking the
     // unified-memory pool (e.g. SPARK_GRAFT_MEM_FRACTION=0.05 on a 2g
     // heap) forces the UnsafeExternalSorter spill path so the work-mass
     // meter's spill column is proven against a nonzero observation.
@@ -39,7 +39,7 @@ object Bench {
     // The one-time materialization cost below (pdv view + Jaccard pair
     // table) is excluded from every per-query figure by design — it is the
     // production materialize-once shape — but must stay auditable, so it is
-    // timed and emitted as "setup_sec" in the JSON (ADVICE r8).
+    // timed and emitted as "setup_sec" in the JSON.
     val setupT0 = System.nanoTime()
     val pdv = Tables.pdv(spark, sfDir).cache()
     pdv.count()
@@ -47,20 +47,20 @@ object Bench {
     // Same CacheManager-substitution trick for the shingle→PPJoin pair
     // frame: eq12/eq26/eq49/eq61/eq84/eq99 all compose Dedup.jaccardPairsDf
     // over the same documents scan, and each was recomputing the full
-    // prefix-filtered similarity join (~4-6 s of the bench total at sf0.1,
-    // VERDICT r7 task 7). One materialization serves the whole family —
+    // prefix-filtered similarity join (~4-6 s of the bench total at sf0.1).
+    // One materialization serves the whole family —
     // exactly what a production corpus pipeline does with its pair table.
     // (The oracle-checked Verify path stays cache-free.)
     val pairs = graft.pipeline.Dedup.jaccardPairs(spark, sfDir).cache()
     pairs.count()
-    // Prime the shared BPE learn loop (r9): eq126 reports the merge table
+    // Prime the shared BPE learn loop: eq126 reports the merge table
     // and eq129 encodes with it off one memoized mining pass — warm it here
     // so both queries measure their read path and the mining cost lands in
     // setup_sec where it is auditable.
     graft.pipeline.TextAnalysis.bpeTrain(spark, sfDir).count()
     val setupSec = (System.nanoTime() - setupT0) / 1e9
 
-    // Work-mass meter (VERDICT r10 task 2): wall-clock at local[32] is
+    // Work-mass meter: wall-clock at local[32] is
     // contention-noise-bound; shuffle/spill/peak-memory bytes are
     // deterministic per plan, so recording them per query makes every
     // future "contention or regression?" a one-line diff.
@@ -80,7 +80,7 @@ object Bench {
       }
       // a failed pass's PARTIAL shuffle/spill bytes are not a plan's
       // deterministic work mass — discard them rather than letting the
-      // max-fold report them as such (ADVICE r11)
+      // max-fold report them as such
       (sec, if (sec < 0) WorkMass.zero else work)
     }
 
@@ -103,14 +103,14 @@ object Bench {
     val wm = results.map { case (k, _, w) => "\"" + k + "\":" + w.json }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    // interpolated PATHS are escaped (ADVICE r15): a quote or backslash in
+    // interpolated PATHS are escaped: a quote or backslash in
     // sfDir / the results-file path would break the very parse the JSON
     // record exists to guarantee
     import Harness.jsonEsc
     val json = s"""{"metric":"total","value":$total,"unit":"sec","setup_sec":$setupSec,"queries":$qs,"work":$wm,"sf":"${jsonEsc(sfDir)}"}"""
     println(json)
-    // Optional file sinks (the stdout JSON line has been truncated by
-    // capture before, ADVICE r7): SPARK_GRAFT_BENCH_OUT names the file;
+    // Optional file sinks (a captured stdout JSON line can be truncated):
+    // SPARK_GRAFT_BENCH_OUT names the file;
     // SPARK_GRAFT_ROUND=N writes the canonical BENCH_rNN.json slot, for a
     // full run only. Nothing is written without one of them.
     def sink(path: => String): Option[String] =
@@ -129,14 +129,13 @@ object Bench {
       else sys.env.get("SPARK_GRAFT_ROUND")
         .flatMap(r => sink(f"BENCH_r${r.toInt}%02d.json"))
     spark.stop()
-    // LAST stdout line, marker-prefixed and COMPACT (VERDICT r15 task 3):
-    // the driver tails stdout into a bounded buffer, and the r14/r15
-    // marker still carried the full 194-entry per-query map (~6 KB) —
-    // truncated head-first, so the driver's `parsed` stayed null three
-    // rounds running. The marker now carries ONLY the scalars and a
-    // pointer to the full record file (where the per-query map and work
-    // maps already live); ~200 bytes fits any sane tail buffer. Printed
-    // after spark.stop() so nothing can follow it.
+    // LAST stdout line, marker-prefixed and COMPACT: a caller that tails
+    // stdout into a bounded buffer truncates head-first, and a marker
+    // carrying the full per-query map (~6 KB) would not parse. The marker
+    // carries ONLY the scalars and a pointer to the full record file
+    // (where the per-query map and work maps live); ~200 bytes fits any
+    // sane tail buffer. Printed after spark.stop() so nothing can follow
+    // it.
     val fileRef = (roundFile orElse outFile)
       .map(p => s""","results_file":"${jsonEsc(p)}"""").getOrElse("")
     println(s"""BENCH_JSON: {"metric":"total","value":$total,"unit":"sec","n":${results.size},"setup_sec":$setupSec,"sf":"${jsonEsc(sfDir)}"$fileRef}""")

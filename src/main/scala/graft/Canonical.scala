@@ -36,7 +36,7 @@ object Canonical {
 
   def hash(df: DataFrame): String = sha256(serialize(df))
 
-  /** Presentation-sort elision (VERDICT r8 task 7). Most declared queries
+  /** Presentation-sort elision. Most declared queries
     * end in an `orderBy` that exists ONLY so the driver's hash compare and
     * the golden hashes see a canonical row order — at 100 TB those global
     * sorts (an extra rangepartitioning exchange + full sort of the output)
@@ -48,8 +48,8 @@ object Canonical {
     * canonical order. Top-k queries do NOT use this — their
     * `orderBy+limit` is semantics, not presentation.
     *
-    * The toggle is a per-SESSION runtime conf, not a JVM global (VERDICT
-    * r9 task 7): a concurrent server hands each request its own
+    * The toggle is a per-SESSION runtime conf, not a JVM global: a
+    * concurrent server hands each request its own
     * `spark.newSession()` clone and flips the key there, so one request
     * serving production plans cannot race another serving canonical ones
     * — there is no shared mutable state in the canonicalization path. */

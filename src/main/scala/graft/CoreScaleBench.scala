@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Core-scaling rehearsal (r17, VERDICT r16 task 6): the sf0.1 bench is
+/** Core-scaling rehearsal: the sf0.1 bench is
   * fixed-cost dominated (planning + 2–6 small jobs per query), so its
   * 8-vs-32-core ratios sit at ~1 and demonstrate nothing about parallel
   * speedup — SCALEBENCH pins the WORK growth, this pins the SPEEDUP. The

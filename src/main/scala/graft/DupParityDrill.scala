@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Degenerate-corpus parity drill (round 10): the driver fixtures contain
+/** Degenerate-corpus parity drill: the driver fixtures contain
   * ZERO exact duplicates and no document under 3 tokens (verified against
   * sf0.001/sf0.01), so the correctness gate has never exercised the
   * exact-dedup drop path, shingle-free short documents, or the
@@ -14,9 +14,8 @@ import org.apache.spark.sql.functions._
   * and copies the remaining sf0.001 base tables verbatim — so ALL
   * declared queries run against the dir — then dumps them with
   * [[Verify.dump]] (fixture preflight metadata and the full oracle map
-  * included); `tools/parity.py <fixtureDir> <outDir>`
-  * closes the loop in DuckDB. Run per round; results in TESTRUN_r{N}.md.
-  * Round-10 findings fixed: the zero-norm ANSI cosine crash
+  * included); `tools/parity.py <fixtureDir> <outDir>` closes the loop in
+  * DuckDB. Findings it pins: the zero-norm ANSI cosine crash
   * ([[graft.pipeline.Similarity.safeDiv]]) and the eq113 Spearman crash
   * on a single-document language slice (zero rank variance).
   *
@@ -109,7 +108,7 @@ object DupParityDrill {
           case 5 => "[1,2,3]"
           case 6 => """{"k": 87, "extra": true}"""
           case 7 => """{"m": 5}"""
-          // PRESENT-but-non-numeric $.m (ADVICE r10): valid JSON whose m
+          // PRESENT-but-non-numeric $.m: valid JSON whose m
           // cannot cast to long — plain variant_get would ANSI-crash eq130
           // while the DuckDB twin answers; must count as missing/null
           case _ => """{"m": "xyz"}"""
@@ -185,10 +184,10 @@ object DupParityDrill {
       .withColumn("n_chars", length(col("text")).cast("long"))
   }
 
-  /** Hostile star slices (VERDICT r10 task 7): the r10 drill hardened
-    * documents/embeddings/events while the star tables ran verbatim.
-    * Three degenerate shapes the driver fixtures never produce, derived
-    * from the donor tables so schemas and the remaining mass stay real:
+  /** Hostile star slices: beside the hostile documents/embeddings/events,
+    * the star tables carry three degenerate shapes the driver fixtures
+    * never produce, derived from the donor tables so schemas and the
+    * remaining mass stay real:
     *
     *  - the retail surface's queried category (`RetailQueries.Cat` =
     *    STANDARD) is ABSENT from part — every retail mirror runs over an
@@ -242,7 +241,7 @@ object DupParityDrill {
     writeTable(fixture(spark), "documents")
     writeTable(embFixture(spark), "embeddings")
     writeTable(eventsFixture(spark), "events")
-    // star surface (r11): lineitem/part carry the hostile slices; the
+    // star surface: lineitem/part carry the hostile slices; the
     // remaining base tables come from sf0.001 verbatim, so EVERY declared
     // query (retail/events/star included) runs against this dir — the
     // drill is a full-surface degenerate sweep, not just the text family

@@ -4054,7 +4054,7 @@ object Oracles {
 
     // x22: the streaming session_window operator driven in batch — eq5's
     // gaps-and-islands boundary (STRICTLY > 30 min: session_window merges
-    // at exactly last+gap, r10 boundary drill), session end = last event
+    // at exactly last+gap), session end = last event
     // + gap, matching Spark's session windows.
     "x22_session_window_batch" ->
       """WITH flags AS (
@@ -4256,17 +4256,16 @@ object Oracles {
     * the old stop list restored, the hash set unioned. Matching it
     * proves advance(state, delta) ≡ state(merged) — the induction step
     * that makes any number of successive delta ingests correct. */
-  /** DuckDB CTE-materialization hints (VERDICT r12 task 1, the "profile
-    * the slowest oracles and cut obvious waste" half): DuckDB 1.0 INLINES
-    * every CTE reference, so an oracle that mentions the signature frame
-    * `s` 33 times recomputes the shingle→minhash chain 33 times — the
-    * eq144 scratch-rebuild oracle ran 201 s at sf0.001 and was the
-    * plausible driver-timeout cause behind the empty CORRECTNESS_r11.
-    * Rewriting the SHARED chain CTEs to `AS MATERIALIZED` (compute once,
-    * reuse — exactly the engine's own PlanMemo posture) takes it to
-    * 0.4 s with bit-identical output. Names listed here are the chain
-    * stages referenced more than once across the eq104/eq136/eq137
-    * families; recursive CTEs (o_reach/d_reach/v1..vN) are left alone. */
+  /** DuckDB CTE-materialization hints: DuckDB 1.0 INLINES every CTE
+    * reference, so an oracle that mentions the signature frame `s` 33
+    * times recomputes the shingle→minhash chain 33 times — the eq144
+    * scratch-rebuild oracle ran 201 s at sf0.001, long enough to time out
+    * a parity run. Rewriting the SHARED chain CTEs to `AS MATERIALIZED`
+    * (compute once, reuse — exactly the engine's own PlanMemo posture)
+    * takes it to 0.4 s with bit-identical output. Names listed here are
+    * the chain stages referenced more than once across the
+    * eq104/eq136/eq137 families; recursive CTEs (o_reach/d_reach/v1..vN)
+    * are left alone. */
   private val SharedCtes = Seq(
     "toks", "shingled", "s", "xx", "mins", "keys",       // minhash chain
     "kk", "cand", "ver", "j",                            // verified pairs
@@ -4276,7 +4275,7 @@ object Oracles {
   /** Per-CTE rewrite sites in one oracle string — the [[materializeShared]]
     * fold makes exactly this many substitutions. Exposed so the drift pin
     * in OraclesGuardSpec can assert the FULL per-CTE substitution map
-    * against a recorded constant (ADVICE r12/r13): a future pipeline
+    * against a recorded constant: a future pipeline
     * oracle that happens to define an unrelated CTE named `s` or `j`
     * would otherwise pick up a MATERIALIZED hint silently. */
   private[graft] def sharedCteHits(sql: String): Map[String, Int] =
@@ -4288,7 +4287,7 @@ object Oracles {
 
   private def materializeShared(sql: String): String =
     SharedCtes.foldLeft(sql) { (q, c) =>
-      // fail-loud rewrite guard (ADVICE r12): `NAME AS (` at a CTE
+      // fail-loud rewrite guard: `NAME AS (` at a CTE
       // definition site gets the MATERIALIZED hint — semantics-neutral
       // wherever it lands on real SQL (same-named CTEs in nested WITH
       // scopes included) — but a hit INSIDE a string literal would
@@ -4466,7 +4465,7 @@ object Oracles {
           |UNION ALL SELECT 'manifest_rows', 3::BIGINT
           |UNION ALL SELECT 'replay_skipped', 1::BIGINT
           |ORDER BY item""".stripMargin)) +
-      // eq152: the INCREMENTAL manifest checkpoint (r14) — eq150's
+      // eq152: the INCREMENTAL manifest checkpoint — eq150's
       // committed state verbatim (ingest → fold; partial merges must not
       // change a row any more than the full one may), with the drain
       // trajectory pinned: two maxFiles=2 calls take the three one-row
@@ -4489,7 +4488,7 @@ object Oracles {
           |UNION ALL SELECT 'manifest_rows', 3::BIGINT
           |UNION ALL SELECT 'replay_skipped', 1::BIGINT
           |ORDER BY item""".stripMargin)) +
-      // eq153 (r15): the GRACED SWEEP — a store-level GC with a grace
+      // eq153: the GRACED SWEEP — a store-level GC with a grace
       // window must not change a row any reader sees, so the state items
       // are eq147's scratch rebuild verbatim; the accounting items pin
       // the contract: exactly the two AGED planted shapes (a foreign
@@ -4511,7 +4510,7 @@ object Oracles {
           |UNION ALL SELECT 'kept_young', 1::BIGINT
           |UNION ALL SELECT 'replay_skipped', 1::BIGINT
           |ORDER BY item""".stripMargin)) +
-      // eq154 (r16): the GRACED VACUUM — a retention GC must not change a
+      // eq154: the GRACED VACUUM — a retention GC must not change a
       // row any reader sees, so the state items are eq147's scratch
       // rebuild verbatim; the accounting items pin the reader-retention
       // contract: nothing drops while the superseding fold is young

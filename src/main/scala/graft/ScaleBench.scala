@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.pipeline.{Dedup, TextAnalysis}
 
-/** Scale-growth rehearsal (VERDICT r9 task 3) — SKEWBENCH proves the dedup
+/** Scale-growth rehearsal — SKEWBENCH proves the dedup
   * family survives HOSTILE fixtures; this proves it GROWS right: the
   * pair-table mining pass, the eq127 chunked-suffix span dedup, and the
   * eq131 cluster-atomic split are each run over deterministic synthetic
@@ -120,7 +120,7 @@ object ScaleBench {
     val cpus = Harness.cpus(32)
     val spark = Harness.session(cpus)
 
-    // Work-mass meter (VERDICT r10 task 2): shuffle/spill bytes are the
+    // Work-mass meter: shuffle/spill bytes are the
     // deterministic scale observable; seconds at these sizes are
     // scheduling-overhead-dominated (see object Scaladoc).
     val meter = WorkMass.meter(spark.sparkContext)
@@ -166,7 +166,7 @@ object ScaleBench {
         Harness.median3(graft.pipeline.Curation.curationPipelineDf(docs).collect())
       val kept = funnel.sortBy(_.getInt(0)).map(_.getLong(2)).last
 
-      // ---- incremental probe (r11): a FIXED 1000-doc delta (identical
+      // ---- incremental probe: a FIXED 1000-doc delta (identical
       // batch at every scale — deltaCorpus is n-independent) probed
       // against the GROWING corpus with the signature index memo WARM,
       // the eq104/eq137 "new crawl arrives" posture. The flagged counts
@@ -194,7 +194,7 @@ object ScaleBench {
       var incFlags = (0L, 0L)
       val incProbeWork = meter { incFlags = probeFlags() }
 
-      // ---- at-rest advance + compaction (r11, eq141/eq142): the state
+      // ---- at-rest advance + compaction (eq141/eq142): the state
       // tables written once per snapshot (setup, untimed), memos cleared
       // (the fresh-restart posture), then the SAME fixed delta ADVANCED
       // into the stored state — the per-ingest maintenance cost, which
@@ -213,7 +213,7 @@ object ScaleBench {
       val compWork = meter(SnapshotStateSink.compact(spark, advSt))
       val compSec = (System.nanoTime() - compT0) / 1e9
 
-      // ---- post-retraction repack (r12, eq145): measured on its own
+      // ---- post-retraction repack (eq145): measured on its own
       // fresh snapshot (the advance above appends into its state's
       // tables in place), a ~1% deletion slice of the indexed corpus,
       // tombstones applied (compact), then the pack layer rebuilt — the
@@ -247,7 +247,7 @@ object ScaleBench {
         (incIndexSec, incProbeSec, incFlags, incIndexWork, incProbeWork),
         (advSec, advWork, compSec, compWork, rpSec, rpWork))
     }
-    // ---- state-log MAINTENANCE horizon (r16, VERDICT r15 task 7):
+    // ---- state-log MAINTENANCE horizon:
     // checkpoint, graced sweep, graced vacuum at 1×/3×/10× the manifest
     // length (2/6/20 committed generations over a fixed 2k-doc base).
     // These are driver-side ops — listings, an mtime walk, a tiny

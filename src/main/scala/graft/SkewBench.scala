@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.pipeline.{CorpusOps, Dedup, EventOps, Similarity}
 
-/** Adversarial-skew rehearsal bench (VERDICT r8 task 2) — the wall-clock
+/** Adversarial-skew rehearsal bench — the wall-clock
   * twin of SkewSpec. Three hostile fixtures, generated deterministically
   * in-memory:
   *
@@ -173,10 +173,10 @@ object SkewBench {
       .select(size(graft.pipeline.TextAnalysis.tokens(col("text"))).as("n"))
       .agg(max("n")).head().getInt(0)
 
-    // ---- 5. clustered doc_ids vs the pack prefix sum (r14) ------------
+    // ---- 5. clustered doc_ids vs the pack prefix sum -----------------
     // 1M ids in a razor-thin band inside a huge range + 2 outliers:
     // level-0 range buckets put ~everything in ONE bucket (the degraded
-    // single-task window the r13 verdict flagged); the refinement loop
+    // single-task window); the refinement loop
     // re-splits it to <= threshold. Control: the same 1M rows with
     // uniform ids (no refinement triggered). Measured: the level-0 max
     // bucket, the refined max bucket vs threshold, and wall-clock of the
@@ -206,7 +206,7 @@ object SkewBench {
     val uniformSec = Harness.median3(
       graft.pipeline.Curation.packPrefixCum(uniform).agg(sum("cum")).collect())
 
-    // ---- 6. duplicate doc_ids vs the pack re-split (r15) --------------
+    // ---- 6. duplicate doc_ids vs the pack re-split -------------------
     // the CONTRACT-VIOLATING corpus: one id owns 300k of 1M rows. A
     // single-VALUE bucket is unsplittable by the range rule (and by any
     // design — the plain window puts an id's tied rows in one partition

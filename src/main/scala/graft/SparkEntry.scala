@@ -8,7 +8,7 @@ import graft.pipeline.{Clustering, CorpusOps, Curation, Dedup, EventOps, Multimo
 import graft.retail.RetailQueries
 import graft.star.{AggSurface, StarQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   * Every entry in `queries` has a matching DuckDB oracle in `oracleSql`
   * (from [[Oracles]]) unless the operator is not SQL-expressible in DuckDB
   * (then the driver records a weaker rows-only check). */

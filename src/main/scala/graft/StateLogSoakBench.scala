@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.{SnapshotStateSink, StateLog}
 
-/** The STATE-LOG SOAK at scale (VERDICT r12 task 5): eq144–eq148 prove
+/** The STATE-LOG SOAK at scale: eq144–eq148 prove
   * the log correct and ScaleSpec pins single operations, but the 100 TB
   * claim the log actually makes is about the TRAJECTORY — per-batch
   * ingest work must stay flat while the committed state underneath it
@@ -14,7 +14,7 @@ import graft.sources.{SnapshotStateSink, StateLog}
   * work mass; SCALEBENCH.md carries the table, ScaleSpec pins the
   * 1×→10× per-batch shuffle ratio in CI.
   *
-  * Shape per scale (r13 close — the full maintenance mix): wrap a
+  * Shape per scale (the full maintenance mix): wrap a
   * finished snapshot of corpus(n) in a log, then four FIXED 400-doc
   * batches through the SELF-CONTAINED ingest (memos cleared before each
   * — the fresh-restart posture, so each batch pays only its own
@@ -64,7 +64,7 @@ object StateLogSoakBench {
         ingests += (((System.nanoTime() - t0) / 1e9, w))
       }
       ingest(0); ingest(1)
-      // manifest CHECKPOINT mid-horizon (r13): one file per committed op
+      // manifest CHECKPOINT mid-horizon: one file per committed op
       // so far; must merge to ONE and cost driver-side file work only
       val ckpt1 = StateLog.checkpointManifest(spark, ref)
       ingest(2)
@@ -73,7 +73,7 @@ object StateLogSoakBench {
         require(StateLog.retractBatch(spark, ref, isDel, 100L),
           "soak retraction must apply")
       }
-      // log-side REPACK right after the retraction (r13) — the production
+      // log-side REPACK right after the retraction — the production
       // order (retract → repack → fold → vacuum): corpus-sized by honest
       // design (the curated membership re-derived from the log's own
       // generations), expected ~linear in n, paid once per retraction
@@ -91,7 +91,7 @@ object StateLogSoakBench {
       StateLog.vacuum(spark, ref)
       val ckpt2 = StateLog.checkpointManifest(spark, ref)
 
-      // EPOCH 2 (VERDICT r13 task 7): release the wrapped snapshot (the
+      // EPOCH 2: release the wrapped snapshot (the
       // genesis store is no longer needed — the fold's cur table carries
       // the corpus), then a SECOND full retraction epoch: retract →
       // caller-supplied repack (post-release, post-vacuum, the log alone

@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.{DedupIndexSink, SnapshotStateSink, StateLog}
 
-/** TRUE two-process commit rehearsal (VERDICT r13 task 6): the claim CAS
-  * is exercised in-process by the two-writer tests with the commit mutex
-  * disabled, but the judge's residual doubt was fair — those writers
-  * still shared one JVM. This drill is driven by
+/** TRUE two-process commit rehearsal: the claim CAS is exercised
+  * in-process by the two-writer tests with the commit mutex disabled, but
+  * those writers still share one JVM. This drill is driven by
   * `tools/two_process_drill.sh`, which launches TWO SEPARATE JVMs (plain
   * `java`, no sbt — each its own SparkSession, its own in-memory catalog,
   * nothing shared but the filesystem) ingesting concurrently into ONE
@@ -122,7 +121,7 @@ object TwoProcessDrill {
   private def randRetract(id: Long): (Int, Int) =
     (5 + (id % 5).toInt, (id % 3).toInt)
 
-  /** RANDOMIZED cross-process walk (r16): the in-process concurrent model
+  /** RANDOMIZED cross-process walk: the in-process concurrent model
     * walk taken onto REAL processes. Each of two JVMs draws a seeded
     * random op per round — ingest, retract, fold, checkpoint, zero-grace
     * vacuum, graced sweep — and races it against whatever the peer drew,
@@ -266,7 +265,7 @@ object TwoProcessDrill {
     spark.stop()
   }
 
-  /** A LIVE AS-OF READER racing a vacuuming peer (VERDICT r15 task 2):
+  /** A LIVE AS-OF READER racing a vacuuming peer:
     * loops a guarded historical read at `gen` (index views + corpus).
     * Legal outcomes per loop: the read RESOLVES, or it surfaces the clean
     * bounded-time-travel error (the peer's graced vacuum dropped the
@@ -334,7 +333,7 @@ object TwoProcessDrill {
     spark.stop()
   }
 
-  /** A FOURTH concurrent process class (VERDICT r14 task 2): GRACED
+  /** A FOURTH concurrent process class: GRACED
     * sweeps in a loop against the two LIVE ingesters. The grace window
     * protects their in-flight attempts (young writes) while the AGED
     * foreign orphan `prep` planted — a crashed attempt from a process no
@@ -360,8 +359,8 @@ object TwoProcessDrill {
   }
 
   /** A THIRD concurrent process class: manifest checkpoints in a loop
-    * against the two live ingesters — the r13 checkpoint-under-live-
-    * committers rehearsal taken cross-process (the checkpoint is safe
+    * against the two live ingesters — the in-process checkpoint-under-
+    * live-committers rehearsal taken cross-process (the checkpoint is safe
     * under live committers BY DESIGN: concurrent appends land as their
     * own files outside the listed set, losers of the read race retry
     * into the no-op; `sweep` is NOT in this loop — it requires foreign

@@ -38,8 +38,8 @@ object Verify {
     // Fixture preflight metadata: the ENGINE's decoded view of the base
     // tables (row counts; events ts range in epoch-micros). The parity
     // harness compares these against the oracle's native read of the same
-    // parquet, so an engine-vs-oracle fixture disagreement — e.g. the r7
-    // ts-unit drift, where every Spark timestamp was 1000× off while
+    // parquet, so an engine-vs-oracle fixture disagreement — e.g. a
+    // ts-unit drift, where every Spark timestamp is 1000× off while
     // DuckDB read the file correctly — fails one explicit preflight check
     // instead of 27 opaque per-query hash mismatches.
     locally {

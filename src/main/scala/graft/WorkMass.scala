@@ -5,9 +5,9 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
-/** Work-MASS capture for the bench harness (VERDICT r10 task 2): at
-  * local[32] wall-clock seconds are scheduling-noise-bound (±15% on the
-  * shared VM, with rotating contention blocks — the eq123/eq10 lesson), so
+/** Work-MASS capture for the bench harness: at local[32] wall-clock
+  * seconds are scheduling-noise-bound (±15% on a shared VM, with rotating
+  * contention blocks), so
   * every "is it contention or a regression?" question needs a re-run to
   * adjudicate. Shuffle bytes, spill bytes, and peak task execution memory
   * are DETERMINISTIC for a deterministic plan: recording them per query
@@ -67,10 +67,10 @@ object WorkMass {
   val zero: WorkMass = WorkMass(0L, 0L, 0L, 0L)
 
   /** One listener per SparkContext, installed on first use and REUSED by
-    * every later [[meter]] call (ADVICE r11: a listener per meter() call
-    * leaked onto the shared context's bus — Bench + ScaleBench + every
-    * ScaleSpec test each added one, all paying accumulation work on every
-    * task-end for the context lifetime). The totals are cumulative and
+    * every later [[meter]] call: a listener per meter() call would leak
+    * onto the shared context's bus — Bench + ScaleBench + every ScaleSpec
+    * test would each add one, all paying accumulation work on every
+    * task-end for the context lifetime. The totals are cumulative and
     * every window is a before/after difference, so sharing is free. */
   private val listeners =
     new java.util.concurrent.ConcurrentHashMap[SparkContext, WorkMassListener]()
@@ -85,7 +85,7 @@ object WorkMass {
       c.addSparkListener(nl)
       // drop the map entry when the context ends, else the static map
       // would strongly retain every stopped SparkContext's whole object
-      // graph for the JVM lifetime (r12 review)
+      // graph for the JVM lifetime
       c.addSparkListener(new SparkListener {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =

@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * hits — yet the column formulations materialize them through
   * `regexp_extract_all` / `regexp_replace` / `split`+`filter`, i.e. a
   * regex engine pass plus array allocation per document per metric. That
-  * was the round-1 bench hot spot (driver bench: eq8 4.9 s, eq7 3.5 s at
+  * was a bench hot spot (eq8 4.9 s, eq7 3.5 s at
   * sf0.1 — 6.6× the next-worst query). Each expression here is one tight
   * byte scan over the UTF-8 payload: no regex, no arrays, no per-element
   * interpretation. Like [[ShingleExpressions]] they are CodegenFallback —

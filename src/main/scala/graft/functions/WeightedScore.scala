@@ -9,15 +9,15 @@ import scala.collection.mutable
   * weighted store score (views.py:33-37) as ONE single-pass exact
   * multi-distinct aggregate.
   *
-  * Functionally redundant with the declarative
-  * `countDistinct×3 + count` + arithmetic (which Catalyst plans via Expand
-  * and is what the oracle-checked queries use) — kept as the worked example
-  * of the engine's custom-aggregation surface: an `Aggregator[Row, BUF,
-  * Double]` with mutable distinct-set buffers, registered with `udaf(...)`
-  * for SQL use. The buffer holds per-group distinct sets, so it is exact;
-  * at 100 TB cardinalities you would swap the sets for HLL sketches and
-  * accept approximation — that trade-off is the reason the oracle queries
-  * stay on the Expand plan.
+  * Functionally redundant with the declarative per-store distinct counts
+  * + arithmetic of `RetailQueries.topMagasins` (the oracle-checked q5) —
+  * kept as the worked example of the engine's custom-aggregation surface:
+  * an `Aggregator[Row, BUF, Double]` with mutable distinct-set buffers,
+  * registered with `udaf(...)` for SQL use, and as an independent
+  * cross-check of q5's scores. The buffer holds per-group distinct sets, so
+  * it is exact; like the declarative form's `collect_set`s, each set is
+  * bounded by a dimension's cardinality (the store's brands, categories or
+  * products), never by the number of fact rows.
   */
 object WeightedScore {
 

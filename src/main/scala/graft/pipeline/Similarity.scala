@@ -32,7 +32,7 @@ object Similarity {
     * denominator is zero, instead of Spark 4's ANSI `DIVIDE_BY_ZERO`
     * crash. A single zero-norm embedding — one failed embedding job row
     * in 100 TB — would otherwise kill the whole cosine family's jobs
-    * (observed on the round-10 degenerate-corpus drill). NULL is the
+    * (observed on the degenerate-corpus drill). NULL is the
     * right value, not 0: "similarity undefined", filtered by every
     * ≥-threshold gate and sorted last by every DESC top-k in BOTH
     * engines (the oracles carry the same guard via `NULLIF`). For

@@ -32,6 +32,17 @@ object RetailQueries {
   val Annee = 1995
   val AsOf  = "1998-09-01"
 
+  /** Exact COUNT(DISTINCT c): the size of the group's set of non-null
+    * values — nulls skipped, 0 on empty input, `bigint` non-nullable, the
+    * same values and schema as `countDistinct`. It plans as one
+    * ObjectHashAggregate pair per grouping: no Expand (one copy of each row
+    * per distinct column) and no second aggregate level with its extra
+    * exchange. Every set here is bounded by a dimension's cardinality
+    * (products per store, stores per category or month, brands per
+    * category), never by the number of fact rows, and the aggregate's
+    * sort-based fallback bounds memory per task. */
+  private def distinctCount(c: Column): Column = size(collect_set(c)).cast("long")
+
   /** `cat` (views.py:10): the category's produits rows. */
   private[graft] def catRows(pdv: DataFrame, cat: String): DataFrame =
     Tables.produitsOf(pdv).filter(col("catid") === cat)
@@ -44,18 +55,18 @@ object RetailQueries {
         col("prodid"), col("catid"), col("fabid"))
       .orderBy("dateid", "prodid", "catid", "fabid")
 
-  /** `mag-cat` (views.py:12): scalar COUNT(DISTINCT) — exact, planned as
-    * partial+final HashAggregate by Catalyst. */
+  /** `mag-cat` (views.py:12): scalar COUNT(DISTINCT), exact; the set holds
+    * at most the category's stores. */
   private[graft] def magCat(pdv: DataFrame, cat: String): DataFrame =
     pdv.filter(col("catid") === cat)
-      .agg(countDistinct(col("magid")).as("total_magasins"))
+      .agg(distinctCount(col("magid")).as("total_magasins"))
 
   def q2(spark: SparkSession, dir: String): DataFrame = magCat(Tables.pdv(spark, dir), Cat)
 
   /** `fab-cat` (views.py:14). */
   private[graft] def fabCat(pdv: DataFrame, cat: String): DataFrame =
     Tables.produitsOf(pdv).filter(col("catid") === cat)
-      .agg(countDistinct(col("fabid")).as("total_fabricants"))
+      .agg(distinctCount(col("fabid")).as("total_fabricants"))
 
   def q3(spark: SparkSession, dir: String): DataFrame = fabCat(Tables.pdv(spark, dir), Cat)
 
@@ -65,7 +76,7 @@ object RetailQueries {
     Tables.produitsOf(pdv)
       .filter(col("catid") === cat && col("dateid").between(debut, fin))
       .groupBy("fabid")
-      .agg(countDistinct(col("prodid")).as("product_count"))
+      .agg(distinctCount(col("prodid")).as("product_count"))
       .agg(avg(col("product_count")).as("avg_products_per_fab"))
 
   /** Q4 — integer counts sum exactly in double, so the average is
@@ -82,18 +93,19 @@ object RetailQueries {
       .limit(n)
 
   /** `top-magasins` (views.py:27-43): per-store multi-COUNT(DISTINCT)
-    * (planned via Expand, exact) + weighted score. The score is rounded to
-    * 6 dp *before* the sort so the top-k cut is decided on identical values
-    * in both engines. */
+    * (exact, one set per store and column, each bounded by the store's
+    * brands, categories or products) + weighted score. The score is rounded
+    * to 6 dp *before* the sort so the top-k cut is decided on identical
+    * values in both engines. */
   private[graft] def topMagasins(pdv: DataFrame, debut: String, fin: String): DataFrame =
     ranked(
       pdv
         .filter(col("dateid").between(debut, fin))
         .groupBy("magid")
         .agg(
-          countDistinct(col("fabid")).as("total_fabricants"),
-          countDistinct(col("catid")).as("total_categories"),
-          countDistinct(col("prodid")).as("total_produits"),
+          distinctCount(col("fabid")).as("total_fabricants"),
+          distinctCount(col("catid")).as("total_categories"),
+          distinctCount(col("prodid")).as("total_produits"),
           count(lit(1)).as("total_ventes")),
       round(
         col("total_fabricants") * 0.1 + col("total_categories") * 0.2 +
@@ -110,8 +122,8 @@ object RetailQueries {
         .filter(col("catid") === cat && col("dateid").between(debut, fin))
         .groupBy("magid")
         .agg(
-          countDistinct(col("fabid")).as("total_fabricants"),
-          countDistinct(col("prodid")).as("total_produits"),
+          distinctCount(col("fabid")).as("total_fabricants"),
+          distinctCount(col("prodid")).as("total_produits"),
           count(lit(1)).as("total_ventes")),
       round(
         col("total_fabricants") * 0.1 + col("total_produits") * 0.3 +
@@ -127,7 +139,7 @@ object RetailQueries {
     pdv
       .filter(col("catid") === cat && year(col("dateid")) === annee)
       .groupBy(date_format(col("dateid"), "yyyy-MM").as("mois"))
-      .agg(countDistinct(col("magid")).as("nbmag"))
+      .agg(distinctCount(col("magid")).as("nbmag"))
       .orderBy("mois")
 
   def q7(spark: SparkSession, dir: String): DataFrame =
@@ -185,8 +197,8 @@ object RetailQueries {
       .join(broadcast(top10.toDF("magid")), Seq("magid"), "left_semi")
       .groupBy("magid")
       .agg(
-        countDistinct(col("fabid")).as("total_fabricants"),
-        countDistinct(col("prodid")).as("total_produits"),
+        distinctCount(col("fabid")).as("total_fabricants"),
+        distinctCount(col("prodid")).as("total_produits"),
         count(lit(1)).as("total_ventes"))
   }
 
@@ -218,7 +230,7 @@ object RetailQueries {
       .filter(col("catid") === cat && col("fabid") === fab)
       .join(broadcast(top10.select("magid")), Seq("magid"), "left_semi")
       .groupBy("magid")
-      .agg(countDistinct(col("prodid")).as("nb_produits_fab"))
+      .agg(distinctCount(col("prodid")).as("nb_produits_fab"))
     // ≤10 rows, read twice (emitted rows + the scalar mean) — materialized
     // so the phase-2 fact aggregate runs once, not once per plan reference
     // (the same two-consumer rule as the funnel's d4/d8 checkpoints)
@@ -262,7 +274,7 @@ object RetailQueries {
       .filter(col("catid") === cat && col("fabid") === fab)
       .join(broadcast(top10.select("magid")), Seq("magid"), "left_semi")
       .groupBy(col("magid"), date_format(col("dateid"), "yyyy-MM").as("mois_annee"))
-      .agg(countDistinct(col("prodid")).as("nb"))
+      .agg(distinctCount(col("prodid")).as("nb"))
     val spine = spark.range(1)
       .select(explode(sequence(
         lit(java.sql.Date.valueOf(debut)),

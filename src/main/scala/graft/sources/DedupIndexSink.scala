@@ -171,8 +171,8 @@ object DedupIndexSink {
     // the stop-key list is computed ONCE here; the meta count derives
     // from the stored keys so the two can never disagree
     val stopCk = stopKeys.localCheckpoint()
-    // four independent tables — written concurrently (r16 optimization,
-    // guide §2.6): stop and meta both read the already-materialized
+    // four independent tables — written concurrently (SinkPar): stop and
+    // meta both read the already-materialized
     // stopCk, so no write depends on another's output
     SinkPar.run(Seq(
       () => hash.write.mode("overwrite")
@@ -278,8 +278,8 @@ object DedupIndexSink {
     * into stopped or newly-hot buckets are physically present, and THIS
     * view is what every probe must read; probing the raw table would
     * resurrect the guarded buckets and diverge from the scratch-rebuilt
-    * state(merged) at the second delta (r11 review finding, pinned by
-    * PipelineSpec's two-advance test). */
+    * state(merged) at the second delta (pinned by PipelineSpec's
+    * two-advance test). */
   def effectiveBandIndex(spark: SparkSession, t: IndexTables): DataFrame = {
     val (_, band, stop, _) = readBack(spark, t)
     val guarded = band.join(broadcast(stop), Seq("band", "band_key"), "left_anti")
@@ -311,8 +311,7 @@ object DedupIndexSink {
     * verdict totals — all read from the AT-REST tables (counts come from
     * the read-back frames, so a lossy round-trip shifts them). Every
     * verdict is present with a 0-fill: a hostile batch may produce no
-    * `near` rows and the frame shape must not change (the r10 drill
-    * lesson). */
+    * `near` rows and the frame shape must not change. */
   private[graft] def audit(docs: DataFrame, isNew: org.apache.spark.sql.Column,
       hashIdx: DataFrame, bandIdx: DataFrame, meta: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._

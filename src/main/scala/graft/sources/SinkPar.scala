@@ -1,7 +1,7 @@
 package graft.sources
 
-/** Bounded driver-side parallelism for INDEPENDENT table writes (r16
-  * optimization round, guide §2.6 "overlap independent jobs"): the state
+/** Bounded driver-side parallelism for INDEPENDENT table writes
+  * ("overlap independent jobs"): the state
   * sinks commit one operation as several parquet tables with no data
   * dependency between them — a delta generation's five layer tables, a
   * snapshot's artifact tables — and writing them sequentially serializes

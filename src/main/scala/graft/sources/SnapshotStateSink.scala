@@ -73,7 +73,7 @@ object SnapshotStateSink {
       tbl
     }
     // the index write and the four artifact writes are independent table
-    // writes off shared memoized frames — overlapped (guide §2.6);
+    // writes off shared memoized frames — overlapped (SinkPar);
     // concurrent first-forcing of a shared memo is safe (the PlanMemo
     // cell serializes the mining, every thread reads the one
     // materialization)
@@ -206,7 +206,7 @@ object SnapshotStateSink {
     val newlyHot = hot.localCheckpoint()
 
     // pack layer: the advanced summary, versioned; written CONCURRENTLY
-    // with the three index appends (guide §2.6 — all four read only
+    // with the three index appends (SinkPar — all four read only
     // pre-materialized checkpoints or frozen tables). The meta
     // re-derivation is the one ordered pair: it reads the stop table
     // AFTER the newlyHot append, so the two stay sequential in one thunk.

@@ -1537,7 +1537,7 @@ object StateLog {
 
     // this attempt's private generation tables (unique names — bound to
     // the log only if the manifest row below commits), written as
-    // CONCURRENT independent jobs (guide §2.6): the
+    // CONCURRENT independent jobs (SinkPar): the
     // five layer tables share no data dependency, so the scheduler
     // back-fills one write's task tail with the next write's tasks
     val tag = attemptTag(s"b$batchId")

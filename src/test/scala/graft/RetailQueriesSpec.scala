@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.ingest.WhitespaceCsv
 import graft.retail.RetailQueries
@@ -48,6 +49,105 @@ class RetailQueriesSpec extends SparkSpec {
       .withColumn("score", round(col("f") * 0.1 + col("c") * 0.2 + col("p") * 0.3 + col("n") * 0.4, 6))
       .orderBy(col("score").desc, col("magid").asc)
     assert(scored.select("magid").as[Long].collect().sameElements(Array(0L, 1L, 2L, 3L)))
+  }
+
+  /** A hostile pdv: a null in each counted column (store 1's product and
+    * brand, store 3's category, two rows' store), duplicate rows, and a
+    * store (2) with a single product. */
+  private lazy val hostilePdv = Seq[(String, Option[Long], Option[String], Option[String], Option[Long])](
+    ("1995-01-10", Some(1L), Some("STANDARD"), Some("Brand#12"), Some(1L)),
+    ("1995-01-10", Some(1L), Some("STANDARD"), Some("Brand#12"), Some(1L)),
+    ("1995-02-03", Some(2L), Some("STANDARD"), Some("Brand#12"), Some(1L)),
+    ("1995-02-03", Some(3L), Some("STANDARD"), Some("Brand#13"), Some(1L)),
+    ("1995-03-01", None,     Some("STANDARD"), Some("Brand#12"), Some(1L)),
+    ("1996-05-05", Some(4L), Some("PROMO"),    None,             Some(1L)),
+    ("1995-01-15", Some(5L), Some("STANDARD"), Some("Brand#12"), Some(2L)),
+    ("1995-01-15", Some(5L), Some("STANDARD"), Some("Brand#12"), Some(2L)),
+    ("1995-02-20", Some(6L), None,             Some("Brand#14"), Some(3L)),
+    ("1995-02-21", Some(7L), Some("STANDARD"), Some("Brand#13"), Some(3L)),
+    ("1995-02-21", Some(1L), Some("STANDARD"), Some("Brand#12"), Some(3L)),
+    ("1995-01-20", Some(8L), Some("STANDARD"), Some("Brand#12"), None),
+    ("1996-01-20", Some(2L), Some("STANDARD"), Some("Brand#12"), None)
+  ).toDF("dateid", "prodid", "catid", "fabid", "magid")
+    .withColumn("dateid", to_date(col("dateid")))
+
+  /** `got` holds `ref`'s rows (as a multiset) under `ref`'s exact schema,
+    * and each of `counts` is a non-nullable bigint there. */
+  private def assertSameAs(what: String, got: DataFrame, ref: DataFrame, counts: String*): Unit = {
+    val g = got.select(ref.columns.map(col).toIndexedSeq: _*)
+    assert(g.schema == ref.schema, s"$what: schema ${g.schema} != ${ref.schema}")
+    counts.foreach { c =>
+      assert(g.schema(c).dataType == LongType && !g.schema(c).nullable, s"$what.$c: ${g.schema(c)}")
+    }
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(g) == rows(ref), s"$what: ${rows(g)} != ${rows(ref)}")
+  }
+
+  test("distinct-count builders equal a countDistinct reference on a hostile frame") {
+    import RetailQueries._
+    val pdv = hostilePdv
+    val (debut, fin, fab) = ("1995-01-01", "1996-12-31", "Brand#12")
+    // "NONE" matches no row: scalars give 0, groupings give no rows
+    for (cat <- Seq("STANDARD", "NONE")) {
+      val inCat = pdv.filter(col("catid") === cat)
+      val inWindow = col("dateid").between(debut, fin)
+      assertSameAs(s"magCat($cat)", magCat(pdv, cat),
+        inCat.agg(countDistinct("magid").as("total_magasins")), "total_magasins")
+      assertSameAs(s"fabCat($cat)", fabCat(pdv, cat),
+        inCat.agg(countDistinct("fabid").as("total_fabricants")), "total_fabricants")
+      assertSameAs(s"avgProdPerFab($cat)", avgProdPerFab(pdv, cat, debut, fin),
+        inCat.filter(inWindow).groupBy("fabid").agg(countDistinct("prodid").as("n"))
+          .agg(avg("n").as("avg_products_per_fab")))
+      assertSameAs(s"topMagasinsCat($cat)", topMagasinsCat(pdv, cat, debut, fin),
+        inCat.filter(inWindow).groupBy("magid").agg(
+          countDistinct("fabid").as("total_fabricants"),
+          countDistinct("prodid").as("total_produits"), count(lit(1)).as("total_ventes")),
+        "total_fabricants", "total_produits", "total_ventes")
+      assertSameAs(s"nbMagCatDate($cat)", nbMagCatDate(pdv, cat, 1995),
+        inCat.filter(year(col("dateid")) === 1995)
+          .groupBy(date_format(col("dateid"), "yyyy-MM").as("mois"))
+          .agg(countDistinct("magid").as("nbmag")), "nbmag")
+      // phase 2 of the composites over stores 1-3 plus one (99) with no rows
+      val top10 = Seq(1L, 2L, 3L, 99L)
+      assertSameAs(s"top1Stats($cat)", top1Stats(pdv, cat, top10),
+        inCat.filter(col("magid").isin(top10: _*)).groupBy("magid").agg(
+          countDistinct("fabid").as("total_fabricants"),
+          countDistinct("prodid").as("total_produits"), count(lit(1)).as("total_ventes")),
+        "total_fabricants", "total_produits", "total_ventes")
+      val top10Rows = Seq(1L -> 3L, 2L -> 1L, 3L -> 4L, 99L -> 2L)
+      val refNb = inCat.filter(col("fabid") === fab && col("magid").isin(top10: _*))
+        .groupBy("magid").agg(countDistinct("prodid").as("nb"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val perStore = avgFabTop10From(pdv, top10Rows, cat, fab)
+      assert(perStore.schema("nb_produits_fab").dataType == LongType &&
+        !perStore.schema("nb_produits_fab").nullable)
+      assert(perStore.select("magid", "nb_produits_fab").as[(Long, Long)].collect().toMap ==
+        top10.map(m => m -> refNb.getOrElse(m, 0L)).toMap, s"avgFabTop10From($cat)")
+      // per month: mean over stores with rows that month and a nonzero total
+      val refMonthly = inCat.filter(col("fabid") === fab && col("magid").isin(top10: _*))
+        .groupBy(col("magid"), date_format(col("dateid"), "yyyy-MM").as("m"))
+        .agg(countDistinct("prodid").as("nb"))
+        .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+      // store 3's zero total is skipped by the means
+      val monthRows = top10Rows.updated(2, 3L -> 0L)
+      val months = scoreSanteMonthsFrom(pdv, monthRows, cat, fab,
+        java.time.LocalDate.parse("1995-01-01"), java.time.LocalDate.parse("1995-06-30"))
+        .select("mois_annee", "avg_percentage").as[(String, Double)].collect()
+      assert(months.map(_._1).toSeq == (1 to 6).map(m => f"1995-$m%02d"))
+      months.foreach { case (m, got) =>
+        val pcts = monthRows.collect { case (mag, tot) if tot != 0 && refMonthly.contains((mag, m)) =>
+          refMonthly((mag, m)).toDouble / tot * 100.0 }
+        val want = if (pcts.isEmpty) 0.0 else pcts.sum / pcts.length
+        assert(math.abs(got - want) < 1e-6, s"scoreSanteMonthsFrom($cat) $m: $got != $want")
+      }
+    }
+    // the second window matches no row
+    for ((d, f) <- Seq((debut, fin), ("2001-01-01", "2001-12-31")))
+      assertSameAs(s"topMagasins($d..$f)", topMagasins(pdv, d, f),
+        pdv.filter(col("dateid").between(d, f)).groupBy("magid").agg(
+          countDistinct("fabid").as("total_fabricants"), countDistinct("catid").as("total_categories"),
+          countDistinct("prodid").as("total_produits"), count(lit(1)).as("total_ventes")),
+        "total_fabricants", "total_categories", "total_produits", "total_ventes")
   }
 
   test("q8: safe ratio never yields null/NaN/Inf and months are sorted") {
