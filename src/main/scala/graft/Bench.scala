@@ -25,6 +25,7 @@ object Bench {
     // unified-memory pool (e.g. SPARK_GRAFT_MEM_FRACTION=0.05 on a 2g
     // heap) forces the UnsafeExternalSorter spill path so the work-mass
     // meter's spill column is proven against a nonzero observation.
+    val tmp = Harness.runTmpDir()
     val spark = Harness.session(Harness.cpus(32),
       sys.env.get("SPARK_GRAFT_MEM_FRACTION").map("spark.memory.fraction" -> _).toSeq: _*)
     // Fail fast on fixture-schema drift (footer reads only)
@@ -128,13 +129,13 @@ object Bench {
       if (names.size < SparkEntry.queries.size) None
       else sys.env.get("SPARK_GRAFT_ROUND")
         .flatMap(r => sink(f"BENCH_r${r.toInt}%02d.json"))
-    spark.stop()
+    Harness.stop(spark, tmp)
     // LAST stdout line, marker-prefixed and COMPACT: a caller that tails
     // stdout into a bounded buffer truncates head-first, and a marker
     // carrying the full per-query map (~6 KB) would not parse. The marker
     // carries ONLY the scalars and a pointer to the full record file
     // (where the per-query map and work maps live); ~200 bytes fits any
-    // sane tail buffer. Printed after spark.stop() so nothing can follow
+    // sane tail buffer. Printed after the session stops so nothing can follow
     // it.
     val fileRef = (roundFile orElse outFile)
       .map(p => s""","results_file":"${jsonEsc(p)}"""").getOrElse("")

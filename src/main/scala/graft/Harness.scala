@@ -1,9 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 
-/** What the driver mains share: the local session, the warm-up +
-  * median-of-3 timer, query-name selection and the JSON string escaper.
+import scala.jdk.CollectionConverters._
+
+/** What the driver mains share: the local session and its per-run temp
+  * dir, the warm-up + median-of-3 timer, query-name selection and the
+  * JSON string escaper.
   * The cluster-deployment session is [[ProdSession]]'s, not this one. */
 object Harness {
 
@@ -24,6 +29,25 @@ object Harness {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Points `java.io.tmpdir` at a fresh directory for this run and
+    * returns it. Call before [[session]]: the state code reads the
+    * property at call time, so every table a run's state drills write
+    * (and Spark's scratch files) lands there, and [[stop]] deletes it —
+    * nothing piles up in the machine's temp dir across runs. */
+  def runTmpDir(): Path = {
+    val dir = Files.createTempDirectory("graft_run_")
+    System.setProperty("java.io.tmpdir", dir.toString)
+    dir
+  }
+
+  /** Stops `spark`, then deletes the run's [[runTmpDir]]. */
+  def stop(spark: SparkSession, tmp: Path): Unit = {
+    spark.stop()
+    val walk = Files.walk(tmp)
+    val paths = try walk.iterator().asScala.toList finally walk.close()
+    paths.reverse.foreach(Files.deleteIfExists) // children before parents
   }
 
   /** Runs `f` once un-timed (warm-up), then three timed times; returns

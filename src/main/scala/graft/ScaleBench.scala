@@ -181,7 +181,8 @@ object ScaleBench {
         val newDocs = union.filter(isNew)
           .select(col("doc_id"), md5(col("text")).as("h"))
         val ex = newDocs
-          .join(broadcast(Dedup.matchedOldHashes(union, isNew)), Seq("h"), "left_semi")
+          .join(broadcast(Dedup.storedMatchedHashes(union.filter(isNew),
+            Dedup.indexBuildFrames(union, isNew)._1)), Seq("h"), "left_semi")
           .count()
         val nr = Dedup.incrementalNearIds(union, isNew).count()
         (ex, nr)

@@ -146,11 +146,10 @@ object Curation {
     * input, since an id's tied rows are one indivisible partition under
     * any order-by-id prefix sum. Dedup upstream (eq1's exact pass) is
     * the real fix for such a corpus, not the packer.
-    * The BATCH-side windows ([[appendPackCount]]/[[appendPackSummary]])
-    * keep the plain shape — batch-bounded by contract. The lang key is
-    * null-safe via a PAIR (`lang IS NULL`, `coalesce(lang, '')`) — no
-    * reserved sentinel value (a corpus whose lang is
-    * literally the old NUL sentinel must stay a separate partition from
+    * The BATCH-side window ([[appendPackSummary]]) keeps the plain shape
+    * — batch-bounded by contract. The lang key is null-safe via a PAIR
+    * (`lang IS NULL`, `coalesce(lang, '')`) — no reserved sentinel value
+    * (a corpus whose lang is literally the old NUL sentinel must stay a separate partition from
     * NULL), and a plain single-column join would silently DROP
     * null-lang rows the old window kept as their own partition. */
   /** One (lang-key, bucket)'s collected stats — the tiny driver-side
@@ -278,31 +277,11 @@ object Curation {
     chainMemo(docs)(buildChain(docs))
 
   private def buildChain(docs: DataFrame): Chain = {
-    // ---- spine: per-doc columns every stage reads, materialized once ----
-    // (quality from the SHARED eq8 builder; cluster labels from the
-    // MEMOIZED eq12 pair table via eq26's component labeling)
-    val labels = Dedup.neardupLabelsDf(docs).withColumnRenamed("label", "label_")
-    val spine = TextAnalysis.qualityCols(docs)
-      .select(col("doc_id"), col("lang"), col("source"), col("text"),
-        col("n_chars"), col("n_tokens").cast("long").as("n_tokens"),
-        col("quality"))
-      .join(labels, Seq("doc_id"), "left")
-      .withColumn("cluster", coalesce(col("label_"), col("doc_id")))
-      .withColumn("cluster_split",
-        Dedup.splitOfBucket(md5_key28(col("cluster").cast("string")) % 100))
-      .drop("label_")
-      .localCheckpoint()
+    val spine = spineOf(docs).localCheckpoint()
 
     // ---- stages 2-3: the two dedup windows, materialized once ----------
-    val s2 = spine
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(sha2(col("text"), 256)).orderBy("doc_id")))
-      .filter(col("rn") === 1).drop("rn")
-    val s3 = s2
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("cluster")
-          .orderBy(col("quality").desc_nulls_last, col("doc_id").asc)))
-      .filter(col("rn") === 1).drop("rn")
+    val s2 = Dedup.keepFirstPerText(spine)
+    val s3 = clusterRep(s2)
       .localCheckpoint() // stages 4-9 and three stage stats all read this
 
     // ---- stages 4-5: map-side gates ------------------------------------
@@ -327,6 +306,62 @@ object Curation {
       .localCheckpoint() // stage stats, packing, and encode all read this
 
     Chain(spine, s2, s3, s4, s5, s6, s7)
+  }
+
+  // ---- the stage rules both chains build from ---------------------------
+  // One builder per rule: the full chain and the delta chain get the same
+  // plans (and so the same PlanMemo hits) and cannot drift apart.
+
+  /** The spine: per-doc columns every stage reads — quality from the
+    * SHARED eq8 builder, cluster labels from the MEMOIZED eq12 pair table
+    * via eq26's component labeling (a doc outside every pair is its own
+    * cluster), and eq131's cluster-atomic split. */
+  private def spineOf(docs: DataFrame): DataFrame = {
+    val labels = Dedup.neardupLabelsDf(docs).withColumnRenamed("label", "label_")
+    TextAnalysis.qualityCols(docs)
+      .select(col("doc_id"), col("lang"), col("source"), col("text"),
+        col("n_chars"), col("n_tokens").cast("long").as("n_tokens"),
+        col("quality"))
+      .join(labels, Seq("doc_id"), "left")
+      .withColumn("cluster", coalesce(col("label_"), col("doc_id")))
+      .withColumn("cluster_split",
+        Dedup.splitOfBucket(md5_key28(col("cluster").cast("string")) % 100))
+      .drop("label_")
+  }
+
+  /** eq84's rule: the best-quality representative per cluster, the
+    * smallest doc_id among ties. */
+  private def clusterRep(df: DataFrame): DataFrame =
+    df.withColumn("rn", row_number().over(
+        Window.partitionBy("cluster")
+          .orderBy(col("quality").desc_nulls_last, col("doc_id").asc)))
+      .filter(col("rn") === 1).drop("rn")
+
+  /** Stage 9's n_units: the survivors' total symbol count when encoded
+    * under `enc` (tok, sy_after); a token outside the table counts its
+    * characters. */
+  private def encodedUnits(survivors: DataFrame, enc: DataFrame): DataFrame =
+    survivors
+      .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
+      .filter(length(col("tok")) >= 1)
+      .join(enc, Seq("tok"), "left_outer")
+      .agg(sum(coalesce(col("sy_after"), length(col("tok")).cast("long")))
+        .as("n_units"))
+
+  /** One funnel row: the stage's doc/token/char accounting, with `units`
+    * (a one-row `n_units` frame) or the doc count as its n_units. */
+  private def stageStat(id: Int, name: String, df: DataFrame,
+      units: Option[DataFrame] = None): DataFrame = {
+    val base = df.agg(
+      count(lit(1)).as("n_docs"),
+      coalesce(sum(col("n_tokens")), lit(0L)).as("total_tokens"),
+      coalesce(sum(col("n_chars")), lit(0L)).as("total_chars"))
+    val withUnits = units match {
+      case Some(u) => base.crossJoin(broadcast(u))
+      case None => base.withColumn("n_units", col("n_docs"))
+    }
+    withUnits.select(lit(id).as("stage_id"), lit(name).as("stage"),
+      col("n_docs"), col("total_tokens"), col("total_chars"), col("n_units"))
   }
 
   /** The snapshot's per-lang pack summary, memoized ON DEMAND (its own
@@ -355,44 +390,15 @@ object Curation {
         max(col("shard")).as("last_shard"))
   }
 
-  /** The O(batch) append-pack union count: total distinct (lang, shard)
-    * after `delta` (lang, doc_id, n_tokens) packs after the old corpus
-    * summarized by `ps` ([[packSummaryOf]] schema). Each delta lang
-    * starts its prefix sum at the old t_tokens; delta shard ids are
-    * monotone ≥ the old last shard, so the only possible collision is
-    * exactly that shard. Pinned against the full-merge reference
-    * computation on hostile synthetic layouts in PipelineSpec. */
-  private[graft] def appendPackCount(ps: DataFrame, delta: DataFrame): DataFrame = {
-    val deltaPackW = Window.partitionBy("lang").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val deltaPack = delta
-      .select(col("lang"), col("doc_id"), col("n_tokens"))
-      .join(broadcast(ps.select(col("lang"), col("t_tokens"), col("last_shard"))),
-        Seq("lang"), "left_outer")
-      .withColumn("cum", coalesce(sum(col("n_tokens")).over(deltaPackW), lit(0L))
-        + coalesce(col("t_tokens"), lit(0L)))
-      .withColumn("shard", expr(s"cum div $ShardBudget"))
-      .groupBy("lang")
-      .agg(countDistinct(col("shard")).as("d_shards"),
-        min(col("shard")).as("d_first"),
-        max(col("last_shard")).as("last_shard"))
-    ps.select(col("lang"), col("n_shards"))
-      .join(deltaPack, Seq("lang"), "full_outer")
-      .agg(coalesce(sum(
-        coalesce(col("n_shards"), lit(0L)) + coalesce(col("d_shards"), lit(0L))
-          - when(col("d_first") === col("last_shard"), lit(1L)).otherwise(lit(0L))),
-        lit(0L)).as("n_units"))
-  }
-
   /** The O(batch) ADVANCED pack summary: [[packSummaryOf]](old ∪ delta)
     * computed from the stored summary and the delta alone — the pack half
-    * of eq141's state advance. Same append math as [[appendPackCount]]
-    * (delta langs start their prefix sums at the stored t_tokens; the
-    * only shard the sides can share is the old LAST one, subtracted when
-    * the delta's first shard collides), extended to every summary column;
-    * the advanced last_shard is the delta's when a delta exists (its
-    * shard ids are ≥ the old last by monotonicity). Pinned against the
-    * full-merge [[packSummaryOf]] on hostile layouts in PipelineSpec. */
+    * of eq141's state advance, and eq137's stage-10 counts. Delta langs
+    * start their prefix sums at the stored t_tokens, so delta shard ids
+    * are monotone ≥ the old last shard and the only shard the sides can
+    * share is exactly that one, subtracted when the delta's first shard
+    * collides; the advanced last_shard is the delta's when a delta exists.
+    * Pinned against the full-merge [[packSummaryOf]] and the full-merge
+    * shard count on hostile layouts in PipelineSpec. */
   private[graft] def appendPackSummary(ps: DataFrame, delta: DataFrame): DataFrame = {
     val deltaPackW = Window.partitionBy("lang").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -485,37 +491,20 @@ object Curation {
       coalesce(sum(col("n_shards")), lit(0L)).as("n_units"))
 
     // ---- stage 9: BPE encode under the MEMOIZED corpus-wide vocabulary -
-    val enc = TextAnalysis.bpeEncTable(docs, TextAnalysis.BpeTrainMerges)
-    val nSymbols = s7
-      .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
-      .filter(length(col("tok")) >= 1)
-      .join(enc, Seq("tok"), "left_outer")
-      .agg(sum(coalesce(col("sy_after"), length(col("tok")).cast("long")))
-        .as("n_units"))
+    val nSymbols = encodedUnits(s7,
+      TextAnalysis.bpeEncTable(docs, TextAnalysis.BpeTrainMerges))
 
     // ---- the funnel: 9 bounded rows with conservation accounting -------
-    def stat(id: Int, name: String, df: DataFrame, units: Option[DataFrame]): DataFrame = {
-      val base = df.agg(
-        count(lit(1)).as("n_docs"),
-        coalesce(sum(col("n_tokens")), lit(0L)).as("total_tokens"),
-        coalesce(sum(col("n_chars")), lit(0L)).as("total_chars"))
-      val withUnits = units match {
-        case Some(u) => base.crossJoin(broadcast(u))
-        case None => base.withColumn("n_units", col("n_docs"))
-      }
-      withUnits.select(lit(id).as("stage_id"), lit(name).as("stage"),
-        col("n_docs"), col("total_tokens"), col("total_chars"), col("n_units"))
-    }
     val funnel = Seq(
-      stat(1, "ingest", spine, None),
-      stat(2, "exact_dedup", s2, None),
-      stat(3, "neardup_dedup", s3, None),
-      stat(4, "split_train", s4, None),
-      stat(5, "quality_gate", s5, None),
-      stat(6, "decontam", s6, None),
-      stat(7, "temperature_mix", s7, None),
-      stat(8, "shard_pack", s7, Some(nShards)),
-      stat(9, "bpe_encode", s7, Some(nSymbols))).reduce(_ union _)
+      stageStat(1, "ingest", spine),
+      stageStat(2, "exact_dedup", s2),
+      stageStat(3, "neardup_dedup", s3),
+      stageStat(4, "split_train", s4),
+      stageStat(5, "quality_gate", s5),
+      stageStat(6, "decontam", s6),
+      stageStat(7, "temperature_mix", s7),
+      stageStat(8, "shard_pack", s7, Some(nShards)),
+      stageStat(9, "bpe_encode", s7, Some(nSymbols))).reduce(_ union _)
     funnel
       .withColumn("n_dropped",
         coalesce(lag(col("n_docs"), 1).over(Window.orderBy("stage_id"))
@@ -549,8 +538,8 @@ object Curation {
     *                          never re-admitted)
     *    3 delta_near_corpus — drop docs whose band-key probe of the
     *                          bucket-guarded old index verifies at
-    *                          Jaccard ≥ 0.5 (eq104's near layer, shared
-    *                          signatureParts memo)
+    *                          Jaccard ≥ 0.5 (eq104's near layer, probed
+    *                          as eq139's stored index is)
     *    4 delta_near_self   — best-quality representative per
     *                          within-batch cluster (eq84's rule)
     *    5 delta_split_train — cluster-atomic split on the BATCH clusters
@@ -582,53 +571,75 @@ object Curation {
     * artifacts (index signatures, chain, vocabulary) that a production
     * deployment materializes once per snapshot. This is the difference
     * between re-running eq136 on 100 TB per arriving crawl and touching
-    * only the new terabyte. */
+    * only the new terabyte. eq137 builds those artifacts in memory and
+    * runs the one delta path eq140 runs over their at-rest copies
+    * ([[incrementalCurationFromState]]). */
   def incrementalCurationDf(docs: DataFrame): DataFrame = {
     val isNew = col("doc_id") % 10 >= 8
-    val oldDocs = docs.filter(col("doc_id") % 10 < 8)
-    val oldCh = chainOf(oldDocs) // the last full curation, memoized
-    deltaFunnel(docs.filter(isNew), FrozenState(
-      Dedup.matchedOldHashes(docs, isNew),
-      Dedup.incrementalNearIds(docs, isNew),
-      testVocabOf(oldCh.spine),
-      mixRatesOf(oldCh.s6)),
-      TextAnalysis.bpeEncTable(oldDocs, TextAnalysis.BpeTrainMerges),
-      packOf(oldDocs, oldCh.s7))
+    val (hashIdx, bandIdx, _) = Dedup.indexBuildFrames(docs, isNew)
+    val (testVocab, mixRates, bpeEnc, packSummary) =
+      snapshotArtifactFrames(docs.filter(col("doc_id") % 10 < 8))
+    incrementalCurationFromState(docs, isNew, hashIdx, bandIdx, testVocab,
+      mixRates, bpeEnc, packSummary)
   }
 
-  /** The OLD snapshot's frozen artifacts, as the delta path consumes
-    * them — one field per production handoff. eq137 reads them from the
-    * session memos; eq140 reads every one from AT-REST tables (the
-    * restart posture), through [[incrementalCurationFromState]]. */
-  private final case class FrozenState(
-      matchedHashes: DataFrame, // stored hashes ∩ batch — d2's anti side
-      nearIds: DataFrame,       // batch ids verifying near-vs-corpus (d3)
-      testVocab: DataFrame,     // (sg, hit) — the decontam reference (d7)
-      mixRates: DataFrame)      // (lang, rate_ppm) — frozen release rates (d8)
-
-  /** eq140 — the eq137 delta path with every frozen artifact supplied
-    * from storage: the dedup index layers ([[Dedup.storedMatchedHashes]]
-    * / [[Dedup.storedNearIds]] over the eq139 tables), the test-split
-    * vocabulary, the release mix rates, the shipped BPE encoder, and the
-    * per-lang pack summary — i.e. a delta ingest in a session that holds
-    * NOTHING in memory from the last full curation. The funnel is
-    * bit-identical to eq137's (same oracle); PipelineSpec pins that a
-    * fresh session running this mines only the delta (+1 pair table, +1
-    * labels, +1 batch signing) and re-learns nothing (BPE +0, index
-    * memos +0). */
+  /** The delta funnel over the OLD snapshot's artifacts, one frame per
+    * production handoff: the dedup index layers ([[Dedup.indexBuildFrames]]'
+    * hash and band frames, probed by [[Dedup.storedMatchedHashes]] and
+    * [[Dedup.storedNearIds]]), the test-split vocabulary, the release mix
+    * rates, the shipped BPE encoder and the per-lang pack summary
+    * ([[snapshotArtifactFrames]]). eq137 passes the in-memory frames;
+    * eq140 reads every one back from the tables eq139/eq140 write, i.e.
+    * a delta ingest in a session that holds NOTHING in memory from the
+    * last full curation. The funnel is bit-identical either way (same
+    * oracle); PipelineSpec pins that a fresh session running this mines
+    * only the delta (+1 pair table, +1 labels, +1 batch signing) and
+    * re-learns nothing (BPE +0, index memos +0). */
   private[graft] def incrementalCurationFromState(docs: DataFrame, isNew: Column,
       hashIdx: DataFrame, bandIdx: DataFrame, testVocab: DataFrame,
-      mixRates: DataFrame, bpeEnc: DataFrame, packSummary: DataFrame): DataFrame =
-    deltaFunnel(docs.filter(isNew), FrozenState(
-      Dedup.storedMatchedHashes(docs.filter(isNew), hashIdx),
-      Dedup.storedNearIds(docs, isNew, bandIdx),
-      testVocab.withColumn("hit", lit(1)),
-      mixRates), bpeEnc, packSummary)
+      mixRates: DataFrame, bpeEnc: DataFrame, packSummary: DataFrame): DataFrame = {
+    val ds = deltaStages(docs.filter(isNew), docs.filter(!isNew), hashIdx,
+      bandIdx, testVocab, mixRates, needStageStats = true)
+    import ds._
+
+    // ---- stage 10: merge + append packing — O(batch), never a rescan ---
+    // The delta packs after the old corpus per lang (merged order
+    // (is_delta, doc_id)), so old docs keep their eq136 shard ids and the
+    // merged totals come from the stored summary plus the delta alone.
+    val merged = appendPackSummary(packSummary, d8).agg(
+      coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
+      coalesce(sum(col("t_tokens")), lit(0L)).as("total_tokens"),
+      coalesce(sum(col("t_chars")), lit(0L)).as("total_chars"),
+      coalesce(sum(col("n_shards")), lit(0L)).as("n_units"))
+
+    // ---- the funnel: 10 bounded rows -----------------------------------
+    val funnel = Seq(
+      stageStat(1, "delta_ingest", d1),
+      stageStat(2, "delta_exact", d2),
+      stageStat(3, "delta_near_corpus", d3),
+      stageStat(4, "delta_near_self", d4),
+      stageStat(5, "delta_split_train", d5),
+      stageStat(6, "delta_quality_gate", d6),
+      stageStat(7, "delta_decontam", d7),
+      stageStat(8, "delta_mix_frozen", d8),
+      stageStat(9, "delta_encode", d8, Some(encodedUnits(d8, bpeEnc))),
+      merged.select(lit(10).as("stage_id"), lit("merged_corpus").as("stage"),
+        col("n_docs"), col("total_tokens"), col("total_chars"), col("n_units"))
+    ).reduce(_ union _)
+    funnel
+      .withColumn("n_dropped",
+        when(col("stage_id") === 10, lit(0L)).otherwise(
+          coalesce(lag(col("n_docs"), 1).over(Window.orderBy("stage_id"))
+            - col("n_docs"), lit(0L))))
+      .select(col("stage_id"), col("stage"), col("n_docs"), col("n_dropped"),
+        col("total_tokens"), col("total_chars"), col("n_units"))
+      .orderBy("stage_id")
+  }
 
   /** The OLD snapshot's artifact frames in storable form, derived from
-    * the memoized chain exactly as eq137 consumes them — what
-    * [[graft.sources.SnapshotStateSink]] writes at the end of a full
-    * curation. */
+    * the memoized chain — what [[graft.sources.SnapshotStateSink]] writes
+    * at the end of a full curation, and what eq137 hands the delta funnel
+    * in memory. */
   private[graft] def snapshotArtifactFrames(
       oldDocs: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val oldCh = chainOf(oldDocs)
@@ -654,56 +665,39 @@ object Curation {
       hashIdx, bandIdx, testVocab, mixRates)
 
   /** [[deltaSurvivorsFromState]] with the batch and the indexed corpus as
-    * SEPARATE frames (the [[Dedup.storedNearIdsSplit]]
-    * seam): lets the state log hand the batch's own stable plan so the
-    * per-batch signing/labeling memos key on the batch, not on a union
-    * plan that embeds per-log table names. Row-identical to the filter
-    * split. */
+    * SEPARATE frames (the [[Dedup.storedNearIds]] seam): lets the state
+    * log hand the batch's own stable plan so the per-batch
+    * signing/labeling memos key on the batch, not on a union plan that
+    * embeds per-log table names. Row-identical to the filter split. */
   private[graft] def deltaSurvivorsSplit(batch: DataFrame, oldDocs: DataFrame,
       hashIdx: DataFrame, bandIdx: DataFrame, testVocab: DataFrame,
       mixRates: DataFrame): DataFrame =
-    deltaStages(batch, FrozenState(
-      Dedup.storedMatchedHashes(batch, hashIdx),
-      Dedup.storedNearIdsSplit(batch, oldDocs, bandIdx),
-      testVocab.withColumn("hit", lit(1)),
-      mixRates), needStageStats = false).d8
+    deltaStages(batch, oldDocs, hashIdx, bandIdx, testVocab, mixRates,
+      needStageStats = false).d8
 
-  /** `needStageStats`: the funnel path reads EVERY stage frame twice (the
-    * stage itself + its stat aggregate), so d1 is materialized; the
-    * survivors-only path (the state drills' ingest) reads d1 exactly once
-    * — through d2 — so its checkpoint there was a pure extra pass over
-    * the batch. */
-  private def deltaStages(deltaDocs: DataFrame, st: FrozenState,
-      needStageStats: Boolean): DeltaStages = {
+  /** The delta stages of `batch` against the old snapshot's artifacts
+    * (`oldDocs` supplies the candidate old docs' texts for the near
+    * verify; `testVocab` is (sg)). `needStageStats`: the funnel path reads
+    * EVERY stage frame twice (the stage itself + its stat aggregate), so
+    * d1 is materialized; the survivors-only path (the state drills'
+    * ingest) reads d1 exactly once — through d2 — so its checkpoint there
+    * was a pure extra pass over the batch. */
+  private def deltaStages(batch: DataFrame, oldDocs: DataFrame,
+      hashIdx: DataFrame, bandIdx: DataFrame, testVocab: DataFrame,
+      mixRates: DataFrame, needStageStats: Boolean): DeltaStages = {
     // ---- delta spine: quality + within-batch clusters + split ----------
-    val labels = Dedup.neardupLabelsDf(deltaDocs).withColumnRenamed("label", "label_")
-    val d1Plan = TextAnalysis.qualityCols(deltaDocs)
-      .select(col("doc_id"), col("lang"), col("source"), col("text"),
-        col("n_chars"), col("n_tokens").cast("long").as("n_tokens"),
-        col("quality"))
-      .join(labels, Seq("doc_id"), "left")
-      .withColumn("cluster", coalesce(col("label_"), col("doc_id")))
-      .withColumn("cluster_split",
-        Dedup.splitOfBucket(md5_key28(col("cluster").cast("string")) % 100))
-      .drop("label_")
-    val d1 = if (needStageStats) d1Plan.localCheckpoint() else d1Plan
+    val d1 = if (needStageStats) spineOf(batch).localCheckpoint() else spineOf(batch)
 
     // ---- stage 2: exact — within-batch keep-min + old-hash probe -------
-    val d2 = d1
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(sha2(col("text"), 256)).orderBy("doc_id")))
-      .filter(col("rn") === 1).drop("rn")
-      .join(broadcast(st.matchedHashes), md5(col("text")) === col("h"), "left_anti")
+    val d2 = Dedup.keepFirstPerText(d1)
+      .join(broadcast(Dedup.storedMatchedHashes(batch, hashIdx)),
+        md5(col("text")) === col("h"), "left_anti")
 
     // ---- stage 3: near-vs-corpus — eq104's probe, no old×old pairing ---
-    val d3 = d2.join(st.nearIds, Seq("doc_id"), "left_anti")
+    val d3 = d2.join(Dedup.storedNearIds(batch, oldDocs, bandIdx), Seq("doc_id"), "left_anti")
 
     // ---- stage 4: within-batch cluster representative ------------------
-    val d4 = d3
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("cluster")
-          .orderBy(col("quality").desc_nulls_last, col("doc_id").asc)))
-      .filter(col("rn") === 1).drop("rn")
+    val d4 = clusterRep(d3)
       .localCheckpoint() // stages 5-9 and three stage stats read this
 
     // ---- stages 5-6: map-side gates ------------------------------------
@@ -711,86 +705,16 @@ object Curation {
     val d6 = d5.filter(col("quality") >= QualityMin)
 
     // ---- stage 7: decontam vs the OLD snapshot's test vocabulary -------
-    val d7 = d6.join(contaminatedIds(d6, st.testVocab), Seq("doc_id"), "left_anti")
+    val d7 = d6.join(contaminatedIds(d6, testVocab.withColumn("hit", lit(1))),
+      Seq("doc_id"), "left_anti")
 
     // ---- stage 8: the old snapshot's rates, frozen ---------------------
-    val d8 = d7.join(broadcast(st.mixRates), Seq("lang"), "left_outer")
+    val d8 = d7.join(broadcast(mixRates), Seq("lang"), "left_outer")
       .filter(md5_key28(col("text")) % 1000000
         < coalesce(col("rate_ppm"), lit(1000000L)))
       .drop("rate_ppm")
       .localCheckpoint() // stage stats, encode, and the merge read this
 
     DeltaStages(d1, d2, d3, d4, d5, d6, d7, d8)
-  }
-
-  private def deltaFunnel(deltaDocs: DataFrame, st: FrozenState,
-      bpeEnc: DataFrame, packSummary: DataFrame): DataFrame = {
-    val ds = deltaStages(deltaDocs, st, needStageStats = true)
-    import ds._
-
-    // ---- stage 9: encode under the OLD snapshot's vocabulary -----------
-    val enc = bpeEnc
-    val nSymbols = d8
-      .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
-      .filter(length(col("tok")) >= 1)
-      .join(enc, Seq("tok"), "left_outer")
-      .agg(sum(coalesce(col("sy_after"), length(col("tok")).cast("long")))
-        .as("n_units"))
-
-    // ---- stage 10: merge + append packing — O(batch), never a rescan ---
-    // The old snapshot's per-lang pack state (token total, shard count,
-    // last shard id) comes from the memoized summary; the delta packs
-    // after the old corpus per lang (merged order (is_delta, doc_id)), so
-    // each delta lang starts its prefix sum at t_tokens. Old docs keep
-    // their eq136 shard ids by construction; the only shard the two sides
-    // can share is the old LAST one (delta ids are ≥ it, monotone), so
-    // the union count subtracts exactly that collision.
-    val ps = packSummary
-    val nShards = appendPackCount(ps, d8)
-    val oldTotals = ps.agg(
-      coalesce(sum(col("n_docs")), lit(0L)).as("o_docs"),
-      coalesce(sum(col("t_tokens")), lit(0L)).as("o_tokens"),
-      coalesce(sum(col("t_chars")), lit(0L)).as("o_chars"))
-
-    // ---- the funnel: 10 bounded rows -----------------------------------
-    def stat(id: Int, name: String, df: DataFrame, units: Option[DataFrame]): DataFrame = {
-      val base = df.agg(
-        count(lit(1)).as("n_docs"),
-        coalesce(sum(col("n_tokens")), lit(0L)).as("total_tokens"),
-        coalesce(sum(col("n_chars")), lit(0L)).as("total_chars"))
-      val withUnits = units match {
-        case Some(u) => base.crossJoin(broadcast(u))
-        case None => base.withColumn("n_units", col("n_docs"))
-      }
-      withUnits.select(lit(id).as("stage_id"), lit(name).as("stage"),
-        col("n_docs"), col("total_tokens"), col("total_chars"), col("n_units"))
-    }
-    val funnel = Seq(
-      stat(1, "delta_ingest", d1, None),
-      stat(2, "delta_exact", d2, None),
-      stat(3, "delta_near_corpus", d3, None),
-      stat(4, "delta_near_self", d4, None),
-      stat(5, "delta_split_train", d5, None),
-      stat(6, "delta_quality_gate", d6, None),
-      stat(7, "delta_decontam", d7, None),
-      stat(8, "delta_mix_frozen", d8, None),
-      stat(9, "delta_encode", d8, Some(nSymbols)),
-      // stage 10 sums the memoized old totals with the delta's own — the
-      // merged corpus is never re-scanned for its stats either
-      stat(10, "merged_corpus", d8, Some(nShards))
-        .crossJoin(broadcast(oldTotals))
-        .select(col("stage_id"), col("stage"),
-          (col("n_docs") + col("o_docs")).as("n_docs"),
-          (col("total_tokens") + col("o_tokens")).as("total_tokens"),
-          (col("total_chars") + col("o_chars")).as("total_chars"),
-          col("n_units"))).reduce(_ union _)
-    funnel
-      .withColumn("n_dropped",
-        when(col("stage_id") === 10, lit(0L)).otherwise(
-          coalesce(lag(col("n_docs"), 1).over(Window.orderBy("stage_id"))
-            - col("n_docs"), lit(0L))))
-      .select(col("stage_id"), col("stage"), col("n_docs"), col("n_dropped"),
-        col("total_tokens"), col("total_chars"), col("n_units"))
-      .orderBy("stage_id")
   }
 }

@@ -61,13 +61,19 @@ object Dedup {
   /** Exact dedup keeping the smallest doc_id per content
     * (hash-partitioned window, `row_number`). Reports survivors per source. */
   def dedupKeepFirstDf(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(sha2(col("text"), 256)).orderBy("doc_id")))
-      .filter(col("rn") === 1)
+    keepFirstPerText(docs)
       .groupBy("source")
       .agg(count(lit(1)).as("n_kept"))
       .orderBy("source")
+
+  /** eq11's rule: the smallest-doc_id row per identical text, windowed on
+    * the 32-byte sha2 key (never the text itself). The curation chains'
+    * exact stages use it too. */
+  private[pipeline] def keepFirstPerText(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(sha2(col("text"), 256)).orderBy("doc_id")))
+      .filter(col("rn") === 1).drop("rn")
 
   /** doc_id + distinct 3-token shingle set + set size. */
   private def shingleSetsDf(docs: DataFrame): DataFrame =
@@ -576,25 +582,12 @@ object Dedup {
     hashIndexCache(hashes)(hashes.localCheckpoint())
   }
 
-  /** The old-content hashes that actually occur in the batch — the tiny,
-    * batch-bounded frame BOTH exact-layer consumers join via broadcast
-    * (eq104's semi, eq137's anti). Probing the stored hash index with
-    * `broadcast(batch hashes)` and re-probing the batch with
-    * `broadcast(matched)` leaves the corpus side SCAN-only: no corpus
-    * shuffle per batch. Results are identical to joining the full index —
-    * for batch rows, semi/anti against `old` ≡ semi/anti against
-    * `old ∩ batch-hashes`. */
-  private[graft] def matchedOldHashes(docs: DataFrame, isNew: Column): DataFrame = {
-    val batchHashes = docs.filter(isNew).select(md5(col("text")).as("h")).distinct()
-    oldHashIndex(docs, isNew).join(broadcast(batchHashes), Seq("h"), "left_semi")
-  }
-
-  /** eq104's NEAR layer, factored so eq137's incremental curation scrubs
-    * with the identical probe: the distinct batch-side doc_ids whose
-    * band-key probe of the bucket-guarded corpus index verifies at exact
-    * Jaccard ≥ [[IncrementalNearThreshold]]. The memoized signatureParts
-    * pass + [[guardedOldIndex]] stand in for "read the stored index";
-    * signing the batch and every probe join is batch-driven: the batch's
+  /** eq104's NEAR layer: the distinct batch-side doc_ids whose band-key
+    * probe of the bucket-guarded corpus index verifies at exact Jaccard ≥
+    * [[IncrementalNearThreshold]]. The memoized signatureParts pass +
+    * [[guardedOldIndex]] stand in for "read the stored index", and the
+    * candidates come from the stored-index probe's own join
+    * ([[probeCandidates]]). Every probe join is batch-driven: the batch's
     * band keys BROADCAST against the index scan, the candidate ids
     * BROADCAST-semi-prune the shingle-set frame before the verify join,
     * so the per-probe shuffle mass is bounded by the batch and its
@@ -604,10 +597,7 @@ object Dedup {
     * instead.) */
   private[graft] def incrementalNearIds(docs: DataFrame, isNew: Column): DataFrame = {
     val (sets, _, banded) = signatureParts(docs)
-    val bandedNew = banded.filter(isNew)
-    val cands = guardedOldIndex(docs, isNew).as("o")
-      .join(broadcast(bandedNew.as("n")), Seq("band", "band_key"))
-      .select(col("n.doc_id").as("new_id"), col("o.doc_id").as("old_id"))
+    val cands = probeCandidates(banded.filter(isNew), guardedOldIndex(docs, isNew))
       .distinct()
     val candIds = cands.select(col("new_id").as("doc_id"))
       .union(cands.select(col("old_id").as("doc_id"))).distinct()
@@ -667,7 +657,8 @@ object Dedup {
     val newDocs = docs.filter(isNew).select(col("doc_id"), col("lang"), md5(col("text")).as("h"))
     // exact layer: batch content hash probed against the stored hash
     // index, matched set broadcast back (scan-only on the corpus side)
-    val exactIds = newDocs.join(broadcast(matchedOldHashes(docs, isNew)),
+    val exactIds = newDocs
+      .join(broadcast(storedMatchedHashes(docs.filter(isNew), oldHashIndex(docs, isNew))),
         Seq("h"), "left_semi").select("doc_id")
     // near layer: batch band keys probe the bucket-guarded corpus index
     val nearIds = incrementalNearIds(docs, isNew)
@@ -720,48 +711,35 @@ object Dedup {
     bandIdx.as("o").join(broadcast(batchBanded.as("n")), Seq("band", "band_key"))
       .select(col("n.doc_id").as("new_id"), col("o.doc_id").as("old_id"))
 
-  /** eq139 probe side — classify the incoming batch against the AT-REST
-    * index tables (read back through the catalog), bit-identical to
-    * eq104's in-session verdicts: `exact` on a stored-hash match, `near`
-    * on a band collision with an indexed doc verified at exact Jaccard ≥
-    * [[IncrementalNearThreshold]], else `novel`. The session signs ONLY
-    * the batch ([[signatureParts]] on the batch frame — the corpus is
-    * never re-signed, pinned by PipelineSpec's fresh-session test); the
-    * verify layer fetches just the candidate old docs' shingle sets from
-    * the corpus store, pruned by a broadcast of the candidate ids (≤
-    * batch × [[MaxBucket]] rows). Returns (doc_id, verdict) per batch
-    * doc. */
-  /** The exact layer against the stored hash table — the eq104 shape:
-    * batch hashes broadcast into the index scan, the matched set
-    * broadcast back, so the index side stays scan-only in both hops.
-    * Returns the stored hashes that occur in the batch (the eq137-shape
-    * consumers anti-join it; eq139's probe semi-joins it). */
+  /** The exact layer against a hash index (the at-rest table, or eq104's
+    * memoized [[oldHashIndex]]): the old-content hashes that occur in the
+    * batch. The batch hashes broadcast into the index scan and the
+    * matched set is small enough to broadcast back, so the index side
+    * stays scan-only in both hops — no corpus shuffle per batch. For
+    * batch rows, semi/anti against the index ≡ semi/anti against this
+    * frame (eq104's and eq139's probes semi-join it, the curation delta
+    * path anti-joins it). */
   private[graft] def storedMatchedHashes(batch: DataFrame, hashIdx: DataFrame): DataFrame = {
     val batchHashes = batch.select(md5(col("text")).as("h")).distinct()
     hashIdx.join(broadcast(batchHashes), Seq("h"), "left_semi")
   }
 
   /** The near layer against the stored band table: the batch's band keys
-    * (signed in THIS session — the only signing the probe pays) broadcast
-    * into the scan-only index, candidates verified at exact Jaccard ≥
+    * (signed in THIS session, in the batch's own [[signatureParts]] memo
+    * entry — the only signing the probe pays) broadcast into the
+    * scan-only index, candidates verified at exact Jaccard ≥
     * [[IncrementalNearThreshold]] against the candidate old docs' shingle
     * sets — rebuilt by the SAME pipeline the index build signed them with
     * (array_distinct ∘ shingles, empty sets dropped), fetched as a
-    * broadcast-pruned point read of the corpus store (≤ batch ×
-    * [[MaxBucket]] ids). Returns the distinct batch doc_ids that verify. */
-  private[graft] def storedNearIds(docs: DataFrame, isNew: Column, bandIdx: DataFrame): DataFrame =
-    storedNearIdsSplit(docs.filter(isNew), docs.filter(!isNew), bandIdx)
-
-  /** [[storedNearIds]] with the two corpus sides supplied as SEPARATE
-    * frames: the self-contained state-log ingest used
-    * to pass `(corpus-resolution ∪ batch).filter(is_new)` as the batch
-    * side, whose canonicalized plan embeds the per-log generation TABLE
-    * NAMES — so the batch signing (the memoized [[signatureParts]] pass)
-    * could never be shared across logs or repeated runs even though the
-    * batch frame itself is stable. Splitting the sides lets the caller
-    * hand the batch's own stable plan; the frames are row-identical to
-    * the filter split (`docs.filter(isNew)` / `docs.filter(!isNew)`). */
-  private[graft] def storedNearIdsSplit(batch: DataFrame, oldDocs: DataFrame,
+    * broadcast-pruned point read of `oldDocs` (≤ batch × [[MaxBucket]]
+    * ids). Returns the distinct batch doc_ids that verify.
+    *
+    * The batch and the indexed corpus are SEPARATE frames so the caller
+    * can hand the batch's own stable plan: a `(corpus ∪ batch).filter(…)`
+    * batch side embeds the state log's per-generation TABLE NAMES in its
+    * canonicalized plan, so its signing could never be shared across
+    * logs or repeated runs. */
+  private[graft] def storedNearIds(batch: DataFrame, oldDocs: DataFrame,
       bandIdx: DataFrame): DataFrame = {
     val (batchSets, _, batchBanded) = signatureParts(batch)
     val cands = probeCandidates(batchBanded, bandIdx).distinct()
@@ -775,6 +753,13 @@ object Dedup {
     verifiedNearIds(cands, batchSets, oldSets)
   }
 
+  /** eq139 probe side — classify the incoming batch against the AT-REST
+    * index tables (read back through the catalog), bit-identical to
+    * eq104's in-session verdicts: `exact` on a stored-hash match, `near`
+    * on a band collision with an indexed doc verified at exact Jaccard ≥
+    * [[IncrementalNearThreshold]], else `novel`. The session signs ONLY
+    * the batch (the corpus is never re-signed, pinned by PipelineSpec's
+    * fresh-session test). Returns (doc_id, verdict) per batch doc. */
   private[graft] def probeStoredIndex(docs: DataFrame, isNew: Column,
       hashIdx: DataFrame, bandIdx: DataFrame): DataFrame = {
     val batch = docs.filter(isNew)
@@ -782,7 +767,7 @@ object Dedup {
     val exactIds = batchHashes
       .join(broadcast(storedMatchedHashes(batch, hashIdx)), Seq("h"), "left_semi")
       .select("doc_id")
-    val nearIds = storedNearIds(docs, isNew, bandIdx)
+    val nearIds = storedNearIds(batch, docs.filter(!isNew), bandIdx)
     verdictJoin(batch.select(col("doc_id")), exactIds, nearIds)
       .select("doc_id", "verdict")
   }

@@ -237,11 +237,12 @@ object RetailQueries {
     val rows = top10
       .join(best, Seq("magid"), "left_outer")
       .withColumn("nb_produits_fab", coalesce(col("nb_produits_fab"), lit(0L)))
-      .withColumn("pct_raw",
-        col("nb_produits_fab").cast("double") / col("total_produits") * lit(100.0))
+      // NULL for a zero total, as the oracle's DOUBLE / 0 gives (and no
+      // ANSI DIVIDE_BY_ZERO); the mean skips those rows
+      .withColumn("pct_raw", when(col("total_produits") =!= 0,
+        col("nb_produits_fab").cast("double") / col("total_produits") * lit(100.0)))
       .localCheckpoint()
-    val avgRow = rows.agg(round(coalesce(
-      avg(when(col("total_produits") =!= 0, col("pct_raw"))), lit(0.0)), 6).as("average"))
+    val avgRow = rows.agg(round(coalesce(avg(col("pct_raw")), lit(0.0)), 6).as("average"))
     rows
       .select(col("magid"), col("total_produits"), col("nb_produits_fab"),
         round(col("pct_raw"), 6).as("percentage"))

@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * and the guard that keeps [[Harness]] (plus [[ProdSession]]) the only
   * place a SparkSession is built; plus the source guards that keep the
   * state libraries free of oracle drills, the served API free of its
-  * own retail plans and the operators free of `(spark, dir)` forwarders.
+  * own retail plans, the curation chains on one set of stage builders
+  * and the operators free of `(spark, dir)` forwarders.
   * No Spark session is needed. */
 class HarnessSpec extends AnyFunSuite {
 
@@ -123,6 +124,25 @@ class HarnessSpec extends AnyFunSuite {
       java.nio.file.Paths.get("src/main/scala/graft/api/QueryService.scala")))
     val plans = """\bgroupBy\b|\bcountDistinct\b|\.agg\(""".r.findAllIn(src).toSeq
     assert(plans.isEmpty, s"QueryService.scala plans ${plans.mkString(", ")}")
+  }
+
+  test("one curation kernel: each stage window is written once, the second chain's helpers are gone") {
+    val root = java.nio.file.Paths.get("src/main/scala/graft/pipeline")
+    assert(java.nio.file.Files.isDirectory(root), s"no $root under the working directory")
+    val walk = java.nio.file.Files.walk(root)
+    val sources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p)).toList
+      finally walk.close()
+    for (window <- Seq("""Window.partitionBy(sha2(""", """Window.partitionBy("cluster")""")) {
+      val at = sources.flatMap { case (f, src) =>
+        Seq.fill(code(src).split(java.util.regex.Pattern.quote(window), -1).length - 1)(f) }
+      assert(at.size <= 1, s"$window written ${at.size} times: ${at.mkString(", ")}")
+    }
+    for (gone <- Seq("appendPackCount", "FrozenState")) {
+      val at = sources.collect { case (f, src) if src.contains(gone) => f }
+      assert(at.isEmpty, s"$gone is back in ${at.mkString(", ")}")
+    }
   }
 
   /** A `(spark, dir)` function whose whole body is one call over

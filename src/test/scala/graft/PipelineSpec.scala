@@ -3937,6 +3937,32 @@ class PipelineSpec extends SparkSpec {
       "the old snapshot's eq136 run must reuse the memoized chain")
   }
 
+  test("the delta chain applies the full chain's rules: an all-new batch over empty state " +
+    "matches eq136 stages 1-5") {
+    // Every doc is new and nothing is indexed, so the delta stages that
+    // have a full-chain twin must agree with it on the accounting: delta
+    // ingest/exact/near-self/split/quality ≡ eq136 stages 1-5, and the
+    // near-vs-corpus stage (3) drops nothing.
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types.StructType
+    def empty(ddl: String): DataFrame =
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType.fromDDL(ddl))
+    def accounting(funnel: DataFrame): Map[Int, (Long, Long, Long)] =
+      funnel.collect().map(r => r.getInt(0) -> ((r.getLong(2), r.getLong(4), r.getLong(5)))).toMap
+    val docs = Tables.load(spark, Sf, "documents")
+    val delta = accounting(Curation.incrementalCurationFromState(docs, lit(true),
+      empty("h STRING"), empty("band INT, band_key STRING, doc_id BIGINT"),
+      empty("sg STRING"), empty("lang STRING, rate_ppm BIGINT"),
+      empty("tok STRING, sy_after BIGINT"),
+      empty("lang STRING, n_docs BIGINT, t_tokens BIGINT, t_chars BIGINT, " +
+        "n_shards BIGINT, last_shard BIGINT")))
+    val full = accounting(Curation.curationPipelineDf(docs))
+    for ((d, f) <- Seq(1 -> 1, 2 -> 2, 4 -> 3, 5 -> 4, 6 -> 5))
+      assert(delta(d) == full(f), s"delta stage $d ${delta(d)} != eq136 stage $f ${full(f)}")
+    assert(delta(3) == delta(2), "an empty index must drop nothing near-vs-corpus")
+    assert(full(5)._1 > 0, "the fixture must leave quality-gate survivors to compare")
+  }
+
   test("eq136: stage counts agree with the standalone queries they compose") {
     // the chain must not re-derive DIFFERENT answers than the operators it
     // chains: stage 2 (exact dedup) equals eq11's total survivors; stage 1
@@ -4093,8 +4119,9 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("append-pack count matches the full-merge reference on hostile layouts") {
-    // eq137's stage-10 O(batch) union math vs the O(corpus) reference it
-    // replaced, on layouts the parquet fixtures don't guarantee:
+    // eq137's stage-10 shard count — the n_shards sum of the O(batch)
+    // advanced pack summary — vs the O(corpus) reference it replaced, on
+    // layouts the parquet fixtures don't guarantee:
     // boundary-shard collision, shard-id gaps from oversized docs,
     // old-only and delta-only languages, and both empty sides.
     import spark.implicits._
@@ -4113,7 +4140,9 @@ class PipelineSpec extends SparkSpec {
     }
     def got(old: org.apache.spark.sql.DataFrame,
         delta: org.apache.spark.sql.DataFrame): Long =
-      Curation.appendPackCount(Curation.packSummaryOf(old), delta)
+      Curation.appendPackSummary(Curation.packSummaryOf(old),
+          delta.withColumn("n_chars", lit(10L)))
+        .agg(coalesce(sum(col("n_shards")), lit(0L)))
         .first.getLong(0)
     val old = Seq(
       ("en", 1L, B - 1L, 10L), ("en", 2L, 1L, 10L), // en: old ends exactly full

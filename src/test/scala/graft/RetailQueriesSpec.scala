@@ -114,7 +114,9 @@ class RetailQueriesSpec extends SparkSpec {
           countDistinct("fabid").as("total_fabricants"),
           countDistinct("prodid").as("total_produits"), count(lit(1)).as("total_ventes")),
         "total_fabricants", "total_produits", "total_ventes")
-      val top10Rows = Seq(1L -> 3L, 2L -> 1L, 3L -> 4L, 99L -> 2L)
+      // store 99's zero total: its percentage is NULL (the oracle's
+      // DOUBLE / 0) and the mean skips it
+      val top10Rows = Seq(1L -> 3L, 2L -> 1L, 3L -> 4L, 99L -> 0L)
       val refNb = inCat.filter(col("fabid") === fab && col("magid").isin(top10: _*))
         .groupBy("magid").agg(countDistinct("prodid").as("nb"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -123,6 +125,14 @@ class RetailQueriesSpec extends SparkSpec {
         !perStore.schema("nb_produits_fab").nullable)
       assert(perStore.select("magid", "nb_produits_fab").as[(Long, Long)].collect().toMap ==
         top10.map(m => m -> refNb.getOrElse(m, 0L)).toMap, s"avgFabTop10From($cat)")
+      val pct = perStore.select("magid", "percentage", "average")
+        .as[(Long, Option[Double], Double)].collect()
+      assert(pct.collect { case (99L, p, _) => p }.toSeq == Seq(None),
+        s"avgFabTop10From($cat): a zero total's percentage is NULL")
+      val nonZero = top10Rows.filter(_._2 != 0).map { case (m, t) =>
+        refNb.getOrElse(m, 0L).toDouble / t * 100.0 }
+      assert(pct.forall(r => math.abs(r._3 - nonZero.sum / nonZero.size) < 1e-6),
+        s"avgFabTop10From($cat): the mean skips the zero total")
       // per month: mean over stores with rows that month and a nonzero total
       val refMonthly = inCat.filter(col("fabid") === fab && col("magid").isin(top10: _*))
         .groupBy(col("magid"), date_format(col("dateid"), "yyyy-MM").as("m"))
