@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Bench main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -25,9 +27,22 @@ object Bench {
     // unified-memory pool (e.g. SPARK_GRAFT_MEM_FRACTION=0.05 on a 2g
     // heap) forces the UnsafeExternalSorter spill path so the work-mass
     // meter's spill column is proven against a nonzero observation.
-    val tmp = Harness.runTmpDir()
-    val spark = Harness.session(Harness.cpus(32),
-      sys.env.get("SPARK_GRAFT_MEM_FRACTION").map("spark.memory.fraction" -> _).toSeq: _*)
+    val marker = Harness.withRun(Harness.cpus(32),
+      sys.env.get("SPARK_GRAFT_MEM_FRACTION").map("spark.memory.fraction" -> _).toSeq: _*
+    )(bench(_, sfDir, names))
+    // LAST stdout line, marker-prefixed and COMPACT: a caller that tails
+    // stdout into a bounded buffer truncates head-first, and a marker
+    // carrying the full per-query map (~6 KB) would not parse. The marker
+    // carries ONLY the scalars and a pointer to the full record file
+    // (where the per-query map and work maps live); ~200 bytes fits any
+    // sane tail buffer. Printed after the session stops so nothing can follow
+    // it.
+    println(marker)
+  }
+
+  /** Runs the bench over `names` in `spark`, prints the full JSON record
+    * (and writes the optional file sinks); returns the compact marker. */
+  private def bench(spark: SparkSession, sfDir: String, names: Seq[String]): String = {
     // Fail fast on fixture-schema drift (footer reads only)
     Tables.validate(spark, sfDir)
 
@@ -129,16 +144,8 @@ object Bench {
       if (names.size < SparkEntry.queries.size) None
       else sys.env.get("SPARK_GRAFT_ROUND")
         .flatMap(r => sink(f"BENCH_r${r.toInt}%02d.json"))
-    Harness.stop(spark, tmp)
-    // LAST stdout line, marker-prefixed and COMPACT: a caller that tails
-    // stdout into a bounded buffer truncates head-first, and a marker
-    // carrying the full per-query map (~6 KB) would not parse. The marker
-    // carries ONLY the scalars and a pointer to the full record file
-    // (where the per-query map and work maps live); ~200 bytes fits any
-    // sane tail buffer. Printed after the session stops so nothing can follow
-    // it.
     val fileRef = (roundFile orElse outFile)
       .map(p => s""","results_file":"${jsonEsc(p)}"""").getOrElse("")
-    println(s"""BENCH_JSON: {"metric":"total","value":$total,"unit":"sec","n":${results.size},"setup_sec":$setupSec,"sf":"${jsonEsc(sfDir)}"$fileRef}""")
+    s"""BENCH_JSON: {"metric":"total","value":$total,"unit":"sec","n":${results.size},"setup_sec":$setupSec,"sf":"${jsonEsc(sfDir)}"$fileRef}"""
   }
 }

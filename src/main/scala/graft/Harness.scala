@@ -1,5 +1,6 @@
 package graft
 
+import java.io.{IOException, UncheckedIOException}
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.SparkSession
@@ -31,24 +32,31 @@ object Harness {
     spark
   }
 
-  /** Points `java.io.tmpdir` at a fresh directory for this run and
-    * returns it. Call before [[session]]: the state code reads the
-    * property at call time, so every table a run's state drills write
-    * (and Spark's scratch files) lands there, and [[stop]] deletes it —
+  /** Runs `body` in a `local[cpus]` [[session]] whose run owns a fresh
+    * temp dir: `java.io.tmpdir` points at it before the session is built
+    * (the state code reads the property at call time, so every table a
+    * run's state drills write, and Spark's scratch files, land there).
+    * However `body` ends, the session stops and the dir is deleted, so
     * nothing piles up in the machine's temp dir across runs. */
-  def runTmpDir(): Path = {
-    val dir = Files.createTempDirectory("graft_run_")
-    System.setProperty("java.io.tmpdir", dir.toString)
-    dir
+  def withRun[A](cpus: Int, extraConfs: (String, String)*)(body: SparkSession => A): A = {
+    val tmp = Files.createTempDirectory("graft_run_")
+    System.setProperty("java.io.tmpdir", tmp.toString)
+    try {
+      val spark = session(cpus, extraConfs: _*)
+      try body(spark) finally spark.stop()
+    } finally deleteTree(tmp)
   }
 
-  /** Stops `spark`, then deletes the run's [[runTmpDir]]. */
-  def stop(spark: SparkSession, tmp: Path): Unit = {
-    spark.stop()
-    val walk = Files.walk(tmp)
-    val paths = try walk.iterator().asScala.toList finally walk.close()
-    paths.reverse.foreach(Files.deleteIfExists) // children before parents
-  }
+  /** Best-effort recursive delete: a failure is reported on stderr and
+    * never thrown, so it cannot mask `body`'s own outcome or output. */
+  private[graft] def deleteTree(dir: Path): Unit =
+    try {
+      val walk = Files.walk(dir)
+      val paths = try walk.iterator().asScala.toList finally walk.close()
+      paths.reverse.foreach(Files.deleteIfExists) // children before parents
+    } catch { case e @ (_: IOException | _: UncheckedIOException) =>
+      System.err.println(s"[harness] could not delete $dir: $e")
+    }
 
   /** Runs `f` once un-timed (warm-up), then three timed times; returns
     * the median in seconds. */

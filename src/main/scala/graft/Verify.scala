@@ -11,11 +11,9 @@ object Verify {
     // SPARK_GRAFT_MEM_FRACTION: same spill-rehearsal knob as Bench — a
     // constrained run must also prove results UNCHANGED, which is this
     // dump + the parity compare under the same squeezed memory pool.
-    val tmp = Harness.runTmpDir()
-    val spark = Harness.session(Harness.cpus(4),
-      sys.env.get("SPARK_GRAFT_MEM_FRACTION").map("spark.memory.fraction" -> _).toSeq: _*)
-    dump(spark, sfDir, outDir, only)
-    Harness.stop(spark, tmp)
+    Harness.withRun(Harness.cpus(4),
+      sys.env.get("SPARK_GRAFT_MEM_FRACTION").map("spark.memory.fraction" -> _).toSeq: _*
+    )(dump(_, sfDir, outDir, only))
   }
 
   /** Writes the `only` query results over `sfDir` to `outDir/<name>`, the

@@ -46,6 +46,16 @@ class HarnessSpec extends AnyFunSuite {
     }
   }
 
+  test("deleteTree: removes a nested run dir; a missing one is reported, not thrown") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_run_")
+    Files.createDirectories(dir.resolve("state/part"))
+    Files.writeString(dir.resolve("state/part/f.parquet"), "x")
+    Harness.deleteTree(dir)
+    assert(!Files.exists(dir))
+    Harness.deleteTree(dir) // NoSuchFileException: a stderr line, no throw
+  }
+
   /** `src` with line and (nested) block comments blanked; string and char
     * literals are kept, so a comment opener inside one does not start a
     * comment. */
