@@ -129,16 +129,7 @@ object Bench {
     // SPARK_GRAFT_BENCH_OUT names the file;
     // SPARK_GRAFT_ROUND=N writes the canonical BENCH_rNN.json slot, for a
     // full run only. Nothing is written without one of them.
-    def sink(path: => String): Option[String] =
-      try {
-        val p = path
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(p), json.getBytes("UTF-8"))
-        Some(p)
-      } catch { case e: Exception =>
-        System.err.println(s"[bench] file sink failed: ${e.getMessage}")
-        None
-      }
+    def sink(path: => String): Option[String] = Harness.writeFile("bench", path, json)
     val outFile = sys.env.get("SPARK_GRAFT_BENCH_OUT").flatMap(p => sink(p))
     val roundFile =
       if (names.size < SparkEntry.queries.size) None

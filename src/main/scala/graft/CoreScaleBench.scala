@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Core-scaling rehearsal: the sf0.1 bench is
@@ -32,7 +33,10 @@ import org.apache.spark.sql.functions._
 object CoreScaleBench {
   def main(args: Array[String]): Unit = {
     val cpus = Harness.cpus(32)
-    val spark = Harness.session(cpus)
+    Harness.withRun(cpus)(run(_, cpus))
+  }
+
+  private def run(spark: SparkSession, cpus: Int): Unit = {
 
     val n = sys.env.getOrElse("GRAFT_CORESCALE_DOCS", "500000").toLong
     val docs = ScaleBench.corpus(spark, n)
@@ -56,6 +60,5 @@ object CoreScaleBench {
       "dup_spans" -> dupSpans)
     val js = phases.map { case (k, v) => s""""$k":${f"$v%.3f"}""" }.mkString(",")
     println(s"""CORESCALE_JSON: {"cpus":$cpus,"n_docs":$n,$js}""")
-    spark.stop()
   }
 }

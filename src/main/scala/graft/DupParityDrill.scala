@@ -223,8 +223,12 @@ object DupParityDrill {
     val outDir = if (args.length > 1) args(1) else "/tmp/paritydrill_out"
     // INT64 micros, not Spark's legacy INT96 default — the loader and
     // the DuckDB oracle both read the driver fixtures' encoding
-    val spark = Harness.session(Harness.cpus(8),
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+    Harness.withRun(Harness.cpus(8),
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(run(_, fixtureDir, outDir, args))
+  }
+
+  private def run(spark: SparkSession, fixtureDir: String, outDir: String,
+      args: Array[String]): Unit = {
     // the harness reads single-FILE tables (testdata layout): stage each
     // Spark part-file, then move it to <fixtureDir>/<table>.parquet
     def writeTable(df: DataFrame, table: String): Unit = {
@@ -264,6 +268,5 @@ object DupParityDrill {
     graft.pipeline.Dedup.clearDerivedCaches() // fresh memo keys for this corpus
     Verify.dump(spark, fixtureDir, outDir, Harness.select(None))
     println(s"[drill] dumped ${SparkEntry.queries.size} queries over $fixtureDir")
-    spark.stop()
   }
 }

@@ -11,8 +11,7 @@ object GoldenGen {
     * and writes its own goldens. */
   val GoldenPath = "src/test/resources/golden/hashes.txt"
 
-  def main(args: Array[String]): Unit = {
-    val spark = Harness.session(8)
+  def main(args: Array[String]): Unit = Harness.withRun(8) { spark =>
     val sf = "/root/testdata/sf0.001"
     val names = (Oracles.retail.keys ++ Oracles.pipeline.keys).toSeq.sorted
     val lines = names.map { n =>
@@ -22,6 +21,5 @@ object GoldenGen {
     Files.writeString(Paths.get(GoldenPath), lines.mkString("\n") + "\n")
     println(s"[golden] wrote ${names.length} hashes to " +
       Paths.get(GoldenPath).toAbsolutePath)
-    spark.stop()
   }
 }

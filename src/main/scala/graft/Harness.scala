@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** What the driver mains share: the local session and its per-run temp
-  * dir, the warm-up + median-of-3 timer, query-name selection and the
-  * JSON string escaper.
+  * dir, the warm-up + median-of-3 timer, query-name selection, the JSON
+  * string escaper and the best-effort result-file sink.
   * The cluster-deployment session is [[ProdSession]]'s, not this one. */
 object Harness {
 
@@ -56,6 +56,20 @@ object Harness {
       paths.reverse.foreach(Files.deleteIfExists) // children before parents
     } catch { case e @ (_: IOException | _: UncheckedIOException) =>
       System.err.println(s"[harness] could not delete $dir: $e")
+    }
+
+  /** Best-effort file sink for a main's JSON record (a captured stdout
+    * line can be truncated): writes `text` to `path` and returns the
+    * path; a failure, computing `path` included, is reported on stderr
+    * under `tag` and never thrown. */
+  def writeFile(tag: String, path: => String, text: String): Option[String] =
+    try {
+      val p = path
+      Files.write(java.nio.file.Paths.get(p), text.getBytes("UTF-8"))
+      Some(p)
+    } catch { case e: Exception =>
+      System.err.println(s"[$tag] file sink failed: ${e.getMessage}")
+      None
     }
 
   /** Runs `f` once un-timed (warm-up), then three timed times; returns

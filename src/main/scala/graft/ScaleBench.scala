@@ -118,7 +118,10 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val cpus = Harness.cpus(32)
-    val spark = Harness.session(cpus)
+    Harness.withRun(cpus)(run(_, cpus))
+  }
+
+  private def run(spark: SparkSession, cpus: Int): Unit = {
 
     // Work-mass meter: shuffle/spill bytes are the
     // deterministic scale observable; seconds at these sizes are
@@ -184,7 +187,8 @@ object ScaleBench {
           .join(broadcast(Dedup.storedMatchedHashes(union.filter(isNew),
             Dedup.indexBuildFrames(union, isNew)._1)), Seq("h"), "left_semi")
           .count()
-        val nr = Dedup.incrementalNearIds(union, isNew).count()
+        val nr = Dedup.storedNearIds(union.filter(isNew), union.filter(!isNew),
+          Dedup.indexBuildFrames(union, isNew)._2).count()
         (ex, nr)
       }
       Dedup.clearDerivedCaches()
@@ -331,12 +335,7 @@ object ScaleBench {
           s""""repack_sec":$rs,"repack_work":${rw.json}}"""
       }.mkString(",") + "]}"
     println(json)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_SCALEBENCH_OUT", "SCALEBENCH.json")),
-      json.getBytes("UTF-8"))
-    catch { case e: Exception =>
-      System.err.println(s"[scalebench] file sink failed: ${e.getMessage}") }
-    spark.stop()
+    Harness.writeFile("scalebench",
+      sys.env.getOrElse("SPARK_GRAFT_SCALEBENCH_OUT", "SCALEBENCH.json"), json): Unit
   }
 }

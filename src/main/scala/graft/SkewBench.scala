@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{CorpusOps, Dedup, EventOps, Similarity}
@@ -44,7 +44,10 @@ import graft.pipeline.{CorpusOps, Dedup, EventOps, Similarity}
 object SkewBench {
   def main(args: Array[String]): Unit = {
     val cpus = Harness.cpus(32)
-    val spark = Harness.session(cpus)
+    Harness.withRun(cpus)(run(_, cpus))
+  }
+
+  private def run(spark: SparkSession, cpus: Int): Unit = {
     import spark.implicits._
 
     // ---- 1. hot shingle in 50% of 20k docs ---------------------------
@@ -262,10 +265,7 @@ object SkewBench {
         s""""over_threshold_all_single_value":$dupOverSingleValue,""" +
         s""""violating_sec":$dupSec,"deduped_sec":$dedupedSec}}"""
     println(json)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_SKEWBENCH_OUT", "SKEWBENCH.json")),
-      json.getBytes("UTF-8"))
-    catch { case e: Exception => System.err.println(s"[skewbench] file sink failed: ${e.getMessage}") }
-    spark.stop()
+    Harness.writeFile("skewbench",
+      sys.env.getOrElse("SPARK_GRAFT_SKEWBENCH_OUT", "SKEWBENCH.json"), json): Unit
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.{SnapshotStateSink, StateLog}
@@ -33,7 +34,10 @@ object StateLogSoakBench {
 
   def main(args: Array[String]): Unit = {
     val cpus = Harness.cpus(32)
-    val spark = Harness.session(cpus)
+    Harness.withRun(cpus)(run(_, cpus))
+  }
+
+  private def run(spark: SparkSession, cpus: Int): Unit = {
     val meter = WorkMass.meter(spark.sparkContext)
 
     val scales = Seq(1, 3, 10)
@@ -151,12 +155,7 @@ object StateLogSoakBench {
           s""""fold3_work":${f3.json},"ckpt3_files":[${c3._1},${c3._2}]}"""
       }.mkString(",") + "]}"
     println(json)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_STATELOGSOAK_OUT", "STATELOGSOAK.json")),
-      json.getBytes("UTF-8"))
-    catch { case e: Exception =>
-      System.err.println(s"[statelogsoak] file sink failed: ${e.getMessage}") }
-    spark.stop()
+    Harness.writeFile("statelogsoak",
+      sys.env.getOrElse("SPARK_GRAFT_STATELOGSOAK_OUT", "STATELOGSOAK.json"), json): Unit
   }
 }

@@ -66,9 +66,9 @@ object TwoProcessDrill {
       org.apache.spark.sql.catalyst.TableIdentifier(t))
       .location.toString
 
-  /** Register a snapshot table by its recorded (name, location) — the
-    * snapshot sink's names and paths differ, so the tmpdir convention
-    * the log's own [[StateLog.attach]] uses does not cover them. */
+  /** Register a snapshot table by its recorded (name, location): the
+    * snapshot is not a log table, so [[StateLog.attach]]'s generation
+    * registration does not cover it. */
   private def register(spark: SparkSession, t: String, location: String): Unit =
     if (!spark.catalog.tableExists(t))
       StateLog.registerExternalParquet(spark, t, location)
@@ -76,8 +76,7 @@ object TwoProcessDrill {
   private def stateTablesOf(p: java.util.Properties): SnapshotStateSink.StateTables =
     SnapshotStateSink.StateTables(
       DedupIndexSink.IndexTables(p.getProperty("idx.hash"),
-        p.getProperty("idx.band"), p.getProperty("idx.stop"),
-        p.getProperty("idx.meta")),
+        p.getProperty("idx.band"), p.getProperty("idx.stop")),
       p.getProperty("testVocab"), p.getProperty("mixRates"),
       p.getProperty("bpeEnc"), p.getProperty("packSummary"))
 
@@ -388,7 +387,7 @@ object TwoProcessDrill {
     val p = new java.util.Properties()
     p.setProperty("manifest", ref.manifest)
     Seq("idx.hash" -> st.index.hash, "idx.band" -> st.index.band,
-      "idx.stop" -> st.index.stop, "idx.meta" -> st.index.meta,
+      "idx.stop" -> st.index.stop,
       "testVocab" -> st.testVocab, "mixRates" -> st.mixRates,
       "bpeEnc" -> st.bpeEnc, "packSummary" -> st.packSummary)
       .foreach { case (k, t) =>
@@ -419,8 +418,7 @@ object TwoProcessDrill {
       p: java.util.Properties): StateLog.LogRef = {
     // the ingest gates read testVocab/mixRates through the catalog;
     // register every snapshot table by its recorded path first
-    Seq("idx.hash", "idx.band", "idx.stop", "idx.meta",
-      "testVocab", "mixRates", "bpeEnc", "packSummary").foreach { k =>
+    Seq("idx.hash", "idx.band", "idx.stop", "testVocab", "mixRates", "bpeEnc", "packSummary").foreach { k =>
       val t = p.getProperty(k)
       register(spark, t, p.getProperty(s"path.$t"))
     }

@@ -1,11 +1,10 @@
 package graft.ingest
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.AtRest
 
 /** eq55 — ORC round-trip: the second columnar format of the source/sink
   * surface (parquet is the native one, SURVEY.md §2.1 S6). The documents
@@ -25,14 +24,11 @@ import graft.Tables
   */
 object OrcRoundtrip {
 
-  private val orcSeq = new AtomicLong()
-
   def eq55(spark: SparkSession, dir: String): DataFrame = {
-    // per-invocation sink (the q12 convention): pid + counter so
-    // concurrent plans — parallel suites in one JVM, or several JVMs —
-    // never race on the directory
-    val sink = s"${sys.props("java.io.tmpdir")}/graft_orc_sink_" +
-      s"${ProcessHandle.current().pid()}_${orcSeq.incrementAndGet()}"
+    // per-invocation sink (the q12 convention): concurrent plans —
+    // parallel suites in one JVM, or several JVMs — never race on the
+    // directory
+    val sink = s"${AtRest.tmpRoot}/graft_orc_sink_${AtRest.nextId()}"
     Tables.load(spark, dir, "documents")
       .select("doc_id", "lang", "source", "n_chars")
       .write.mode("overwrite").partitionBy("lang").orc(sink)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.AtRest
 
 /** The reference's ETL ingest pipeline (SURVEY.md §2.1 S1–S4), Spark-first.
   *
@@ -59,18 +60,16 @@ object WhitespaceCsv {
 
   val fixturePath = "/root/repo/src/test/resources/fixtures/pointsDeVente-tous.csv"
 
-  private val ingestSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Q12 (SURVEY.md §2.9): ingest the reconstructed reference-format fixture
     * and summarize — count, date range, id sums — proving S1–S4 end to end. */
   def q12(spark: SparkSession, dir: String): DataFrame = {
     // per-invocation sink: a fixed path races when two q12 plans run
     // concurrently — in one JVM (parallel test suites; observed as a flaky
     // golden) or across JVMs (a per-JVM counter alone restarts at the same
-    // values), so the path carries pid AND a counter. The handful of tiny
-    // per-call dirs under java.io.tmpdir is the cheaper evil.
-    val sink = s"${sys.props("java.io.tmpdir")}/graft_ingest_sink_" +
-      s"${ProcessHandle.current().pid()}_${ingestSeq.incrementAndGet()}"
+    // values), so the path carries pid AND a counter (AtRest's id). The
+    // handful of tiny per-call dirs under java.io.tmpdir is the cheaper
+    // evil.
+    val sink = s"${AtRest.tmpRoot}/graft_ingest_sink_${AtRest.nextId()}"
     ingest(spark, fixturePath, s"$sink/points_de_vente")
       .agg(
         count(lit(1)).as("n_rows"),

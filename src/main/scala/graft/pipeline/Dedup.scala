@@ -582,57 +582,6 @@ object Dedup {
     hashIndexCache(hashes)(hashes.localCheckpoint())
   }
 
-  /** eq104's NEAR layer: the distinct batch-side doc_ids whose band-key
-    * probe of the bucket-guarded corpus index verifies at exact Jaccard ≥
-    * [[IncrementalNearThreshold]]. The memoized signatureParts pass +
-    * [[guardedOldIndex]] stand in for "read the stored index", and the
-    * candidates come from the stored-index probe's own join
-    * ([[probeCandidates]]). Every probe join is batch-driven: the batch's
-    * band keys BROADCAST against the index scan, the candidate ids
-    * BROADCAST-semi-prune the shingle-set frame before the verify join,
-    * so the per-probe shuffle mass is bounded by the batch and its
-    * candidates (≤ batch × [[MaxBucket]]), not the corpus. No old×old
-    * pairing ever forms. (Assumes batch ≪ corpus — the incremental
-    * posture; a corpus-sized "batch" should run the full x1 mining pass
-    * instead.) */
-  private[graft] def incrementalNearIds(docs: DataFrame, isNew: Column): DataFrame = {
-    val (sets, _, banded) = signatureParts(docs)
-    val cands = probeCandidates(banded.filter(isNew), guardedOldIndex(docs, isNew))
-      .distinct()
-    val candIds = cands.select(col("new_id").as("doc_id"))
-      .union(cands.select(col("old_id").as("doc_id"))).distinct()
-    val candSets = sets.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-    verifiedNearIds(cands, candSets, candSets)
-  }
-
-  /** The ONE near-verify implementation behind the in-session (eq104)
-    * and at-rest (eq139/eq140/eq141) probes: candidate (new_id, old_id)
-    * pairs joined to their shingle sets, kept at exact Jaccard ≥
-    * [[IncrementalNearThreshold]], distinct batch ids out. Shared so the
-    * two verdict paths cannot drift by a one-sided edit. */
-  private def verifiedNearIds(cands: DataFrame, newSets: DataFrame, oldSets: DataFrame): DataFrame =
-    cands
-      .join(newSets.select(col("doc_id").as("new_id"), col("shd").as("sh_n"), col("sz").as("sz_n")), Seq("new_id"))
-      .join(oldSets.select(col("doc_id").as("old_id"), col("shd").as("sh_o"), col("sz").as("sz_o")), Seq("old_id"))
-      .withColumn("common", size(array_intersect(col("sh_n"), col("sh_o"))))
-      .filter(col("common").cast("double") / (col("sz_n") + col("sz_o") - col("common"))
-        >= IncrementalNearThreshold)
-      .select(col("new_id").as("doc_id"))
-      .distinct()
-
-  /** The ONE exact-beats-near verdict assembly behind eq104 and the
-    * stored-index probes: flag-join the exact and near id frames onto
-    * `base` (which must carry `doc_id`) and emit the `verdict` column. */
-  private def verdictJoin(base: DataFrame, exactIds: DataFrame, nearIds: DataFrame): DataFrame =
-    base
-      .join(exactIds.withColumn("is_exact", lit(true)), Seq("doc_id"), "left")
-      .join(nearIds.withColumn("is_near", lit(true)), Seq("doc_id"), "left")
-      .withColumn("verdict",
-        when(col("is_exact"), lit("exact"))
-          .when(col("is_near"), lit("near"))
-          .otherwise(lit("novel")))
-      .drop("is_exact", "is_near")
-
   /** eq104 — incremental cross-snapshot dedup: classify every document of
     * an incoming batch against an existing corpus as `exact` (content-hash
     * match), `near` (MinHash band collision with an indexed doc, verified
@@ -651,18 +600,16 @@ object Dedup {
     * INDEX side only: a degenerate boilerplate bucket in the corpus is
     * dropped, mirroring the stop-bucket list a production index ships
     * with. Exact beats near when both fire. One row per (lang, verdict);
-    * output is O(langs), invariant to corpus size. */
+    * output is O(langs), invariant to corpus size.
+    *
+    * The probe is eq139's at-rest one ([[probeStoredIndex]]) over the
+    * in-session index frames ([[indexBuildFrames]], memoized per corpus
+    * and split): one verdict path, whether the index was just built or
+    * read back from storage. */
   def incrementalDedupDf(docs: DataFrame): DataFrame = {
     val isNew = col("doc_id") % 10 >= 8
-    val newDocs = docs.filter(isNew).select(col("doc_id"), col("lang"), md5(col("text")).as("h"))
-    // exact layer: batch content hash probed against the stored hash
-    // index, matched set broadcast back (scan-only on the corpus side)
-    val exactIds = newDocs
-      .join(broadcast(storedMatchedHashes(docs.filter(isNew), oldHashIndex(docs, isNew))),
-        Seq("h"), "left_semi").select("doc_id")
-    // near layer: batch band keys probe the bucket-guarded corpus index
-    val nearIds = incrementalNearIds(docs, isNew)
-    verdictJoin(newDocs, exactIds, nearIds)
+    val (hashIdx, bandIdx, _) = indexBuildFrames(docs, isNew)
+    probeStoredIndex(docs, isNew, hashIdx, bandIdx)
       .groupBy("lang", "verdict")
       .agg(count(lit(1)).as("n_docs"))
       .orderBy("lang", "verdict")
@@ -750,16 +697,24 @@ object Dedup {
         array_distinct(graft.functions.ShingleExpressions.shingles(col("text"), 3)).as("shd"))
       .withColumn("sz", size(col("shd")))
       .filter(col("sz") > 0)
-    verifiedNearIds(cands, batchSets, oldSets)
+    cands
+      .join(batchSets.select(col("doc_id").as("new_id"), col("shd").as("sh_n"), col("sz").as("sz_n")), Seq("new_id"))
+      .join(oldSets.select(col("doc_id").as("old_id"), col("shd").as("sh_o"), col("sz").as("sz_o")), Seq("old_id"))
+      .withColumn("common", size(array_intersect(col("sh_n"), col("sh_o"))))
+      .filter(col("common").cast("double") / (col("sz_n") + col("sz_o") - col("common"))
+        >= IncrementalNearThreshold)
+      .select(col("new_id").as("doc_id"))
+      .distinct()
   }
 
-  /** eq139 probe side — classify the incoming batch against the AT-REST
-    * index tables (read back through the catalog), bit-identical to
-    * eq104's in-session verdicts: `exact` on a stored-hash match, `near`
-    * on a band collision with an indexed doc verified at exact Jaccard ≥
-    * [[IncrementalNearThreshold]], else `novel`. The session signs ONLY
+  /** The stored-index probe — classify the incoming batch against the
+    * index frames: eq139 hands it the AT-REST tables (read back through
+    * the catalog), eq104 the in-session [[indexBuildFrames]]. `exact` on
+    * a stored-hash match, `near` on a band collision with an indexed doc
+    * verified at exact Jaccard ≥ [[IncrementalNearThreshold]], else
+    * `novel`. The session signs ONLY
     * the batch (the corpus is never re-signed, pinned by PipelineSpec's
-    * fresh-session test). Returns (doc_id, verdict) per batch doc. */
+    * fresh-session test). Returns (doc_id, verdict, lang) per batch doc. */
   private[graft] def probeStoredIndex(docs: DataFrame, isNew: Column,
       hashIdx: DataFrame, bandIdx: DataFrame): DataFrame = {
     val batch = docs.filter(isNew)
@@ -768,8 +723,14 @@ object Dedup {
       .join(broadcast(storedMatchedHashes(batch, hashIdx)), Seq("h"), "left_semi")
       .select("doc_id")
     val nearIds = storedNearIds(batch, docs.filter(!isNew), bandIdx)
-    verdictJoin(batch.select(col("doc_id")), exactIds, nearIds)
-      .select("doc_id", "verdict")
+    // exact beats near
+    batch.select(col("doc_id"), col("lang"))
+      .join(exactIds.withColumn("is_exact", lit(true)), Seq("doc_id"), "left")
+      .join(nearIds.withColumn("is_near", lit(true)), Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        when(col("is_exact"), lit("exact")).when(col("is_near"), lit("near"))
+          .otherwise(lit("novel")).as("verdict"),
+        col("lang"))
   }
 
   /** 64-bit SimHash per document: per-token md5, each of the first 16 hex

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,26 +36,20 @@ object CuratedSink {
     * counts (buckets × partitions files per write). */
   val Buckets = 8
 
-  private val sinkSeq = new AtomicLong()
+  /** Partitioned by `lang`, bucketed on `doc_id`, sorted by (shard_id,
+    * doc_id) within each bucket. */
+  private val Layout = AtRest.Layout(Buckets, "doc_id", Seq("shard_id", "doc_id"), Seq("lang"))
 
   def eq138(spark: SparkSession, dir: String): DataFrame =
     summarize(writeAndRead(spark, dir))
 
   /** Writes the curated corpus to a fresh external table (per-invocation
-    * name + tmp path, the eq55/q12 convention: concurrent plans never
-    * race on a directory) and reads it back THROUGH THE CATALOG, so the
-    * returned frame carries the bucketed-scan output partitioning. */
-  def writeAndRead(spark: SparkSession, dir: String): DataFrame = {
-    val id = s"${ProcessHandle.current().pid()}_${sinkSeq.incrementAndGet()}"
-    val tbl = s"graft_curated_$id"
-    Curation.curatedDocsDf(Tables.load(spark, dir, "documents"))
-      .write.mode("overwrite")
-      .option("path", s"${sys.props("java.io.tmpdir")}/graft_curated_sink_$id")
-      .partitionBy("lang")
-      .bucketBy(Buckets, "doc_id").sortBy("shard_id", "doc_id")
-      .saveAsTable(tbl)
-    spark.table(tbl)
-  }
+    * name, [[AtRest]]'s path rule: concurrent plans never race on a
+    * directory) and reads it back THROUGH THE CATALOG, so the returned
+    * frame carries the bucketed-scan output partitioning. */
+  def writeAndRead(spark: SparkSession, dir: String): DataFrame =
+    spark.table(AtRest.save(Curation.curatedDocsDf(Tables.load(spark, dir, "documents")),
+      s"graft_curated_${AtRest.nextId()}", Some(Layout)))
 
   /** Per-language audit of the curated corpus: doc/shard counts, token
     * and char mass, and an id-sum checksum — shared by eq138 and its spec

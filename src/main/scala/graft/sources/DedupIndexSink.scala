@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,13 +21,13 @@ import graft.pipeline.Dedup
   *    bucketed+sorted by `band_key`: index-keyed joins need no shuffle on
   *    the index side (EngineSurfaceSpec pins the zero-Exchange self-join
   *    and the scan-only broadcast probe);
-  *  - `..._meta` — index metadata (stop-bucket count), the stats a
-  *    shipped index carries beside its data.
+  *  - `..._stop` — the stop-bucket key list, the guard's drop set (its
+  *    row count is the stop-bucket stat a shipped index carries).
   *
   * The query is the stored-index audit + probe: entry counts of the three
   * read-back layers plus the batch verdict totals from
-  * [[Dedup.probeStoredIndex]] — bit-identical to eq104's in-session
-  * verdicts (the DuckDB oracle recomputes everything from raw documents
+  * [[Dedup.probeStoredIndex]], the probe eq104 runs over the in-session
+  * frames — bit-identical verdicts (the DuckDB oracle recomputes everything from raw documents
   * through the shared x1 CTEs, so a row lost or duplicated across the
   * write→read round-trip breaks the hash compare). PipelineSpec pins the
   * restart story the memo can't give: a FRESH session probing these
@@ -47,19 +45,17 @@ object DedupIndexSink {
     * parallelism it wants per ingest. */
   val Buckets = 8
 
-  private val sinkSeq = new AtomicLong()
-
   /** The stored index's table names — returned by [[write]] so a later
     * (or different) session can [[readBack]] without any handle to the
     * frames that built them. `stop` is the stop-bucket KEY list (the
     * guard's drop set, part of the shipped index since eq141: advancing
     * the state needs the keys, not just their count, and post-advance
-    * probes filter the band table by it); `meta` carries the build
-    * stats; `tomb` is the PENDING-RETRACTION marker (eq142/eq143) — a
+    * probes filter the band table by it; its row count is the index's
+    * stop-bucket stat); `tomb` is the PENDING-RETRACTION marker (eq142/eq143) — a
     * [[retract]] call sets it, every effective view subtracts it, the
     * next [[compact]] applies it physically and clears it. `None` (the
     * write-time state) costs existing paths nothing. */
-  final case class IndexTables(hash: String, band: String, stop: String, meta: String,
+  final case class IndexTables(hash: String, band: String, stop: String,
       tomb: Option[TombTables] = None)
 
   /** The two tombstone tables a retraction writes: `docs` — the deleted
@@ -81,8 +77,8 @@ object DedupIndexSink {
   def eq139(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val t = write(spark, docs, isNewCol)
-    val (hashIdx, _, _, meta) = readBack(spark, t)
-    audit(docs, isNewCol, hashIdx, effectiveBandIndex(spark, t), meta)
+    val (hashIdx, _, stop) = readBack(spark, t)
+    audit(docs, isNewCol, hashIdx, effectiveBandIndex(spark, t), stop)
   }
 
   def eq143(spark: SparkSession, dir: String): DataFrame = {
@@ -134,69 +130,52 @@ object DedupIndexSink {
       isNew: org.apache.spark.sql.Column, isDeleted: org.apache.spark.sql.Column): IndexTables = {
     require(t.tomb.isEmpty,
       "retract requires a compacted state — apply the pending tombstones first")
-    val id = s"${ProcessHandle.current().pid()}_${sinkSeq.incrementAndGet()}"
-    val tmp = sys.props("java.io.tmpdir")
+    val id = AtRest.nextId()
     val deleted = docs.filter(!isNew && isDeleted)
-    val delHashes = deleted.select(md5(col("text")).as("h"))
-      .filter(col("h").isNotNull).distinct().localCheckpoint()
-    // hashes in the deletion set that a RETAINED doc still owns: the
-    // small deleted-hash frame broadcasts into the corpus scan, so the
-    // recount is batch-bounded (no corpus shuffle)
-    val surviving = docs.filter(!isNew && !isDeleted)
-      .select(md5(col("text")).as("h"))
-      .join(broadcast(delHashes), Seq("h"), "left_semi").distinct()
-    val orphaned = delHashes.join(broadcast(surviving), Seq("h"), "left_anti")
     val tomb = TombTables(
       s"graft_dedup_idx_tombd_$id", s"graft_dedup_idx_tombh_$id")
     SinkPar.run(Seq(
-      () => deleted.select("doc_id").write.mode("overwrite")
-        .option("path", s"$tmp/graft_dedup_idx_sink_${id}_tombd")
-        .saveAsTable(tomb.docs),
-      () => orphaned.write.mode("overwrite")
-        .option("path", s"$tmp/graft_dedup_idx_sink_${id}_tombh")
-        .saveAsTable(tomb.hash)))
+      () => AtRest.save(deleted.select("doc_id"), tomb.docs),
+      () => AtRest.save(
+        orphanedHashes(deleted, docs.filter(!isNew && !isDeleted)), tomb.hash)))
     t.copy(tomb = Some(tomb))
   }
 
+  /** The orphan recount of a retraction: the distinct content hashes of
+    * `deleted` that no `retained` doc still owns — a hash leaves the
+    * exact layer only with its LAST owner. The small deleted-hash frame
+    * broadcasts into the retained corpus scan, and the surviving subset
+    * broadcasts back, so the recount is batch-bounded (no corpus
+    * shuffle). NULL-text docs carry no hash and are never tombstoned. */
+  private[sources] def orphanedHashes(deleted: DataFrame, retained: DataFrame): DataFrame = {
+    val delHashes = deleted.select(md5(col("text")).as("h"))
+      .filter(col("h").isNotNull).distinct().localCheckpoint()
+    val surviving = retained.select(md5(col("text")).as("h"))
+      .join(broadcast(delHashes), Seq("h"), "left_semi").distinct()
+    delHashes.join(broadcast(surviving), Seq("h"), "left_anti")
+  }
+
   /** Builds the index frames from the OLD side of the corpus and writes
-    * them as external tables (per-invocation names + tmp paths, the
-    * eq138/eq55 convention: concurrent plans never race on a directory). */
+    * them as external tables (per-invocation names, [[AtRest]]'s path
+    * rule: concurrent plans never race on a directory). The three tables
+    * share no data dependency and are written concurrently (SinkPar). */
   def write(spark: SparkSession, docs: DataFrame, isNew: org.apache.spark.sql.Column): IndexTables = {
-    val id = s"${ProcessHandle.current().pid()}_${sinkSeq.incrementAndGet()}"
+    val id = AtRest.nextId()
     val t = IndexTables(
-      s"graft_dedup_idx_hash_$id", s"graft_dedup_idx_band_$id",
-      s"graft_dedup_idx_stop_$id", s"graft_dedup_idx_meta_$id")
+      s"graft_dedup_idx_hash_$id", s"graft_dedup_idx_band_$id", s"graft_dedup_idx_stop_$id")
     val (hash, band, stopKeys) = Dedup.indexBuildFrames(docs, isNew)
-    val tmp = sys.props("java.io.tmpdir")
-    // the stop-key list is computed ONCE here; the meta count derives
-    // from the stored keys so the two can never disagree
-    val stopCk = stopKeys.localCheckpoint()
-    // four independent tables — written concurrently (SinkPar): stop and
-    // meta both read the already-materialized
-    // stopCk, so no write depends on another's output
     SinkPar.run(Seq(
-      () => hash.write.mode("overwrite")
-        .option("path", s"$tmp/graft_dedup_idx_sink_${id}_hash")
-        .bucketBy(Buckets, "h").sortBy("h")
-        .saveAsTable(t.hash),
-      () => band.write.mode("overwrite")
-        .option("path", s"$tmp/graft_dedup_idx_sink_${id}_band")
-        .bucketBy(Buckets, "band_key").sortBy("band_key")
-        .saveAsTable(t.band),
-      () => stopCk.write.mode("overwrite")
-        .option("path", s"$tmp/graft_dedup_idx_sink_${id}_stop")
-        .saveAsTable(t.stop),
-      () => stopCk.agg(count(lit(1)).as("n_stop_buckets")).write.mode("overwrite")
-        .option("path", s"$tmp/graft_dedup_idx_sink_${id}_meta")
-        .saveAsTable(t.meta)))
+      () => AtRest.save(hash, t.hash, Some(AtRest.Hash)),
+      () => AtRest.save(band, t.band, Some(AtRest.Band)),
+      () => AtRest.save(stopKeys, t.stop)))
     t
   }
 
   /** Reads the stored index THROUGH THE CATALOG, so the returned frames
     * carry the bucketed-scan output partitioning. Callable from any
     * session of the context — the restart path PipelineSpec drives. */
-  def readBack(spark: SparkSession, t: IndexTables): (DataFrame, DataFrame, DataFrame, DataFrame) =
-    (spark.table(t.hash), spark.table(t.band), spark.table(t.stop), spark.table(t.meta))
+  def readBack(spark: SparkSession, t: IndexTables): (DataFrame, DataFrame, DataFrame) =
+    (spark.table(t.hash), spark.table(t.band), spark.table(t.stop))
 
   /** eq142 — COMPACT the stored index: [[SnapshotStateSink.advance]] is
     * deliberately append-only (survivor rows land in stop-listed or
@@ -219,8 +198,7 @@ object DedupIndexSink {
     *    guard's memory. Dropping them with the rows they guard would
     *    let the next advance recount a hot bucket from zero and
     *    resurrect it (PipelineSpec's advance-after-compaction test
-    *    fails exactly that way if the stop list is cleared);
-    *  - meta: re-derived from the compacted stop table, new version.
+    *    fails exactly that way if the stop list is cleared).
     *
     * Everything is written to NEW table names (never in-place over a
     * table being read); the old generation stays readable until the
@@ -240,33 +218,17 @@ object DedupIndexSink {
     * for that window, never correctness — and compaction is a
     * maintenance action, not a query. */
   def compact(spark: SparkSession, t: IndexTables): IndexTables = {
-    val id = s"${ProcessHandle.current().pid()}_${sinkSeq.incrementAndGet()}"
+    val id = AtRest.nextId()
     val t2 = IndexTables(
-      s"graft_dedup_idx_hash_c$id", s"graft_dedup_idx_band_c$id",
-      s"graft_dedup_idx_stop_c$id", s"graft_dedup_idx_meta_c$id")
-    val tmp = sys.props("java.io.tmpdir")
+      s"graft_dedup_idx_hash_c$id", s"graft_dedup_idx_band_c$id", s"graft_dedup_idx_stop_c$id")
     val AutoScanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prevAutoScan = spark.conf.get(AutoScanKey)
     try {
       spark.conf.set(AutoScanKey, "false")
-      effectiveBandIndex(spark, t)
-        .write.mode("overwrite")
-        .option("path", s"$tmp/graft_dedup_idx_sink_c${id}_band")
-        .bucketBy(Buckets, "band_key").sortBy("band_key")
-        .saveAsTable(t2.band)
-      effectiveHashIndex(spark, t)
-        .write.mode("overwrite")
-        .option("path", s"$tmp/graft_dedup_idx_sink_c${id}_hash")
-        .bucketBy(Buckets, "h").sortBy("h")
-        .saveAsTable(t2.hash)
+      AtRest.save(effectiveBandIndex(spark, t), t2.band, Some(AtRest.Band))
+      AtRest.save(effectiveHashIndex(spark, t), t2.hash, Some(AtRest.Hash))
     } finally spark.conf.set(AutoScanKey, prevAutoScan)
-    spark.table(t.stop).coalesce(1).write.mode("overwrite")
-      .option("path", s"$tmp/graft_dedup_idx_sink_c${id}_stop")
-      .saveAsTable(t2.stop)
-    spark.table(t2.stop).agg(count(lit(1)).as("n_stop_buckets"))
-      .write.mode("overwrite")
-      .option("path", s"$tmp/graft_dedup_idx_sink_c${id}_meta")
-      .saveAsTable(t2.meta)
+    AtRest.save(spark.table(t.stop).coalesce(1), t2.stop)
     t2
   }
 
@@ -281,7 +243,7 @@ object DedupIndexSink {
     * state(merged) at the second delta (pinned by PipelineSpec's
     * two-advance test). */
   def effectiveBandIndex(spark: SparkSession, t: IndexTables): DataFrame = {
-    val (_, band, stop, _) = readBack(spark, t)
+    val (_, band, stop) = readBack(spark, t)
     val guarded = band.join(broadcast(stop), Seq("band", "band_key"), "left_anti")
     t.tomb.fold(guarded) { tb =>
       guarded.join(broadcast(spark.table(tb.docs)), Seq("doc_id"), "left_anti")
@@ -307,13 +269,14 @@ object DedupIndexSink {
   }
 
   /** The stored-index audit + probe result: one (item, n) row per index
-    * layer's entry count, the metadata's stop-bucket count, and the batch
+    * layer's entry count (the stop table's rows are its stop buckets),
+    * and the batch
     * verdict totals — all read from the AT-REST tables (counts come from
     * the read-back frames, so a lossy round-trip shifts them). Every
     * verdict is present with a 0-fill: a hostile batch may produce no
     * `near` rows and the frame shape must not change. */
   private[graft] def audit(docs: DataFrame, isNew: org.apache.spark.sql.Column,
-      hashIdx: DataFrame, bandIdx: DataFrame, meta: DataFrame): DataFrame = {
+      hashIdx: DataFrame, bandIdx: DataFrame, stop: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val vc = Dedup.probeStoredIndex(docs, isNew, hashIdx, bandIdx)
       .groupBy("verdict").agg(count(lit(1)).as("n"))
@@ -323,7 +286,7 @@ object DedupIndexSink {
         coalesce(col("n"), lit(0L)).as("n"))
     hashIdx.agg(count(lit(1)).as("n")).select(lit("idx_hash_entries").as("item"), col("n"))
       .unionAll(bandIdx.agg(count(lit(1)).as("n")).select(lit("idx_band_entries").as("item"), col("n")))
-      .unionAll(meta.select(lit("idx_stop_buckets").as("item"), col("n_stop_buckets").as("n")))
+      .unionAll(stop.agg(count(lit(1)).as("n")).select(lit("idx_stop_buckets").as("item"), col("n")))
       .unionAll(probe)
       .orderBy("item")
   }
@@ -339,10 +302,10 @@ object DedupIndexSink {
     * documents and re-derives every verdict. */
   private[graft] def auditRetracted(spark: SparkSession, docs: DataFrame,
       pre: IndexTables, t: IndexTables): DataFrame = {
-    val (_, band, _, meta) = readBack(spark, t)
+    val (_, band, stop) = readBack(spark, t)
     val tomb = pre.tomb.getOrElse(
       throw new IllegalArgumentException("auditRetracted needs the pre-compaction generation"))
-    audit(docs, isNewCol, effectiveHashIndex(spark, t), effectiveBandIndex(spark, t), meta)
+    audit(docs, isNewCol, effectiveHashIndex(spark, t), effectiveBandIndex(spark, t), stop)
       .unionAll(band.agg(count(lit(1)).as("n"))
         .select(lit("band_raw_rows").as("item"), col("n")))
       .unionAll(spark.table(tomb.docs).agg(count(lit(1)).as("n"))

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,8 +42,6 @@ import graft.pipeline.{Curation, Dedup}
   */
 object SnapshotStateSink {
 
-  private val sinkSeq = new AtomicLong()
-
   /** The five at-rest artifact tables (plus the index's three inside
     * [[DedupIndexSink.IndexTables]]) a finished full curation hands the
     * next delta ingest. */
@@ -53,7 +49,7 @@ object SnapshotStateSink {
       testVocab: String, mixRates: String, bpeEnc: String, packSummary: String)
 
   /** Ends a full curation of the OLD snapshot by writing its state tables
-    * — per-invocation names + tmp paths, the eq138/eq139 convention. The
+    * — per-invocation names, [[AtRest]]'s path rule. The
     * defaults are eq104's split rule; `(isNew, isOld)` are separate
     * predicates so the standard entry keeps the exact
     * [[DedupIndexSink.isOldCol]] filter plan the eq136/eq137 chain memos
@@ -62,16 +58,9 @@ object SnapshotStateSink {
   def write(spark: SparkSession, docs: DataFrame,
       isNew: Column = DedupIndexSink.isNewCol,
       isOld: Column = DedupIndexSink.isOldCol): StateTables = {
-    val id = s"${ProcessHandle.current().pid()}_${sinkSeq.incrementAndGet()}"
-    val tmp = sys.props("java.io.tmpdir")
-    def save(df: DataFrame, name: String): String = {
-      val tbl = s"graft_snapshot_state_${name}_$id"
-      val w = df.write.mode("overwrite")
-        .option("path", s"$tmp/graft_snapshot_state_${id}_$name")
-      (if (name == "test_vocab") w.bucketBy(DedupIndexSink.Buckets, "sg").sortBy("sg")
-       else w).saveAsTable(tbl)
-      tbl
-    }
+    val id = AtRest.nextId()
+    def save(df: DataFrame, name: String, layout: Option[AtRest.Layout] = None): String =
+      AtRest.save(df, s"graft_snapshot_state_${name}_$id", layout)
     // the index write and the four artifact writes are independent table
     // writes off shared memoized frames — overlapped (SinkPar);
     // concurrent first-forcing of a shared memo is safe (the PlanMemo
@@ -82,7 +71,7 @@ object SnapshotStateSink {
         val (testVocab, mixRates, bpeEnc, packSummary) =
           Curation.snapshotArtifactFrames(docs.filter(isOld))
         SinkPar.run(Seq(
-          () => save(testVocab, "test_vocab"),
+          () => save(testVocab, "test_vocab", Some(AtRest.TestVocab)),
           () => save(mixRates, "mix_rates"),
           () => save(bpeEnc, "bpe_enc"),
           () => save(packSummary, "pack_summary")))
@@ -169,8 +158,7 @@ object SnapshotStateSink {
     *  - pack layer: the per-lang summary advanced by
     *    [[Curation.appendPackSummary]]'s O(batch) append math, written
     *    as a NEW versioned table (a |langs|-row frame — never an
-    *    in-place overwrite of a table being read);
-    *  - meta: re-derived from the post-advance stop list, new version.
+    *    in-place overwrite of a table being read).
     *
     * The DuckDB oracle (eq141) rebuilds the advanced state FROM SCRATCH
     * over the merged population (retained old rows + survivor rows, the
@@ -191,7 +179,7 @@ object SnapshotStateSink {
     require(!StateLog.wrapsSnapshotIndex(spark, t.index.hash),
       "this snapshot is wrapped by a state log (its tables ARE the log's " +
         "generation 0) — ingest through StateLog.ingestBatch instead")
-    val (hashIdx, bandIdx, stopIdx, _) = DedupIndexSink.readBack(spark, t.index)
+    val (hashIdx, bandIdx, stopIdx) = DedupIndexSink.readBack(spark, t.index)
     // the survivors are decided against the EFFECTIVE index view — after
     // a prior advance the raw band table carries rows in stop-listed
     // buckets that the guard semantics exclude
@@ -207,31 +195,14 @@ object SnapshotStateSink {
 
     // pack layer: the advanced summary, versioned; written CONCURRENTLY
     // with the three index appends (SinkPar — all four read only
-    // pre-materialized checkpoints or frozen tables). The meta
-    // re-derivation is the one ordered pair: it reads the stop table
-    // AFTER the newlyHot append, so the two stay sequential in one thunk.
-    val id = s"${ProcessHandle.current().pid()}_${sinkSeq.incrementAndGet()}"
-    val tmp = sys.props("java.io.tmpdir")
-    val ps2 = s"${t.packSummary}_adv_$id"
-    val meta2 = s"${t.index.meta}_adv_$id"
+    // pre-materialized checkpoints or frozen tables)
+    val ps2 = s"${t.packSummary}_adv_${AtRest.nextId()}"
     SinkPar.run(Seq(
-      () => Curation.appendPackSummary(spark.table(t.packSummary), survivors)
-        .write.mode("overwrite")
-        .option("path", s"$tmp/graft_snapshot_state_${id}_pack_adv")
-        .saveAsTable(ps2),
-      () => newHashes.write.mode("append")
-        .bucketBy(DedupIndexSink.Buckets, "h").sortBy("h").saveAsTable(t.index.hash),
-      () => survBanded.write.mode("append")
-        .bucketBy(DedupIndexSink.Buckets, "band_key").sortBy("band_key")
-        .saveAsTable(t.index.band),
-      () => {
-        newlyHot.write.mode("append").saveAsTable(t.index.stop)
-        spark.table(t.index.stop).agg(count(lit(1)).as("n_stop_buckets"))
-          .write.mode("overwrite")
-          .option("path", s"$tmp/graft_snapshot_state_${id}_meta_adv")
-          .saveAsTable(meta2)
-      }))
-    t.copy(index = t.index.copy(meta = meta2), packSummary = ps2)
+      () => AtRest.save(Curation.appendPackSummary(spark.table(t.packSummary), survivors), ps2),
+      () => AtRest.append(newHashes, t.index.hash, Some(AtRest.Hash)),
+      () => AtRest.append(survBanded, t.index.band, Some(AtRest.Band)),
+      () => AtRest.append(newlyHot, t.index.stop)))
+    t.copy(packSummary = ps2)
   }
 
   /** COMPACT the advanced state: the index layers pay down their append
@@ -277,13 +248,7 @@ object SnapshotStateSink {
     // repack re-windows from a zero prefix sum anyway
     val retained = Curation.curatedMembership(docs.filter(isOld))
       .filter(!isDeleted)
-    val id = s"${ProcessHandle.current().pid()}_${sinkSeq.incrementAndGet()}"
-    val tmp = sys.props("java.io.tmpdir")
-    val ps2 = s"${t.packSummary}_rpk_$id"
-    Curation.packSummaryOf(retained)
-      .write.mode("overwrite")
-      .option("path", s"$tmp/graft_snapshot_state_${id}_pack_rpk")
-      .saveAsTable(ps2)
-    t.copy(packSummary = ps2)
+    t.copy(packSummary = AtRest.save(Curation.packSummaryOf(retained),
+      s"${t.packSummary}_rpk_${AtRest.nextId()}"))
   }
 }

@@ -69,7 +69,7 @@ object StateDrills {
   /** A snapshot's tables in [[audit]]'s view shape. */
   private def snapshotViews(spark: SparkSession,
       t: SnapshotStateSink.StateTables): (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (hash, band, stop, _) = DedupIndexSink.readBack(spark, t.index)
+    val (hash, band, stop) = DedupIndexSink.readBack(spark, t.index)
     (hash, band, stop, spark.table(t.packSummary))
   }
 
@@ -373,15 +373,23 @@ object StateDrills {
     * hold — surface the clean bounded-time-travel error through
     * [[StateLog.guardAsOfRead]], never a raw missing-file failure
     * (`asof1_guarded_bounded` = 1); and the replay-skip set holds across
-    * the GC (`replay_skipped` = 1). */
+    * the GC (`replay_skipped` = 1).
+    *
+    * The handle is the as-of views' hash layer AND the as-of corpus. A
+    * batch that adds no new hash leaves the delta's bucketed hash table
+    * with no file at all (sf0.1's batch does), so a hash-only handle
+    * lists nothing the vacuum can take and reads on, correctly, after
+    * the drop; the corpus reads the delta's `cur` table, a plain parquet
+    * write that keeps one file even when empty. */
   def eq154(spark: SparkSession, dir: String): DataFrame = {
     val (docs, st, ref) = wrappedLog(spark, dir)
     StateLog.ingestBatch(spark, ref, st, batchOf(docs), 0L) // gen 1
     StateLog.compactLog(spark, ref) // gen 2
     // a live as-of reader's frames, resolved BEFORE any GC (the existence
     // checks pass) — the handle a concurrent scan would be holding
-    val asof1Hash = StateLog.viewsAsOf(spark, ref, 1L)._1
-    val asof1Live = asof1Hash.count() >= 0
+    val asof1 = Seq(StateLog.viewsAsOf(spark, ref, 1L)._1, StateLog.corpusAsOf(spark, ref, 1L))
+    def readAsof1(): Long = asof1.map(_.count()).sum
+    val asof1Live = readAsof1() >= 0
     // graced vacuum against the YOUNG fold: the supersession is seconds
     // old, well inside the 10-minute window — nothing may drop
     val youngDrop = StateLog.vacuum(spark, ref, graceMs = 600000L)
@@ -395,7 +403,7 @@ object StateDrills {
     // guarded read must surface the clean bounded-time-travel error, not
     // a raw missing-file failure
     val guardedBounded =
-      try { StateLog.guardAsOfRead(spark, ref, 1L)(asof1Hash.count()); false }
+      try { StateLog.guardAsOfRead(spark, ref, 1L)(readAsof1()); false }
       catch { case e: IllegalStateException => e.getMessage.contains("bounded") }
     val skipped = !StateLog.ingestBatch(spark, ref, st, batchOf(docs), 0L)
     auditWithCorpus(spark, ref)

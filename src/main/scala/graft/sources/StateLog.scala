@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,8 +74,6 @@ import graft.pipeline.{Curation, Dedup}
   * round-trip under continuous arrival with failure recovery.
   */
 object StateLog {
-
-  private val logSeq = new AtomicLong()
 
   /** Index-hash table names of snapshots a log wraps ([[fromSnapshot]]'s
     * gen 0 POINTS at the snapshot's live tables, no copy) — an in-place
@@ -223,8 +219,7 @@ object StateLog {
       dir: org.apache.hadoop.fs.Path): Long =
     try {
       fs.mkdirs(dir): Unit
-      val probe = new org.apache.hadoop.fs.Path(dir, s".graft_clock_probe_" +
-        s"${ProcessHandle.current().pid()}_${logSeq.incrementAndGet()}")
+      val probe = new org.apache.hadoop.fs.Path(dir, s".graft_clock_probe_${AtRest.nextId()}")
       val out = fs.create(probe, true)
       out.close()
       try fs.getFileStatus(probe).getModificationTime
@@ -370,8 +365,7 @@ object StateLog {
       dir: org.apache.hadoop.fs.Path, marker: org.apache.hadoop.fs.Path,
       payload: Array[Byte]): Boolean = {
     fs.mkdirs(dir): Unit
-    val tmp = new org.apache.hadoop.fs.Path(dir, s"${marker.getName}." +
-      s"${ProcessHandle.current().pid()}_${logSeq.incrementAndGet()}.tmp")
+    val tmp = new org.apache.hadoop.fs.Path(dir, s"${marker.getName}.${AtRest.nextId()}.tmp")
     val out = fs.create(tmp, true)
     try out.write(payload) finally out.close()
     val won =
@@ -494,8 +488,7 @@ object StateLog {
     * never share a byte of staging; readers list the directory fresh
     * ([[freshManifest]]). */
   private def appendManifestRow(spark: SparkSession, ref: LogRef, g: Gen): Unit = {
-    val nonce = s"${ProcessHandle.current().pid()}_${logSeq.incrementAndGet()}"
-    commitOneFile(spark, ref, genRow(spark, g), s"part-row-g${g.genId}-$nonce.parquet")
+    commitOneFile(spark, ref, genRow(spark, g), s"part-row-g${g.genId}-${AtRest.nextId()}.parquet")
   }
 
   /** The atomic commit-file step shared by [[appendManifestRow]] and
@@ -513,7 +506,7 @@ object StateLog {
     // rename cannot cross filesystems. Crashed stage dirs are log-prefix
     // siblings of the manifest, so the graced [[sweep]] reclaims them.
     val stagePath = new org.apache.hadoop.fs.Path(loc.getParent,
-      s"${ref.manifest}_stage_${ProcessHandle.current().pid()}_${logSeq.incrementAndGet()}")
+      s"${ref.manifest}_stage_${AtRest.nextId()}")
     df.coalesce(1).write.mode("overwrite").parquet(stagePath.toString)
     val fs = hadoopFs(spark, stagePath)
     val part = fs.listStatus(stagePath).map(_.getPath)
@@ -757,16 +750,12 @@ object StateLog {
     * catalog never saw it). */
   def writeCorpusStore(spark: SparkSession, docs: DataFrame,
       withMembership: Boolean = false): String = {
-    val id = s"${ProcessHandle.current().pid()}_${logSeq.incrementAndGet()}"
-    val tbl = s"graft_corpus_store_$id"
-    docs.select(StoreCols.map(col): _*).write.mode("overwrite")
-      .option("path", s"${sys.props("java.io.tmpdir")}/$tbl").saveAsTable(tbl)
+    val tbl = AtRest.save(docs.select(StoreCols.map(col): _*),
+      s"graft_corpus_store_${AtRest.nextId()}")
     if (withMembership)
-      Curation.curatedMembership(docs)
-        .select(col("doc_id"), col("lang"), col("n_tokens"), col("n_chars"))
-        .write.mode("overwrite")
-        .option("path", s"${sys.props("java.io.tmpdir")}/${curMemTable(tbl)}")
-        .saveAsTable(curMemTable(tbl))
+      AtRest.save(Curation.curatedMembership(docs)
+        .select(col("doc_id"), col("lang"), col("n_tokens"), col("n_chars")),
+        curMemTable(tbl))
     tbl
   }
 
@@ -779,8 +768,7 @@ object StateLog {
       corpusStore: String): LogRef = {
     require(st.index.tomb.isEmpty,
       "the log ingests forward — apply pending retraction tombstones first")
-    val id = s"${ProcessHandle.current().pid()}_${logSeq.incrementAndGet()}"
-    val ref = LogRef(s"graft_state_log_$id")
+    val ref = LogRef(s"graft_state_log_${AtRest.nextId()}")
     val row = genRow(spark, Gen(0L, -1L, "base",
       st.index.hash, st.index.band, st.index.stop, st.packSummary, corpusStore))
     // the durable wrap marker goes FIRST: a crash between the two writes
@@ -788,13 +776,8 @@ object StateLog {
     // materialized) instead of open (a live log whose snapshot a fresh
     // driver could still advance in place)
     wrappedSnapshots.add(st.index.hash)
-    row.write.mode("overwrite")
-      .option("path",
-        s"${sys.props("java.io.tmpdir")}/${wrapMarker(st.index.hash)}")
-      .saveAsTable(wrapMarker(st.index.hash))
-    row.write.mode("overwrite")
-      .option("path", s"${sys.props("java.io.tmpdir")}/graft_state_log_${id}_manifest")
-      .saveAsTable(ref.manifest)
+    AtRest.save(row, wrapMarker(st.index.hash))
+    AtRest.saveAt(row, ref.manifest, s"${AtRest.tmpRoot}/${ref.manifest}_manifest")
     ref
   }
 
@@ -1392,11 +1375,10 @@ object StateLog {
         require(rows.map(_.getLong(0)).distinct.size == rows.size,
           s"state log ${ref.manifest}: conflicting manifest rows share a " +
             "gen_id — refusing to checkpoint a torn manifest")
-        val nonce = s"${ProcessHandle.current().pid()}_${logSeq.incrementAndGet()}"
         commitOneFile(spark, ref, spark.createDataFrame(
           new java.util.ArrayList(scala.jdk.CollectionConverters
             .SeqHasAsJava(rows).asJava), src.schema),
-          s"part-ckpt-$nonce.parquet")
+          s"part-ckpt-${AtRest.nextId()}.parquet")
         // crash-drill hook (the checkpoint sibling of the commit
         // hook): hang between the merged file's publish and the
         // superseded-file deletes, so the drill can SIGKILL this JVM in
@@ -1463,7 +1445,7 @@ object StateLog {
     * [[sweep]]). The name keeps the manifest prefix (ownership) and the
     * op tag (debuggability); registered in-flight for sweep safety. */
   private def saveGen(spark: SparkSession, ref: LogRef, df: DataFrame,
-      layer: String, tag: String, bucketCol: Option[String]): String = {
+      layer: String, tag: String, layout: Option[AtRest.Layout]): String = {
     val tbl = s"${ref.manifest}_${layer}_$tag"
     inFlight.add(tbl)
     // minted BESIDE THE MANIFEST on its own store — not
@@ -1472,18 +1454,13 @@ object StateLog {
     // walks and unreachable by the graced sweep's age check (both resolve
     // Path(root, t)). Default-root logs are byte-unchanged: the manifest
     // parent IS tmpdir there.
-    val w = df.write.mode("overwrite")
-      .option("path",
-        new org.apache.hadoop.fs.Path(logRoot(spark, ref), tbl).toString)
-    bucketCol.fold(w)(c => w.bucketBy(DedupIndexSink.Buckets, c).sortBy(c))
-      .saveAsTable(tbl)
-    tbl
+    AtRest.save(df, tbl, layout, logRoot(spark, ref).toString)
   }
 
   /** One attempt's unique tag: the op id (for humans and sweeps reading
     * the catalog) plus a process-unique nonce (for correctness). */
   private def attemptTag(opTag: String): String =
-    s"${opTag}_a${ProcessHandle.current().pid()}_${logSeq.incrementAndGet()}"
+    s"${opTag}_a${AtRest.nextId()}"
 
   /** Exactly-once micro-batch ingest — the foreachBatch body. `docs`
     * must be the corpus store unioned with the batch (`isNew` marking
@@ -1542,8 +1519,8 @@ object StateLog {
     // back-fills one write's task tail with the next write's tasks
     val tag = attemptTag(s"b$batchId")
     val Seq(hashT, bandT, stopT, packT, curT) = SinkPar.run(Seq(
-      () => saveGen(spark, ref, newHashes, "hash", tag, Some("h")),
-      () => saveGen(spark, ref, survBanded, "band", tag, Some("band_key")),
+      () => saveGen(spark, ref, newHashes, "hash", tag, Some(AtRest.Hash)),
+      () => saveGen(spark, ref, survBanded, "band", tag, Some(AtRest.Band)),
       () => saveGen(spark, ref, newlyHot, "stop", tag, None),
       () => saveGen(spark, ref, pack, "pack", tag, None),
       () => saveGen(spark, ref,
@@ -1612,17 +1589,13 @@ object StateLog {
       if (priorTombsApplied) Seq.empty
       else active(hist).filter(_.kind == "retract")
     val deleted = indexedDocs.filter(isDeleted)
-    val delHashes = deleted.select(md5(col("text")).as("h"))
-      .filter(col("h").isNotNull).distinct().localCheckpoint()
     val retained0 = indexedDocs.filter(!isDeleted)
     val retained =
       if (priorTombs.isEmpty) retained0
       else retained0.join(
         broadcast(priorTombs.map(g => spark.table(g.band)).reduce(_ unionAll _)
           .select("doc_id")), Seq("doc_id"), "left_anti")
-    val surviving = retained.select(md5(col("text")).as("h"))
-      .join(broadcast(delHashes), Seq("h"), "left_semi").distinct()
-    val orphaned = delHashes.join(broadcast(surviving), Seq("h"), "left_anti")
+    val orphaned = DedupIndexSink.orphanedHashes(deleted, retained)
 
     val tag = attemptTag(s"r$opId")
     val Seq(tombDocsT, tombHashT) = SinkPar.run(Seq(
@@ -1756,8 +1729,8 @@ object StateLog {
     val (hashV, bandRawV, stopV, _) = viewsOf(spark, gens)
     val tag = attemptTag(s"p$opId")
     val Seq(hashT, bandT, stopT, packT, curT) = SinkPar.run(Seq(
-      () => saveGen(spark, ref, hashV.limit(0), "hash", tag, Some("h")),
-      () => saveGen(spark, ref, bandRawV.limit(0), "band", tag, Some("band_key")),
+      () => saveGen(spark, ref, hashV.limit(0), "hash", tag, Some(AtRest.Hash)),
+      () => saveGen(spark, ref, bandRawV.limit(0), "band", tag, Some(AtRest.Band)),
       () => saveGen(spark, ref, stopV.limit(0), "stop", tag, None),
       () => saveGen(spark, ref, ps, "pack", tag, None),
       () => saveGen(spark, ref, corpusOf(spark, gens).limit(0), "cur", tag, None)))
@@ -1786,8 +1759,8 @@ object StateLog {
     val base = hist.map(_.genId).max
     val tag = attemptTag(s"c$base")
     val Seq(hashT, bandT, stopT, packT, curT) = SinkPar.run(Seq(
-      () => saveGen(spark, ref, hashV, "hash", tag, Some("h")),
-      () => saveGen(spark, ref, DedupIndexSink.effectiveBandOf(bandLiveV, stopV), "band", tag, Some("band_key")),
+      () => saveGen(spark, ref, hashV, "hash", tag, Some(AtRest.Hash)),
+      () => saveGen(spark, ref, DedupIndexSink.effectiveBandOf(bandLiveV, stopV), "band", tag, Some(AtRest.Band)),
       () => saveGen(spark, ref, stopV.distinct(), "stop", tag, None),
       () => saveGen(spark, ref, packV, "pack", tag, None),
       () => saveGen(spark, ref, corpusOf(spark, gens), "cur", tag, None)))

@@ -96,7 +96,7 @@ class EngineSurfaceSpec extends SparkSpec {
     import graft.pipeline.Dedup
     val docs = Tables.load(spark, Sf, "documents")
     val t = DedupIndexSink.write(spark, docs, DedupIndexSink.isNewCol)
-    val (_, bandIdx, _, _) = DedupIndexSink.readBack(spark, t)
+    val (_, bandIdx, _) = DedupIndexSink.readBack(spark, t)
     // (a) bucket layout: an index-keyed self-join of the read-back band
     // index plans with NO shuffle exchange (broadcast off — the
     // SMJ-vs-shuffle question bucketing answers at 100 TB)

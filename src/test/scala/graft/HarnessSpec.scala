@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
   * and the guard that keeps [[Harness]] (plus [[ProdSession]]) the only
   * place a SparkSession is built; plus the source guards that keep the
   * state libraries free of oracle drills, the served API free of its
-  * own retail plans, the curation chains on one set of stage builders
-  * and the operators free of `(spark, dir)` forwarders.
+  * own retail plans, the curation chains on one set of stage builders,
+  * the state family on one at-rest writer and the operators free of
+  * `(spark, dir)` forwarders.
   * No Spark session is needed. */
 class HarnessSpec extends AnyFunSuite {
 
@@ -153,6 +154,41 @@ class HarnessSpec extends AnyFunSuite {
       val at = sources.collect { case (f, src) if src.contains(gone) => f }
       assert(at.isEmpty, s"$gone is back in ${at.mkString(", ")}")
     }
+  }
+
+  /** The code of every `.scala` file under `src/main/scala/graft/<dir>`,
+    * by file name, comments blanked. */
+  private def sourcesUnder(dirs: String*): Map[String, String] =
+    dirs.flatMap { d =>
+      val root = java.nio.file.Paths.get(s"src/main/scala/graft/$d")
+      assert(java.nio.file.Files.isDirectory(root), s"no $root under the working directory")
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p.getFileName.toString -> code(java.nio.file.Files.readString(p))).toList
+      finally walk.close()
+    }.toMap
+
+  test("one at-rest writer: the state family's ids, table writes and layouts live in AtRest") {
+    val srcs = sourcesUnder("sources", "ingest")
+    def at(re: scala.util.matching.Regex, exempt: Set[String]) =
+      srcs.collect { case (f, src) if !exempt(f) && re.findFirstIn(src).nonEmpty => f }.toSeq.sorted
+    // the pdv's bucketed retail layout is not a state table
+    val writes = at("""\bsaveAsTable\s*\(|\bbucketBy\s*\(""".r,
+      Set("AtRest.scala", "BucketedLayout.scala"))
+    assert(writes.isEmpty, s"table writes outside AtRest: ${writes.mkString(", ")}")
+    val ids = at("""\bProcessHandle\b|\bincrementAndGet\b|\bAtomicLong\b""".r, Set("AtRest.scala"))
+    assert(ids.isEmpty, s"ids minted outside AtRest: ${ids.mkString(", ")}")
+    val index = """case\s+class\s+IndexTables\s*\(([^)]*)\)""".r
+      .findFirstMatchIn(srcs("DedupIndexSink.scala")).map(_.group(1))
+    assert(index.nonEmpty, "IndexTables not found in DedupIndexSink.scala")
+    assert("""\bmeta\b""".r.findFirstIn(index.get).isEmpty, s"IndexTables has a meta field: ${index.get}")
+    // the orphan recount's surviving-hash step: the deleted hashes
+    // semi-joined into the retained corpus, distinct
+    val recount = srcs.toSeq.flatMap { case (f, src) =>
+      Seq.fill("""Seq\("h"\)\s*,\s*"left_semi"\s*\)\s*\.distinct\(\)""".r.findAllIn(src).size)(f)
+    }
+    assert(recount == Seq("DedupIndexSink.scala"),
+      s"the orphan recount is written ${recount.size} times: ${recount.mkString(", ")}")
   }
 
   /** A `(spark, dir)` function whose whole body is one call over

@@ -1031,12 +1031,12 @@ class PipelineSpec extends SparkSpec {
     // to a fresh JVM) probes the stored tables
     val s2 = spark.newSession()
     val docs2 = Tables.load(s2, Sf, "documents")
-    val (h2, b2, _, m2) = DedupIndexSink.readBack(s2, t)
+    val (h2, b2, stop2) = DedupIndexSink.readBack(s2, t)
     val sig0 = Dedup.signatureMisses
     val g0 = Dedup.guardedIndexMisses
     val hi0 = Dedup.hashIndexMisses
     val pt0 = Dedup.pairTableMisses
-    val out = DedupIndexSink.audit(docs2, isNew, h2, b2, m2).collect()
+    val out = DedupIndexSink.audit(docs2, isNew, h2, b2, stop2).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // the probe signed exactly the batch — the corpus was NOT re-signed
     // and no index layer was re-mined: the stored tables did their job
@@ -1048,7 +1048,7 @@ class PipelineSpec extends SparkSpec {
     for (v <- Seq("exact", "near", "novel"))
       assert(out(s"probe_$v") == mem.getOrElse(v, 0L),
         s"$v: at-rest ${out(s"probe_$v")} vs in-session ${mem.getOrElse(v, 0L)}")
-    // the read-back layers are populated and the metadata row survived
+    // the read-back layers are populated and the stop table read back
     assert(out("idx_hash_entries") > 0 && out("idx_band_entries") > 0
       && out("idx_stop_buckets") >= 0)
   }
@@ -1089,11 +1089,11 @@ class PipelineSpec extends SparkSpec {
     // survivors computed against the PRE-advance state (advance appends
     // into the shared tables in place; d8 is eagerly checkpointed, so
     // this frame is materialized before any append below runs)
-    val (h0, b0, _, _) = DedupIndexSink.readBack(spark, t0.index)
+    val (h0, b0, _) = DedupIndexSink.readBack(spark, t0.index)
     val survivors = Curation.deltaSurvivorsFromState(docs, DedupIndexSink.isNewCol,
       h0, b0, spark.table(t0.testVocab), spark.table(t0.mixRates))
     val t1 = SnapshotStateSink.advance(spark, docs, t0)
-    val (h1, b1, st1, _) = DedupIndexSink.readBack(spark, t1.index)
+    val (h1, b1, st1) = DedupIndexSink.readBack(spark, t1.index)
     val eff1 = b1.join(st1, Seq("band", "band_key"), "left_anti")
 
     // the scratch truth: a full snapshot whose population IS the merged
@@ -1131,7 +1131,7 @@ class PipelineSpec extends SparkSpec {
     val docs1 = docsDf(aDocs ++ bDocs)
     val isNew1 = col("doc_id") >= 1000L
     val t0 = SnapshotStateSink.write(spark, docs1, isNew1, col("doc_id") < 1000L)
-    val (h0, _, stop0, _) = DedupIndexSink.readBack(spark, t0.index)
+    val (h0, _, stop0) = DedupIndexSink.readBack(spark, t0.index)
     assert(stop0.count() > 0, "fixture must produce stop-listed buckets at build")
     val s1 = Curation.deltaSurvivorsFromState(docs1, isNew1, h0,
       DedupIndexSink.effectiveBandIndex(spark, t0.index),
@@ -1139,7 +1139,7 @@ class PipelineSpec extends SparkSpec {
     assert(s1.filter(col("doc_id") < 1006L).count() > 0,
       "fixture must carry at least one boilerplate survivor through the gates")
     val t1 = SnapshotStateSink.advance(spark, docs1, t0, isNew1)
-    val (h1, b1raw, stop1, _) = DedupIndexSink.readBack(spark, t1.index)
+    val (h1, b1raw, stop1) = DedupIndexSink.readBack(spark, t1.index)
     assert(b1raw.join(stop1, Seq("band", "band_key"), "left_semi").count() > 0,
       "advance must have appended survivor rows into stop-listed buckets")
 
@@ -1166,7 +1166,7 @@ class PipelineSpec extends SparkSpec {
       .unionByName(s1.select(cols.head, cols.tail: _*))
       .unionByName(s2.select(cols.head, cols.tail: _*))
     val (sh, sb, sstop) = Dedup.indexBuildFrames(pop, lit(false))
-    val (h2, b2raw, stop2, _) = DedupIndexSink.readBack(spark, t2.index)
+    val (h2, b2raw, stop2) = DedupIndexSink.readBack(spark, t2.index)
     val eff2 = b2raw.join(stop2, Seq("band", "band_key"), "left_anti")
     def sameSet(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame, what: String): Unit =
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0, s"$what diverged")
@@ -1191,17 +1191,17 @@ class PipelineSpec extends SparkSpec {
     val docs1 = docsDf(aDocs ++ bDocs)
     val isNew1 = col("doc_id") >= 1000L
     val t0 = SnapshotStateSink.write(spark, docs1, isNew1, col("doc_id") < 1000L)
-    val (h0, _, _, _) = DedupIndexSink.readBack(spark, t0.index)
+    val (h0, _, _) = DedupIndexSink.readBack(spark, t0.index)
     val s1 = Curation.deltaSurvivorsFromState(docs1, isNew1, h0,
       DedupIndexSink.effectiveBandIndex(spark, t0.index),
       spark.table(t0.testVocab), spark.table(t0.mixRates)).localCheckpoint()
     val t1 = SnapshotStateSink.advance(spark, docs1, t0, isNew1)
-    val (h1, b1raw, stop1, _) = DedupIndexSink.readBack(spark, t1.index)
+    val (h1, b1raw, stop1) = DedupIndexSink.readBack(spark, t1.index)
     val rawPre = b1raw.count()
     val filesPre = spark.table(t1.index.band).inputFiles.length
 
     val tc = SnapshotStateSink.compact(spark, t1)
-    val (hc, bcRaw, stopc, metac) = DedupIndexSink.readBack(spark, tc.index)
+    val (hc, bcRaw, stopc) = DedupIndexSink.readBack(spark, tc.index)
     def sameSet(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame, what: String): Unit =
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0, s"$what diverged")
 
@@ -1214,7 +1214,6 @@ class PipelineSpec extends SparkSpec {
     sameSet(hc, h1, "hash layer across compaction")
     sameSet(stopc, stop1.select("band", "band_key"),
       "stop list across compaction (the guard's memory must be KEPT)")
-    assert(metac.head().getLong(0) == stopc.count(), "compacted meta vs stored stop keys")
 
     // the file debt is paid: at most one file per bucket, strictly fewer
     // than the appended generation carried
@@ -1247,7 +1246,7 @@ class PipelineSpec extends SparkSpec {
       .unionByName(s1.select(cols.head, cols.tail: _*))
       .unionByName(s2.select(cols.head, cols.tail: _*))
     val (sh, sb, sstop) = Dedup.indexBuildFrames(pop, lit(false))
-    val (h2, b2raw, stop2, _) = DedupIndexSink.readBack(spark, t2.index)
+    val (h2, b2raw, stop2) = DedupIndexSink.readBack(spark, t2.index)
     sameSet(b2raw.join(stop2, Seq("band", "band_key"), "left_anti")
         .select("band", "band_key", "doc_id"),
       sb.select("band", "band_key", "doc_id"),
@@ -1290,7 +1289,7 @@ class PipelineSpec extends SparkSpec {
     assert(v0(101L) == "exact" && v0(103L) == "exact" &&
       v0(105L) == "near" && v0(107L) == "near" && v0(109L) == "novel")
     assert(v0(111L) == "novel", "the stop-guarded family must produce no candidates at build")
-    val (_, _, stop0, _) = DedupIndexSink.readBack(spark, t0)
+    val (_, _, stop0) = DedupIndexSink.readBack(spark, t0)
     val nStop0 = stop0.count()
     assert(nStop0 > 0, "fixture must stop-list the hot family")
 
@@ -1324,7 +1323,7 @@ class PipelineSpec extends SparkSpec {
     // verdicts must not move
     val t2c = DedupIndexSink.compact(spark, t1)
     assert(t2c.tomb.isEmpty)
-    val (h2, b2, stop2, _) = DedupIndexSink.readBack(spark, t2c)
+    val (h2, b2, stop2) = DedupIndexSink.readBack(spark, t2c)
     assert(b2.join(spark.table(t1.tomb.get.docs), Seq("doc_id"), "left_semi").count() == 0)
     assert(h2.join(spark.table(t1.tomb.get.hash), Seq("h"), "left_semi").count() == 0)
     assert(stop2.count() == nStop0,
@@ -2720,7 +2719,7 @@ class PipelineSpec extends SparkSpec {
     // invariant re-established: advancing the repacked state by a delta
     // equals the scratch pack over (retained curated ∪ survivors)
     val docs2 = docsDf(aDocs ++ bDocs).localCheckpoint()
-    val (hR, _, _, _) = DedupIndexSink.readBack(spark, st2.index)
+    val (hR, _, _) = DedupIndexSink.readBack(spark, st2.index)
     val s1 = Curation.deltaSurvivorsFromState(docs2, isNew1, hR,
       DedupIndexSink.effectiveBandIndex(spark, st2.index),
       spark.table(st2.testVocab), spark.table(st2.mixRates)).localCheckpoint()

@@ -85,7 +85,8 @@ class ScaleSpec extends SparkSpec {
           .select(col("doc_id"), md5(col("text")).as("h"))
         val ex = newDocs.join(broadcast(Dedup.storedMatchedHashes(union.filter(isNew),
           Dedup.indexBuildFrames(union, isNew)._1)), Seq("h"), "left_semi").count()
-        val nr = Dedup.incrementalNearIds(union, isNew).count()
+        val nr = Dedup.storedNearIds(union.filter(isNew), union.filter(!isNew),
+          Dedup.indexBuildFrames(union, isNew)._2).count()
         (ex, nr)
       }
       val indexWork = meter(flags()) // cold: pays the index build
